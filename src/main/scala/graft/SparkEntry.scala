@@ -52,14 +52,14 @@ object SparkEntry {
       |         - (CAST(sum(value) AS BIGINT) % count(value)) * 100 AS mean
       |FROM u GROUP BY id""".stripMargin
 
-  /** DuckDB tokenizer identical to OpsUtil.tokensExpr — the whitespace
+  /** DuckDB tokenizer identical to OpsUtil.tokens — the whitespace
     * class is explicit because Java's \s includes \x0B and RE2's does
     * not; both sides spell out Java's exact set.
     */
   private val duckToks =
     """list_filter(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+'), x -> x <> '')"""
 
-  /** DuckDB word-3-gram shingles (matches DedupOps.shingleExpr(3)). */
+  /** DuckDB word-3-gram shingles (matches OpsUtil.shingles(w, 3)). */
   private val duckShingles =
     """list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))"""
 
@@ -2882,7 +2882,7 @@ object SparkEntry {
   /** Benchmark contamination (q68, and the q57 decontamination stage):
     * distinct 5-gram overlap between the corpus (doc_id % 10 <> 7) and
     * the benchmark slice (= 7). The 5-gram expansion mirrors
-    * OpsUtil.shingleExpr(5) exactly (same tokenization, same window,
+    * OpsUtil.shingles(w, 5) exactly (same tokenization, same window,
     * empty under 5 tokens).
     */
   private val contaminationSql =

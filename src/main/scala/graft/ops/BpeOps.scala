@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   */
 object BpeOps {
 
-  /** Java's \s whitespace set, spelled out to match OpsUtil.tokensExpr
+  /** Java's \s whitespace set, spelled out to match OpsUtil.tokens
     * and the DuckDB oracle tokenizer exactly.
     */
   private val Ws = "[ \t\n\u000B\f\r]+"
@@ -282,8 +282,8 @@ object BpeOps {
         documents.select(col(textCol).cast("string")).as[String]
           .flatMap(t => units(t, pretok = true)).toDF("w")
       else
-        documents.select(explode(expr(OpsUtil.tokensExpr
-          .replace("trim(text)", s"trim($textCol)"))).as("w"))
+        documents.select(
+          explode(graft.functions.TokenFunctions.wsTokens(col(textCol))).as("w"))
     unitsDf.groupBy("w").agg(count(lit(1)).as("cnt"))
   }
 

@@ -559,9 +559,12 @@ object ClusterOps {
                             maxDupLineFrac: Double,
                             benchmarkOpt: Option[DataFrame],
                             trainedWeights: Option[Seq[Long]] = None): DataFrame = {
-    val edges = DedupOps.minhashLshPairs(documents).select("doc_a", "doc_b")
-      .union(DedupOps.simhashPairs(documents).select("doc_a", "doc_b"))
-      .union(DedupOps.winnowedPassagePairs(documents).select("doc_a", "doc_b"))
+    // the generators' raw edges, duplicates and all: `normalize`
+    // deduplicates the union once (union-find ignores repeats anyway),
+    // so no generator pays a distinct of its own
+    val edges = DedupOps.lshEdges(DedupOps.minhashBands(documents))
+      .union(DedupOps.simhashEdges(documents).select("doc_a", "doc_b"))
+      .union(DedupOps.winnowedEdges(documents))
     val labels = connectedComponents(documents, edges)
     val kept = labels.filter(col("doc_id") === col("canonical_id"))
       .join(documents.select(col("doc_id"), col("lang"), col("source")), "doc_id")

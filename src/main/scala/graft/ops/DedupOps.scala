@@ -26,12 +26,7 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  import OpsUtil.{par, tokensExpr}
-
-  /** Word n-gram shingles; docs shorter than n shingle to nothing.
-    * (Spark's `sequence` descends when start > stop, hence the guard.)
-    */
-  private def shingleExpr(n: Int): String = OpsUtil.shingleExpr(n)
+  import OpsUtil.{par, shingles, tokens}
 
   /** THE content fingerprint of the dedup family — batch exactDedup,
     * streaming dedup, and the q12 oracle all normalize identically;
@@ -80,7 +75,7 @@ object DedupOps {
     // (one reused digest, byte-compared minima).
     graft.functions.GraftFunctions.register(documents.sparkSession)
     par(documents)
-      .withColumn("w", expr(tokensExpr))
+      .withColumn("w", tokens)
       .select(col("doc_id"), explode(
         expr(s"minhash_bands(w, $numHashes, $bandSize, $shingleSize)"))
         .as("band"))
@@ -113,7 +108,7 @@ object DedupOps {
     // watermarks on) ride through the stateless projection untouched
     val kept = keep.map(col)
     documents
-      .withColumn("w", expr(tokensExpr))
+      .withColumn("w", tokens)
       .select(col("doc_id") +: kept :+ explode(
         expr(s"minhash_bands(w, $numHashes, $bandSize, $shingleSize)"))
         .as("band"): _*)
@@ -130,12 +125,20 @@ object DedupOps {
     * why it is its own function: pairs from reloaded bands must be the
     * same equi-join as pairs from fresh ones.
     */
-  def lshPairsFromBands(bands: DataFrame): DataFrame = {
+  def lshPairsFromBands(bands: DataFrame): DataFrame =
+    lshEdges(bands).distinct()
+
+  /** [[lshPairsFromBands]] before its `distinct`: a pair sharing
+    * several buckets appears once per bucket. For callers that
+    * deduplicate edges themselves ([[ClusterOps]]' flagship graph
+    * unions three generators and deduplicates once).
+    */
+  private[ops] def lshEdges(bands: DataFrame): DataFrame = {
     val l = bands.select(col("doc_id").as("doc_a"), col("b"), col("bh"))
     val r = bands.select(col("doc_id").as("doc_b"), col("b"), col("bh"))
     l.join(r, Seq("b", "bh"))
       .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
+      .select("doc_a", "doc_b")
   }
 
   /** Q137: the MinHash BAND TABLE as a maintained storage artifact —
@@ -334,7 +337,7 @@ object DedupOps {
     // are filtered here — same absent-row contract.
     graft.functions.GraftFunctions.register(documents.sparkSession)
     par(documents)
-      .withColumn("w", expr(tokensExpr))
+      .withColumn("w", tokens)
       .filter(size(col("w")) > 0)
       .select(col("doc_id"),
         expr(s"simhash60(w, $simhashBits)").as("simhash"))
@@ -358,7 +361,18 @@ object DedupOps {
     * filter. Candidates come from an equi-join on (band, bandValue);
     * with 32,768 values per band, bucket groups stay small at scale.
     */
-  def simhashPairs(documents: DataFrame, maxHamming: Int = 3): DataFrame = {
+  def simhashPairs(documents: DataFrame, maxHamming: Int = 3): DataFrame =
+    // filter BEFORE distinct: hamming is deterministic per pair, so
+    // the result is identical, but at corpus scale most band
+    // collisions are far pairs — dropping them first keeps the
+    // dedup exchange to only the survivors
+    simhashEdges(documents, maxHamming).distinct()
+
+  /** [[simhashPairs]] before its `distinct` (one row per shared band);
+    * see [[lshEdges]].
+    */
+  private[ops] def simhashEdges(documents: DataFrame,
+                                maxHamming: Int = 3): DataFrame = {
     val banded = simhashBanded(documents)
     val l = banded.select(col("doc_id").as("doc_a"), col("simhash").as("sig_a"),
       col("k"), col("band"))
@@ -368,12 +382,7 @@ object DedupOps {
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         expr("cast(bit_count(sig_a ^ sig_b) as int)").as("hamming"))
-      // filter BEFORE distinct: hamming is deterministic per pair, so
-      // the result is identical, but at corpus scale most band
-      // collisions are far pairs — dropping them first keeps the
-      // dedup exchange to only the survivors
       .filter(col("hamming") <= maxHamming)
-      .distinct()
   }
 
   /** The CROSS-side SimHash candidates for incremental maintenance:
@@ -416,8 +425,8 @@ object DedupOps {
     // margin below t so round(j, 6) boundary cases cannot be missed
     val tEff = math.max(0.0, threshold - 0.01)
     val sh = par(documents)
-      .withColumn("w", expr(tokensExpr))
-      .select(col("doc_id"), explode(expr(shingleExpr(shingleSize))).as("g"))
+      .withColumn("w", tokens)
+      .select(col("doc_id"), explode(shingles(col("w"), shingleSize)).as("g"))
       .distinct()
     val freq = sh.groupBy("g").agg(count(lit(1)).as("gf"))
       .filter(col("gf") <= maxShingleDf)
@@ -466,7 +475,7 @@ object DedupOps {
     // array drops too-short docs exactly like the size filter did.
     graft.functions.GraftFunctions.register(documents.sparkSession)
     par(documents)
-      .withColumn("w", expr(tokensExpr))
+      .withColumn("w", tokens)
       .select(col("doc_id"),
         explode(expr(s"winnow_fps(w, $k, $w)")).as("fp"))
   }
@@ -481,7 +490,16 @@ object DedupOps {
     * hot-shingle cap.
     */
   def winnowedPassagePairs(documents: DataFrame, k: Int = 5, w: Int = 4,
-                           maxDf: Int = 50): DataFrame = {
+                           maxDf: Int = 50): DataFrame =
+    winnowedEdges(documents, k, w, maxDf)
+      .groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("n_shared"))
+
+  /** [[winnowedPassagePairs]] before its per-pair count (one row per
+    * shared fingerprint); see [[lshEdges]].
+    */
+  private[ops] def winnowedEdges(documents: DataFrame, k: Int = 5, w: Int = 4,
+                                 maxDf: Int = 50): DataFrame = {
     val fps = winnowedFingerprints(documents, k, w)
     val keep = fps.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf)
@@ -490,8 +508,7 @@ object DedupOps {
     kept.select(col("doc_id").as("doc_a"), col("fp"))
       .join(kept.select(col("doc_id").as("doc_b"), col("fp")), "fp")
       .filter(col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("n_shared"))
+      .select("doc_a", "doc_b")
   }
 
   /** Default cap on shingle document frequency: a shingle present in
@@ -527,8 +544,8 @@ object DedupOps {
                                        maxShingleDf: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sh = par(documents)
-      .withColumn("w", expr(tokensExpr))
-      .select(col("doc_id"), explode(expr(shingleExpr(shingleSize))).as("g"))
+      .withColumn("w", tokens)
+      .select(col("doc_id"), explode(shingles(col("w"), shingleSize)).as("g"))
       .distinct()
     val capped = sh
       .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
@@ -598,7 +615,7 @@ object DedupOps {
     require(span > 0, s"span must be positive: $span")
     import org.apache.spark.sql.expressions.Window
     val spans = documents
-      .withColumn("w", expr(tokensExpr))
+      .withColumn("w", tokens)
       .withColumn("n_tok", size(col("w")))
       .withColumn("span_idx", explode(expr(
         s"case when n_tok > 0 then sequence(0, cast((n_tok - 1) / $span as int)) " +

@@ -27,7 +27,7 @@ import graft.ops.OpsUtil.par
   *
   * Parity rules (see FIXTURES.md §3): every regex avoids `\s`/`\d`/
   * `\w` shorthand (Java vs RE2 Unicode divergence — see
-  * [[OpsUtil.tokensExpr]]); whitespace classes list each character
+  * [[OpsUtil.tokens]]); whitespace classes list each character
   * explicitly; the DuckDB oracle mirrors each chain verbatim with the
   * `'g'` flag added where a pattern can match more than once (Spark's
   * `regexp_replace` is always global, DuckDB's default is

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * join is against a model-sized blocklist, always broadcast.
   *
   * Every default regex avoids `\s`/`\d`/`\w` shorthand (Java's Unicode
-  * behavior differs from RE2's — see [[OpsUtil.tokensExpr]]); explicit
+  * behavior differs from RE2's — see [[OpsUtil.tokens]]); explicit
   * classes mean the DuckDB oracle replays matches byte-for-byte.
   * Patterns are applied through the function API only — a pattern
   * routed through a Spark SQL string LITERAL would have its
@@ -173,7 +173,7 @@ object PiiOps {
     * projection. The host class excludes `/` and each whitespace
     * character EXPLICITLY — a negated class happily matches tab and
     * newline in both RE2 and Java, so `[^/ ]` alone would run a host
-    * match straight through a tab; and per [[OpsUtil.tokensExpr]] a
+    * match straight through a tab; and per [[OpsUtil.tokens]] a
     * bare `\s` would diverge between the engines on \x0B.
     */
   def urlBlocklistFilter(documents: DataFrame,

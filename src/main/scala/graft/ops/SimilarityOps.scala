@@ -1284,12 +1284,12 @@ object SimilarityOps {
   def hybridSearch(documents: DataFrame, embeddings: DataFrame,
                    nQueries: Int = 5, perList: Int = 20, k: Int = 10,
                    c: Int = 60): DataFrame = {
-    import OpsUtil.tokensExpr
+    import OpsUtil.tokens
     val dense = bruteForceKnn(embeddings, nQueries, perList)
       .select(col("query_id"), col("vec_id").as("doc_id"),
         col("rnk").as("r_vec"))
     val toks = par(documents).select(col("doc_id"),
-      explode(array_distinct(expr(tokensExpr))).as("token"))
+      explode(array_distinct(tokens)).as("token"))
     val qToks = toks.filter(col("doc_id") < nQueries)
       .select(col("doc_id").as("query_id"), col("token"))
     val overlap = toks.join(broadcast(qToks), Seq("token"))

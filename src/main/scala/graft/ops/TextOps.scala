@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.TokenFunctions
+
 /** Text-analysis operators for the training-data pipeline surface
   * (SURVEY §2.2 Q11, Q18-Q21): tokenization, term frequency, language
   * ID, quality scoring, fingerprinting.
@@ -15,12 +17,12 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  import OpsUtil.tokensExpr
+  import OpsUtil.tokens
 
   /** Q11: term frequency per (lang, token). */
   def termFrequency(documents: DataFrame): DataFrame =
     documents
-      .select(col("lang"), explode(expr(tokensExpr)).as("token"))
+      .select(col("lang"), explode(tokens).as("token"))
       .groupBy("lang", "token")
       .agg(count(lit(1)).as("cnt"))
 
@@ -47,7 +49,7 @@ object TextOps {
     val spark = documents.sparkSession
     import spark.implicits._
     val markers = langMarkers.toDF("token", "cand_lang", "weight")
-    val toks = documents.select(col("doc_id"), explode(expr(tokensExpr)).as("token"))
+    val toks = documents.select(col("doc_id"), explode(tokens).as("token"))
     val scores = toks
       .join(broadcast(markers), "token")
       .groupBy("doc_id", "cand_lang")
@@ -64,24 +66,26 @@ object TextOps {
         coalesce(col("score"), lit(0L)).as("score"))
   }
 
+  /** The English stopwords of [[qualityScore]]'s stopword ratio. */
+  private val stopwords = Seq("the", "a", "and", "of", "to", "in", "is")
+
   /** Q19: per-document quality signals + a composite score.
     * Length/punctuation/stopword heuristics in pure expressions.
     */
   def qualityScore(documents: DataFrame): DataFrame =
     documents
-      .withColumn("w", expr(tokensExpr))
+      .withColumn("w", tokens)
       .withColumn("n_chars", length(col("text")))
       .withColumn("n_tokens", size(col("w")))
       .withColumn("punct_cnt",
         length(col("text")) - length(regexp_replace(col("text"), "[.,;:!?]", "")))
-      .withColumn("stop_cnt",
-        expr("size(filter(w, x -> x in ('the','a','and','of','to','in','is')))"))
+      .withColumn("stop_cnt", size(TokenFunctions.tokensIn(col("w"), stopwords)))
       .select(
         // nullif guards: empty/whitespace-only docs score NULL (same in
         // the oracle), never NaN/Infinity
         col("doc_id"), col("n_chars"), col("n_tokens"),
-        expr("cast(aggregate(w, 0, (acc, x) -> acc + length(x)) as double) / nullif(n_tokens, 0)")
-          .as("avg_token_len"),
+        (TokenFunctions.tokenChars(col("w")).cast("double") /
+          expr("nullif(n_tokens, 0)")).as("avg_token_len"),
         expr("cast(punct_cnt as double) / nullif(n_chars, 0)").as("punct_ratio"),
         expr("cast(stop_cnt as double) / nullif(n_tokens, 0)").as("stopword_ratio"),
         expr("""round(0.5 * least(n_tokens, 100) / 100.0
@@ -284,7 +288,7 @@ object TextOps {
   def tokenCounts(documents: DataFrame): DataFrame =
     documents.select(
       col("doc_id"),
-      size(expr(tokensExpr)).as("n_ws_tokens"),
+      size(tokens).as("n_ws_tokens"),
       size(regexp_extract_all(col("text"),
         lit(bpeTokenRe), lit(0))).as("n_bpe_tokens"))
 
@@ -327,7 +331,7 @@ object TextOps {
     */
   def fingerprint(documents: DataFrame): DataFrame =
     documents
-      .withColumn("w", expr(tokensExpr))
+      .withColumn("w", tokens)
       .select(
         col("doc_id"),
         md5(concat_ws(" ", array_sort(array_distinct(col("w"))))).as("fp"),
@@ -347,8 +351,8 @@ object TextOps {
     * the flagship doesn't pay for the line statistics it discards.
     */
   def topBigramFrac(documents: DataFrame): DataFrame = {
-    val bigrams = documents.withColumn("w", expr(tokensExpr))
-      .select(col("doc_id"), explode(expr(OpsUtil.shingleExpr(2))).as("g"))
+    val bigrams = documents.withColumn("w", tokens)
+      .select(col("doc_id"), explode(OpsUtil.shingles(col("w"), 2)).as("g"))
       .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
       .groupBy("doc_id").agg(max("c").as("mx"), sum("c").as("tot"))
     documents.select("doc_id").join(bigrams, Seq("doc_id"), "left")
@@ -360,7 +364,7 @@ object TextOps {
 
   def repetitionStats(documents: DataFrame): DataFrame = {
     val lines = documents.select(col("doc_id"),
-        expr("filter(transform(split(text, '\\n'), x -> trim(x)), x -> x <> '')").as("l"))
+        OpsUtil.lines.as("l"))
       .select(col("doc_id"), size(col("l")).as("n_lines"),
         (size(col("l")) - size(array_distinct(col("l")))).as("n_dup"))
     lines.join(topBigramFrac(documents), Seq("doc_id"))
@@ -385,12 +389,12 @@ object TextOps {
     */
   def collocations(documents: DataFrame, minCount: Long = 5,
                    topK: Int = 20): DataFrame = {
-    val toks = documents.withColumn("w", expr(tokensExpr))
+    val toks = documents.withColumn("w", tokens)
     val uni = toks.select(explode(col("w")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
     val total = uni.agg(sum("c").as("n_total"))
     val bi = toks
-      .select(explode(expr(OpsUtil.shingleExpr(2))).as("gram"))
+      .select(explode(OpsUtil.shingles(col("w"), 2)).as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("c_ab"))
       .filter(col("c_ab") >= minCount)
     bi
@@ -417,8 +421,7 @@ object TextOps {
     */
   def stripRepeatedLines(documents: DataFrame): DataFrame =
     documents
-      .withColumn("l",
-        expr("filter(transform(split(text, '\\n'), x -> trim(x)), x -> x <> '')"))
+      .withColumn("l", OpsUtil.lines)
       .withColumn("kept",
         expr("filter(l, (x, i) -> array_position(l, x) == i + 1)"))
       .select(col("doc_id"),
@@ -444,8 +447,8 @@ object TextOps {
   def ngramNovelty(newDocs: DataFrame, existing: DataFrame,
                    n: Int = 5): DataFrame = {
     def grams(df: DataFrame) = df
-      .withColumn("w", expr(tokensExpr))
-      .select(col("doc_id"), explode(expr(OpsUtil.shingleExpr(n))).as("gram"))
+      .withColumn("w", tokens)
+      .select(col("doc_id"), explode(OpsUtil.shingles(col("w"), n)).as("gram"))
     val corpusGrams = grams(existing).select("gram").distinct()
       .withColumn("seen", lit(1))
     grams(newDocs).distinct()
@@ -483,7 +486,7 @@ object TextOps {
       .flatMap { case (qid, terms) => terms.distinct.map(qid -> _) }
       .toDF("query_id", "term")
     val toks = documents
-      .select(col("doc_id"), explode(expr(tokensExpr)).as("term"))
+      .select(col("doc_id"), explode(tokens).as("term"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("n_terms").desc, col("tf_sum").desc, col("doc_id").asc)
     toks.join(broadcast(qTerms), "term")
@@ -514,7 +517,7 @@ object TextOps {
     */
   def buildPostings(documents: DataFrame, nBuckets: Int = 64): DataFrame =
     documents
-      .select(col("doc_id"), explode(expr(tokensExpr)).as("term"))
+      .select(col("doc_id"), explode(tokens).as("term"))
       .groupBy("term", "doc_id")
       .agg(count(lit(1)).as("tf"))
       .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets)).cast("int"))
@@ -636,7 +639,7 @@ object TextOps {
     */
   def vocabulary(documents: DataFrame, minCount: Long = 1L): DataFrame = {
     val counts = documents
-      .select(explode(expr(tokensExpr)).as("token"))
+      .select(explode(tokens).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
     val rankW = Window.orderBy(col("cnt").desc, col("token").asc)
     counts
@@ -677,7 +680,7 @@ object TextOps {
       .filter(col("token_id") <= vocabSize)
       .select("token", "token_id")
     documents
-      .select(col("doc_id"), explode(expr(tokensExpr)).as("token"))
+      .select(col("doc_id"), explode(tokens).as("token"))
       .join(broadcast(vocab), Seq("token"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"),
@@ -693,8 +696,8 @@ object TextOps {
     */
   def nGramCounts(documents: DataFrame, n: Int = 2): DataFrame =
     documents
-      .withColumn("w", expr(tokensExpr))
-      .select(col("lang"), explode(expr(OpsUtil.shingleExpr(n))).as("gram"))
+      .withColumn("w", tokens)
+      .select(col("lang"), explode(OpsUtil.shingles(col("w"), n)).as("gram"))
       .groupBy("lang", "gram")
       .agg(count(lit(1)).as("cnt"))
 
@@ -705,12 +708,16 @@ object TextOps {
     * this surfaces them for removal (the n-gram-overlap decontamination
     * procedure published with GPT-3, Appendix C).
     *
-    * Plan shape: both sides expand to DISTINCT (doc, gram) /(gram) sets
-    * with map-side partial aggregation, then a LEFT SEMI equi-join on
-    * the gram and one count per contaminated doc. Benchmarks are small
-    * next to the corpus, so the semi-join broadcasts (AQE decides from
-    * the measured size); nothing is ever all-pairs. At 100 TB the only
-    * adaptation worth making is joining on a 64-bit gram hash instead
+    * Plan shape: one plan, no pre-pass. Both sides expand to DISTINCT
+    * (doc, gram) / (gram) sets, joined LEFT SEMI on the gram, with one
+    * count per contaminated doc. The optimizer pushes the semi-join
+    * below the corpus-side distinct (the join key is its grouping key),
+    * and benchmarks are small next to the corpus, so the semi-join
+    * broadcasts and only corpus grams that occur in the benchmark reach
+    * the distinct's exchange; nothing is ever all-pairs. A Bloom
+    * pre-filter over the benchmark grams would drop only rows that
+    * broadcast probe drops anyway, for extra jobs per build. At 100 TB
+    * the only adaptation worth making is joining on a 64-bit gram hash instead
     * of the gram string to shrink the shuffled/broadcast payload —
     * semantics identical modulo hash collisions, so the string form
     * stays the oracle-checked definition.
@@ -718,41 +725,10 @@ object TextOps {
   def benchmarkContamination(corpus: DataFrame, benchmark: DataFrame,
                              n: Int = 5): DataFrame = {
     def grams(df: DataFrame) = df
-      .withColumn("w", expr(tokensExpr))
-      .select(col("doc_id"), explode(expr(OpsUtil.shingleExpr(n))).as("gram"))
-    val spark = corpus.sparkSession
-    val bg = grams(benchmark).select("gram").distinct()
-    // guide §3.2 (round-17): drop definitely-clean corpus grams with
-    // a Bloom filter over the benchmark grams BEFORE the corpus-side
-    // distinct — contamination is rare by construction, so nearly
-    // every (doc, gram) row dies at the scan instead of paying the
-    // corpus-wide exchange. No false negatives, so the exact semi-
-    // join downstream returns the identical rows
-    // (ContaminationBloomSpec pins filtered ≡ direct); false
-    // positives only cost a little extra shuffle. ON by default:
-    // measured at sf0.1 (median-of-3, same subset) the filter wins
-    // even at fixture scale — q68 0.89→0.81 s, q177 6.2→5.8,
-    // q185 6.8→5.2, q186 9.8→6.8 — because the two extra small-side
-    // jobs (count + build over BENCHMARK grams, the bounded side)
-    // cost less than the corpus-gram distinct they thin. The only
-    // gate is buildability: an EMPTY benchmark cannot build a filter
-    // (stat.bloomFilter returns no buffer) and needs none, and a
-    // benchmark-gram set past `bloomMaxItems` (default ~100M ≈ 120 MB
-    // at 1% fpp) would strain driver/executor memory — both take the
-    // direct path, which is always correct.
-    val maxItems = spark.conf.get(
-      "spark.graft.contamination.bloomMaxItems", (100L << 20).toString).toLong
-    bg.persist()
-    val nItems = bg.count()
-    val cg = if (nItems == 0L || nItems > maxItems) grams(corpus)
-    else {
-      val bf = bg.stat.bloomFilter("gram", nItems, 0.01)
-      val bfB = spark.sparkContext.broadcast(bf)
-      val mightMatch = udf((g: String) => g != null && bfB.value.mightContainString(g))
-      grams(corpus).filter(mightMatch(col("gram")))
-    }
-    cg.distinct()
-      .join(bg, Seq("gram"), "left_semi")
+      .withColumn("w", tokens)
+      .select(col("doc_id"), explode(OpsUtil.shingles(col("w"), n)).as("gram"))
+    grams(corpus).distinct()
+      .join(grams(benchmark).select("gram").distinct(), Seq("gram"), "left_semi")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shared"))
   }
@@ -778,7 +754,7 @@ object TextOps {
     // running offset for every later doc in its stream; pin NULL text
     // to 0 tokens instead
     packSequencesByCount(documents.select(col("doc_id"), col("lang"),
-        greatest(size(expr(tokensExpr)), lit(0)).cast("long").as("n_tok")),
+        greatest(size(tokens), lit(0)).cast("long").as("n_tok")),
       budget, shards)
 
   /** The packing window over CALLER-SUPPLIED token counts — q70's
@@ -821,7 +797,7 @@ object TextOps {
     require(stride > 0 && stride <= chunk,
       s"stride must be in [1, chunk]: $stride")
     documents
-      .withColumn("w", expr(tokensExpr))
+      .withColumn("w", tokens)
       .withColumn("n_tok", greatest(size(col("w")), lit(0)))
       .withColumn("start_tok", explode(expr(
         s"case when n_tok > 0 then sequence(0, n_tok - 1, $stride) " +
@@ -892,7 +868,7 @@ object TextOps {
     */
   def tfIdf(documents: DataFrame): DataFrame = {
     val tf = documents
-      .select(col("doc_id"), explode(expr(tokensExpr)).as("token"))
+      .select(col("doc_id"), explode(tokens).as("token"))
       .groupBy("doc_id", "token")
       .agg(count(lit(1)).as("tf"))
     val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
@@ -925,7 +901,7 @@ object TextOps {
     */
   def topTokensGate(documents: DataFrame, k: Int = 20,
                     maxTracked: Int = 8192): DataFrame = {
-    val toks = OpsUtil.par(documents).select(explode(expr(tokensExpr)).as("tok"))
+    val toks = OpsUtil.par(documents).select(explode(tokens).as("tok"))
     val approx = toks
       .agg(expr(s"approx_top_k(tok, $k, $maxTracked)").as("tk"))
       .select(explode(col("tk")).as("e"))
@@ -1007,7 +983,7 @@ object TextOps {
     // token total from the un-exploded arrays — a second corpus-wide
     // explode would materialize one row per token just to count them;
     // greatest(...,0) guards size(null) = -1 on null-text rows
-    val total = documents.select(expr(tokensExpr).as("w"))
+    val total = documents.select(tokens.as("w"))
       .agg(sum(greatest(size(col("w")), lit(0))).cast("long").as("n_total"))
     val bi = prunedNgramCounts(documents, Seq("b1", "b2"), "cb", maxBigrams)
     val tri = prunedNgramCounts(documents, Seq("t1", "t2", "t3"), "ct",
@@ -1107,7 +1083,7 @@ object TextOps {
                           keepDocId: Boolean = false): DataFrame = {
     val n = gramCols.size
     val id = if (keepDocId) Seq(col("doc_id")) else Seq.empty
-    val base = documents.select(id :+ expr(tokensExpr).as("w"): _*)
+    val base = documents.select(id :+ tokens.as("w"): _*)
     if (n == 1) base.select(id :+ explode(col("w")).as(gramCols.head): _*)
     else {
       val grams = gramCols.zipWithIndex.map {

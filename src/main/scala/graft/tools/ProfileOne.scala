@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
@@ -9,7 +10,10 @@ import scala.collection.mutable
   * stage's wall time, task count and shuffle volume. The output is the
   * optimization round's measurement tool — it says whether a query's
   * seconds are a few heavy stages (compute-bound: fix the operator) or
-  * many tiny ones (latency-bound: fix the job/stage COUNT).
+  * many tiny ones (latency-bound: fix the job/stage COUNT). Each run
+  * also prints its generated-class compiles (`COMPILES <query> <run>
+  * <n>`): a steady-state run that still compiles most of its classes
+  * has outgrown Spark's codegen cache.
   *
   * Usage: tools/run_tool.sh graft.tools.ProfileOne <query> [sfDir]
   */
@@ -32,8 +36,17 @@ object ProfileOne {
       try graft.io.Tables.parquet(spark, sfDir, t).count()
       catch { case _: Throwable => })
 
+    // generated classes Janino compiled since `from` — the codegen
+    // cache's misses (its 100 entries are keyed by class loader and
+    // code, so a driver-side and a task-side use of one class are two)
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def report(run: String, from: Long): Unit =
+      println(s"COMPILES $name $run ${compiles() - from}")
+
     // warm run (codegen/JIT) exactly like the bench
+    var from = compiles()
     graft.SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
+    report("warm", from)
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
@@ -42,7 +55,9 @@ object ProfileOne {
     // any per-(session, dir) artifact scope a query seeds on run 1 —
     // profile run 2 unless SPARK_GRAFT_PROFILE_RUN=1
     if (sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUN", "2") == "2") {
+      from = compiles()
       graft.SparkEntry.queries(name)(spark, sfDir).count()
+      report("run2", from)
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
@@ -82,9 +97,11 @@ object ProfileOne {
         }
     }
     spark.sparkContext.addSparkListener(listener)
+    from = compiles()
     val t0 = System.nanoTime()
     graft.SparkEntry.queries(name)(spark, sfDir).count()
     val dt = (System.nanoTime() - t0) / 1e9
+    report("profiled", from)
     Thread.sleep(500) // let the listener bus drain
     println(f"TOTAL $name $dt%.3f s  jobs=$nJobs stages=${stages.size} " +
       f"stageWallSum=${stages.map(_.wallMs).sum / 1000.0}%.2f s " +

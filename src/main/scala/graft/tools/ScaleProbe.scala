@@ -40,6 +40,8 @@ object ScaleProbe {
     "q57_training_corpus", "q47_dedup_apply", "q54_stream_join",
     "q15_jaccard", "q24_typed_mapreduce", "q41_dedup_clusters",
     "q34_knn_ivf",
+    // the decontamination join the flagships share (q177/q185/q186)
+    "q68_contamination",
     // round-5 heavies: flagship v2 (winnow edges + priority tail),
     // the streaming near-dup path, containment's inverted index
     "q100_training_corpus_v2", "q82_stream_neardup", "q98_containment",
