@@ -15,7 +15,7 @@ private[ops] object OpsUtil {
     * (DuckDB's) does not, so a bare `\s+` silently diverges between
     * engines on such input; the six characters space, \t, \n, \x0B,
     * \f, \r keep both sides identical. Mirrored by the DuckDB oracle
-    * (SparkEntry.duckToks) — change both together or dedup/text
+    * (graft.queries.DuckSql.duckToks) — change both together or dedup/text
     * parity breaks.
     */
   def tokens: Column = TokenFunctions.wsTokens(col("text"))
@@ -24,7 +24,7 @@ private[ops] object OpsUtil {
     * tokens joined by one space; `[]` under `n` tokens,
     * [[graft.functions.WordShingles]]) — shared by the MinHash
     * shingles and q56's n-gram counts; mirrored by
-    * SparkEntry.duckShingles.
+    * graft.queries.DuckSql.duckShingles.
     */
   def shingles(w: Column, n: Int): Column = TokenFunctions.wordShingles(w, n)
 
