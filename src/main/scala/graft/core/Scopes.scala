@@ -58,30 +58,6 @@ object Scopes {
   def save(df: DataFrame, scope: Scope, name: String): Unit =
     df.write.mode("overwrite").parquet(scope.path(name))
 
-  /** Single-row ARTIFACT METADATA beside stored rows (bucket counts,
-    * banding geometry, PQ shape): one shared writer/reader so every
-    * artifact records its parameters the same way and reads them back
-    * BY NAME — the positional-getInt copies this replaces could each
-    * silently break if their writer's column order drifted.
-    */
-  def writeMeta(spark: SparkSession, scope: Scope, name: String,
-                fields: (String, Int)*): Unit = {
-    require(fields.nonEmpty, "metadata needs at least one field")
-    spark.createDataFrame(
-      java.util.Collections.singletonList(
-        org.apache.spark.sql.Row.fromSeq(fields.map(_._2))),
-      org.apache.spark.sql.types.StructType(fields.map(f =>
-        org.apache.spark.sql.types.StructField(f._1,
-          org.apache.spark.sql.types.IntegerType))))
-      .write.mode("overwrite").parquet(scope.path(name))
-  }
-
-  /** The stored metadata fields, by name. */
-  def readMeta(spark: SparkSession, scope: Scope, name: String): Map[String, Int] = {
-    val row = spark.read.parquet(scope.path(name)).head()
-    row.schema.fieldNames.map(f => f -> row.getAs[Int](f)).toMap
-  }
-
   def load(spark: SparkSession, scope: Scope, name: String): DataFrame =
     spark.read.parquet(scope.path(name))
 

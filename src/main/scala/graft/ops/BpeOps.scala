@@ -614,27 +614,29 @@ object BpeOps {
     require(nMerges >= 0, s"nMerges must be non-negative: $nMerges")
     val spark = documents.sparkSession
     import spark.implicits._
-    // the FULL count table rides the artifact as its sufficient
-    // statistic: a later refresh (q183) merges batch counts into it
-    // and re-fits without ever re-reading the original corpus
-    val counts = wordCountsDf(documents, textCol, pretok)
-      .localCheckpoint(eager = true)
-    counts.write.mode("overwrite").parquet(scope.path(s"$name/counts"))
-    val dict = topWords(counts, maxWords)
-    val merges = fitFromCounts(dict, nMerges)
-    val alphabet = dict.flatMap(_._1.map(_.toString)).distinct.sorted
-    merges.toDF("merge_rank", "lhs", "rhs", "freq")
-      .coalesce(1).write.mode("overwrite").parquet(scope.path(s"$name/rows"))
-    alphabet.toDF("sym")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(scope.path(s"$name/alphabet"))
     // the PRETOKENIZER SETTING is part of the model: an encode under a
     // different pretokenization is a different token stream, so the
     // flag rides the artifact and encodeWithArtifact obeys the stored
     // value, never a caller's guess
-    graft.core.Scopes.writeMeta(spark, scope, s"$name/meta",
-      "n_merges" -> nMerges, "max_words" -> maxWords,
-      "pretok" -> (if (pretok) 1 else 0))
+    graft.io.Artifact.save(spark, scope, name, "n_merges" -> nMerges,
+        "max_words" -> maxWords, "pretok" -> (if (pretok) 1 else 0)) {
+      // the FULL count table rides the artifact as its sufficient
+      // statistic: a later refresh (q183) merges batch counts into it
+      // and re-fits without ever re-reading the original corpus
+      val counts = wordCountsDf(documents, textCol, pretok)
+        .localCheckpoint(eager = true)
+      counts.write.mode("overwrite").parquet(scope.path(s"$name/counts"))
+      // no refresh applied yet: the counts' manifest holds no token
+      graft.io.Artifact.writeAt(spark, scope.path(s"$name/counts"))
+      val dict = topWords(counts, maxWords)
+      val merges = fitFromCounts(dict, nMerges)
+      val alphabet = dict.flatMap(_._1.map(_.toString)).distinct.sorted
+      merges.toDF("merge_rank", "lhs", "rhs", "freq")
+        .coalesce(1).write.mode("overwrite").parquet(scope.path(s"$name/rows"))
+      alphabet.toDF("sym")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(scope.path(s"$name/alphabet"))
+    }
   }
 
   /** The stored merge table, in rank order (merge_rank, lhs, rhs,
@@ -642,7 +644,7 @@ object BpeOps {
     */
   def loadBpeMerges(spark: SparkSession, scope: graft.core.Scope,
                     name: String): DataFrame =
-    spark.read.parquet(scope.path(s"$name/rows"))
+    graft.io.Artifact.load(spark, scope, name)
       .select(col("merge_rank").cast("int"), col("lhs"), col("rhs"),
         col("freq").cast("long"))
 
@@ -652,7 +654,7 @@ object BpeOps {
   def loadBpeAlphabet(spark: SparkSession, scope: graft.core.Scope,
                       name: String): Seq[String] = {
     import spark.implicits._
-    spark.read.parquet(scope.path(s"$name/alphabet"))
+    graft.io.Artifact.load(spark, scope, name, "alphabet")
       .select("sym").as[String].collect().toSeq.sorted
   }
 
@@ -675,8 +677,8 @@ object BpeOps {
     * CRASH-REPLAY SAFETY (both stored tables, not just counts): the
     * merge-table rewrite is ALSO staged (rows-next → swap), and a
     * deterministic digest of the batch's word counts rides the counts
-    * directory through the same rename (`_refresh_token`, hidden from
-    * parquet listing by its underscore). A replay of the SAME batch
+    * directory through the same rename (the `refresh_token` field of
+    * the counts' own manifest). A replay of the SAME batch
     * — the crash-recovery case: the caller re-runs after a failure
     * anywhere in the refresh — sees its own token already on the live
     * counts, SKIPS the count merge (no double-sum of the sufficient
@@ -708,9 +710,9 @@ object BpeOps {
                  batchId: Option[Long] = None): Boolean = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val meta = graft.core.Scopes.readMeta(spark, scope, s"$name/meta")
-    val (nMerges, maxWords) = (meta("n_merges"), meta("max_words"))
-    val pretok = meta.getOrElse("pretok", 0) == 1
+    val meta = graft.io.Artifact.read(spark, scope, name)
+    val (nMerges, maxWords) = (meta.int("n_merges"), meta.int("max_words"))
+    val pretok = meta.int("pretok") == 1
     val alphabet = loadBpeAlphabet(spark, scope, name)
     // one pass over the batch: the counts feed both the digest and the
     // merge (localCheckpoint so the token and the merged table cannot
@@ -721,17 +723,21 @@ object BpeOps {
       .agg(expr("coalesce(bit_xor(xxhash64(w, cnt)), 0L)"))
       .head().getLong(0))
     // "replayed" = this batch's token already rides the live counts:
-    // the merge ran on a previous attempt and must not run again
-    val replayed = readRefreshToken(spark,
-      scope.path(s"$name/counts/$refreshTokenFile")).contains(token)
+    // the merge ran on a previous attempt and must not run again (a
+    // corrupt token fails by name: guessing could double-sum)
+    val applied = graft.io.Artifact.readAt(spark, scope.path(s"$name/counts"))
+    val replayed = applied.get("refresh_token").isDefined &&
+      applied.long("refresh_token") == token
     if (!replayed) {
       val merged = spark.read.parquet(scope.path(s"$name/counts"))
         .select(col("w"), col("cnt"))
         .unionByName(batchCounts)
         .groupBy("w").agg(sum(col("cnt")).as("cnt"))
       merged.write.mode("overwrite").parquet(scope.path(s"$name/counts-next"))
-      writeRefreshToken(spark,
-        scope.path(s"$name/counts-next/$refreshTokenFile"), token)
+      // the token rides the counts directory through swapInto's single
+      // rename: the token and the statistic it describes move together
+      graft.io.Artifact.writeAt(spark, scope.path(s"$name/counts-next"),
+        "refresh_token" -> token)
       graft.io.Layout.swapInto(spark, scope.path(s"$name/counts-next"),
         scope.path(s"$name/counts"))
     }
@@ -747,51 +753,6 @@ object BpeOps {
     !replayed
   }
 
-  // hidden from parquet listings (leading underscore) so it can ride
-  // the counts directory through Layout.swapInto's single rename —
-  // the token and the statistic it describes are atomic together
-  private val refreshTokenFile = "_refresh_token"
-
-  private def fsFor(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def writeRefreshToken(spark: SparkSession, path: String,
-                                token: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val out = fsFor(spark, p).create(p, true)
-    try out.write(token.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readRefreshToken(spark: SparkSession,
-                               path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        // loop to EOF: a single read() may legally short-read (HDFS
-        // packet boundaries) and a truncated token would defeat the
-        // double-sum guard by never matching
-        val buf = new java.io.ByteArrayOutputStream()
-        val bytes = new Array[Byte](64)
-        var n = in.read(bytes)
-        while (n > 0) { buf.write(bytes, 0, n); n = in.read(bytes) }
-        val raw = new String(buf.toByteArray, "UTF-8").trim
-        // fail LOUDLY, naming the file: an unparseable token means the
-        // replay guard cannot tell whether the counts merge applied,
-        // and silently treating it as "not applied" would double-sum
-        // the sufficient statistic if it HAD. The token rides the
-        // counts dir through one atomic rename, so this is external
-        // damage, not a crash window — the operator must adjudicate.
-        Some(scala.util.Try(raw.toLong).getOrElse(throw new IllegalStateException(
-          s"corrupt refresh token at $path (content: '$raw'); the replay " +
-            "guard cannot verify whether the last batch's counts landed — " +
-            "compare counts against the feed before deleting the token")))
-      } finally in.close()
-    }
-  }
-
   /** The q183 GATE: the refreshed artifact's merge table must equal a
     * FULL refit on corpus+batch under the frozen alphabet, row for
     * row — both directions of the symmetric difference emit as
@@ -802,9 +763,9 @@ object BpeOps {
   def bpeRefreshGate(spark: SparkSession, scope: graft.core.Scope,
                      name: String, corpusPlusBatch: DataFrame,
                      textCol: String = "text"): DataFrame = {
-    val meta = graft.core.Scopes.readMeta(spark, scope, s"$name/meta")
-    val (nMerges, maxWords) = (meta("n_merges"), meta("max_words"))
-    val pretok = meta.getOrElse("pretok", 0) == 1
+    val meta = graft.io.Artifact.read(spark, scope, name)
+    val (nMerges, maxWords) = (meta.int("n_merges"), meta.int("max_words"))
+    val pretok = meta.int("pretok") == 1
     val alphabet = loadBpeAlphabet(spark, scope, name)
     import spark.implicits._
     val full = fitFromCounts(
@@ -849,9 +810,7 @@ object BpeOps {
                          name: String,
                          textCol: String = "text"): DataFrame = {
     val spark = documents.sparkSession
-    // older artifacts carry no pretok field — absent means false
-    val pretok = graft.core.Scopes.readMeta(spark, scope, s"$name/meta")
-      .getOrElse("pretok", 0) == 1
+    val pretok = graft.io.Artifact.read(spark, scope, name).int("pretok") == 1
     encodeStats(documents, loadBpeMerges(spark, scope, name), textCol,
       Some(loadBpeAlphabet(spark, scope, name)), pretok)
   }

@@ -191,24 +191,17 @@ object ClusterOps {
     * or append can never assume a different bucket universe).
     */
   def saveClusterLabels(labels: DataFrame, scope: graft.core.Scope,
-                        name: String, nBuckets: Int = 32): Unit = {
-    val spark = labels.sparkSession
-    import spark.implicits._
-    labels.filter(col("doc_id") =!= col("canonical_id"))
-      .select(col("doc_id").cast("long").as("doc_id"),
-        col("canonical_id").cast("long").as("canonical_id"),
-        pmod(xxhash64(col("canonical_id")), lit(nBuckets.toLong))
-          .cast("int").as("cbucket"))
-      .write.mode("overwrite").partitionBy("cbucket")
-      .parquet(scope.path(s"$name/rows"))
-    graft.core.Scopes.writeMeta(spark, scope, s"$name/meta",
-      "n_buckets" -> nBuckets)
-  }
-
-  /** The artifact's recorded bucket universe. */
-  def clusterLabelsNBuckets(spark: org.apache.spark.sql.SparkSession,
-                            scope: graft.core.Scope, name: String): Int =
-    graft.core.Scopes.readMeta(spark, scope, s"$name/meta")("n_buckets")
+                        name: String, nBuckets: Int = 32): Unit =
+    graft.io.Artifact.save(labels.sparkSession, scope, name,
+        "n_buckets" -> nBuckets) {
+      labels.filter(col("doc_id") =!= col("canonical_id"))
+        .select(col("doc_id").cast("long").as("doc_id"),
+          col("canonical_id").cast("long").as("canonical_id"),
+          pmod(xxhash64(col("canonical_id")), lit(nBuckets.toLong))
+            .cast("int").as("cbucket"))
+        .write.mode("overwrite").partitionBy("cbucket")
+        .parquet(scope.path(s"$name/rows"))
+    }
 
   /** Stored label rows under the artifact's fixed schema — explicit so
     * an artifact whose non-identity row set is EMPTY (every doc a
@@ -216,9 +209,11 @@ object ClusterOps {
     * frame instead of failing schema inference.
     */
   private def labelRows(spark: org.apache.spark.sql.SparkSession,
-                        scope: graft.core.Scope, name: String): DataFrame =
+                        scope: graft.core.Scope, name: String): DataFrame = {
+    graft.io.Artifact.read(spark, scope, name)
     spark.read.schema("doc_id LONG, canonical_id LONG, cbucket INT")
       .parquet(scope.path(s"$name/rows"))
+  }
 
   /** Probe: the q41-shaped full label table for `vertices`, from the
     * stored artifact — docs without a stored row are singletons
@@ -268,7 +263,7 @@ object ClusterOps {
                         scope: graft.core.Scope, name: String,
                         newEdges: DataFrame): Unit = {
     import spark.implicits._
-    val nB = clusterLabelsNBuckets(spark, scope, name)
+    val nB = graft.io.Artifact.read(spark, scope, name).int("n_buckets")
     val rowsPath = scope.path(s"$name/rows")
     def bucketOf(c: org.apache.spark.sql.Column) =
       pmod(xxhash64(c), lit(nB.toLong)).cast("int")
@@ -728,20 +723,15 @@ object ClusterOps {
     * artifacts.
     */
   def saveCorpusShards(documents: DataFrame, scope: graft.core.Scope,
-                       name: String, nShards: Int = 8): Unit = {
-    // rows first, meta LAST (the saveBands/savePqIndex convention): a
-    // write that dies mid-rows must not leave fresh meta (possibly a
-    // new shard count) beside stale rows — the audits would then
-    // recompute under the wrong geometry and misreport a write
-    // failure as content corruption
-    corpusShards(documents, nShards)
-      .repartition(col("split"), col("shard"))
-      .sortWithinPartitions(col("pos"))
-      .write.partitionBy("split", "shard")
-      .mode("overwrite").parquet(scope.path(s"$name/rows"))
-    graft.core.Scopes.writeMeta(documents.sparkSession, scope,
-      s"$name/meta", "n_shards" -> nShards)
-  }
+                       name: String, nShards: Int = 8): Unit =
+    graft.io.Artifact.save(documents.sparkSession, scope, name,
+        "n_shards" -> nShards) {
+      corpusShards(documents, nShards)
+        .repartition(col("split"), col("shard"))
+        .sortWithinPartitions(col("pos"))
+        .write.partitionBy("split", "shard")
+        .mode("overwrite").parquet(scope.path(s"$name/rows"))
+    }
 
   /** Q169 — the flagship's SAFETY tail: the v3-selected corpus
     * (q163) carried through the generic PII scrub (PiiOps) before it
@@ -932,8 +922,7 @@ object ClusterOps {
   def corpusShardArtifactGate(spark: org.apache.spark.sql.SparkSession,
                               scope: graft.core.Scope, name: String,
                               documents: DataFrame): DataFrame = {
-    val nShards = graft.core.Scopes.readMeta(spark, scope,
-      s"$name/meta")("n_shards")
+    val nShards = graft.io.Artifact.read(spark, scope, name).int("n_shards")
     val cols = Seq("doc_id", "lang", "source", "n_tokens", "split", "shard", "pos")
     def canon(df: DataFrame): DataFrame = df.select(
       col("doc_id").cast("long"), col("lang"), col("source"),
@@ -977,8 +966,7 @@ object ClusterOps {
   def corpusShardDigestAudit(spark: org.apache.spark.sql.SparkSession,
                              scope: graft.core.Scope, name: String,
                              documents: DataFrame): DataFrame = {
-    val nShards = graft.core.Scopes.readMeta(spark, scope,
-      s"$name/meta")("n_shards")
+    val nShards = graft.io.Artifact.read(spark, scope, name).int("n_shards")
     // group keys are the partition address; everything else (pos
     // included — in-shard order is part of the contract) digests
     val valueCols = Seq("doc_id", "lang", "source", "n_tokens", "pos")

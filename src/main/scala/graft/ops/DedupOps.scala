@@ -162,31 +162,24 @@ object DedupOps {
   def saveBands(documents: DataFrame, scope: graft.core.Scope,
                 name: String, numHashes: Int = 12, bandSize: Int = 2,
                 shingleSize: Int = 3): Unit = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    minhashBands(documents, numHashes, bandSize, shingleSize)
-      .write.mode("overwrite").partitionBy("b")
-      .parquet(scope.path(s"$name/rows"))
-    graft.core.Scopes.writeMeta(spark, scope, s"$name/meta",
-      "num_hashes" -> numHashes, "band_size" -> bandSize,
-      "shingle_size" -> shingleSize)
+    graft.io.Artifact.save(documents.sparkSession, scope, name,
+        "num_hashes" -> numHashes, "band_size" -> bandSize,
+        "shingle_size" -> shingleSize) {
+      minhashBands(documents, numHashes, bandSize, shingleSize)
+        .write.mode("overwrite").partitionBy("b")
+        .parquet(scope.path(s"$name/rows"))
+    }
   }
 
   def appendBands(batch: DataFrame, scope: graft.core.Scope,
                   name: String): Unit = {
-    val Seq(nh, bs, ss) = bandGeometry(batch.sparkSession, scope, name)
-    appendBandRows(minhashBands(batch, nh, bs, ss), scope, name)
-  }
-
-  /** The artifact's recorded (numHashes, bandSize, shingleSize). */
-  def bandGeometry(spark: org.apache.spark.sql.SparkSession,
-                   scope: graft.core.Scope, name: String): Seq[Int] = {
-    val meta = graft.core.Scopes.readMeta(spark, scope, s"$name/meta")
-    Seq(meta("num_hashes"), meta("band_size"), meta("shingle_size"))
+    val g = graft.io.Artifact.read(batch.sparkSession, scope, name)
+    appendBandRows(minhashBands(batch, g.int("num_hashes"),
+      g.int("band_size"), g.int("shingle_size")), scope, name)
   }
 
   /** Append PRE-COMPUTED band rows (they must come from
-    * [[minhashBands]] under [[bandGeometry]] — the streaming
+    * [[minhashBands]] under the manifest's geometry — the streaming
     * maintainer computes them once for its candidate join and appends
     * the same frame instead of re-deriving).
     */
@@ -198,7 +191,7 @@ object DedupOps {
 
   def loadBands(spark: org.apache.spark.sql.SparkSession,
                 scope: graft.core.Scope, name: String): DataFrame =
-    spark.read.parquet(scope.path(s"$name/rows"))
+    graft.io.Artifact.load(spark, scope, name)
       .select(col("doc_id"), col("b").cast("long").as("b"), col("bh"))
 
   /** Q59: INCREMENTAL exact dedup — the daily-ingest primitive: admit

@@ -105,7 +105,7 @@ object GraphOps {
     * once per crawl epoch and read by every frontier wave (q187),
     * instead of re-deriving the edge graph + running the iteration on
     * each call. Stored under a Scope with the iteration count and the
-    * rank scale recorded in meta (the q137 artifact convention), so a
+    * rank scale recorded in its manifest (the q137 artifact convention), so a
     * reader knows exactly which trajectory it is consuming and
     * [[loadDomainRank]] can refuse a scale it does not expect.
     *
@@ -125,15 +125,15 @@ object GraphOps {
     val exp = math.log10(scale.toDouble).round.toInt
     require(math.pow(10, exp).toLong == scale,
       s"scale must be a power of ten to be meta-recordable: $scale")
-    val spark = edges.sparkSession
-    domainRank(edges, iters, scale)
-      .write.mode("overwrite").parquet(scope.path(s"$name/rows"))
-    graft.core.Scopes.writeMeta(spark, scope, s"$name/meta",
-      "iters" -> iters, "scale_pow10" -> exp)
+    graft.io.Artifact.save(edges.sparkSession, scope, name,
+        "iters" -> iters, "scale_pow10" -> exp) {
+      domainRank(edges, iters, scale)
+        .write.mode("overwrite").parquet(scope.path(s"$name/rows"))
+    }
   }
 
   /** Reads a [[saveDomainRank]] artifact back as (domain, pr), gated
-    * on the recorded meta: the caller states the trajectory it
+    * on the recorded manifest: the caller states the trajectory it
     * expects and a mismatched artifact fails loudly instead of
     * silently feeding ranks at the wrong scale into a frontier sort.
     */
@@ -141,15 +141,14 @@ object GraphOps {
                      scope: graft.core.Scope, name: String,
                      expectIters: Int = 3,
                      expectScale: Long = 1000000000000L): DataFrame = {
-    val meta = graft.core.Scopes.readMeta(spark, scope, s"$name/meta")
+    val meta = graft.io.Artifact.read(spark, scope, name)
     val exp = math.log10(expectScale.toDouble).round.toInt
     // validate like the save path: a non-power-of-ten expectation
     // would ROUND to a recorded exponent and pass the gate wrongly
     require(math.pow(10, exp).toLong == expectScale,
       s"expectScale must be a power of ten: $expectScale")
-    require(meta.get("iters").contains(expectIters) &&
-      meta.get("scale_pow10").contains(exp),
-      s"domain-rank artifact $name has meta $meta; expected " +
+    require(meta.int("iters") == expectIters && meta.int("scale_pow10") == exp,
+      s"domain-rank artifact $name has meta ${meta.fields}; expected " +
         s"iters=$expectIters scale_pow10=$exp")
     spark.read.parquet(scope.path(s"$name/rows"))
       .select(col("domain"), col("pr"))

@@ -1315,13 +1315,14 @@ object HtmlOps {
                   name: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
     val spark = urls.sparkSession
-    graft.core.Scopes.writeMeta(spark, scope, s"$name/meta",
-      "n_buckets" -> nBuckets)
-    val tbl = registerKeyTable(spark, scope, name, recreate = true)
-    urlCanonicalDedup(urls).filter(col("is_canonical"))
-      .select(col("canon"), col("doc_id"),
-        keyBucket(col("canon"), nBuckets))
-      .write.insertInto(tbl)
+    graft.io.Artifact.save(spark, scope, name, "n_buckets" -> nBuckets) {
+      val tbl = registerKeyTable(spark, scope, name,
+        recreateWith = Some(nBuckets))
+      urlCanonicalDedup(urls).filter(col("is_canonical"))
+        .select(col("canon"), col("doc_id"),
+          keyBucket(col("canon"), nBuckets))
+        .write.insertInto(tbl)
+    }
   }
 
   private def keyBucket(canon: Column, nBuckets: Int): Column =
@@ -1341,7 +1342,7 @@ object HtmlOps {
     * from the artifact path (MD5 — names must be catalog-legal and
     * deterministic so a fresh session re-registers the same external
     * table over the same files); the bucket count comes from the
-    * artifact's own meta, the q137 self-describing convention.
+    * artifact's own manifest, the q137 self-describing convention.
     */
   // ensured (process, rowsPath) registrations — the name is
   // deterministic, so after the first ensure every frontier call and
@@ -1356,13 +1357,18 @@ object HtmlOps {
     * exchange-free. `columnsDdl`/`partitionedBy` parameterize the
     * schema; everything else — MD5-of-path naming, recreate-clears-
     * location, stale-location healing, MSCK partition discovery — is
-    * one contract for all artifacts.
+    * one contract for all artifacts. `recreateWith` carries a save's
+    * bucket count (its manifest is not published yet); every other
+    * call reads the manifest, so a reader of an unfinished save fails.
     */
   private def registerArtifactTable(spark: org.apache.spark.sql.SparkSession,
                                     scope: graft.core.Scope, name: String,
                                     kind: String, columnsDdl: String,
                                     partitionedBy: String,
-                                    recreate: Boolean): String = {
+                                    recreateWith: Option[Int]): String = {
+    val recreate = recreateWith.isDefined
+    val nBuckets = recreateWith.getOrElse(
+      graft.io.Artifact.read(spark, scope, name).int("n_buckets"))
     val rowsPath = scope.path(s"$name/rows")
     def ensure(): String = {
       val digest = java.security.MessageDigest.getInstance("MD5")
@@ -1384,8 +1390,6 @@ object HtmlOps {
         spark.sql(s"DROP TABLE IF EXISTS $tbl")
       }
       if (!spark.catalog.tableExists(tbl)) {
-        val nBuckets = graft.core.Scopes.readMeta(spark, scope,
-          s"$name/meta")("n_buckets")
         // registration precedes the first insert — the location must
         // exist for registration + partition recovery
         fs.mkdirs(p)
@@ -1401,34 +1405,31 @@ object HtmlOps {
       }
       tbl
     }
-    if (recreate) { val t = ensure(); artifactTableCache.put(rowsPath, t); t }
-    else {
-      // a cache hit must still verify the registration is alive in
-      // THIS catalog: the cache is JVM-wide but the catalog lives in
-      // the SparkContext — after a context restart in the same JVM
-      // the name would otherwise resolve to a dropped table
-      // (tableExists is an in-memory catalog lookup, no FS round
-      // trip on the steady path)
-      val cached = artifactTableCache.get(rowsPath)
-      if (cached != null && spark.catalog.tableExists(cached)) cached
-      else { val t = ensure(); artifactTableCache.put(rowsPath, t); t }
-    }
+    // a cache hit must still verify the registration is alive in THIS
+    // catalog: the cache is JVM-wide but the catalog lives in the
+    // SparkContext — after a context restart in the same JVM the name
+    // would otherwise resolve to a dropped table (tableExists is an
+    // in-memory catalog lookup; the steady path's one FS read is the
+    // manifest above)
+    val cached = artifactTableCache.get(rowsPath)
+    if (!recreate && cached != null && spark.catalog.tableExists(cached)) cached
+    else { val t = ensure(); artifactTableCache.put(rowsPath, t); t }
   }
 
   private def registerKeyTable(spark: org.apache.spark.sql.SparkSession,
                                scope: graft.core.Scope, name: String,
-                               recreate: Boolean = false): String =
+                               recreateWith: Option[Int] = None): String =
     registerArtifactTable(spark, scope, name, kind = "urlkeys",
       columnsDdl = "canon STRING, doc_id BIGINT, bucket INT",
-      partitionedBy = "bucket", recreate = recreate)
+      partitionedBy = "bucket", recreateWith = recreateWith)
 
   private def registerFetchLogTable(spark: org.apache.spark.sql.SparkSession,
                                     scope: graft.core.Scope, name: String,
-                                    recreate: Boolean = false): String =
+                                    recreateWith: Option[Int] = None): String =
     registerArtifactTable(spark, scope, name, kind = "fetchlog",
       columnsDdl = "canon STRING, url STRING, last_fetch_s BIGINT, " +
         "etag STRING, last_modified STRING, bucket INT, fetch_day INT",
-      partitionedBy = "bucket, fetch_day", recreate = recreate)
+      partitionedBy = "bucket, fetch_day", recreateWith = recreateWith)
 
   /** O(batch) ingest of a new fetch wave (q59's anti-join shape):
     * canonicalize the batch, keep the FIRST fetch per key within the
@@ -1444,8 +1445,7 @@ object HtmlOps {
   def appendUrlKeys(batch: DataFrame, scope: graft.core.Scope,
                     name: String): DataFrame = {
     val spark = batch.sparkSession
-    val nBuckets = graft.core.Scopes.readMeta(spark, scope,
-      s"$name/meta")("n_buckets")
+    val nBuckets = graft.io.Artifact.read(spark, scope, name).int("n_buckets")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("canon")).orderBy(col("doc_id"))
     val firstPerKey = batch
@@ -2236,8 +2236,7 @@ object HtmlOps {
                          kPerDomain: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(kPerDomain > 0, s"kPerDomain must be positive: $kPerDomain")
-    val nBuckets = graft.core.Scopes.readMeta(spark, scope,
-      s"$logName/meta")("n_buckets")
+    val nBuckets = graft.io.Artifact.read(spark, scope, logName).int("n_buckets")
     val declared = sitemapEntries(sitemaps)
       .withColumn("lastmod_s",
         try_to_timestamp(col("lastmod"), lit("yyyy-MM-dd")).cast("long"))
@@ -3423,14 +3422,15 @@ object HtmlOps {
                    name: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
     val spark = fetchLog.sparkSession
-    graft.core.Scopes.writeMeta(spark, scope,
-      s"$name/meta", "n_buckets" -> nBuckets)
-    val tbl = registerFetchLogTable(spark, scope, name, recreate = true)
-    latestFetchPerKey(fetchLog)
-      .select(col("canon"), col("url"), col("last_fetch_s"), col("etag"),
-        col("last_modified"),
-        keyBucket(col("canon"), nBuckets), fetchDay(col("last_fetch_s")))
-      .write.insertInto(tbl)
+    graft.io.Artifact.save(spark, scope, name, "n_buckets" -> nBuckets) {
+      val tbl = registerFetchLogTable(spark, scope, name,
+        recreateWith = Some(nBuckets))
+      latestFetchPerKey(fetchLog)
+        .select(col("canon"), col("url"), col("last_fetch_s"), col("etag"),
+          col("last_modified"),
+          keyBucket(col("canon"), nBuckets), fetchDay(col("last_fetch_s")))
+        .write.insertInto(tbl)
+    }
   }
 
   /** The coarse STALENESS partition of the fetch-log layout: the
@@ -3469,8 +3469,7 @@ object HtmlOps {
                      name: String): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val nBuckets = graft.core.Scopes.readMeta(spark, scope,
-      s"$name/meta")("n_buckets")
+    val nBuckets = graft.io.Artifact.read(spark, scope, name).int("n_buckets")
     val tbl = registerFetchLogTable(spark, scope, name)
     val batchLatest = latestFetchPerKey(
       withValidatorCols(batch).select(col("url") +: col("fetched_at_s") +:

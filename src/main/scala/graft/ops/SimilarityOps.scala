@@ -858,20 +858,18 @@ object SimilarityOps {
 
   /** Persist a [[PqIndex]] as a STORAGE ARTIFACT under a [[Scope]] —
     * the m-byte codes ARE the 100 TB storage form (the corpus
-    * compressed ~16×); the codebooks and an (m, dsub) meta row ride
-    * beside them. Build once per corpus version, reload per query
+    * compressed ~16×); the codebooks ride beside them and (m, dsub)
+    * in the manifest. Build once per corpus version, reload per query
     * batch — the same split [[saveIvfIndex]] gives the cell-partitioned
     * index.
     */
-  def savePqIndex(index: PqIndex, scope: Scope, name: String): Unit = {
-    val spark = index.codes.sparkSession
-    import spark.implicits._
-    index.codes.write.mode("overwrite").parquet(scope.path(s"$name/codes"))
-    index.codebooks.write.mode("overwrite")
-      .parquet(scope.path(s"$name/codebooks"))
-    graft.core.Scopes.writeMeta(spark, scope, s"$name/meta",
-      "m" -> index.m, "dsub" -> index.dsub)
-  }
+  def savePqIndex(index: PqIndex, scope: Scope, name: String): Unit =
+    graft.io.Artifact.save(index.codes.sparkSession, scope, name,
+        "m" -> index.m, "dsub" -> index.dsub) {
+      index.codes.write.mode("overwrite").parquet(scope.path(s"$name/codes"))
+      index.codebooks.write.mode("overwrite")
+        .parquet(scope.path(s"$name/codebooks"))
+    }
 
   /** Incremental maintenance of the PQ artifact: encode a new batch
     * with the FROZEN stored codebooks and append its code rows —
@@ -882,8 +880,8 @@ object SimilarityOps {
     */
   def appendToPqIndex(batch: DataFrame, scope: Scope, name: String): Unit = {
     val spark = batch.sparkSession
-    val meta = graft.core.Scopes.readMeta(spark, scope, s"$name/meta")
-    val (m, dsub) = (meta("m"), meta("dsub"))
+    val meta = graft.io.Artifact.read(spark, scope, name)
+    val (m, dsub) = (meta.int("m"), meta.int("dsub"))
     encodePqCodes(batch,
       collectCodebooks(spark.read.parquet(scope.path(s"$name/codebooks")), m),
       m, dsub)
@@ -891,11 +889,11 @@ object SimilarityOps {
   }
 
   def loadPqIndex(spark: SparkSession, scope: Scope, name: String): PqIndex = {
-    val meta = graft.core.Scopes.readMeta(spark, scope, s"$name/meta")
+    val meta = graft.io.Artifact.read(spark, scope, name)
     PqIndex(
       spark.read.parquet(scope.path(s"$name/codes")),
       spark.read.parquet(scope.path(s"$name/codebooks")),
-      meta("m"), meta("dsub"))
+      meta.int("m"), meta.int("dsub"))
   }
 
   /** Q80 gate: PQ-ADC recall@k vs the exact scan — violations only.
@@ -948,25 +946,23 @@ object SimilarityOps {
   /** Q136: persist the COMPOUND index as one storage artifact — the
     * cell-partitioned (vec_id, codes, cell) rows (m bytes + a cell id
     * per stored vector: the whole 100 TB memory story in one table),
-    * with the centroid table, the codebooks, and the (m, dsub) meta
-    * row beside them. The parts already persisted separately (q78 IVF,
+    * with the centroid table, the codebooks, and the (m, dsub)
+    * manifest beside them. The parts already persisted separately (q78 IVF,
     * q91 PQ); this is the one index in the ladder whose STORAGE form
     * is the composition, so it gets its own lifecycle: build → save →
     * reload → pruned probe → frozen append → joint recall re-gate.
     */
-  def saveIvfPqIndex(index: IvfPqIndex, scope: Scope, name: String): Unit = {
-    val spark = index.cellCodes.sparkSession
-    import spark.implicits._
-    index.cellCodes.select("vec_id", "codes", "cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(scope.path(s"$name/cells"))
-    index.centroids.write.mode("overwrite")
-      .parquet(scope.path(s"$name/centroids"))
-    index.codebooks.write.mode("overwrite")
-      .parquet(scope.path(s"$name/codebooks"))
-    graft.core.Scopes.writeMeta(spark, scope, s"$name/meta",
-      "m" -> index.m, "dsub" -> index.dsub)
-  }
+  def saveIvfPqIndex(index: IvfPqIndex, scope: Scope, name: String): Unit =
+    graft.io.Artifact.save(index.cellCodes.sparkSession, scope, name,
+        "m" -> index.m, "dsub" -> index.dsub) {
+      index.cellCodes.select("vec_id", "codes", "cell")
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(scope.path(s"$name/cells"))
+      index.centroids.write.mode("overwrite")
+        .parquet(scope.path(s"$name/centroids"))
+      index.codebooks.write.mode("overwrite")
+        .parquet(scope.path(s"$name/codebooks"))
+    }
 
   /** Reload; `cell` comes back as a partition column, so
     * [[probeIvfPq]]'s literal cell filter prunes the artifact scan at
@@ -974,12 +970,12 @@ object SimilarityOps {
     */
   def loadIvfPqIndex(spark: SparkSession, scope: Scope,
                      name: String): IvfPqIndex = {
-    val meta = graft.core.Scopes.readMeta(spark, scope, s"$name/meta")
+    val meta = graft.io.Artifact.read(spark, scope, name)
     IvfPqIndex(
       spark.read.parquet(scope.path(s"$name/cells")),
       spark.read.parquet(scope.path(s"$name/centroids")),
       spark.read.parquet(scope.path(s"$name/codebooks")),
-      meta("m"), meta("dsub"))
+      meta.int("m"), meta.int("dsub"))
   }
 
   /** Incremental maintenance of the compound artifact: assign a new
@@ -996,8 +992,8 @@ object SimilarityOps {
   def appendToIvfPqIndex(batch: DataFrame, scope: Scope, name: String): Unit = {
     val spark = batch.sparkSession
     GraftFunctions.register(spark)
-    val meta = graft.core.Scopes.readMeta(spark, scope, s"$name/meta")
-    val (m, dsub) = (meta("m"), meta("dsub"))
+    val meta = graft.io.Artifact.read(spark, scope, name)
+    val (m, dsub) = (meta.int("m"), meta.int("dsub"))
     val centroids = spark.read.parquet(scope.path(s"$name/centroids"))
     val assigned = assignCells(withNorm(batch, "embedding", "cn"), centroids)
       .select("vec_id", "cell")

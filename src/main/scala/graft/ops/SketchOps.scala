@@ -1,9 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.core.{Scope, Scopes}
 
 /** MERGEABLE distinct-count sketch artifacts — incremental corpus
   * accounting at ingest scale.
@@ -38,15 +36,6 @@ object SketchOps {
                    lgK: Int = 12): DataFrame =
     df.groupBy(keyCol)
       .agg(hll_sketch_agg(col(valueCol), lgK).as("sketch"))
-
-  /** Persist the per-key sketches under the scope (parquet; the
-    * sketch column is plain binary).
-    */
-  def saveSketches(sketches: DataFrame, scope: Scope, name: String): Unit =
-    Scopes.save(sketches, scope, name)
-
-  def loadSketches(spark: SparkSession, scope: Scope, name: String): DataFrame =
-    Scopes.load(spark, scope, name)
 
   /** Merge any number of per-key sketch sets (history artifact +
     * fresh batch sketches) into one estimate per key. The merge is

@@ -525,7 +525,7 @@ object TextOps {
   /** Persist the postings WITH their bucket-universe metadata: the
     * rows land partitioned by bucket under `name/rows`, and nBuckets —
     * the one parameter probe and append must agree with the build on —
-    * rides beside them under `name/meta`. A probe or append that
+    * rides beside them in the artifact's manifest. A probe or append that
     * assumed a different nBuckets would silently prune VALID postings
     * out of results (wrong answers, not an error), so the artifact
     * BUILDS the postings itself under the nBuckets it records (a
@@ -535,17 +535,12 @@ object TextOps {
     * back instead of taking an independent parameter.
     */
   def savePostings(documents: DataFrame, scope: graft.core.Scope,
-                   name: String, nBuckets: Int = 64): Unit = {
-    buildPostings(documents, nBuckets).write.mode("overwrite")
-      .partitionBy("bucket").parquet(scope.path(s"$name/rows"))
-    graft.core.Scopes.writeMeta(documents.sparkSession, scope,
-      s"$name/meta", "n_buckets" -> nBuckets)
-  }
-
-  /** The artifact's recorded bucket universe. */
-  def postingsNBuckets(spark: org.apache.spark.sql.SparkSession,
-                       scope: graft.core.Scope, name: String): Int =
-    graft.core.Scopes.readMeta(spark, scope, s"$name/meta")("n_buckets")
+                   name: String, nBuckets: Int = 64): Unit =
+    graft.io.Artifact.save(documents.sparkSession, scope, name,
+        "n_buckets" -> nBuckets) {
+      buildPostings(documents, nBuckets).write.mode("overwrite")
+        .partitionBy("bucket").parquet(scope.path(s"$name/rows"))
+    }
 
   /** Q128: incremental index maintenance — APPEND a new document
     * batch's postings to the stored artifact. O(batch): the batch is
@@ -562,7 +557,8 @@ object TextOps {
     */
   def appendPostings(batch: DataFrame, scope: graft.core.Scope,
                      name: String): Unit =
-    buildPostings(batch, postingsNBuckets(batch.sparkSession, scope, name))
+    buildPostings(batch,
+        graft.io.Artifact.read(batch.sparkSession, scope, name).int("n_buckets"))
       .write.mode("append")
       .partitionBy("bucket").parquet(scope.path(s"$name/rows"))
 
@@ -571,7 +567,7 @@ object TextOps {
     */
   def loadPostings(spark: org.apache.spark.sql.SparkSession,
                    scope: graft.core.Scope, name: String): DataFrame =
-    spark.read.parquet(scope.path(s"$name/rows"))
+    graft.io.Artifact.load(spark, scope, name)
 
   /** Probe the STORED artifact under its own recorded nBuckets — the
     * drift-proof entry ([[searchPostings]] stays available for
@@ -582,7 +578,7 @@ object TextOps {
                              queries: Map[String, Seq[String]],
                              k: Int = 10): DataFrame =
     searchPostings(loadPostings(spark, scope, name), queries, k,
-      postingsNBuckets(spark, scope, name))
+      graft.io.Artifact.read(spark, scope, name).int("n_buckets"))
 
   /** The probe half of the q120 artifact: [[keywordSearch]] semantics
     * evaluated against the postings instead of the corpus. The query

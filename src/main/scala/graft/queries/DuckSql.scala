@@ -738,7 +738,9 @@ private[queries] object DuckSql {
     * margin table against the previous round's weights and the
     * five-component update folded in via scalar subqueries
     * (TextOps.qualityFitTrajectory mirrored; DuckDB sum(BIGINT) is
-    * HUGEINT, hence the CASTs).
+    * HUGEINT, hence the CASTs). Every CTE is MATERIALIZED: round i
+    * refers to w(i-1) six times, and DuckDB would otherwise inline
+    * each reference, so the chain would fan out with every round.
     */
   def qualityFitCtes(iters: Int): String = {
     val dims = 0 until 5
@@ -748,14 +750,14 @@ private[queries] object DuckSql {
            |    + CAST(coalesce((SELECT sum(y * x$d) FROM m$i
            |                     WHERE margin <= 0), 0) AS BIGINT) AS a$d"""
           .stripMargin).mkString(",\n")
-      s"""m$i AS (SELECT f.*,
+      s"""m$i AS MATERIALIZED (SELECT f.*,
          |  y * (${dims.map(d => s"a$d * x$d").mkString(" + ")}) AS margin
          |  FROM f CROSS JOIN w${i - 1}),
-         |w$i AS (SELECT
+         |w$i AS MATERIALIZED (SELECT
          |$upd)""".stripMargin
     }.mkString(",\n")
-    s"""qf AS ($qualitySql),
-       |ft AS (SELECT doc_id,
+    s"""qf AS MATERIALIZED ($qualitySql),
+       |ft AS MATERIALIZED (SELECT doc_id,
        |  1::BIGINT AS x0,
        |  CAST(least(n_tokens, 1000) AS BIGINT) AS x1,
        |  CAST(round(coalesce(stopword_ratio, 0.0::DOUBLE)
@@ -765,10 +767,10 @@ private[queries] object DuckSql {
        |  CAST(round(coalesce(avg_token_len, 0.0::DOUBLE)
        |    * 1000000.0::DOUBLE) AS BIGINT) AS x4
        |  FROM qf),
-       |f AS (SELECT doc_id, x0, x1, x2, x3, x4,
+       |f AS MATERIALIZED (SELECT doc_id, x0, x1, x2, x3, x4,
        |  CASE WHEN -5000000 * x0 + 20000 * x1 + 12 * x2 - 30 * x3 + x4 > 0
        |       THEN 1::BIGINT ELSE (-1)::BIGINT END AS y FROM ft),
-       |w0 AS (SELECT ${dims.map(d => s"0::BIGINT AS a$d").mkString(", ")}),
+       |w0 AS MATERIALIZED (SELECT ${dims.map(d => s"0::BIGINT AS a$d").mkString(", ")}),
        |$rounds""".stripMargin
   }
 

@@ -97,12 +97,12 @@ private[graft] object StorageQueries {
   private def sketchArtifactGate(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val scope = Memo.scope("graft-q111-", s, dir) { sc =>
-      SketchOps.saveSketches(
+      graft.core.Scopes.save(
         SketchOps.perKeySketch(docs.filter(col("doc_id") % 2 === 0),
           "source", "doc_id"), sc, "distinct_sketch")
     }
     SketchOps.distinctSketchGate(
-      SketchOps.loadSketches(s, scope, "distinct_sketch"),
+      graft.core.Scopes.load(s, scope, "distinct_sketch"),
       docs.filter(col("doc_id") % 2 === 1), docs, "source", "doc_id")
   }
 

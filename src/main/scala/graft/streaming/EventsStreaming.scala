@@ -798,9 +798,9 @@ object EventsStreaming {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val b = batch.persist()
         try {
-          val Seq(nh, bs, ss) =
-            graft.ops.DedupOps.bandGeometry(spark, scope, bandsName)
-          val bb = graft.ops.DedupOps.minhashBands(b, nh, bs, ss).persist()
+          val g = graft.io.Artifact.read(spark, scope, bandsName)
+          val bb = graft.ops.DedupOps.minhashBands(b, g.int("num_hashes"),
+            g.int("band_size"), g.int("shingle_size")).persist()
           try {
             val stored = graft.ops.DedupOps.loadBands(spark, scope, bandsName)
             val cross = bb

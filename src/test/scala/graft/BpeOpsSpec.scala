@@ -416,22 +416,22 @@ class BpeOpsSpec extends SparkSpec {
       assert(counts()("low") === low + 2)
       assert(!BpeOps.refreshBpe(daily, scope, "tok", batchId = Some(101L)))
       assert(counts()("low") === low + 2)
-      // a CORRUPT token (external damage — the atomic rename never
-      // leaves one) fails loudly, naming the file, instead of either
-      // wedging with a bare NumberFormatException or silently
+      // a CORRUPT token manifest (external damage — the atomic rename
+      // never leaves one) fails loudly, naming the file, instead of
+      // either wedging with a bare NumberFormatException or silently
       // re-merging a statistic that may already contain the batch
       val tokenFile = new java.io.File(
-        scope.path("tok/counts").stripPrefix("file:"), "_refresh_token")
+        scope.path("tok/counts").stripPrefix("file:"), "_manifest")
       java.nio.file.Files.write(tokenFile.toPath,
         "garbage".getBytes("UTF-8"))
       // drop the checksum sidecar the direct overwrite invalidated —
       // the simulated damage is to the CONTENT, not the transport
       java.nio.file.Files.deleteIfExists(
-        new java.io.File(tokenFile.getParent, "._refresh_token.crc").toPath)
+        new java.io.File(tokenFile.getParent, "._manifest.crc").toPath)
       val ex = intercept[IllegalStateException] {
         BpeOps.refreshBpe(daily, scope, "tok", batchId = Some(102L))
       }
-      assert(ex.getMessage.contains("_refresh_token"))
+      assert(ex.getMessage.contains("tok/counts/_manifest"))
       assert(ex.getMessage.contains("garbage"))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)

@@ -17,7 +17,7 @@ class SketchOpsSpec extends SparkSpec {
 
     val base = Files.createTempDirectory("graft-sketch").toString
     val scope = Scopes.create(spark, base)
-    SketchOps.saveSketches(
+    Scopes.save(
       SketchOps.perKeySketch(history, "source", "doc_id"), scope, "sk")
 
     // the incremental estimate (reloaded artifact + O(batch) sketch)
@@ -25,7 +25,7 @@ class SketchOpsSpec extends SparkSpec {
     // union is the estimator's own algebraic merge, not a new
     // approximation
     val incremental = SketchOps.mergedDistinctEstimate(
-      Seq(SketchOps.loadSketches(spark, scope, "sk"),
+      Seq(Scopes.load(spark, scope, "sk"),
         SketchOps.perKeySketch(batch, "source", "doc_id")), "source")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val singlePass = SketchOps.mergedDistinctEstimate(
@@ -35,7 +35,7 @@ class SketchOpsSpec extends SparkSpec {
 
     // and the q111 gate holds it to the exact counts
     val violations = SketchOps.distinctSketchGate(
-      SketchOps.loadSketches(spark, scope, "sk"), batch, docs,
+      Scopes.load(spark, scope, "sk"), batch, docs,
       "source", "doc_id")
     assert(violations.count() === 0)
     Scopes.delete(spark, scope)
