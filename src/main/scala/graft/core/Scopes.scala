@@ -41,12 +41,18 @@ object Scopes {
     scope
   }
 
+  /** Recursive delete of `p` that fails loudly: a `false` from
+    * `FileSystem.delete` while `p` still exists throws, naming `p`, so
+    * a caller never reports a path gone that is still on disk.
+    */
+  def deletePath(f: FileSystem, p: Path): Unit =
+    if (!f.delete(p, true) && f.exists(p))
+      throw new GraftException(s"failed to delete $p")
+
   /** Recursive delete of everything the scope owns. */
   def delete(spark: SparkSession, scope: Scope): Unit = {
     val p = new Path(scope.dir)
-    val f = fs(spark, p)
-    if (f.exists(p) && !f.delete(p, true))
-      throw new GraftException(s"failed to delete scope dir ${scope.dir}")
+    deletePath(fs(spark, p), p)
   }
 
   def exists(spark: SparkSession, scope: Scope): Boolean = {
@@ -114,9 +120,7 @@ object Scopes {
       .filter(a => !keep.contains(a.name) && a.last_modified_ms < olderThanMs)
       .map { a =>
         val p = new Path(scope.path(a.name))
-        val f = fs(spark, p)
-        if (f.exists(p) && !f.delete(p, true))
-          throw new GraftException(s"failed to sweep artifact ${a.name}")
+        deletePath(fs(spark, p), p)
         a.name
       }
   }

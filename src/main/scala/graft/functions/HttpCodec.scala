@@ -228,56 +228,6 @@ object HttpCodec {
     if (r == null) null else UTF8String.fromString(r)
   }
 
-  /** Content-Encoding DECODER PLUG POINT (round-16 directive #3): the
-    * JDK ships no brotli (RFC 7932) codec, a conforming brotli
-    * decoder needs the 122 KB static dictionary the spec embeds, and
-    * this engine vendors no third-party code — so `br` is a
-    * `body_ok = false` VERDICT by default (the SURVEY-stated
-    * coverage-loss note). `zstd` (RFC 8878) is NOT a plug-in: Spark
-    * itself ships a pure-JVM zstd codec (aircompressor, its
-    * Parquet/ORC decompression path), so the token is a BUILT-IN
-    * structural coding here ([[zstdInflate]]) — present on every
-    * executor classpath by construction, no bootstrap needed.
-    *
-    * A production deployment that can carry a brotli jar wires it
-    * here ONCE per JVM — `HttpCodec.registerDecoder("br",
-    * bytes => …)` — and every inflate seam (the fused `http_frame`,
-    * `inflate_body`, the staged witness) picks it up, because they
-    * all funnel through [[inflateBodyString]]'s single fall-through
-    * arm. NOTE the per-JVM scope: on a real cluster the registry is
-    * executor-local state, so the registration must run at EXECUTOR
-    * bootstrap (an `ExecutorPlugin`/static initializer in the
-    * deployment's jar), not just on the driver — which is exactly
-    * why the always-available zstd path is wired as a built-in
-    * `case` arm instead of through this map.
-    *
-    * Decoder contract: total over arbitrary UNTRUSTED bytes; return
-    * the decoded bytes, or null for a verdict; any throw is caught to
-    * the null verdict (the corrupt-input-as-verdict contract — a
-    * hostile body must never kill a wave). The built-in structural
-    * codings ('', identity, gzip, x-gzip, deflate, zstd) cannot be
-    * overridden — their verification stays authoritative. Tokens are
-    * matched lowercase (the frame lowercases the header value).
-    */
-  private val builtinCodings =
-    java.util.Set.of("", "identity", "gzip", "x-gzip", "deflate", "zstd")
-  private val extraDecoders =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Byte] => Array[Byte]]()
-
-  def registerDecoder(token: String,
-                      decode: Array[Byte] => Array[Byte]): Unit = {
-    val t = token.trim.toLowerCase(java.util.Locale.ROOT)
-    require(!builtinCodings.contains(t),
-      s"built-in coding '$t' cannot be overridden")
-    extraDecoders.put(t, decode)
-    ()
-  }
-
-  def unregisterDecoder(token: String): Unit = {
-    extraDecoders.remove(token.trim.toLowerCase(java.util.Locale.ROOT))
-    ()
-  }
-
   /** [[inflateBody]] at the plain-string layer — the form the fused
     * [[HttpFrameImpl]] calls.
     */
@@ -296,15 +246,9 @@ object HttpCodec {
       case "zstd" =>
         val r = zstdInflate(body.getBytes("ISO-8859-1"))
         if (r == null) null else new String(r, "ISO-8859-1")
-      case other =>
-        val d = extraDecoders.get(other)
-        if (d == null) null // unknown coding: the verdict, as ever
-        else {
-          val r =
-            try d(body.getBytes("ISO-8859-1"))
-            catch { case scala.util.control.NonFatal(_) => null }
-          if (r == null) null else new String(r, "ISO-8859-1")
-        }
+      // any other coding (`br` included: the JDK ships no brotli
+      // codec) is the body_ok = false verdict
+      case _ => null
     }
   }
 
@@ -362,7 +306,7 @@ object HttpCodec {
     * ships (aircompressor — its Parquet/ORC codec path; on the
     * executor classpath of every Spark deployment by construction,
     * which is what lets `zstd` be a BUILT-IN coding while `br`
-    * remains a plug point). Structural per the decoder: magic,
+    * stays a verdict). Structural per the decoder: magic,
     * block structure, and the frame's XXH64 checksum when present
     * are verified; any malformation — truncation, garbage, a
     * declared content size over [[ZstdMaxDecoded]] — is the null

@@ -86,24 +86,6 @@ object Layout {
         (hi - lo).cast("double")).cast("long"))
   }
 
-  /** Z-order layout: compute the interleaved key over the two columns
-    * (min-max scaled to the 16-bit grid via a tiny broadcast bounds
-    * aggregate), range-partition into `numFiles` and sort within each
-    * file by z — after the write, every file covers a compact
-    * rectangle in (colA, colB) space, so predicates on EITHER column
-    * skip most files on parquet footer statistics alone. This is the
-    * write-once clustering pass a 100 TB table gets instead of an
-    * index.
-    */
-  def writeZordered(df: DataFrame, path: String, colA: String, colB: String,
-                    numFiles: Int = 16, bits: Int = 16): Unit = {
-    val z = zorderKey(df, colA, colB, bits)
-    z.repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
   /** The q112 surface: rows of `df` with their z-order key (named
     * `__z`) over min-max-scaled `colA`, `colB`.
     */

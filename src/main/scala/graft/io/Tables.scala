@@ -70,8 +70,8 @@ object Tables {
     *                 files would otherwise split a large directory)
     */
   def eventsStream(spark: SparkSession, dir: String,
-                   glob: String = "events.parquet",
                    oneBatch: Boolean = false): DataFrame = {
+    val glob = "events.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // An empty/not-yet-populated source dir (normal for a stream fed
     // over time) has no footers to peek — fall back to the canonical

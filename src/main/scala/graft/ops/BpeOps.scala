@@ -780,26 +780,6 @@ object BpeOps {
       .unionByName(tag(stored.exceptAll(full), "extra_in_artifact"))
   }
 
-  /** The DRIFT MONITOR a standing tokenizer wants beside the refresh:
-    * rank-by-rank divergence between two merge tables — which ranks
-    * changed pair, which changed frequency only, which exist on one
-    * side alone. Model-sized inputs, one full-outer join.
-    */
-  def bpeDrift(before: DataFrame, after: DataFrame): DataFrame = {
-    val b = before.select(col("merge_rank"),
-      col("lhs").as("lhs_before"), col("rhs").as("rhs_before"),
-      col("freq").cast("long").as("freq_before"))
-    val a = after.select(col("merge_rank"),
-      col("lhs").as("lhs_after"), col("rhs").as("rhs_after"),
-      col("freq").cast("long").as("freq_after"))
-    b.join(a, Seq("merge_rank"), "full_outer")
-      .filter(!(col("lhs_before") <=> col("lhs_after")) ||
-        !(col("rhs_before") <=> col("rhs_after")) ||
-        !(col("freq_before") <=> col("freq_after")))
-      .select("merge_rank", "lhs_before", "rhs_before", "freq_before",
-        "lhs_after", "rhs_after", "freq_after")
-  }
-
   /** Encode against the STORED tokenizer: merges and alphabet come
     * from the artifact (never re-derived from the batch), so every
     * encode of every batch — today's or next year's — lands in the

@@ -333,7 +333,8 @@ object ClusterOps {
         val fs = new org.apache.hadoop.fs.Path(rowsPath)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
         (touched.toSet -- outBuckets).foreach { b =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$rowsPath/cbucket=$b"), true)
+          graft.core.Scopes.deletePath(fs,
+            new org.apache.hadoop.fs.Path(s"$rowsPath/cbucket=$b"))
         }
       }
       } finally affected.unpersist(blocking = false)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * (SURVEY §2.2 Q12): exact, MinHash+LSH (Broder 1997, "On the
   * resemblance and containment of documents"), SimHash (Charikar 2002,
   * "Similarity estimation techniques from rounding algorithms"),
-  * n-gram Jaccard with prefix filtering (Xiao et al. 2008, PPJoin).
+  * n-gram Jaccard over an inverted shingle index.
   *
   * Scale design (100 TB): every variant is shuffle-bounded —
   *  - exact: one hash-partitioned aggregation on a 128-bit digest
@@ -95,8 +95,7 @@ object DedupOps {
     * this form holds the full shingle array per row.
     */
   def minhashBandsRowwise(documents: DataFrame, numHashes: Int = 12,
-                          bandSize: Int = 2, shingleSize: Int = 3,
-                          keep: Seq[String] = Nil): DataFrame = {
+                          bandSize: Int = 2, shingleSize: Int = 3): DataFrame = {
     require(numHashes % bandSize == 0, // see minhashBands
       s"numHashes ($numHashes) must be a multiple of bandSize ($bandSize)")
     // round-16: same fused native expression as the batch form — the
@@ -104,16 +103,12 @@ object DedupOps {
     // (the explode of an empty band array drops shingle-less docs,
     // replacing the explicit size(sarr) > 0 filter bit-identically).
     graft.functions.GraftFunctions.register(documents.sparkSession)
-    // `keep` columns (e.g. the event-time column a streaming caller
-    // watermarks on) ride through the stateless projection untouched
-    val kept = keep.map(col)
     documents
       .withColumn("w", tokens)
-      .select(col("doc_id") +: kept :+ explode(
+      .select(col("doc_id"), explode(
         expr(s"minhash_bands(w, $numHashes, $bandSize, $shingleSize)"))
-        .as("band"): _*)
-      .select(col("doc_id") +: kept :+
-        col("band.b").as("b") :+ col("band.bh").as("bh"): _*)
+        .as("band"))
+      .select(col("doc_id"), col("band.b").as("b"), col("band.bh").as("bh"))
   }
 
   def minhashLshPairs(documents: DataFrame, numHashes: Int = 12,
@@ -402,49 +397,6 @@ object DedupOps {
       .distinct()
   }
 
-  /** Exact n-gram Jaccard with PREFIX FILTERING (the PPJoin-family
-    * optimization): for J(a,b) ≥ t, the pair must share a shingle among
-    * each doc's first `|s| - ceil(t·|s|) + 1` shingles in a global
-    * rarity order (c ≥ t·max(|a|,|b|) when J ≥ t). Only prefixes are
-    * indexed/joined, shrinking the candidate join by ~t; verification
-    * is an in-memory `array_intersect` per candidate pair — exact, so
-    * output is identical to the naive inverted-index join (asserted in
-    * DedupOpsSpec). Rarity order is (global frequency, shingle) — no
-    * global rank computation, no single-partition window.
-    */
-  def jaccardPairsPrefix(documents: DataFrame, shingleSize: Int = 3,
-                         threshold: Double = 0.3,
-                         maxShingleDf: Int = defaultMaxShingleDf): DataFrame = {
-    // margin below t so round(j, 6) boundary cases cannot be missed
-    val tEff = math.max(0.0, threshold - 0.01)
-    val sh = par(documents)
-      .withColumn("w", tokens)
-      .select(col("doc_id"), explode(shingles(col("w"), shingleSize)).as("g"))
-      .distinct()
-    val freq = sh.groupBy("g").agg(count(lit(1)).as("gf"))
-      .filter(col("gf") <= maxShingleDf)
-    val docSets = sh.join(freq, "g")
-      .groupBy("doc_id")
-      .agg(expr("transform(array_sort(collect_list(struct(gf, g))), x -> x.g)").as("sg"),
-        count(lit(1)).as("sz"))
-    val prefixes = docSets.select(col("doc_id"), explode(
-      expr(s"slice(sg, 1, cast(sz - ceiling($tEff * sz) + 1 as int))")).as("g"))
-    val cand = prefixes.select(col("doc_id").as("doc_a"), col("g"))
-      .join(prefixes.select(col("doc_id").as("doc_b"), col("g")), "g")
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-    cand
-      .join(docSets.select(col("doc_id").as("doc_a"), col("sg").as("sg_a"),
-        col("sz").as("sz_a")), "doc_a")
-      .join(docSets.select(col("doc_id").as("doc_b"), col("sg").as("sg_b"),
-        col("sz").as("sz_b")), "doc_b")
-      .withColumn("common", expr("size(array_intersect(sg_a, sg_b))"))
-      .withColumn("jaccard",
-        expr("round(cast(common as double) / (sz_a + sz_b - common), 6)"))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_a", "doc_b", "jaccard")
-  }
-
   /** Q85: the winnowed fingerprint set of each document (Schleimer/
     * Wilkerson/Aiken, SIGMOD'03 — the MOSS fingerprinter): hash every
     * k-token shingle, slide a w-wide window over the hash sequence,
@@ -513,18 +465,6 @@ object DedupOps {
     */
   val defaultMaxShingleDf = 1000
 
-  /** Q15 default engine: plain inverted-index equi-join — wins when
-    * shingle collisions are pervasive (low threshold / repetitive
-    * corpus), as each candidate costs one joined row, not an
-    * array_intersect. [[jaccardPairsPrefix]] wins at selective
-    * thresholds on diverse corpora where the prefix prunes most pairs.
-    *
-    * Jaccard is computed over the capped shingle space (hot shingles
-    * dropped on BOTH the size and the intersection side, so it remains
-    * a true Jaccard of the filtered sets). Sizes are folded into the
-    * shingle rows via a window — no per-document side table, no
-    * broadcast, every stage is key-partitioned.
-    */
   /** The shared capped-inverted-index pair frame of [[jaccardPairs]]
     * and [[overlapPairs]]: (doc_a, doc_b, sz_a, sz_b, common) for
     * every candidate pair meeting through a shared shingle — each
@@ -551,6 +491,17 @@ object DedupOps {
       .agg(count(lit(1)).as("common"))
   }
 
+  /** Q15: exact n-gram Jaccard by a plain inverted-index equi-join:
+    * each candidate costs one joined row, not an array_intersect.
+    * (PPJoin-style prefix filtering was measured 3.6× slower at sf0.1
+    * and 4.7× slower at ×10 on this corpus, and was removed.)
+    *
+    * Jaccard is computed over the capped shingle space (hot shingles
+    * dropped on BOTH the size and the intersection side, so it remains
+    * a true Jaccard of the filtered sets). Sizes are folded into the
+    * shingle rows via a window — no per-document side table, no
+    * broadcast, every stage is key-partitioned.
+    */
   def jaccardPairs(documents: DataFrame, shingleSize: Int = 3,
                    threshold: Double = 0.3,
                    maxShingleDf: Int = defaultMaxShingleDf): DataFrame = {

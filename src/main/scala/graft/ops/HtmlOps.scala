@@ -1383,7 +1383,7 @@ object HtmlOps {
       // seeding rerun would otherwise hit silently
       if (recreate) {
         spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        if (fs.exists(p)) fs.delete(p, true)
+        graft.core.Scopes.deletePath(fs, p)
       } else if (spark.catalog.tableExists(tbl) && !fs.exists(p)) {
         // a stale registration whose scope directory was deleted out
         // from under it heals instead of serving a dead location
@@ -3123,28 +3123,13 @@ object HtmlOps {
     * log).
     */
   def compactFetchLog(spark: org.apache.spark.sql.SparkSession,
-                      scope: graft.core.Scope, name: String): Unit =
-    compactBucketedArtifact(spark,
-      registerFetchLogTable(spark, scope, name),
-      Seq("canon", "url", "last_fetch_s", "etag", "last_modified",
-        "bucket", "fetch_day"),
-      Seq("bucket", "fetch_day"))
-
-  /** [[compactFetchLog]] for the URL-key table — same epoch cadence,
-    * same bucket-preserving rewrite.
-    */
-  def compactUrlKeys(spark: org.apache.spark.sql.SparkSession,
-                     scope: graft.core.Scope, name: String): Unit =
-    compactBucketedArtifact(spark,
-      registerKeyTable(spark, scope, name),
-      Seq("canon", "doc_id", "bucket"), Seq("bucket"))
-
-  private def compactBucketedArtifact(
-      spark: org.apache.spark.sql.SparkSession, tbl: String,
-      cols: Seq[String], partitionCols: Seq[String]): Unit = {
-    val all = spark.table(tbl).select(cols.map(col): _*)
+                      scope: graft.core.Scope, name: String): Unit = {
+    val tbl = registerFetchLogTable(spark, scope, name)
+    val all = spark.table(tbl)
+      .select("canon", "url", "last_fetch_s", "etag", "last_modified",
+        "bucket", "fetch_day")
       // one task per partition directory → file count at the floor
-      .repartition(partitionCols.map(col): _*)
+      .repartition(col("bucket"), col("fetch_day"))
       .localCheckpoint(eager = true)
     // STATIC on purpose: truncate the whole table, rewrite every
     // partition from the pinned snapshot
@@ -3258,8 +3243,8 @@ object HtmlOps {
       .flatMap(n => scala.util.Try(n.stripPrefix("wave=").toLong).toOption)
       .sorted
     val drop = waves.dropRight(keepLatest)
-    drop.foreach(w => fs.delete(new org.apache.hadoop.fs.Path(
-      s"$dir/wave=$w"), true))
+    drop.foreach(w => graft.core.Scopes.deletePath(fs,
+      new org.apache.hadoop.fs.Path(s"$dir/wave=$w")))
     drop
   }
 
@@ -3544,7 +3529,7 @@ object HtmlOps {
         // MSCK would resurrect them
         val dir = new org.apache.hadoop.fs.Path(
           s"$rowsPath/bucket=$b/fetch_day=$d")
-        if (fs.exists(dir)) fs.delete(dir, true)
+        graft.core.Scopes.deletePath(fs, dir)
       }
       // the overwrite replaced files under partitions a cached
       // relation may still list — drop the cached listing so the

@@ -61,8 +61,8 @@ object MapReduceOps {
       .agg(exactIntMeanTripwire("value").as("mean"))
 
   /** Same computation on the fully-typed imperative surface
-    * (Dataset.flatMap + groupByKey.mapGroups) — the 1:1 analogue of
-    * the reference's Mapper/Reducer pair, including its combinerless
+    * ([[mapRecords]] + [[groupReduce]]) — the 1:1 analogue of the
+    * reference's Mapper/Reducer pair, including its combinerless
     * full-group shuffle. Kept as the R7/R8/R9 conformance path; the
     * declarative [[unpivotGroupedMean]] is the production form.
     */
@@ -71,16 +71,12 @@ object MapReduceOps {
     import spark.implicits._
     val n = cols.size
     val projected = df.selectExpr(cols.map(c => s"cast($c as bigint)"): _*)
-    val pairs: Dataset[(Int, Long)] =
-      projected.flatMap(r => (0 until n).map(i => (i, r.getLong(i))))
-    pairs
-      .groupByKey(_._1)
-      .mapGroups { (id, it) =>
-        var sum = 0L // long accumulator, like TestReducer.java:28
-        var count = 0L
-        it.foreach { kv => sum += kv._2; count += 1 }
-        (id, sum / count - (sum % count) * 100)
-      }
-      .toDF("id", "mean")
+    val pairs = mapRecords(projected)(r => (0 until n).map(i => (i, r.getLong(i))))
+    groupReduce(pairs)(_._1) { (id, it) =>
+      var sum = 0L // long accumulator, like TestReducer.java:28
+      var count = 0L
+      it.foreach { kv => sum += kv._2; count += 1 }
+      Iterator.single((id, sum / count - (sum % count) * 100))
+    }.toDF("id", "mean")
   }
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing (SURVEY §2.2 Q23): image/audio/video as
@@ -161,19 +161,11 @@ object MultimodalOps {
     }
   }
 
-  /** Q43 entry: generate real PNGs → decode them back with the real
-    * codec → emit recovered dimensions. The oracle recomputes the
-    * dimensions from doc_id, so a decoder that doesn't actually parse
-    * PNG cannot pass. (Payload size is excluded: PNG encoder output
-    * bytes are not oracle-predictable.)
-    */
-  def imageRoundTrip(documents: DataFrame): DataFrame =
-    imageStats(syntheticPngTable(documents))
-
-  /** The decode half of [[imageRoundTrip]] over an already-materialized
-    * media table — what the registry times once the fixture is a
-    * stored artifact (generation is deterministic, so the parquet
-    * round trip is content-identical to inline synthesis).
+  /** Q43: decode stored PNGs (a [[syntheticPngTable]] artifact) with
+    * the real codec and emit the recovered dimensions. The oracle
+    * recomputes them from doc_id, so a decoder that does not parse PNG
+    * cannot pass. Generation is deterministic, so the parquet round
+    * trip is content-identical to inline synthesis.
     */
   def imageStats(media: Dataset[MediaRecord]): DataFrame =
     decode(media, ImageIoDecoder)
@@ -301,19 +293,11 @@ object MultimodalOps {
       case scala.util.control.NonFatal(_) => None
     }
 
-  /** Q71 entry: generate real WAVs → decode them back with the real
-    * parser → emit recovered format and sample stats. The oracle
-    * recomputes every field (length, rate, peak, sample sum) from
-    * doc_id and the integer waveform formula, so a decoder that does
-    * not actually parse RIFF PCM cannot pass.
-    */
-  def audioRoundTrip(documents: DataFrame): DataFrame =
-    audioStats(syntheticWavTable(documents))
-
-  /** The decode half of [[audioRoundTrip]] over an already-materialized
-    * media table (see [[imageStats]] — the r5 bench finding: timing
-    * fixture ENCODING inside the decode query measured the fixture,
-    * not the operator).
+  /** Q71: decode stored WAVs (a [[syntheticWavTable]] artifact) with
+    * the real parser and emit the recovered format and sample stats;
+    * the oracle recomputes every field from doc_id. The fixture is
+    * stored rather than encoded inline because timing the encoding
+    * inside the decode query measured the fixture, not the operator.
     */
   def audioStats(media: Dataset[MediaRecord]): DataFrame = {
     val spark = media.sparkSession
@@ -328,17 +312,6 @@ object MultimodalOps {
       }
     }.toDF("doc_id", "n_samples", "sample_rate", "channels", "bits",
       "peak", "ssum")
-  }
-
-  /** documents → (doc_id, media binary): the ingest shape a real
-    * multimodal table would have (here the bytes are the UTF-8 text —
-    * any opaque payload works the same).
-    */
-  def toMediaTable(documents: DataFrame): Dataset[MediaRecord] = {
-    val spark = documents.sparkSession
-    import spark.implicits._
-    documents.select(col("doc_id"), encode(col("text"), "UTF-8").as("media"))
-      .as[MediaRecord]
   }
 
   /** Batched per-partition decode/feature-extraction. */
@@ -418,15 +391,6 @@ object MultimodalOps {
     }
   }
 
-  /** Q49/Q50 entry: the full multimodal pipeline — synthesize real
-    * PNGs, decode them back, and emit the per-channel histogram
-    * embedding per document. The oracle re-derives every count from
-    * the deterministic gradient, so a featureExtract that does not
-    * actually decode pixels cannot pass.
-    */
-  def imageFeatures(documents: DataFrame, bins: Int = 8): Dataset[MediaFeatures] =
-    featureExtract(syntheticPngTable(documents), bins)
-
   /** REAL resize: decode → rescale the raster (bilinear, aspect
     * preserved, longest side capped at `maxSide`, never upscaled) →
     * re-encode PNG. Runs batched per-partition like [[decode]]; the
@@ -465,18 +429,11 @@ object MultimodalOps {
     }.toDF("doc_id", "out_width", "out_height", "media")
   }
 
-  /** Q51: the resize pipeline proven end to end — synthesize PNGs,
-    * REALLY rescale the rasters, then re-decode the resized payloads
-    * with the real codec and emit the recovered dimensions; the oracle
-    * predicts them from the dimension formula alone, so a resize that
-    * does not produce a decodable image at the exact target geometry
-    * cannot pass.
-    */
-  def resizeRoundTrip(documents: DataFrame, maxSide: Int = 32): DataFrame =
-    resizeRoundTripFrom(syntheticPngTable(documents), maxSide)
-
-  /** The resize + re-decode half of [[resizeRoundTrip]] over an
-    * already-materialized media table (see [[imageStats]]).
+  /** Q51: resize stored PNGs with [[resizeImages]], re-decode the
+    * resized payloads with the real codec and emit the recovered
+    * dimensions; the oracle predicts them from the dimension formula,
+    * so a resize that does not produce a decodable image at the exact
+    * target geometry cannot pass.
     */
   def resizeRoundTripFrom(media: Dataset[MediaRecord],
                           maxSide: Int = 32): DataFrame = {
@@ -486,27 +443,6 @@ object MultimodalOps {
       .select(col("doc_id"), col("media")).as[MediaRecord]
     decode(resized, ImageIoDecoder)
       .toDF().select("doc_id", "width", "height", "format")
-  }
-
-  /** Aspect-ratio arithmetic on already-extracted metadata (kept for
-    * planning resize jobs without touching payloads — the actual
-    * transcode is [[resizeImages]]).
-    */
-  def resizeMeta(meta: Dataset[MediaMeta], maxSide: Int = 256): DataFrame = {
-    val spark = meta.sparkSession
-    import spark.implicits._
-    meta.map { m =>
-      if (m.width <= 0 || m.height <= 0) {
-        // propagate the unreadable-payload sentinel instead of
-        // scheduling a bogus 1x1 transcode (consistent with
-        // resizeImages' degradation)
-        (m.doc_id, -1, -1, m.format)
-      } else {
-        val scale = math.min(1.0, maxSide.toDouble / math.max(m.width, m.height))
-        (m.doc_id, (m.width * scale).toInt.max(1),
-          (m.height * scale).toInt.max(1), m.format)
-      }
-    }.toDF("doc_id", "out_width", "out_height", "format")
   }
 
   /** Deterministic multi-frame GIF fixture: one real animated-GIF
@@ -594,32 +530,4 @@ object MultimodalOps {
     }.toDF("doc_id", "sample_idx", "frame_idx", "width", "height", "n_frames")
   }
 
-  /** Q55: frame-sampling round trip — real multi-frame GIFs written,
-    * re-opened, frame-counted, and sampled with real per-frame
-    * decodes; the oracle re-derives every row from the frame-count and
-    * dimension formulas plus the k·n/s spacing rule.
-    */
-  def frameSampleRoundTrip(documents: DataFrame, maxFrames: Int = 4): DataFrame =
-    frameSampleImages(syntheticGifTable(documents), maxFrames)
-
-  /** Frame sampling (STUB for video): split the payload into `frames`
-    * equal byte ranges — the partitioning/batching shape of real frame
-    * extraction, with each "frame" an opaque binary.
-    */
-  def frameSample(media: Dataset[MediaRecord], frames: Int = 4): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.map { r =>
-      val n = r.media.length
-      val step = math.max(1, n / frames)
-      val count = math.min(frames, n)
-      val chunks = (0 until count).map { k =>
-        // last frame absorbs the remainder so the frames partition the
-        // payload exactly (no dropped trailing bytes)
-        val end = if (k == count - 1) n else math.min(n, (k + 1) * step)
-        r.media.slice(k * step, end)
-      }
-      (r.doc_id, chunks, chunks.size)
-    }.toDF("doc_id", "frames", "n_frames")
-  }
 }

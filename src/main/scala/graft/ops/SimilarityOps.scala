@@ -86,9 +86,7 @@ object SimilarityOps {
     * equi-join on the block key (parallelism = `blocks`, replication
     * cost `blocks`·n ≪ n² compute), no BroadcastNestedLoopJoin, no
     * corpus broadcast, and the final top-N plans as
-    * TakeOrderedAndProject (per-partition heaps). For corpora with
-    * true near-duplicates (sim → 1) use [[closestPairsBucketed]],
-    * which prunes the quadratic candidate space first.
+    * TakeOrderedAndProject (per-partition heaps).
     */
   def closestPairs(embeddings: DataFrame, topN: Int = 20,
                    blocks: Int = 32): DataFrame =
@@ -100,10 +98,7 @@ object SimilarityOps {
   /** Q65: embedding-cosine NEAR-DUP pairs — the threshold form of
     * [[closestPairs]]: every pair at or above `threshold`, i.e. the
     * semantic-dedup candidate surface (the embedding-space analogue of
-    * the q13/q27 lexical candidate generators). Exact by construction;
-    * at corpus scale the same surface comes from
-    * [[closestPairsBucketed]]'s LSH pruning with this threshold as the
-    * post-filter.
+    * the q13/q27 lexical candidate generators). Exact by construction.
     */
   def embeddingNearDupPairs(embeddings: DataFrame, threshold: Double = 0.45,
                             blocks: Int = 32): DataFrame =
@@ -133,37 +128,6 @@ object SimilarityOps {
         (col("n") - 1).cast("long").as("n_dropped"))
   }
 
-  /** Approximate closest pairs for the near-duplicate regime: pairs
-    * are generated only within LSH buckets (multi-table, like
-    * [[lshKnn]]), deduplicated as narrow id pairs, then exactly
-    * re-scored — the 100 TB path, where candidates shrink ~2^numPlanes
-    * per table. Only effective when the pairs of interest are truly
-    * close (sim ≳ 0.9, where per-table collision probability is high);
-    * on weak pairs it under-recalls by construction, hence q17 keeps
-    * the exact engine and this variant is spec-gated on planted
-    * near-dup data (SimilarityOpsSpec).
-    */
-  def closestPairsBucketed(embeddings: DataFrame, topN: Int = 20,
-                           numPlanes: Int = 8, numTables: Int = 4,
-                           dim: Int = 64): DataFrame = {
-    val corpus = withNorm(embeddings, "embedding", "cn")
-    val codes = tableCodes(corpus, numTables, numPlanes, dim)
-    val candIds = codes.select(col("vec_id").as("id_a"), col("t"), col("code"))
-      .join(codes.select(col("vec_id").as("id_b"), col("t"), col("code")),
-        Seq("t", "code"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    candIds
-      .join(corpus.select(col("vec_id").as("id_a"), col("embedding").as("ea"),
-        col("cn").as("na")), "id_a")
-      .join(corpus.select(col("vec_id").as("id_b"), col("embedding").as("eb"),
-        col("cn").as("nb")), "id_b")
-      .withColumn("sim", sim("ea", "eb", "na", "nb"))
-      .orderBy(col("sim").desc, col("id_a").asc, col("id_b").asc)
-      .limit(topN)
-      .select("id_a", "id_b", "sim")
-  }
-
   /** Deterministic pseudo-random hyperplanes: component d of plane p is
     * derived from md5("p:d") mapped to [-1, 1). Engine-portable (no
     * RNG state); any executor recomputes the same planes.
@@ -173,21 +137,6 @@ object SimilarityOps {
       .digest(s"$p:$d".getBytes("UTF-8"))
       .take(4).map("%02x".format(_)).mkString
     (java.lang.Long.parseLong(hex, 16).toDouble / math.pow(2, 31)) - 1.0
-  }
-
-  /** Sign-bucket id per vector under `numPlanes` random hyperplanes —
-    * the LSH partitioning primitive. One narrow projection, no
-    * shuffle; projections run through the codegen'd vec_dot like the
-    * multi-table code path ([[codeExpr]]).
-    */
-  def lshBuckets(embeddings: DataFrame, numPlanes: Int = 8, dim: Int = 64): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
-    val bucketExpr = (0 until numPlanes).map { p =>
-      val arr = (0 until dim).map(d => s"${planeComponent(p, d)}F")
-        .mkString("array(", ", ", ")")
-      s"(case when vec_dot(embedding, $arr) >= 0 then ${1L << p} else 0 end)"
-    }.mkString(" + ")
-    embeddings.withColumn("bucket", expr(s"cast($bucketExpr as bigint)"))
   }
 
   /** An IVF index: the corpus with cell assignments + the quantizer
@@ -480,34 +429,6 @@ object SimilarityOps {
           .mkString("array(", ", ", ")"))).as("tc"))
       .select(col("vec_id"), col("tc.t").as("t"), col("tc.code").as("code"))
 
-  /** Smallest `numPlanes` whose 2^numPlanes buckets keep the EXPECTED
-    * per-table bucket occupancy at or under `maxAvgBucket` — the
-    * corpus-derived default the scaladoc of [[lshKnn]] promises.
-    */
-  def lshPlanesFor(corpusCount: Long, maxAvgBucket: Long = 1000L): Int = {
-    require(corpusCount >= 0 && maxAvgBucket > 0,
-      s"corpusCount=$corpusCount maxAvgBucket=$maxAvgBucket")
-    var p = 1
-    while ((corpusCount >> p) > maxAvgBucket && p < 62) p += 1
-    p
-  }
-
-  /** Sizing guard: with 2^numPlanes buckets per table, average bucket
-    * occupancy is corpus/2^numPlanes; once that exceeds `maxAvgBucket`
-    * the per-table candidate join degenerates toward a full scan and
-    * the "approximate" operator silently stops pruning. Callers that
-    * know the corpus size should gate their geometry through this
-    * before running [[lshKnn]]/[[closestPairsBucketed]] at scale.
-    */
-  def requireLshSized(corpusCount: Long, numPlanes: Int,
-                      maxAvgBucket: Long = 1000L): Unit = {
-    val needed = lshPlanesFor(corpusCount, maxAvgBucket)
-    require(numPlanes >= needed,
-      s"LSH undersized: numPlanes=$numPlanes gives ~${corpusCount >> numPlanes} " +
-        s"vectors/bucket for corpus=$corpusCount (budget $maxAvgBucket); " +
-        s"need numPlanes >= $needed")
-  }
-
   /** Q16b: approximate top-k via MULTI-TABLE, MULTI-PROBE sign LSH
     * (random-hyperplane hashing per Charikar 2002; multi-probe per
     * Lv et al. 2007, "Multi-Probe LSH") — the standard recipe for
@@ -524,9 +445,9 @@ object SimilarityOps {
     *
     * SIZING: the default numPlanes=4 (16 buckets/table) is tuned for
     * the test fixture; average bucket occupancy is corpus/2^numPlanes,
-    * so at corpus scale derive the geometry with [[lshPlanesFor]] and
-    * assert it with [[requireLshSized]] — an undersized code prunes
-    * nothing and the "approximate" path silently becomes a full scan.
+    * so at corpus scale raise numPlanes until that stays bounded — an
+    * undersized code prunes nothing and the "approximate" path
+    * silently becomes a full scan.
     */
   def lshKnn(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10,
              numPlanes: Int = 4, numTables: Int = 8, dim: Int = 64): DataFrame = {
@@ -583,16 +504,9 @@ object SimilarityOps {
     * rate (perf: a too-high rate keeps extra rows, a too-low rate
     * trips the under-delivery fallback), never the sample:
     * [[trainSample]] validates delivery from the materialized result.
-    * Long-lived processes that mutate a corpus between builds call
-    * [[invalidateCorpusCounts]].
     */
   private val corpusCounts =
     new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
-
-  /** Drop the memoized sizing counts (after appending to / overwriting
-    * a corpus this process already built an index over).
-    */
-  def invalidateCorpusCounts(): Unit = corpusCounts.clear()
 
   /** Shared by the IVF and PQ builds: the deterministic hash-sampled,
     * vec_id-sorted, single-partition training frame (see

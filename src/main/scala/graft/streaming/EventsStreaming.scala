@@ -101,8 +101,8 @@ object EventsStreaming {
     // this bounded-fixture form flushes ALL state at end of each
     // micro-batch, which is only correct when the whole fixture lands
     // in ONE batch — oneBatch forces that (the file source otherwise
-    // caps a batch at 1000 files); the production multi-batch form is
-    // [[sessionizeStreamingEventTime]]
+    // caps a batch at 1000 files); a multi-batch form would keep the
+    // open session in state under GroupStateTimeout.EventTimeTimeout
     val src = graft.io.Tables.eventsStream(ss, dir, oneBatch = true)
       .selectExpr("user_id", "unix_micros(ts) as us",
         "cast(cast(value as decimal(18,2)) * 100 as bigint) as cents")
@@ -139,145 +139,6 @@ object EventsStreaming {
     val res = ss.table(queryName)
     res.cache(); res.count()
     res
-  }
-
-  /** Q32 streaming PRODUCTION form: sessions close when the WATERMARK
-    * passes last_event + gap (GroupStateTimeout.EventTimeTimeout), not
-    * at end-of-input — a user who goes silent has their session
-    * flushed by the timeout callback on a later micro-batch even if no
-    * further events for that user ever arrive, which is the semantics
-    * a continuous stream needs ([[sessionizeStreaming]] is the
-    * bounded-fixture form that flushes everything when input ends).
-    * State per key is one fixed-size [[OpenSession]]; the watermark
-    * bounds how long it can live. The checkpoint makes the query
-    * restartable mid-session (SessionTimeoutSpec drives two
-    * AvailableNow runs through one checkpoint and asserts the close
-    * happens on watermark passage). Sink is parquet + commit log (the
-    * memory sink cannot recover from a checkpoint); closed sessions
-    * land in `outDir` exactly once.
-    */
-  def sessionizeStreamingEventTime(spark: SparkSession, srcDir: String,
-                                   outDir: String, checkpointDir: String,
-                                   gapMinutes: Int = 30,
-                                   watermarkDelay: String = "10 minutes"): Unit = {
-    import spark.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    val src = graft.io.Tables.eventsStream(spark, srcDir, glob = "*.parquet")
-      .selectExpr("user_id", "ts",
-        "cast(cast(value as decimal(18,2)) * 100 as bigint) as cents")
-      .withWatermark("ts", watermarkDelay)
-      // the watermarked ts column must survive into the stateful
-      // operator's input (the unsupported-operation checker requires
-      // it); us carries the exact microseconds alongside
-      .selectExpr("user_id", "ts", "unix_micros(ts) as us", "cents")
-      .as[(Long, java.sql.Timestamp, Long, Long)]
-
-    def step(userId: Long, events: Iterator[(Long, java.sql.Timestamp, Long, Long)],
-             state: GroupState[OpenSession]): Iterator[Session] = {
-      if (state.hasTimedOut) {
-        // watermark passed last_event + gap with no new events: the
-        // session is definitively over — emit and clear
-        val s = state.get
-        state.remove()
-        Iterator.single(Session(userId, s.startUs, s.lastUs, s.n, s.cents))
-      } else {
-        // events are sorted only WITHIN a batch, and a later batch can
-        // deliver above-watermark events that precede the open
-        // session. Uniform handling: treat the stored session as one
-        // interval, merge it with this batch's events by the standard
-        // gaps-and-islands fold over START order, keep the LATEST
-        // island open in state, and emit every earlier island (they
-        // are gap-separated from the open one; with single-struct
-        // state they cannot be held open — same trade every
-        // sessionizer with per-key O(1) state makes).
-        val units = events.toSeq.map { case (_, _, us, c) =>
-          OpenSession(us, us, 1, c)
-        }
-        val items = (state.getOption.toSeq ++ units).sortBy(s => (s.startUs, s.lastUs))
-        if (items.isEmpty) Iterator.empty
-        else {
-        val islands = items.tail.foldLeft(List(items.head)) { (acc, nxt) =>
-          val cur = acc.head
-          if (nxt.startUs <= cur.lastUs + gapUs)
-            OpenSession(cur.startUs, math.max(cur.lastUs, nxt.lastUs),
-              cur.n + nxt.n, cur.cents + nxt.cents) :: acc.tail
-          else nxt :: acc
-        }.reverse
-        val closed = islands.init.map(s =>
-          Session(userId, s.startUs, s.lastUs, s.n, s.cents))
-        val open = islands.last
-        state.update(open)
-        // never set a timeout at/behind the watermark (illegal); a
-        // session already older than the horizon times out on the
-        // next batch instead. CEIL the µs→ms conversion: flooring
-        // would let the timeout fire up to 999 µs before
-        // last_event + gap, splitting a session the batch
-        // sessionizer (`us - prev_us > gapUs`, exact µs) keeps whole
-        state.setTimeoutTimestamp(math.max(
-          (open.lastUs + 999L) / 1000L + gapMinutes * 60000L,
-          state.getCurrentWatermarkMs + 1))
-        closed.iterator
-        }
-      }
-    }
-
-    val out = src.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(step)
-    val q = out.writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
-  /** Schema of [[sessionizeStreamingEventTime]]'s sink (for reading
-    * the output directory before any session has closed).
-    */
-  val sessionSchema: StructType = StructType(Seq(
-    StructField("user_id", LongType), StructField("session_start_us", LongType),
-    StructField("session_end_us", LongType), StructField("n_events", LongType),
-    StructField("sum_value_cents", LongType)))
-
-  /** The PRODUCTION streaming shape: file source → watermark → windowed
-    * agg → parquet file sink in APPEND mode with a durable checkpoint.
-    * Append emits each finalized window exactly once (when the
-    * watermark passes its end), state stays bounded by
-    * (watermark horizon × groups), and the checkpoint + the sink's
-    * _spark_metadata commit log make the pipeline restart-safe: a new
-    * invocation with the same checkpoint resumes from the recorded
-    * offsets and never re-emits a committed window
-    * (DurableStreamingSpec drives a restart end-to-end).
-    */
-  def hourlyByTypeDurable(spark: SparkSession, srcDir: String, outDir: String,
-                          checkpointDir: String): Unit = {
-    val src = graft.io.Tables.eventsStream(spark, srcDir, glob = "*.parquet")
-    val agg = windowAgg(src.withWatermark("ts", "1 hour"))
-    val q = agg.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Q54 batch twin: view→click attribution — each view joined to the
-    * same user's clicks landing within `windowMinutes` after it.
-    */
-  def viewClickJoin(events: DataFrame, windowMinutes: Int = 30): DataFrame = {
-    val winUs = windowMinutes * 60L * 1000000L
-    val views = events.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id"),
-        expr("unix_micros(ts)").as("v_us"))
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        expr("unix_micros(ts)").as("c_us"))
-    views.join(clicks, Seq("user_id"))
-      .filter(col("c_us") >= col("v_us") && col("c_us") < col("v_us") + winUs)
-      .select(col("view_id"), col("click_id"), col("user_id"),
-        (col("c_us") - col("v_us")).as("delay_us"))
   }
 
   /** Q92: ordered funnel progression — how many users reach each
@@ -375,8 +236,7 @@ object EventsStreaming {
     * flatMapGroupsWithState, the same bounded-fixture flush shape as
     * [[sessionizeStreaming]] (whole fixture in one batch, events
     * sorted by event time inside the group; the production multi-batch
-    * form would carry the state forward with an event-time timeout
-    * exactly as [[sessionizeStreamingEventTime]] does for sessions).
+    * form would carry the state forward with an event-time timeout).
     * A greedy scan in time order advances a user to stage i+1 on the
     * FIRST stage-i+1 event strictly after their stage-i entry — which
     * is precisely the chained-min semantics of the batch q92, so the
@@ -435,12 +295,9 @@ object EventsStreaming {
     *
     * Fixture caveat, same as [[funnelStagesStreaming]]: the whole
     * fixture arrives in one AvailableNow batch, so the winner is
-    * resolved inside the group and state is dropped on emit. The
-    * production multi-batch form is [[cdcApplyStreamingDurable]]:
-    * checkpoint-durable per-key state keyed by an explicit monotone
-    * change-sequence, idempotent under replay, compacted to the
-    * snapshot by [[cdcSnapshot]] (DurableStreamingSpec proves the
-    * cross-restart convergence).
+    * resolved inside the group and state is dropped on emit. A
+    * multi-batch form would keep the highest-sequence version per key
+    * in checkpoint-durable state across batches.
     */
   def cdcApplyStreaming(spark: SparkSession, dir: String,
                         queryName: String = "graft_stream_cdc",
@@ -488,68 +345,6 @@ object EventsStreaming {
     try q.awaitTermination() finally q.stop()
     ss.table(queryName)
   }
-
-  /** The PRODUCTION multi-batch form [[cdcApplyStreaming]]'s scaladoc
-    * promises: change rows carry an explicit monotone `seq` (the
-    * change-log offset), per-key state holds the highest-seq version
-    * ACROSS micro-batches and restarts (durable in the checkpoint),
-    * and each batch append-emits the key's current winner stamped
-    * with its seq. The emitted log is the CDC output stream; the
-    * materialized table is [[cdcSnapshot]] — argmax by seq per key,
-    * one struct-max aggregation. Replayed or out-of-order changes
-    * (seq ≤ state) are absorbed idempotently: the state never moves
-    * backward, so at-least-once delivery still converges to the
-    * exactly-once snapshot.
-    */
-  def cdcApplyStreamingDurable(spark: SparkSession, srcDir: String,
-                               outDir: String, ckptDir: String,
-                               statePartitions: Int = 8): Unit = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    import ss.implicits._
-    val changeSchema = StructType(Seq(
-      StructField("seq", LongType), StructField("o_orderkey", LongType),
-      StructField("o_custkey", LongType),
-      StructField("o_totalprice", DoubleType),
-      StructField("o_orderpriority", StringType)))
-    val src = ss.readStream.schema(changeSchema)
-      .option("maxFilesPerTrigger", Int.MaxValue.toString)
-      .parquet(srcDir)
-      .as[(Long, Long, Long, Double, String)]
-
-    def apply(key: Long, rows: Iterator[(Long, Long, Long, Double, String)],
-              state: GroupState[(Long, Long, Long, Double, String)])
-        : Iterator[(Long, Long, Double, String, Long)] = {
-      val winner = (state.getOption.iterator ++ rows).maxBy(_._1)
-      state.update(winner) // kept across batches AND restarts
-      Iterator((winner._2, winner._3, winner._4, winner._5, winner._1))
-    }
-
-    val out = src.groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout())(apply)
-      .toDF("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority",
-        "seq")
-    val q = out.writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckptDir)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-  }
-
-  /** Compact [[cdcApplyStreamingDurable]]'s emitted change log into
-    * the latest-wins table snapshot: argmax by seq per key, the q104
-    * struct-max shape — map-side partials bound the shuffle at one
-    * row per (key × partition), so compaction cost tracks the log,
-    * not the table history.
-    */
-  def cdcSnapshot(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir)
-      .groupBy("o_orderkey")
-      .agg(max(struct(col("seq"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderpriority"))).as("w"))
-      .select(col("o_orderkey"), col("w.o_custkey").as("o_custkey"),
-        col("w.o_totalprice").as("o_totalprice"),
-        col("w.o_orderpriority").as("o_orderpriority"))
 
   /** Q54: STREAM-STREAM inner join — the two-live-streams shape
     * (impressions joining clicks as both arrive). Both sides carry a
@@ -629,51 +424,6 @@ object EventsStreaming {
     out
   }
 
-  /** Streaming export into an RDBMS — the reference's JDBC sink (R4,
-    * MapReduceWSI.java:165-167) driven from a LIVE stream: foreachBatch
-    * appends each micro-batch through the same bulk
-    * [[graft.io.Jdbc.writeAppend]] path. The checkpoint records which
-    * batch ids committed, so a restart re-runs only unfinished batches
-    * — at-least-once into the external table (make the target
-    * idempotent/upsert-keyed for exactly-once; JdbcSpec drives a
-    * restart and asserts no duplicate rows on the happy path).
-    */
-  def streamToJdbc(spark: SparkSession, srcDir: String, checkpointDir: String,
-                   url: String, user: String, password: String,
-                   table: String): Unit = {
-    val src = graft.io.Tables.eventsStream(spark, srcDir, glob = "*.parquet")
-      .selectExpr("event_id", "user_id", "event_type", "value")
-    val q = src.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.io.Jdbc.writeAppend(batch.toDF(), url, user, password, table)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
-  /** Streaming member of the dedup family: exact dedup on a document
-    * STREAM via dropDuplicates on the content digest — Spark keeps one
-    * fixed-size state row per distinct digest, so a continuously
-    * ingesting pipeline deduplicates without re-scanning history. (On
-    * an unbounded production stream, pair with
-    * `withWatermark` + `dropDuplicatesWithinWatermark` to bound state
-    * by the horizon.) Returns one row per distinct content.
-    */
-  def streamingExactDedup(spark: SparkSession, dir: String,
-                          queryName: String = "graft_stream_dedup"): DataFrame = {
-    val src = graft.io.Tables.documentsStream(spark, dir)
-      .selectExpr("doc_id",
-        s"${graft.ops.DedupOps.contentFingerprintSql} as fp")
-    val q = src.dropDuplicates("fp")
-      .writeStream.format("memory").queryName(queryName)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    try q.awaitTermination() finally q.stop()
-    val out = spark.table(queryName)
-    out.cache(); out.count()
-    out
-  }
-
   /** Streaming NEAR-DUP candidates — the q60 incremental shape made a
     * STREAM: documents arriving on the stream (the odd-doc_id half of
     * the fixture) are banded PER ROW with
@@ -686,10 +436,9 @@ object EventsStreaming {
     * emitted (new, existing) pairs are deduplicated with streaming
     * state, so a pair colliding in several bands (or across batches)
     * emits once. State is one row per EMITTED pair — the operator's
-    * output, not its input; the production form with that state
-    * BOUNDED by a watermark is [[streamingNearDupWithinWatermark]]
-    * (this oracle-parity form keeps unbounded dropDuplicates because
-    * the oracle compare needs every pair regardless of horizon).
+    * output, not its input (this oracle-parity form keeps unbounded
+    * dropDuplicates because the oracle compare needs every pair
+    * regardless of horizon).
     * Held to batch q60's oracle (same band geometry, same pair set).
     */
   def streamingNearDupCandidates(spark: SparkSession, dir: String,
@@ -731,37 +480,6 @@ object EventsStreaming {
       out
     } finally corpusBands.unpersist()
   }
-
-  /** The state-BOUNDED form of streaming dedup that
-    * [[streamingExactDedup]]'s scaladoc promises for unbounded
-    * streams: `dropDuplicatesWithinWatermark` on a content
-    * fingerprint. A duplicate arriving while its key's state is alive
-    * is dropped; once the watermark passes first_seen + horizon the
-    * state is evicted and the SAME content is admitted again — that
-    * re-admission is the price of bounded state, and
-    * WatermarkDedupSpec proves both halves across checkpointed
-    * restarts. State is one row per distinct fingerprint seen within
-    * the horizon, independent of stream length.
-    */
-  def streamingDedupWithinWatermark(spark: SparkSession, srcDir: String,
-                                    outDir: String, checkpointDir: String,
-                                    horizon: String = "1 hour"): Unit = {
-    val src = graft.io.Tables.eventsStream(spark, srcDir, glob = "*.parquet")
-      .selectExpr("event_id", "ts",
-        "md5(concat_ws('|', user_id, event_type, value)) as fp")
-      .withWatermark("ts", horizon)
-    val q = src.dropDuplicatesWithinWatermark("fp")
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
-  /** Schema of [[streamingDedupWithinWatermark]]'s sink. */
-  val dedupSinkSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType), StructField("ts", TimestampType),
-    StructField("fp", StringType)))
 
   /** Q138: STREAMING cluster-label maintenance — the q135 merge driven
     * per micro-batch, with the q137 band artifact as the GROWING
@@ -1179,63 +897,6 @@ object EventsStreaming {
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
-  /** Schema of the document stream [[streamingNearDupWithinWatermark]]
-    * consumes: ingest event-time beside the payload.
-    */
-  val streamDocSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("ts", TimestampType),
-    StructField("text", StringType)))
-
-  /** Schema of [[streamingNearDupWithinWatermark]]'s sink. */
-  val nearDupSinkSchema: StructType = StructType(Seq(
-    StructField("doc_new", LongType), StructField("doc_existing", LongType),
-    StructField("ts", TimestampType)))
-
-  /** The state-BOUNDED production form of streaming near-dup that
-    * [[streamingNearDupCandidates]]'s scaladoc promises: pair-dedup
-    * state under a watermark. Arriving documents are banded PER ROW
-    * (stateless projection — [[graft.ops.DedupOps.minhashBandsRowwise]]
-    * carrying the event-time column through), equi-joined
-    * stream-static against the corpus band ARTIFACT, and the emitted
-    * (doc_new, doc_existing) pairs deduplicate with
-    * `dropDuplicatesWithinWatermark`: a pair re-colliding inside the
-    * horizon (several shared bands, or the same doc re-crawled) emits
-    * once; once the watermark passes its first sighting + horizon the
-    * state row is EVICTED and the same pair would emit again — bounded
-    * state (one row per emitted pair per horizon, independent of
-    * stream length) traded for horizon-scoped dedup, exactly the
-    * [[streamingDedupWithinWatermark]] contract on the pair stream.
-    * Checkpointed: a restart resumes both the source offsets and the
-    * pair state (NearDupWatermarkSpec proves eviction, re-admission,
-    * and batch-q60 parity across restarts).
-    *
-    * @param corpusBands the existing corpus's (doc_existing, b, bh)
-    *                    band table — in production a maintained build
-    *                    artifact (q135's sibling), never recomputed
-    *                    per batch
-    */
-  def streamingNearDupWithinWatermark(spark: SparkSession, srcDir: String,
-                                      corpusBands: DataFrame, outDir: String,
-                                      checkpointDir: String,
-                                      horizon: String = "1 hour"): Unit = {
-    val src = spark.readStream.schema(streamDocSchema)
-      .option("pathGlobFilter", "*.parquet").parquet(srcDir)
-    val streamBands = graft.ops.DedupOps
-      .minhashBandsRowwise(src, keep = Seq("ts"))
-      .select(col("doc_id").as("doc_new"), col("ts"), col("b"), col("bh"))
-      .withWatermark("ts", horizon)
-    val q = streamBands
-      .join(corpusBands.select(col("doc_existing"), col("b"), col("bh")),
-        Seq("b", "bh"))
-      .select("doc_new", "doc_existing", "ts")
-      .dropDuplicatesWithinWatermark("doc_new", "doc_existing")
-      .writeStream.format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
   }
 

@@ -328,9 +328,7 @@ class BpeOpsSpec extends SparkSpec {
     try {
       val scope = graft.core.Scopes.create(spark, base.toString)
       BpeOps.saveBpe(corpus, scope, "tok", nMerges = 3)
-      val beforeDf = BpeOps.loadBpeMerges(spark, scope, "tok")
-        .localCheckpoint(eager = true) // pin: the rows are overwritten below
-      val before = beforeDf.collect()
+      val before = BpeOps.loadBpeMerges(spark, scope, "tok").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
       val alphaBefore = BpeOps.loadBpeAlphabet(spark, scope, "tok")
       BpeOps.refreshBpe(batch, scope, "tok")
@@ -340,18 +338,10 @@ class BpeOpsSpec extends SparkSpec {
         corpus.unionByName(batch)).count() === 0)
       // the alphabet is FROZEN: no '~', byte-identical to the seed
       assert(BpeOps.loadBpeAlphabet(spark, scope, "tok") === alphaBefore)
-      // the refresh actually moved the statistics: merge table drifted,
-      // and the monitor reports rank-level divergence
-      val afterDf = BpeOps.loadBpeMerges(spark, scope, "tok")
-      val after = afterDf.collect()
+      // the refresh actually moved the statistics: merge table drifted
+      val after = BpeOps.loadBpeMerges(spark, scope, "tok").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
       assert(before !== after)
-      // the monitor localizes the divergence to the ranks that moved
-      val drift = BpeOps.bpeDrift(beforeDf, afterDf).collect()
-      assert(drift.nonEmpty)
-      val movedRanks = before.zip(after).collect {
-        case (b, a) if b != a => b._1 }.toSet
-      assert(drift.map(_.getInt(0)).toSet === movedRanks)
       // novel-character words never entered the dictionary: encoding
       // the batch under the refreshed artifact demotes '~' to UNK
       val enc = BpeOps.encodeWithArtifact(batch, scope, "tok")

@@ -86,17 +86,6 @@ class DedupOpsSpec extends SparkSpec {
     assert(out.head.getAs[Double]("jaccard") === 0.333333) // round(1/3, 6)
   }
 
-  test("prefix-filtered jaccard equals the naive inverted-index join") {
-    val d = graft.io.Tables.parquet(spark, sf, "documents")
-    for (t <- Seq(0.1, 0.3, 0.5)) {
-      val fast = DedupOps.jaccardPairsPrefix(d, threshold = t)
-        .collect().map(_.toSeq).toSet
-      val naive = DedupOps.jaccardPairs(d, threshold = t)
-        .collect().map(_.toSeq).toSet
-      assert(fast === naive, s"threshold $t")
-    }
-  }
-
   test("simhash: identical docs share signatures; hamming 0 pair found") {
     val d = docs(1L -> "alpha beta gamma delta", 2L -> "alpha beta gamma delta",
       3L -> "completely different words here")

@@ -1917,36 +1917,6 @@ class HtmlOpsSpec extends SparkSpec {
       assert(HtmlOps.refetchWaveFromLog(spark, sc, "fl",
         nowS = 1767225600L + 9L * 86400L, ttlS = 86400L,
         ranks = emptyRanks, kPerDomain = Int.MaxValue).count() > 0)
-      // the key table is where files genuinely ACCUMULATE — every
-      // append wave adds its own task files to the touched buckets —
-      // so there the compaction must show a real drop
-      val urls = HtmlOps.plantedDirtyUrlCorpus(docs)
-      HtmlOps.saveUrlKeys(urls.filter(col("doc_id") < 125), sc, "uk")
-      Seq(125L, 250L, 375L).foreach { lo =>
-        HtmlOps.appendUrlKeys(
-          urls.filter(col("doc_id") >= lo && col("doc_id") < lo + 125L)
-            .select("doc_id", "url"), sc, "uk")
-      }
-      def nKeyFiles(): Int = {
-        def walk(f: java.io.File): Seq[java.io.File] =
-          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-        walk(new java.io.File(sc.path("uk/rows")))
-          .count(_.getName.endsWith(".parquet"))
-      }
-      val keysBefore = HtmlOps.loadUrlKeys(spark, sc, "uk")
-        .collect().map(_.toString).sorted.toSeq
-      val keyFilesBefore = nKeyFiles()
-      HtmlOps.compactUrlKeys(spark, sc, "uk")
-      assert(nKeyFiles() < keyFilesBefore,
-        s"$keyFilesBefore -> ${nKeyFiles()}")
-      assert(HtmlOps.loadUrlKeys(spark, sc, "uk")
-        .collect().map(_.toString).sorted.toSeq === keysBefore)
-      // and the frontier's exchange-free anti-join contract survives:
-      // a fresh append against the compacted table still admits only
-      // unseen keys
-      assert(HtmlOps.appendUrlKeys(
-        urls.filter(col("doc_id") < 125).select("doc_id", "url"),
-        sc, "uk").count() === 0)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
@@ -2181,6 +2151,25 @@ class HtmlOpsSpec extends SparkSpec {
     }
   }
 
+  test("pruneWaveStates fails naming the path when the file system does not delete it") {
+    val base = java.nio.file.Files.createTempDirectory("graft-prune-nodelete-")
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.nodelete.impl", classOf[HtmlOpsSpec.NoDeleteFileSystem].getName)
+    conf.setBoolean("fs.nodelete.impl.disable.cache", true)
+    try {
+      (0 to 2).foreach(w => base.resolve(s"wave=$w").toFile.mkdirs())
+      val e = intercept[graft.core.GraftException] {
+        HtmlOps.pruneWaveStates(spark, s"nodelete://$base", keepLatest = 1)
+      }
+      assert(e.getMessage.contains(s"$base/wave=0"), e.getMessage)
+      assert(base.toFile.list().sorted.toSeq === Seq("wave=0", "wave=1", "wave=2"))
+    } finally {
+      conf.unset("fs.nodelete.impl")
+      conf.unset("fs.nodelete.impl.disable.cache")
+      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
+    }
+  }
+
   test("urlTrapped (q216): length cap and repeated-segment verdicts; frontier candidates gated") {
     import spark.implicits._
     val rows = Seq(
@@ -2358,5 +2347,18 @@ class HtmlOpsSpec extends SparkSpec {
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
+  }
+}
+
+object HtmlOpsSpec {
+  /** The local file system under the `nodelete` scheme, whose `delete`
+    * reports failure and removes nothing.
+    */
+  final class NoDeleteFileSystem extends org.apache.hadoop.fs.LocalFileSystem(
+      new org.apache.hadoop.fs.RawLocalFileSystem {
+        override def getUri: java.net.URI = java.net.URI.create("nodelete:///")
+      }) {
+    override def getScheme: String = "nodelete"
+    override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean = false
   }
 }

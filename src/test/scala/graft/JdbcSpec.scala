@@ -85,35 +85,6 @@ class JdbcSpec extends SparkSpec {
     }
   }
 
-  test("streaming foreachBatch export lands in the RDBMS exactly once across restart") {
-    val conn = DriverManager.getConnection(url)
-    try {
-      val st = conn.createStatement()
-      try st.execute("DROP TABLE EVSINK") catch { case _: Exception => }
-      st.execute("CREATE TABLE EVSINK (event_id BIGINT, user_id BIGINT, event_type VARCHAR(32), value DOUBLE)")
-    } finally conn.close()
-    val root = java.nio.file.Files.createTempDirectory("graft-jdbc-stream").toString
-    val (src, ckpt) = (s"$root/src", s"$root/ckpt")
-    new java.io.File(src).mkdirs()
-    import spark.implicits._
-    Seq((1L, 1000L, 3L, "click", 1.5, "{}"), (2L, 2000L, 4L, "view", 2.5, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("append").parquet(src)
-    graft.streaming.EventsStreaming.streamToJdbc(spark, src, ckpt, url, "", "", "EVSINK")
-    def count() = Jdbc.read(spark, url, "", "", "SELECT event_id FROM EVSINK").count()
-    assert(count() === 2L)
-    // restart with no new data: the checkpoint remembers the committed
-    // batch, nothing re-exports
-    graft.streaming.EventsStreaming.streamToJdbc(spark, src, ckpt, url, "", "", "EVSINK")
-    assert(count() === 2L)
-    // new data appends only the delta
-    Seq((3L, 3000L, 5L, "click", 3.5, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("append").parquet(src)
-    graft.streaming.EventsStreaming.streamToJdbc(spark, src, ckpt, url, "", "", "EVSINK")
-    assert(count() === 3L)
-  }
-
   test("splitRanges covers [min,max] with unbounded outer edges") {
     val r = Jdbc.splitRanges(0, 100, 4)
     assert(r.size === 4)

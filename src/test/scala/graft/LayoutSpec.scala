@@ -125,38 +125,4 @@ class LayoutSpec extends SparkSpec {
       .count(zs => zs.zip(zs.tail).exists { case (x, y) => x >= y })
     assert(inversions === 0)
   }
-
-  test("z-ordered layout clusters BOTH columns: per-file spans are fractions of the range") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val n = 256
-    // uniform 256×256 grid — the worst case for single-column sorting
-    val df = spark.range(n.toLong * n)
-      .select((col("id") / n).cast("long").as("a"), (col("id") % n).as("b"))
-    val dir = Files.createTempDirectory("graft-zorder").toString + "/t"
-    Layout.writeZordered(df, dir, "a", "b", numFiles = 16, bits = 8)
-
-    val spans = spark.read.parquet(dir)
-      .groupBy(input_file_name().as("f"))
-      .agg((max("a") - min("a")).as("sa"), (max("b") - min("b")).as("sb"))
-      .select(avg("sa"), avg("sb")).as[(Double, Double)].head()
-    // 16 z-range files over a 2-D grid ≈ 4×4 tiles: most files sit
-    // inside one or two 64×64 tiles; a file straddling a top-level
-    // quadrant boundary can legitimately span a full axis, so the
-    // locality claim is about the MEAN span — far below the full 255
-    // a 1-D sort leaves on its unsorted column in EVERY file
-    assert(spans._1 <= 0.6 * n, s"mean a-span too wide: $spans")
-    assert(spans._2 <= 0.6 * n, s"mean b-span too wide: $spans")
-
-    // contrast: the same file count sorted by `a` alone leaves b
-    // unclustered — every file spans (almost) the whole b range
-    val dir1 = Files.createTempDirectory("graft-zorder").toString + "/s"
-    df.repartitionByRange(16, col("a")).sortWithinPartitions("a")
-      .write.parquet(dir1)
-    val b1 = spark.read.parquet(dir1)
-      .groupBy(input_file_name().as("f"))
-      .agg((max("b") - min("b")).as("sb"))
-      .agg(min("sb")).as[Long].head()
-    assert(b1 >= n - 1, s"1-D layout unexpectedly clustered b: $b1")
-  }
 }

@@ -49,7 +49,8 @@ class MultimodalOpsSpec extends SparkSpec {
 
   test("featureExtract counts sum to pixel area on the synthetic fixture") {
     val docs = Seq(5L, 42L, 77L).toDF("doc_id")
-    val f = MultimodalOps.imageFeatures(docs).collect()
+    val f = MultimodalOps.featureExtract(MultimodalOps.syntheticPngTable(docs))
+      .collect()
       .map(m => m.doc_id -> m.features).toMap
     for (id <- Seq(5L, 42L, 77L)) {
       val area = (1 + (id % 64).toInt) * (1 + ((id * 7) % 48).toInt)
@@ -96,19 +97,11 @@ class MultimodalOpsSpec extends SparkSpec {
     assert((bad.getAs[Int]("out_width"), bad.getAs[Int]("out_height")) === ((-1, -1)))
   }
 
-  test("resize preserves aspect ratio within maxSide") {
-    val meta = Seq(MediaMeta(1L, 0, 640, 480, "jpeg"),
-      MediaMeta(2L, 0, 100, 50, "png")).toDS()
-    val out = MultimodalOps.resizeMeta(meta, maxSide = 256).collect()
-      .map(r => r.getLong(0) -> ((r.getInt(1), r.getInt(2)))).toMap
-    assert(out(1L) === ((256, 192))) // 640x480 scaled by 0.4
-    assert(out(2L) === ((100, 50))) // already within bounds
-  }
-
   test("frameSampleImages decodes real frames from a multi-frame GIF") {
     // doc 3 → 5 frames (2 + 3%5), dims 4x22; doc 10 → 2 frames, 11x23
     val docs = Seq(3L, 10L).toDF("doc_id")
-    val out = MultimodalOps.frameSampleRoundTrip(docs, maxFrames = 4).collect()
+    val out = MultimodalOps.frameSampleImages(
+      MultimodalOps.syntheticGifTable(docs), maxFrames = 4).collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> ((r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5))))
       .toMap
     // 5 frames sampled down to 4: indices k*5/4 = 0,1,2,3
@@ -122,17 +115,6 @@ class MultimodalOpsSpec extends SparkSpec {
     val bad = MultimodalOps.frameSampleImages(
       Seq(MediaRecord(9L, "junk".getBytes)).toDS()).collect()
     assert(bad.isEmpty)
-  }
-
-  test("frameSample splits payloads into opaque binary frames") {
-    val media = Seq(MediaRecord(1L, Array.tabulate(16)(_.toByte)),
-      MediaRecord(2L, Array.tabulate(10)(_.toByte))).toDS()
-    val out = MultimodalOps.frameSample(media, frames = 4).collect()
-      .map(r => r.getLong(0) -> r).toMap
-    assert(out(1L).getAs[Int]("n_frames") === 4)
-    assert(out(1L).getSeq[Array[Byte]](1).map(_.length).sum === 16)
-    // non-divisible payload: the last frame absorbs the remainder
-    assert(out(2L).getSeq[Array[Byte]](1).map(_.length).sum === 10)
   }
 
   test("decode drives a pluggable decoder through the batched contract") {
@@ -170,9 +152,9 @@ class MultimodalOpsSpec extends SparkSpec {
     assert((out(3L).width, out(3L).height, out(3L).format) === (-1, -1, "unknown"))
   }
 
-  test("imageRoundTrip: generated PNGs decode to the predicted dimensions") {
+  test("imageStats: generated PNGs decode to the predicted dimensions") {
     val docs = Seq(0L, 1L, 63L, 64L, 1000L).toDF("doc_id")
-    val out = MultimodalOps.imageRoundTrip(docs).collect()
+    val out = MultimodalOps.imageStats(MultimodalOps.syntheticPngTable(docs)).collect()
       .map(r => r.getLong(0) -> r).toMap
     for (id <- Seq(0L, 1L, 63L, 64L, 1000L)) {
       assert(out(id).getAs[Int]("width") === 1 + (id % 64).toInt)
@@ -181,9 +163,10 @@ class MultimodalOpsSpec extends SparkSpec {
     }
   }
 
-  test("audioRoundTrip: generated WAVs decode to the predicted format and sample stats") {
+  test("audioStats: generated WAVs decode to the predicted format and sample stats") {
     val ids = Seq(0L, 1L, 6L, 399L, 1000L)
-    val out = MultimodalOps.audioRoundTrip(ids.toDF("doc_id")).collect()
+    val out = MultimodalOps.audioStats(
+      MultimodalOps.syntheticWavTable(ids.toDF("doc_id"))).collect()
       .map(r => r.getLong(0) -> r).toMap
     for (id <- ids) {
       val n = (100 + id % 400).toInt

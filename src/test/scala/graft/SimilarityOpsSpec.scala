@@ -57,15 +57,6 @@ class SimilarityOpsSpec extends SparkSpec {
     assert(out === Map(0L -> 2L, 2L -> 0L, 4L -> 0L))
   }
 
-  test("lshBuckets: identical vectors land in the same bucket") {
-    val v = (0 until 64).map(_.toFloat)
-    val d = vecs(0L -> v, 1L -> v, 2L -> v.map(x => -x))
-    val b = SimilarityOps.lshBuckets(d).collect()
-      .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("bucket")).toMap
-    assert(b(0L) === b(1L))
-    assert(b(0L) !== b(2L)) // antipodal vector flips every sign bit
-  }
-
   test("lshKnn finds the identical vector in the same bucket") {
     val v = (0 until 64).map(_.toFloat + 1f)
     val d = vecs(0L -> v, 10L -> v, 11L -> v.map(x => -x))
@@ -102,22 +93,6 @@ class SimilarityOpsSpec extends SparkSpec {
     val out = SimilarityOps.closestPairs(d, topN = 100, blocks = 3).collect()
     assert(out.length === 21)
     assert(out.map(r => (r.getLong(0), r.getLong(1))).distinct.length === 21)
-  }
-
-  test("closestPairsBucketed recovers planted near-duplicate pairs") {
-    // base corpus of spread-out vectors + 3 planted near-dup pairs
-    val rng = new scala.util.Random(7)
-    def rv() = (0 until 64).map(_ => rng.nextGaussian().toFloat)
-    val base = (0L until 40L).map(i => i -> rv())
-    val planted = Seq(100L, 200L, 300L).map { id =>
-      val v = rv()
-      Seq(id -> v, (id + 1) -> v.map(x => x + 0.001f))
-    }.flatten
-    val d = vecs((base ++ planted): _*)
-    val out = SimilarityOps.closestPairsBucketed(d, topN = 3).collect()
-    assert(out.map(r => (r.getLong(0), r.getLong(1))).toSet ===
-      Set((100L, 101L), (200L, 201L), (300L, 301L)))
-    assert(out.forall(_.getAs[Double]("sim") > 0.999))
   }
 
   test("knnRecallGate emits violations only for low-recall queries") {
@@ -378,20 +353,6 @@ class SimilarityOpsSpec extends SparkSpec {
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
-  }
-
-  test("LSH sizing guard flags geometries that stop pruning at scale") {
-    // lshPlanesFor returns the smallest numPlanes meeting the bucket
-    // budget: one plane fewer would blow it
-    val p = SimilarityOps.lshPlanesFor(1L << 30)
-    assert(((1L << 30) >> p) <= 1000L)
-    assert(((1L << 30) >> (p - 1)) > 1000L)
-    assert(SimilarityOps.lshPlanesFor(0L) === 1)
-    // fixture-scale geometry passes; corpus-scale with 16 buckets/table
-    // (the q28 default) must be rejected
-    SimilarityOps.requireLshSized(5000L, numPlanes = 4)
-    assertThrows[IllegalArgumentException](
-      SimilarityOps.requireLshSized(1L << 30, numPlanes = 4))
   }
 
   test("int8 quantization bounds codes and reconstruction error; zero vectors stay zero") {

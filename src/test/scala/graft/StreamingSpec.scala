@@ -87,18 +87,6 @@ class StreamingSpec extends SparkSpec {
     assert(batch.nonEmpty)
   }
 
-  test("streaming exact dedup keeps one row per distinct content") {
-    val batch = graft.ops.DedupOps.exactDedup(
-      Tables.parquet(spark, sf, "documents"))
-    val streamed = EventsStreaming.streamingExactDedup(spark, sf,
-      queryName = "spec_dedup")
-    assert(streamed.count() === batch.count())
-    // same distinct-content set (representatives may differ by arrival)
-    val batchFps = batch.select("fp").collect().map(_.getString(0)).toSet
-    val streamFps = streamed.select("fp").collect().map(_.getString(0)).toSet
-    assert(streamFps === batchFps)
-  }
-
   test("streaming near-dup candidates equal the incremental batch operator (q60 contract)") {
     import org.apache.spark.sql.functions.col
     val docs = Tables.parquet(spark, sf, "documents")
@@ -125,7 +113,21 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream view→click join matches the batch join exactly") {
-    val batch = EventsStreaming.viewClickJoin(Tables.events(spark, sf))
+    import org.apache.spark.sql.functions.{col, expr}
+    // the batch reference: each view joined to the same user's clicks
+    // landing within 30 minutes after it
+    val ev = Tables.events(spark, sf)
+    val views = ev.filter(col("event_type") === "view")
+      .select(col("event_id").as("view_id"), col("user_id"),
+        expr("unix_micros(ts)").as("v_us"))
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"),
+        expr("unix_micros(ts)").as("c_us"))
+    val batch = views.join(clicks, Seq("user_id"))
+      .filter(col("c_us") >= col("v_us") &&
+        col("c_us") < col("v_us") + 30L * 60L * 1000000L)
+      .select(col("view_id"), col("click_id"), col("user_id"),
+        (col("c_us") - col("v_us")).as("delay_us"))
       .collect().map(_.toSeq).toSet
     val streamed = EventsStreaming
       .viewClickJoinStreaming(spark, sf, queryName = "spec_ss_join")
