@@ -68,60 +68,25 @@ object Scopes {
     spark.read.parquet(scope.path(name))
 
   /** One inventory row: a top-level artifact the scope owns. */
-  final case class ArtifactInfo(name: String, n_files: Long,
-                                total_bytes: Long, last_modified_ms: Long)
-
-  private def walk(f: FileSystem, p: Path): (Long, Long, Long) = {
-    var files = 0L; var bytes = 0L; var mtime = 0L
-    val it = f.listFiles(p, true)
-    while (it.hasNext) {
-      val s = it.next()
-      files += 1; bytes += s.getLen
-      if (s.getModificationTime > mtime) mtime = s.getModificationTime
-    }
-    (files, bytes, mtime)
-  }
+  final case class ArtifactInfo(name: String, n_files: Long, total_bytes: Long)
 
   /** ARTIFACT INVENTORY — what a long-lived scope has accumulated:
     * one row per top-level artifact (the band/label/postings/index/
     * shard directories the maintained-artifact operators persist),
-    * with file count, byte size, and the newest file's mtime. A
-    * metadata-only listing walk, O(files) per artifact and driver-side
-    * by design — artifact counts are human-scale even when the data
-    * is 100 TB; the bytes are never read.
+    * with file count and byte size. A metadata-only listing walk,
+    * O(files) per artifact and driver-side by design — artifact counts
+    * are human-scale even when the data is 100 TB; the bytes are never
+    * read.
     */
   def inventory(spark: SparkSession, scope: Scope): Seq[ArtifactInfo] = {
     val root = new Path(scope.dir)
     val f = fs(spark, root)
     if (!f.exists(root)) Seq.empty
     else f.listStatus(root).filter(_.isDirectory).map { st =>
-      val (files, bytes, mtime) = walk(f, st.getPath)
-      // a zero-file artifact reports the DIRECTORY's mtime, not 0 —
-      // otherwise sweep() would treat a just-created dir whose first
-      // write hasn't committed yet as infinitely old and delete it
-      // out from under the in-flight writer
-      val effective = if (files == 0L) st.getModificationTime else mtime
-      ArtifactInfo(st.getPath.getName, files, bytes, effective)
+      var files = 0L; var bytes = 0L
+      val it = f.listFiles(st.getPath, true)
+      while (it.hasNext) { files += 1; bytes += it.next().getLen }
+      ArtifactInfo(st.getPath.getName, files, bytes)
     }.toSeq.sortBy(_.name)
-  }
-
-  /** GC SWEEP — age out artifacts whose NEWEST file predates the
-    * cutoff, at artifact granularity (the reference's scope delete,
-    * MapReduceWSIImpl.java:79-87, is all-or-nothing; a long-lived
-    * scope needs the per-artifact form). An artifact is deleted only
-    * when (a) not named in `keep`, and (b) every file in it is older
-    * than `olderThanMs` — an artifact with ANY newer file (a fresh
-    * append into an old band table) is live and untouched, which is
-    * the invariant ScopesSpec proves. Returns the deleted names.
-    */
-  def sweep(spark: SparkSession, scope: Scope, olderThanMs: Long,
-            keep: Set[String] = Set.empty): Seq[String] = {
-    inventory(spark, scope)
-      .filter(a => !keep.contains(a.name) && a.last_modified_ms < olderThanMs)
-      .map { a =>
-        val p = new Path(scope.path(a.name))
-        deletePath(fs(spark, p), p)
-        a.name
-      }
   }
 }

@@ -43,8 +43,8 @@ object Layout {
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val loc = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    graft.core.Scopes.deletePath(
+      loc.getFileSystem(spark.sparkContext.hadoopConfiguration), loc)
     df.write.mode(SaveMode.Overwrite)
       .bucketBy(numBuckets, bucketCol)
       .sortBy(bucketCol)
@@ -101,26 +101,6 @@ object Layout {
       .drop("__alo", "__ahi", "__blo", "__bhi")
   }
 
-  /** Small-files compaction — the maintenance pass every long-running
-    * ingest needs (streaming file sinks and per-task writers produce
-    * one file per micro-batch per partition; a listing-bound scan
-    * eventually spends longer opening files than reading them).
-    * Rewrites `srcPath` as ~`targetFileBytes` files: file count from
-    * actual on-disk size, `coalesce` (no shuffle) to reach it. Write
-    * to a NEW path then swap — never compact in place, readers may
-    * hold the old listing.
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession, srcPath: String,
-              destPath: String, targetFileBytes: Long = 128L << 20): Unit = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(srcPath)
-    val fs = hadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = fs.getContentSummary(hadoopPath).getLength
-    val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    spark.read.parquet(srcPath)
-      .coalesce(nFiles)
-      .write.mode(SaveMode.Overwrite).parquet(destPath)
-  }
-
   /** Q139: PARTITION-PRESERVING compaction — the maintenance pass the
     * append-based artifacts need (q83 cells, q128 postings buckets,
     * q135 label buckets, q137 bands: every O(batch) append adds a file
@@ -134,67 +114,16 @@ object Layout {
     * on cell/bucket/cbucket/b), survives verbatim. Content-neutral by
     * construction (same rows, same columns); q139 proves it by holding
     * the compacted band artifact to q13's oracle, and the spec digests
-    * the content before and after. Write to a NEW path then swap —
-    * never in place, readers may hold the old listing; a table format
-    * (Delta/Iceberg) is the production answer for an ATOMIC swap, this
-    * is the layout half it automates.
-    */
-  /** @param filesPerPartition >1 splits each directory across that
-    *   many tasks/files (a deterministic-enough hash salt): the bound
-    *   that keeps a HOT partition — many GB in one directory after a
-    *   year of appends — from becoming a single straggler task writing
-    *   one unsplittable file. 1 (default) gives the tightest layout
-    *   for ordinary partitions.
+    * the content before and after. Writes to `destPath`, never in
+    * place: readers may hold the old listing, so q139 writes the next
+    * artifact version ([[Artifact.save]]) from the current one.
     */
   def compactPartitioned(spark: org.apache.spark.sql.SparkSession,
                          srcPath: String, destPath: String,
-                         partitionCols: Seq[String],
-                         filesPerPartition: Int = 1): Unit = {
-    require(partitionCols.nonEmpty,
-      "compactPartitioned needs partition columns; use compact() for flat data")
-    require(filesPerPartition >= 1, "filesPerPartition must be >= 1")
-    import org.apache.spark.sql.functions._
-    val df = spark.read.parquet(srcPath)
+                         partitionCols: Seq[String]): Unit = {
+    require(partitionCols.nonEmpty, "compactPartitioned needs partition columns")
     val parts = partitionCols.map(col)
-    val grouped =
-      if (filesPerPartition == 1) df.repartition(parts: _*)
-      else df
-        .withColumn("__cmp_salt",
-          pmod(xxhash64(monotonically_increasing_id()),
-            lit(filesPerPartition.toLong)))
-        .repartition(parts :+ col("__cmp_salt"): _*)
-        .drop("__cmp_salt")
-    grouped.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*).parquet(destPath)
-  }
-
-  /** Swap a compacted rewrite into place. NOT atomic on a plain
-    * FileSystem (a table format is the production answer for that),
-    * but NEVER destructive: the live data is renamed aside to
-    * `<live>.bak` before the staged copy moves in, so a crash or
-    * rename failure at any point leaves a complete copy at a known
-    * path — either still live, at .bak, or both — instead of the
-    * delete-then-rename window where a failed rename loses the only
-    * copy. The .bak is removed only after the staged copy is live.
-    */
-  def swapInto(spark: org.apache.spark.sql.SparkSession,
-               stagedPath: String, livePath: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(livePath)
-    val staged = new org.apache.hadoop.fs.Path(stagedPath)
-    val bak = new org.apache.hadoop.fs.Path(livePath + ".bak")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(staged), s"staged compaction missing: $stagedPath")
-    if (fs.exists(bak) && !fs.delete(bak, true))
-      throw new graft.core.GraftException(
-        s"failed to clear stale backup $bak")
-    val hadLive = fs.exists(live)
-    if (hadLive && !fs.rename(live, bak))
-      throw new graft.core.GraftException(s"failed to move $livePath aside")
-    if (!fs.rename(staged, live)) {
-      if (hadLive) fs.rename(bak, live) // restore; best-effort
-      throw new graft.core.GraftException(
-        s"failed to move $stagedPath over $livePath")
-    }
-    if (hadLive) fs.delete(bak, true)
+    spark.read.parquet(srcPath).repartition(parts: _*)
+      .write.partitionBy(partitionCols: _*).parquet(destPath)
   }
 }

@@ -613,30 +613,34 @@ object BpeOps {
               textCol: String = "text", pretok: Boolean = false): Unit = {
     require(nMerges >= 0, s"nMerges must be non-negative: $nMerges")
     val spark = documents.sparkSession
-    import spark.implicits._
     // the PRETOKENIZER SETTING is part of the model: an encode under a
     // different pretokenization is a different token stream, so the
     // flag rides the artifact and encodeWithArtifact obeys the stored
-    // value, never a caller's guess
+    // value, never a caller's guess. No refresh applied yet: the
+    // manifest holds no refresh token.
     graft.io.Artifact.save(spark, scope, name, "n_merges" -> nMerges,
-        "max_words" -> maxWords, "pretok" -> (if (pretok) 1 else 0)) {
+        "max_words" -> maxWords, "pretok" -> (if (pretok) 1 else 0)) { at =>
       // the FULL count table rides the artifact as its sufficient
       // statistic: a later refresh (q183) merges batch counts into it
       // and re-fits without ever re-reading the original corpus
       val counts = wordCountsDf(documents, textCol, pretok)
         .localCheckpoint(eager = true)
-      counts.write.mode("overwrite").parquet(scope.path(s"$name/counts"))
-      // no refresh applied yet: the counts' manifest holds no token
-      graft.io.Artifact.writeAt(spark, scope.path(s"$name/counts"))
+      counts.write.parquet(at("counts"))
       val dict = topWords(counts, maxWords)
-      val merges = fitFromCounts(dict, nMerges)
-      val alphabet = dict.flatMap(_._1.map(_.toString)).distinct.sorted
-      merges.toDF("merge_rank", "lhs", "rhs", "freq")
-        .coalesce(1).write.mode("overwrite").parquet(scope.path(s"$name/rows"))
-      alphabet.toDF("sym")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(scope.path(s"$name/alphabet"))
+      writeModel(spark, fitFromCounts(dict, nMerges),
+        dict.flatMap(_._1.map(_.toString)).distinct.sorted, at)
     }
+  }
+
+  /** The model tables of one artifact version: the merge table
+    * (`rows`) and the base alphabet (`alphabet`), one file each.
+    */
+  private def writeModel(spark: SparkSession, merges: Seq[BpeMerge],
+                         alphabet: Seq[String], at: String => String): Unit = {
+    import spark.implicits._
+    merges.toDF("merge_rank", "lhs", "rhs", "freq")
+      .coalesce(1).write.parquet(at("rows"))
+    alphabet.toDF("sym").coalesce(1).write.parquet(at("alphabet"))
   }
 
   /** The stored merge table, in rank order (merge_rank, lhs, rhs,
@@ -652,9 +656,13 @@ object BpeOps {
     * fit dictionary).
     */
   def loadBpeAlphabet(spark: SparkSession, scope: graft.core.Scope,
-                      name: String): Seq[String] = {
+                      name: String): Seq[String] =
+    alphabetOf(spark, graft.io.Artifact.read(spark, scope, name))
+
+  private def alphabetOf(spark: SparkSession,
+                         meta: graft.io.Artifact.Manifest): Seq[String] = {
     import spark.implicits._
-    graft.io.Artifact.load(spark, scope, name, "alphabet")
+    spark.read.parquet(meta.table("alphabet"))
       .select("sym").as[String].collect().toSeq.sorted
   }
 
@@ -666,25 +674,21 @@ object BpeOps {
     * stay out of the dictionary and surface as UNK at encode time).
     * Mechanics: one partial-agg count pass over the BATCH, summed
     * into the stored count table (word counts are additive over
-    * disjoint doc sets — the exactness lever), the merged counts
-    * swapped in (write-next-then-swap, the q139 convention, so a
-    * crash never leaves a half-written statistic), and the merge loop
+    * disjoint doc sets — the exactness lever), and the merge loop
     * re-run on the frozen-alphabet top-`max_words` dictionary under
     * the artifact's own recorded parameters. Bit-identical to a full
     * refit on corpus+batch — [[bpeRefreshGate]] is that equality as
     * an empty-set gate. O(batch + vocabulary), never O(corpus).
     *
-    * CRASH-REPLAY SAFETY (both stored tables, not just counts): the
-    * merge-table rewrite is ALSO staged (rows-next → swap), and a
-    * deterministic digest of the batch's word counts rides the counts
-    * directory through the same rename (the `refresh_token` field of
-    * the counts' own manifest). A replay of the SAME batch
-    * — the crash-recovery case: the caller re-runs after a failure
-    * anywhere in the refresh — sees its own token already on the live
-    * counts, SKIPS the count merge (no double-sum of the sufficient
-    * statistic), and still re-fits and re-swaps the merge table, so a
-    * crash between the counts swap and the rows swap heals instead of
-    * leaving merges inconsistent with counts. LIMITS, stated
+    * CRASH-REPLAY SAFETY: the merged counts, the re-fit merge table,
+    * the alphabet and a deterministic digest of the batch's word
+    * counts (the manifest's `refresh_token`) are written as ONE new
+    * artifact version, so a crash anywhere in the refresh leaves the
+    * previous version current with its statistic and merges
+    * consistent. A replay of the SAME batch — the crash-recovery case
+    * after a refresh that did publish — finds its own token on the
+    * current version and returns without writing (no double-sum of
+    * the sufficient statistic). LIMITS, stated
     * honestly: the content digest detects consecutive redelivery
     * only — an old batch replayed AFTER a different refresh has
     * landed is indistinguishable from new data, and a genuinely NEW
@@ -702,18 +706,16 @@ object BpeOps {
     * as a detected replay (`false`) — a digest-path caller whose feed
     * can legitimately repeat content must check this instead of
     * assuming the batch landed; a silently-dropped batch is exactly
-    * the failure mode the return value makes observable (the merge
-    * table is re-fit and re-swapped either way).
+    * the failure mode the return value makes observable.
     */
   def refreshBpe(batch: DataFrame, scope: graft.core.Scope,
                  name: String, textCol: String = "text",
                  batchId: Option[Long] = None): Boolean = {
     val spark = batch.sparkSession
-    import spark.implicits._
     val meta = graft.io.Artifact.read(spark, scope, name)
     val (nMerges, maxWords) = (meta.int("n_merges"), meta.int("max_words"))
     val pretok = meta.int("pretok") == 1
-    val alphabet = loadBpeAlphabet(spark, scope, name)
+    val alphabet = alphabetOf(spark, meta)
     // one pass over the batch: the counts feed both the digest and the
     // merge (localCheckpoint so the token and the merged table cannot
     // disagree about what the batch contained)
@@ -722,34 +724,24 @@ object BpeOps {
     val token = batchId.getOrElse(batchCounts
       .agg(expr("coalesce(bit_xor(xxhash64(w, cnt)), 0L)"))
       .head().getLong(0))
-    // "replayed" = this batch's token already rides the live counts:
-    // the merge ran on a previous attempt and must not run again (a
+    // "replayed" = this batch's token already rides the current
+    // version: its refresh published and must not run again (a
     // corrupt token fails by name: guessing could double-sum)
-    val applied = graft.io.Artifact.readAt(spark, scope.path(s"$name/counts"))
-    val replayed = applied.get("refresh_token").isDefined &&
-      applied.long("refresh_token") == token
-    if (!replayed) {
-      val merged = spark.read.parquet(scope.path(s"$name/counts"))
-        .select(col("w"), col("cnt"))
-        .unionByName(batchCounts)
-        .groupBy("w").agg(sum(col("cnt")).as("cnt"))
-      merged.write.mode("overwrite").parquet(scope.path(s"$name/counts-next"))
-      // the token rides the counts directory through swapInto's single
-      // rename: the token and the statistic it describes move together
-      graft.io.Artifact.writeAt(spark, scope.path(s"$name/counts-next"),
-        "refresh_token" -> token)
-      graft.io.Layout.swapInto(spark, scope.path(s"$name/counts-next"),
-        scope.path(s"$name/counts"))
-    }
-    // refit from the LIVE counts — idempotent whether or not the merge
-    // ran above, which is exactly what heals the swap/rows crash window
-    val dict = topWords(spark.read.parquet(scope.path(s"$name/counts")),
-      maxWords, Some(alphabet))
-    fitFromCounts(dict, nMerges).toDF("merge_rank", "lhs", "rhs", "freq")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(scope.path(s"$name/rows-next"))
-    graft.io.Layout.swapInto(spark, scope.path(s"$name/rows-next"),
-      scope.path(s"$name/rows"))
+    val replayed = meta.get("refresh_token").isDefined &&
+      meta.long("refresh_token") == token
+    if (!replayed)
+      graft.io.Artifact.save(spark, scope, name, "n_merges" -> nMerges,
+          "max_words" -> maxWords, "pretok" -> meta.int("pretok"),
+          "refresh_token" -> token) { at =>
+        spark.read.parquet(meta.table("counts"))
+          .select(col("w"), col("cnt"))
+          .unionByName(batchCounts)
+          .groupBy("w").agg(sum(col("cnt")).as("cnt"))
+          .write.parquet(at("counts"))
+        val dict = topWords(spark.read.parquet(at("counts")), maxWords,
+          Some(alphabet))
+        writeModel(spark, fitFromCounts(dict, nMerges), alphabet, at)
+      }
     !replayed
   }
 

@@ -193,14 +193,13 @@ object ClusterOps {
   def saveClusterLabels(labels: DataFrame, scope: graft.core.Scope,
                         name: String, nBuckets: Int = 32): Unit =
     graft.io.Artifact.save(labels.sparkSession, scope, name,
-        "n_buckets" -> nBuckets) {
+        "n_buckets" -> nBuckets) { at =>
       labels.filter(col("doc_id") =!= col("canonical_id"))
         .select(col("doc_id").cast("long").as("doc_id"),
           col("canonical_id").cast("long").as("canonical_id"),
           pmod(xxhash64(col("canonical_id")), lit(nBuckets.toLong))
             .cast("int").as("cbucket"))
-        .write.mode("overwrite").partitionBy("cbucket")
-        .parquet(scope.path(s"$name/rows"))
+        .write.partitionBy("cbucket").parquet(at("rows"))
     }
 
   /** Stored label rows under the artifact's fixed schema — explicit so
@@ -209,11 +208,9 @@ object ClusterOps {
     * frame instead of failing schema inference.
     */
   private def labelRows(spark: org.apache.spark.sql.SparkSession,
-                        scope: graft.core.Scope, name: String): DataFrame = {
-    graft.io.Artifact.read(spark, scope, name)
+                        meta: graft.io.Artifact.Manifest): DataFrame =
     spark.read.schema("doc_id LONG, canonical_id LONG, cbucket INT")
-      .parquet(scope.path(s"$name/rows"))
-  }
+      .parquet(meta.table("rows"))
 
   /** Probe: the q41-shaped full label table for `vertices`, from the
     * stored artifact — docs without a stored row are singletons
@@ -223,7 +220,8 @@ object ClusterOps {
                         scope: graft.core.Scope, name: String,
                         vertices: DataFrame): DataFrame =
     vertices.select(col("doc_id").cast("long").as("doc_id"))
-      .join(labelRows(spark, scope, name).select("doc_id", "canonical_id"),
+      .join(labelRows(spark, graft.io.Artifact.read(spark, scope, name))
+          .select("doc_id", "canonical_id"),
         Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("canonical_id"), col("doc_id")).as("canonical_id"))
@@ -263,8 +261,8 @@ object ClusterOps {
                         scope: graft.core.Scope, name: String,
                         newEdges: DataFrame): Unit = {
     import spark.implicits._
-    val nB = graft.io.Artifact.read(spark, scope, name).int("n_buckets")
-    val rowsPath = scope.path(s"$name/rows")
+    val meta = graft.io.Artifact.read(spark, scope, name)
+    val (nB, rowsPath) = (meta.int("n_buckets"), meta.table("rows"))
     def bucketOf(c: org.apache.spark.sql.Column) =
       pmod(xxhash64(c), lit(nB.toLong)).cast("int")
     val edges = normalize(
@@ -279,7 +277,7 @@ object ClusterOps {
       // when a huge backfill batch would not fit an executor
       val endpoints = edges.select(col("u").as("node"))
         .union(edges.select(col("v").as("node"))).distinct()
-      val art = labelRows(spark, scope, name)
+      val art = labelRows(spark, meta)
       val affected = art
         .join(endpoints, art("doc_id") === endpoints("node"))
         .select("canonical_id")
@@ -726,12 +724,11 @@ object ClusterOps {
   def saveCorpusShards(documents: DataFrame, scope: graft.core.Scope,
                        name: String, nShards: Int = 8): Unit =
     graft.io.Artifact.save(documents.sparkSession, scope, name,
-        "n_shards" -> nShards) {
+        "n_shards" -> nShards) { at =>
       corpusShards(documents, nShards)
         .repartition(col("split"), col("shard"))
         .sortWithinPartitions(col("pos"))
-        .write.partitionBy("split", "shard")
-        .mode("overwrite").parquet(scope.path(s"$name/rows"))
+        .write.partitionBy("split", "shard").parquet(at("rows"))
     }
 
   /** Q169 — the flagship's SAFETY tail: the v3-selected corpus
@@ -923,7 +920,8 @@ object ClusterOps {
   def corpusShardArtifactGate(spark: org.apache.spark.sql.SparkSession,
                               scope: graft.core.Scope, name: String,
                               documents: DataFrame): DataFrame = {
-    val nShards = graft.io.Artifact.read(spark, scope, name).int("n_shards")
+    val meta = graft.io.Artifact.read(spark, scope, name)
+    val nShards = meta.int("n_shards")
     val cols = Seq("doc_id", "lang", "source", "n_tokens", "split", "shard", "pos")
     def canon(df: DataFrame): DataFrame = df.select(
       col("doc_id").cast("long"), col("lang"), col("source"),
@@ -935,7 +933,7 @@ object ClusterOps {
     // violation set (expected empty) is materialized through an eager
     // localCheckpoint, after which the cached inputs are dead weight —
     // library callers must not depend on the bench loop's cache clear.
-    val stored = canon(spark.read.parquet(scope.path(s"$name/rows"))).persist()
+    val stored = canon(spark.read.parquet(meta.table("rows"))).persist()
     val expected = canon(corpusShards(documents, nShards)).persist()
     try {
       def tag(df: DataFrame, t: String): DataFrame =
@@ -967,7 +965,8 @@ object ClusterOps {
   def corpusShardDigestAudit(spark: org.apache.spark.sql.SparkSession,
                              scope: graft.core.Scope, name: String,
                              documents: DataFrame): DataFrame = {
-    val nShards = graft.io.Artifact.read(spark, scope, name).int("n_shards")
+    val meta = graft.io.Artifact.read(spark, scope, name)
+    val nShards = meta.int("n_shards")
     // group keys are the partition address; everything else (pos
     // included — in-shard order is part of the contract) digests
     val valueCols = Seq("doc_id", "lang", "source", "n_tokens", "pos")
@@ -980,7 +979,7 @@ object ClusterOps {
         .select(col("split"), col("shard"), col("n_rows").as(s"n_rows_$side"),
           col("digest").as(s"digest_$side"),
           col("digest_sum").as(s"sum_$side"))
-    val stored = digests(spark.read.parquet(scope.path(s"$name/rows")), "artifact")
+    val stored = digests(spark.read.parquet(meta.table("rows")), "artifact")
     val expected = digests(corpusShards(documents, nShards), "expected")
     stored.join(expected, Seq("split", "shard"), "full_outer")
       .filter(!(col("n_rows_artifact") <=> col("n_rows_expected")) ||

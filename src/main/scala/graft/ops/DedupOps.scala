@@ -159,10 +159,9 @@ object DedupOps {
                 shingleSize: Int = 3): Unit = {
     graft.io.Artifact.save(documents.sparkSession, scope, name,
         "num_hashes" -> numHashes, "band_size" -> bandSize,
-        "shingle_size" -> shingleSize) {
+        "shingle_size" -> shingleSize) { at =>
       minhashBands(documents, numHashes, bandSize, shingleSize)
-        .write.mode("overwrite").partitionBy("b")
-        .parquet(scope.path(s"$name/rows"))
+        .write.partitionBy("b").parquet(at("rows"))
     }
   }
 
@@ -182,7 +181,7 @@ object DedupOps {
                      name: String): Unit =
     bands.select("doc_id", "b", "bh")
       .write.mode("append").partitionBy("b")
-      .parquet(scope.path(s"$name/rows"))
+      .parquet(graft.io.Artifact.read(bands.sparkSession, scope, name).table("rows"))
 
   def loadBands(spark: org.apache.spark.sql.SparkSession,
                 scope: graft.core.Scope, name: String): DataFrame =

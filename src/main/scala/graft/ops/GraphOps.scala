@@ -126,9 +126,8 @@ object GraphOps {
     require(math.pow(10, exp).toLong == scale,
       s"scale must be a power of ten to be meta-recordable: $scale")
     graft.io.Artifact.save(edges.sparkSession, scope, name,
-        "iters" -> iters, "scale_pow10" -> exp) {
-      domainRank(edges, iters, scale)
-        .write.mode("overwrite").parquet(scope.path(s"$name/rows"))
+        "iters" -> iters, "scale_pow10" -> exp) { at =>
+      domainRank(edges, iters, scale).write.parquet(at("rows"))
     }
   }
 
@@ -150,7 +149,7 @@ object GraphOps {
     require(meta.int("iters") == expectIters && meta.int("scale_pow10") == exp,
       s"domain-rank artifact $name has meta ${meta.fields}; expected " +
         s"iters=$expectIters scale_pow10=$exp")
-    spark.read.parquet(scope.path(s"$name/rows"))
+    spark.read.parquet(meta.table("rows"))
       .select(col("domain"), col("pr"))
   }
 }

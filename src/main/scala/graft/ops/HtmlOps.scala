@@ -1302,7 +1302,7 @@ object HtmlOps {
     * records its own geometry), so an ingest append touches only the
     * buckets its keys hash to. COMPACTION CAVEAT: the rows are also
     * Spark-BUCKETED (see [[loadUrlKeys]]), so a compaction must write
-    * THROUGH the table (INSERT OVERWRITE preserves the bucket-id file
+    * THROUGH the table (`insertInto` preserves the bucket-id file
     * naming) — a plain-parquet rewrite
     * ([[graft.io.Layout]]'s q139 tool) would strip the bucket
     * suffixes the catalog registration declares and break reads.
@@ -1315,9 +1315,8 @@ object HtmlOps {
                   name: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
     val spark = urls.sparkSession
-    graft.io.Artifact.save(spark, scope, name, "n_buckets" -> nBuckets) {
-      val tbl = registerKeyTable(spark, scope, name,
-        recreateWith = Some(nBuckets))
+    graft.io.Artifact.save(spark, scope, name, "n_buckets" -> nBuckets) { at =>
+      val tbl = registerKeyTable(spark, at("rows"), nBuckets)
       urlCanonicalDedup(urls).filter(col("is_canonical"))
         .select(col("canon"), col("doc_id"),
           keyBucket(col("canon"), nBuckets))
@@ -1338,98 +1337,60 @@ object HtmlOps {
     * parquet reshuffled the WHOLE stored set per wave). The xxhash
     * `bucket` PARTITION column is unchanged and orthogonal: it prunes
     * directory listings for the O(batch) ingest ([[appendUrlKeys]]);
-    * the bucket SPEC co-locates the join. The table name is derived
-    * from the artifact path (MD5 — names must be catalog-legal and
-    * deterministic so a fresh session re-registers the same external
-    * table over the same files); the bucket count comes from the
-    * artifact's own manifest, the q137 self-describing convention.
+    * the bucket SPEC co-locates the join. The bucket count comes from
+    * the artifact's own manifest, the q137 self-describing convention.
     */
-  // ensured (process, rowsPath) registrations — the name is
-  // deterministic, so after the first ensure every frontier call and
-  // streaming micro-batch skips the catalog round-trips entirely
-  private val artifactTableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def registerKeyTable(spark: org.apache.spark.sql.SparkSession,
+                               rowsPath: String, nBuckets: Int): String =
+    registerArtifactTable(spark, rowsPath, nBuckets,
+      columnsDdl = "canon STRING, doc_id BIGINT, bucket INT",
+      partitionedBy = "bucket")
+
+  private def registerFetchLogTable(spark: org.apache.spark.sql.SparkSession,
+                                    rowsPath: String, nBuckets: Int): String =
+    registerArtifactTable(spark, rowsPath, nBuckets,
+      columnsDdl = "canon STRING, url STRING, last_fetch_s BIGINT, " +
+        "etag STRING, last_modified STRING, bucket INT, fetch_day INT",
+      partitionedBy = "bucket, fetch_day")
 
   /** The catalog registration shared by every maintained BUCKETED
     * artifact (the URL key set, the fetch log): an external table
-    * `CLUSTERED BY (canon)` over the artifact's own parquet layout,
-    * so consumers joining on the canonical key read the stored side
+    * `CLUSTERED BY (canon)` over one artifact version's `rows`, so
+    * consumers joining on the canonical key read the stored side
     * exchange-free. `columnsDdl`/`partitionedBy` parameterize the
-    * schema; everything else — MD5-of-path naming, recreate-clears-
-    * location, stale-location healing, MSCK partition discovery — is
-    * one contract for all artifacts. `recreateWith` carries a save's
-    * bucket count (its manifest is not published yet); every other
-    * call reads the manifest, so a reader of an unfinished save fails.
+    * schema; the name ([[graft.io.Artifact.catalogTable]]) is
+    * deterministic in the path, so a fresh session re-registers the
+    * same table over the same files, and a save's fresh version path
+    * gets a fresh table that [[graft.io.Artifact.save]] drops with the
+    * version it replaces. A stale registration whose location was
+    * deleted out from under it heals instead of serving a dead
+    * location.
     */
   private def registerArtifactTable(spark: org.apache.spark.sql.SparkSession,
-                                    scope: graft.core.Scope, name: String,
-                                    kind: String, columnsDdl: String,
-                                    partitionedBy: String,
-                                    recreateWith: Option[Int]): String = {
-    val recreate = recreateWith.isDefined
-    val nBuckets = recreateWith.getOrElse(
-      graft.io.Artifact.read(spark, scope, name).int("n_buckets"))
-    val rowsPath = scope.path(s"$name/rows")
-    def ensure(): String = {
-      val digest = java.security.MessageDigest.getInstance("MD5")
-        .digest(rowsPath.getBytes("UTF-8"))
-        .take(8).map(b => f"$b%02x").mkString
-      val tbl = s"graft_${kind}_$digest"
-      val p = new org.apache.hadoop.fs.Path(rowsPath)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // a RE-SAVE must start empty: DROP TABLE on an external table
-      // keeps the files, and MSCK would resurrect the old rows under
-      // the new registration — the append-not-overwrite bug a crashed
-      // seeding rerun would otherwise hit silently
-      if (recreate) {
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-        graft.core.Scopes.deletePath(fs, p)
-      } else if (spark.catalog.tableExists(tbl) && !fs.exists(p)) {
-        // a stale registration whose scope directory was deleted out
-        // from under it heals instead of serving a dead location
-        spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      }
-      if (!spark.catalog.tableExists(tbl)) {
-        // registration precedes the first insert — the location must
-        // exist for registration + partition recovery
-        fs.mkdirs(p)
-        spark.sql(
-          s"""CREATE TABLE $tbl ($columnsDdl)
-             |USING PARQUET
-             |PARTITIONED BY ($partitionedBy)
-             |CLUSTERED BY (canon) INTO $nBuckets BUCKETS
-             |LOCATION '$rowsPath'""".stripMargin)
-        // a re-registration (fresh session over an existing artifact)
-        // must discover the partitions the writing session created
-        spark.sql(s"MSCK REPAIR TABLE $tbl")
-      }
-      tbl
+                                    rowsPath: String, nBuckets: Int,
+                                    columnsDdl: String,
+                                    partitionedBy: String): String = {
+    val tbl = graft.io.Artifact.catalogTable(rowsPath)
+    val p = new org.apache.hadoop.fs.Path(rowsPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (spark.catalog.tableExists(tbl) && !fs.exists(p))
+      spark.sql(s"DROP TABLE $tbl")
+    if (!spark.catalog.tableExists(tbl)) {
+      // registration precedes the first insert — the location must
+      // exist for registration + partition recovery
+      fs.mkdirs(p)
+      spark.sql(
+        s"""CREATE TABLE $tbl ($columnsDdl)
+           |USING PARQUET
+           |PARTITIONED BY ($partitionedBy)
+           |CLUSTERED BY (canon) INTO $nBuckets BUCKETS
+           |LOCATION '$rowsPath'""".stripMargin)
+      // a re-registration (fresh session over an existing artifact)
+      // must discover the partitions the writing session created
+      spark.sql(s"MSCK REPAIR TABLE $tbl")
     }
-    // a cache hit must still verify the registration is alive in THIS
-    // catalog: the cache is JVM-wide but the catalog lives in the
-    // SparkContext — after a context restart in the same JVM the name
-    // would otherwise resolve to a dropped table (tableExists is an
-    // in-memory catalog lookup; the steady path's one FS read is the
-    // manifest above)
-    val cached = artifactTableCache.get(rowsPath)
-    if (!recreate && cached != null && spark.catalog.tableExists(cached)) cached
-    else { val t = ensure(); artifactTableCache.put(rowsPath, t); t }
+    tbl
   }
-
-  private def registerKeyTable(spark: org.apache.spark.sql.SparkSession,
-                               scope: graft.core.Scope, name: String,
-                               recreateWith: Option[Int] = None): String =
-    registerArtifactTable(spark, scope, name, kind = "urlkeys",
-      columnsDdl = "canon STRING, doc_id BIGINT, bucket INT",
-      partitionedBy = "bucket", recreateWith = recreateWith)
-
-  private def registerFetchLogTable(spark: org.apache.spark.sql.SparkSession,
-                                    scope: graft.core.Scope, name: String,
-                                    recreateWith: Option[Int] = None): String =
-    registerArtifactTable(spark, scope, name, kind = "fetchlog",
-      columnsDdl = "canon STRING, url STRING, last_fetch_s BIGINT, " +
-        "etag STRING, last_modified STRING, bucket INT, fetch_day INT",
-      partitionedBy = "bucket, fetch_day", recreateWith = recreateWith)
 
   /** O(batch) ingest of a new fetch wave (q59's anti-join shape):
     * canonicalize the batch, keep the FIRST fetch per key within the
@@ -1445,7 +1406,8 @@ object HtmlOps {
   def appendUrlKeys(batch: DataFrame, scope: graft.core.Scope,
                     name: String): DataFrame = {
     val spark = batch.sparkSession
-    val nBuckets = graft.io.Artifact.read(spark, scope, name).int("n_buckets")
+    val meta = graft.io.Artifact.read(spark, scope, name)
+    val nBuckets = meta.int("n_buckets")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("canon")).orderBy(col("doc_id"))
     val firstPerKey = batch
@@ -1467,7 +1429,7 @@ object HtmlOps {
       .join(stored, col("canon") === col("canon_ex"), "left_anti")
       .localCheckpoint(eager = true) // pin BEFORE the append below
     admitted.select(col("canon"), col("doc_id"), col("bucket"))
-      .write.insertInto(registerKeyTable(batch.sparkSession, scope, name))
+      .write.insertInto(registerKeyTable(spark, meta.table("rows"), nBuckets))
     admitted
   }
 
@@ -1479,9 +1441,11 @@ object HtmlOps {
     * the frontier plans).
     */
   def loadUrlKeys(spark: org.apache.spark.sql.SparkSession,
-                  scope: graft.core.Scope, name: String): DataFrame =
-    spark.table(registerKeyTable(spark, scope, name))
+                  scope: graft.core.Scope, name: String): DataFrame = {
+    val meta = graft.io.Artifact.read(spark, scope, name)
+    spark.table(registerKeyTable(spark, meta.table("rows"), meta.int("n_buckets")))
       .select(col("canon"), col("doc_id"), col("bucket").cast("int").as("bucket"))
+  }
 
   /** Probe the maintained key set: per URL, its canonical key and
     * whether THIS doc is the kept first fetch. Against the fully
@@ -3116,43 +3080,24 @@ object HtmlOps {
     * CADENCE, stated: this is a full-table rewrite, so it runs once
     * per crawl EPOCH (beside the q188 rank recompute), never per
     * wave — the per-wave upserts stay O(changed partitions) and this
-    * pass bounds what they accumulate. Rows are pinned with a
-    * localCheckpoint before the overwrite truncates what was read
-    * (the [[appendFetchLog]] contract); semantics-preserving by the
-    * q196 oracle (q209 replays the refetch wave over a compacted
-    * log).
+    * pass bounds what they accumulate. The rewrite reads the current
+    * version and writes the next one ([[graft.io.Artifact.save]]), so
+    * nothing it reads is truncated under it and a killed compaction
+    * leaves the log as it was; semantics-preserving by the q196 oracle
+    * (q209 replays the refetch wave over a compacted log).
     */
   def compactFetchLog(spark: org.apache.spark.sql.SparkSession,
                       scope: graft.core.Scope, name: String): Unit = {
-    val tbl = registerFetchLogTable(spark, scope, name)
-    val all = spark.table(tbl)
+    val live = graft.io.Artifact.read(spark, scope, name)
+    val nBuckets = live.int("n_buckets")
+    val all = spark.table(registerFetchLogTable(spark, live.table("rows"), nBuckets))
       .select("canon", "url", "last_fetch_s", "etag", "last_modified",
         "bucket", "fetch_day")
       // one task per partition directory → file count at the floor
       .repartition(col("bucket"), col("fetch_day"))
-      .localCheckpoint(eager = true)
-    // STATIC on purpose: truncate the whole table, rewrite every
-    // partition from the pinned snapshot
-    insertWithOverwriteMode(all, tbl, "static")
-    spark.catalog.refreshTable(tbl)
-  }
-
-  /** `INSERT OVERWRITE` under an explicit partition-overwrite mode,
-    * WITHOUT mutating the caller's session: insertInto ignores the
-    * per-writer option (probed), and flipping the session conf
-    * around the write races any concurrent writer in the same
-    * session — a compaction's `static` landing mid-upsert would
-    * truncate the whole maintained log. A throwaway cloned session
-    * (shared SparkContext + catalog, private conf) carries the mode
-    * instead; the input must be pinned (both callers checkpoint), so
-    * re-binding it by RDD is exact.
-    */
-  private def insertWithOverwriteMode(pinned: DataFrame, tbl: String,
-                                      mode: String): Unit = {
-    val s2 = pinned.sparkSession.newSession()
-    s2.conf.set("spark.sql.sources.partitionOverwriteMode", mode)
-    s2.createDataFrame(pinned.rdd, pinned.schema)
-      .write.mode("overwrite").insertInto(tbl)
+    graft.io.Artifact.save(spark, scope, name, live.fields.toSeq: _*) { at =>
+      all.write.insertInto(registerFetchLogTable(spark, at("rows"), nBuckets))
+    }
   }
 
   /** ROBOTS FETCHES recognized in a framed archive batch (q208): a
@@ -3407,9 +3352,8 @@ object HtmlOps {
                    name: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
     val spark = fetchLog.sparkSession
-    graft.io.Artifact.save(spark, scope, name, "n_buckets" -> nBuckets) {
-      val tbl = registerFetchLogTable(spark, scope, name,
-        recreateWith = Some(nBuckets))
+    graft.io.Artifact.save(spark, scope, name, "n_buckets" -> nBuckets) { at =>
+      val tbl = registerFetchLogTable(spark, at("rows"), nBuckets)
       latestFetchPerKey(fetchLog)
         .select(col("canon"), col("url"), col("last_fetch_s"), col("etag"),
           col("last_modified"),
@@ -3454,8 +3398,9 @@ object HtmlOps {
                      name: String): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val nBuckets = graft.io.Artifact.read(spark, scope, name).int("n_buckets")
-    val tbl = registerFetchLogTable(spark, scope, name)
+    val meta = graft.io.Artifact.read(spark, scope, name)
+    val (nBuckets, rowsPath) = (meta.int("n_buckets"), meta.table("rows"))
+    val tbl = registerFetchLogTable(spark, rowsPath, nBuckets)
     val batchLatest = latestFetchPerKey(
       withValidatorCols(batch).select(col("url") +: col("fetched_at_s") +:
         validatorCols.map(col): _*))
@@ -3513,13 +3458,21 @@ object HtmlOps {
         .select(col("canon"), col("url"), col("last_fetch_s"),
           col("etag"), col("last_modified"), col("bucket"),
           col("fetch_day"))
-      insertWithOverwriteMode(w, tbl, "dynamic")
+      // INSERT OVERWRITE in dynamic mode WITHOUT mutating the
+      // caller's session: insertInto ignores the per-writer option
+      // (probed), and flipping the session conf around the write
+      // races any concurrent writer in the same session. A throwaway
+      // cloned session (shared SparkContext + catalog, private conf)
+      // carries the mode; `merged` is pinned, so re-binding it by RDD
+      // is exact.
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      s2.createDataFrame(w.rdd, w.schema).write.mode("overwrite").insertInto(tbl)
       // a changed partition the overwrite wrote NO rows into (its
       // only keys moved to a fresher day) is not rewritten by the
       // dynamic overwrite — it must be dropped explicitly or its
       // beaten rows would survive
       val written = changedParts.filter(occupied).toSet
-      val rowsPath = scope.path(s"$name/rows")
       val fs = new org.apache.hadoop.fs.Path(rowsPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       changedParts.filterNot(written).foreach { case (b, d) =>
@@ -3581,12 +3534,14 @@ object HtmlOps {
         col("batch_won"))
 
   def loadFetchLog(spark: org.apache.spark.sql.SparkSession,
-                   scope: graft.core.Scope, name: String): DataFrame =
-    spark.table(registerFetchLogTable(spark, scope, name))
+                   scope: graft.core.Scope, name: String): DataFrame = {
+    val meta = graft.io.Artifact.read(spark, scope, name)
+    spark.table(registerFetchLogTable(spark, meta.table("rows"), meta.int("n_buckets")))
       .select(col("canon"), col("url"), col("last_fetch_s"), col("etag"),
         col("last_modified"),
         col("bucket").cast("int").as("bucket"),
         col("fetch_day").cast("int").as("fetch_day"))
+  }
 
   /** Q200's read side: [[refetchWave]]'s due-set semantics over the
     * MAINTAINED artifact — no raw log input, no re-reduction; the

@@ -262,23 +262,24 @@ object SimilarityOps {
     * knows its cells reads only those directories, and the (tiny)
     * centroid table rides beside it. This is the production split the
     * build/probe pair exists for — build once per corpus version,
-    * reload and probe from every query batch.
+    * reload and probe from every query batch. Published as one
+    * [[graft.io.Artifact]] version, so a killed save is never served.
     */
-  def saveIvfIndex(index: IvfIndex, scope: Scope, name: String): Unit = {
-    index.assigned.write.mode("overwrite").partitionBy("cell")
-      .parquet(scope.path(s"$name/assigned"))
-    index.centroids.write.mode("overwrite")
-      .parquet(scope.path(s"$name/centroids"))
-  }
+  def saveIvfIndex(index: IvfIndex, scope: Scope, name: String): Unit =
+    graft.io.Artifact.save(index.assigned.sparkSession, scope, name) { at =>
+      index.assigned.write.partitionBy("cell").parquet(at("assigned"))
+      index.centroids.write.parquet(at("centroids"))
+    }
 
   /** Reload a persisted [[IvfIndex]]; `cell` comes back as a partition
     * column, so filters on it prune at FILE LISTING time — see
     * [[probeIvfPruned]].
     */
-  def loadIvfIndex(spark: SparkSession, scope: Scope, name: String): IvfIndex =
-    IvfIndex(
-      spark.read.parquet(scope.path(s"$name/assigned")),
-      spark.read.parquet(scope.path(s"$name/centroids")))
+  def loadIvfIndex(spark: SparkSession, scope: Scope, name: String): IvfIndex = {
+    val m = graft.io.Artifact.read(spark, scope, name)
+    IvfIndex(spark.read.parquet(m.table("assigned")),
+      spark.read.parquet(m.table("centroids")))
+  }
 
   /** Incremental maintenance: assign a NEW vector batch to the
     * EXISTING quantizer and APPEND the batch's rows to the artifact's
@@ -296,11 +297,12 @@ object SimilarityOps {
   def appendToIvfIndex(batch: DataFrame, scope: Scope, name: String): Unit = {
     val spark = batch.sparkSession
     GraftFunctions.register(spark)
-    val centroids = spark.read.parquet(scope.path(s"$name/centroids"))
-    val assigned = assignCells(withNorm(batch, "embedding", "cn"), centroids)
+    val m = graft.io.Artifact.read(spark, scope, name)
+    val assigned = assignCells(withNorm(batch, "embedding", "cn"),
+        spark.read.parquet(m.table("centroids")))
       .select(col("vec_id"), col("embedding"), col("cell"), col("cn"))
     assigned.write.mode("append").partitionBy("cell")
-      .parquet(scope.path(s"$name/assigned"))
+      .parquet(m.table("assigned"))
   }
 
   /** Probe a RELOADED index with STATIC partition pruning: the probed
@@ -779,10 +781,9 @@ object SimilarityOps {
     */
   def savePqIndex(index: PqIndex, scope: Scope, name: String): Unit =
     graft.io.Artifact.save(index.codes.sparkSession, scope, name,
-        "m" -> index.m, "dsub" -> index.dsub) {
-      index.codes.write.mode("overwrite").parquet(scope.path(s"$name/codes"))
-      index.codebooks.write.mode("overwrite")
-        .parquet(scope.path(s"$name/codebooks"))
+        "m" -> index.m, "dsub" -> index.dsub) { at =>
+      index.codes.write.parquet(at("codes"))
+      index.codebooks.write.parquet(at("codebooks"))
     }
 
   /** Incremental maintenance of the PQ artifact: encode a new batch
@@ -797,16 +798,16 @@ object SimilarityOps {
     val meta = graft.io.Artifact.read(spark, scope, name)
     val (m, dsub) = (meta.int("m"), meta.int("dsub"))
     encodePqCodes(batch,
-      collectCodebooks(spark.read.parquet(scope.path(s"$name/codebooks")), m),
+      collectCodebooks(spark.read.parquet(meta.table("codebooks")), m),
       m, dsub)
-      .write.mode("append").parquet(scope.path(s"$name/codes"))
+      .write.mode("append").parquet(meta.table("codes"))
   }
 
   def loadPqIndex(spark: SparkSession, scope: Scope, name: String): PqIndex = {
     val meta = graft.io.Artifact.read(spark, scope, name)
     PqIndex(
-      spark.read.parquet(scope.path(s"$name/codes")),
-      spark.read.parquet(scope.path(s"$name/codebooks")),
+      spark.read.parquet(meta.table("codes")),
+      spark.read.parquet(meta.table("codebooks")),
       meta.int("m"), meta.int("dsub"))
   }
 
@@ -868,14 +869,11 @@ object SimilarityOps {
     */
   def saveIvfPqIndex(index: IvfPqIndex, scope: Scope, name: String): Unit =
     graft.io.Artifact.save(index.cellCodes.sparkSession, scope, name,
-        "m" -> index.m, "dsub" -> index.dsub) {
+        "m" -> index.m, "dsub" -> index.dsub) { at =>
       index.cellCodes.select("vec_id", "codes", "cell")
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(scope.path(s"$name/cells"))
-      index.centroids.write.mode("overwrite")
-        .parquet(scope.path(s"$name/centroids"))
-      index.codebooks.write.mode("overwrite")
-        .parquet(scope.path(s"$name/codebooks"))
+        .write.partitionBy("cell").parquet(at("cells"))
+      index.centroids.write.parquet(at("centroids"))
+      index.codebooks.write.parquet(at("codebooks"))
     }
 
   /** Reload; `cell` comes back as a partition column, so
@@ -886,9 +884,9 @@ object SimilarityOps {
                      name: String): IvfPqIndex = {
     val meta = graft.io.Artifact.read(spark, scope, name)
     IvfPqIndex(
-      spark.read.parquet(scope.path(s"$name/cells")),
-      spark.read.parquet(scope.path(s"$name/centroids")),
-      spark.read.parquet(scope.path(s"$name/codebooks")),
+      spark.read.parquet(meta.table("cells")),
+      spark.read.parquet(meta.table("centroids")),
+      spark.read.parquet(meta.table("codebooks")),
       meta.int("m"), meta.int("dsub"))
   }
 
@@ -908,16 +906,16 @@ object SimilarityOps {
     GraftFunctions.register(spark)
     val meta = graft.io.Artifact.read(spark, scope, name)
     val (m, dsub) = (meta.int("m"), meta.int("dsub"))
-    val centroids = spark.read.parquet(scope.path(s"$name/centroids"))
+    val centroids = spark.read.parquet(meta.table("centroids"))
     val assigned = assignCells(withNorm(batch, "embedding", "cn"), centroids)
       .select("vec_id", "cell")
     val codes = encodePqCodes(batch,
-      collectCodebooks(spark.read.parquet(scope.path(s"$name/codebooks")), m),
+      collectCodebooks(spark.read.parquet(meta.table("codebooks")), m),
       m, dsub)
     codes.join(assigned, "vec_id")
       .select("vec_id", "codes", "cell")
       .write.mode("append").partitionBy("cell")
-      .parquet(scope.path(s"$name/cells"))
+      .parquet(meta.table("cells"))
   }
 
   def probeIvfPq(index: IvfPqIndex, queryVecs: DataFrame, nQueries: Int = 5,

@@ -537,9 +537,9 @@ object TextOps {
   def savePostings(documents: DataFrame, scope: graft.core.Scope,
                    name: String, nBuckets: Int = 64): Unit =
     graft.io.Artifact.save(documents.sparkSession, scope, name,
-        "n_buckets" -> nBuckets) {
-      buildPostings(documents, nBuckets).write.mode("overwrite")
-        .partitionBy("bucket").parquet(scope.path(s"$name/rows"))
+        "n_buckets" -> nBuckets) { at =>
+      buildPostings(documents, nBuckets).write
+        .partitionBy("bucket").parquet(at("rows"))
     }
 
   /** Q128: incremental index maintenance — APPEND a new document
@@ -556,11 +556,11 @@ object TextOps {
     * exactly q59's job).
     */
   def appendPostings(batch: DataFrame, scope: graft.core.Scope,
-                     name: String): Unit =
-    buildPostings(batch,
-        graft.io.Artifact.read(batch.sparkSession, scope, name).int("n_buckets"))
-      .write.mode("append")
-      .partitionBy("bucket").parquet(scope.path(s"$name/rows"))
+                     name: String): Unit = {
+    val m = graft.io.Artifact.read(batch.sparkSession, scope, name)
+    buildPostings(batch, m.int("n_buckets")).write.mode("append")
+      .partitionBy("bucket").parquet(m.table("rows"))
+  }
 
   /** Reload; `bucket` comes back as a partition column, so
     * [[searchPostings]]' bucket filter prunes directories, not rows.
@@ -576,9 +576,11 @@ object TextOps {
   def searchPostingsArtifact(spark: org.apache.spark.sql.SparkSession,
                              scope: graft.core.Scope, name: String,
                              queries: Map[String, Seq[String]],
-                             k: Int = 10): DataFrame =
-    searchPostings(loadPostings(spark, scope, name), queries, k,
-      graft.io.Artifact.read(spark, scope, name).int("n_buckets"))
+                             k: Int = 10): DataFrame = {
+    val m = graft.io.Artifact.read(spark, scope, name)
+    searchPostings(spark.read.parquet(m.table("rows")), queries, k,
+      m.int("n_buckets"))
+  }
 
   /** The probe half of the q120 artifact: [[keywordSearch]] semantics
     * evaluated against the postings instead of the corpus. The query

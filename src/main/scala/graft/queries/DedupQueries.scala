@@ -19,19 +19,20 @@ private[graft] object DedupQueries {
     * built from the even half and appended with the odd half (two file
     * waves per band directory), then compacted partition-preserving
     * ([[graft.io.Layout.compactPartitioned]]: ~one file per directory,
-    * layout and pruning contracts intact) and swapped into place; the
-    * probe runs over the COMPACTED artifact and must still reproduce
-    * q13's full-corpus pairs — compaction is layout, not semantics.
+    * layout and pruning contracts intact) from the current artifact
+    * version into the next one; the probe runs over the COMPACTED
+    * artifact and must still reproduce q13's full-corpus pairs —
+    * compaction is layout, not semantics.
     */
   private def compactedBandPairs(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val scope = Memo.scope("graft-q139-", s, dir) { sc =>
       DedupOps.saveBands(docs.filter(col("doc_id") % 2 === 0), sc, "bands")
       DedupOps.appendBands(docs.filter(col("doc_id") % 2 === 1), sc, "bands")
-      graft.io.Layout.compactPartitioned(s, sc.path("bands/rows"),
-        sc.path("bands/rows-compact"), Seq("b"))
-      graft.io.Layout.swapInto(s, sc.path("bands/rows-compact"),
-        sc.path("bands/rows"))
+      val live = graft.io.Artifact.read(s, sc, "bands")
+      graft.io.Artifact.save(s, sc, "bands", live.fields.toSeq: _*) { at =>
+        graft.io.Layout.compactPartitioned(s, live.table("rows"), at("rows"), Seq("b"))
+      }
     }
     DedupOps.lshPairsFromBands(DedupOps.loadBands(s, scope, "bands"))
   }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.Artifact
 import graft.ops.BpeOps
 import graft.ops.BpeOps.BpeMerge
 
@@ -363,31 +364,26 @@ class BpeOpsSpec extends SparkSpec {
       val scope = graft.core.Scopes.create(spark, base.toString)
       BpeOps.saveBpe(corpus, scope, "tok", nMerges = 3)
       assert(BpeOps.refreshBpe(batch, scope, "tok"))
-      def counts() = spark.read.parquet(scope.path("tok/counts"))
+      def counts() = Artifact.load(spark, scope, "tok", "counts")
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       def merges() = BpeOps.loadBpeMerges(spark, scope, "tok").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
         .toSeq
       val (c1, m1) = (counts(), merges())
       // the crash-recovery case: the SAME batch is delivered again
-      // (e.g. the caller re-runs after a failure after the counts
-      // swap). The stored statistic must not absorb it twice, and the
-      // merge table must still be refit — not left stale. The skip is
-      // OBSERVABLE: the replayed call returns false where the first
-      // returned true.
+      // (the caller re-runs after a failure it cannot place). The
+      // stored statistic must not absorb it twice, and the merge table
+      // must stay the one fit on it. The skip is OBSERVABLE: the
+      // replayed call returns false where the first returned true.
       assert(!BpeOps.refreshBpe(batch, scope, "tok"))
       assert(counts() === c1)
       assert(merges() === m1)
       // and the artifact still equals a SINGLE-application full refit
       assert(BpeOps.bpeRefreshGate(spark, scope, "tok",
         corpus.unionByName(batch)).count() === 0)
-      // both rewrites were staged: no -next leftovers, no .bak
-      val fs = new java.io.File(base.toString)
-      def names(d: java.io.File): Seq[String] =
-        Option(d.listFiles()).toSeq.flatten.flatMap(f =>
-          f.getName +: (if (f.isDirectory) names(f) else Seq.empty))
-      assert(!names(fs).exists(n =>
-        n.endsWith("-next") || n.endsWith(".bak")))
+      // each refresh is one version: exactly one is left on disk
+      assert(versions(scope) === Seq(Artifact.read(spark, scope, "tok").dir
+        .split('/').last))
       // a GENUINELY new batch still lands (the token is per-batch,
       // not a one-shot latch)
       val batch2 = Seq((4L, "low lowest")).toDF("doc_id", "text")
@@ -406,23 +402,75 @@ class BpeOpsSpec extends SparkSpec {
       assert(counts()("low") === low + 2)
       assert(!BpeOps.refreshBpe(daily, scope, "tok", batchId = Some(101L)))
       assert(counts()("low") === low + 2)
-      // a CORRUPT token manifest (external damage — the atomic rename
-      // never leaves one) fails loudly, naming the file, instead of
-      // either wedging with a bare NumberFormatException or silently
-      // re-merging a statistic that may already contain the batch
-      val tokenFile = new java.io.File(
-        scope.path("tok/counts").stripPrefix("file:"), "_manifest")
-      java.nio.file.Files.write(tokenFile.toPath,
-        "garbage".getBytes("UTF-8"))
+      // a CORRUPT token in the version manifest (external damage —
+      // the atomic rename never leaves one) fails loudly, naming the
+      // file, instead of either wedging with a bare
+      // NumberFormatException or silently re-merging a statistic that
+      // may already contain the batch
+      val current = Artifact.read(spark, scope, "tok")
+      val manifest = new java.io.File(current.file.stripPrefix("file:"))
+      val text = new String(java.nio.file.Files.readAllBytes(manifest.toPath), "UTF-8")
+      assert(text.contains("refresh_token=101\n"))
+      java.nio.file.Files.write(manifest.toPath,
+        text.replace("refresh_token=101\n", "refresh_token=garbage\n").getBytes("UTF-8"))
       // drop the checksum sidecar the direct overwrite invalidated —
       // the simulated damage is to the CONTENT, not the transport
       java.nio.file.Files.deleteIfExists(
-        new java.io.File(tokenFile.getParent, "._manifest.crc").toPath)
+        new java.io.File(manifest.getParent, "._manifest.crc").toPath)
       val ex = intercept[IllegalStateException] {
         BpeOps.refreshBpe(daily, scope, "tok", batchId = Some(102L))
       }
-      assert(ex.getMessage.contains("tok/counts/_manifest"))
+      assert(ex.getMessage.contains(current.file))
       assert(ex.getMessage.contains("garbage"))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
+    }
+  }
+
+  /** The version directories of artifact `tok` on disk. */
+  private def versions(scope: graft.core.Scope): Seq[String] =
+    new java.io.File(scope.path("tok")).list().filter(_.matches("v\\d+")).sorted.toSeq
+
+  test("refreshBpe killed mid-write leaves the previous version; a rerun applies the batch once") {
+    val corpus = Seq(
+      (1L, "low low low lower lower newest"),
+      (2L, "newest newest widest low")).toDF("doc_id", "text")
+    val batch = Seq(
+      (3L, "widest widest widest widest widest newest")).toDF("doc_id", "text")
+    val base = java.nio.file.Files.createTempDirectory("graft-bpe-killed-")
+    try {
+      val scope = graft.core.Scopes.create(spark, base.toString)
+      BpeOps.saveBpe(corpus, scope, "tok", nMerges = 3)
+      val v1 = Artifact.read(spark, scope, "tok")
+      def counts() = Artifact.load(spark, scope, "tok", "counts")
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      def merges() = BpeOps.loadBpeMerges(spark, scope, "tok").collect().toSeq
+      val (c1, m1) = (counts(), merges())
+      // the refresh's count-merge job fails while it writes the next
+      // version: meanwhile the stored counts hold a planted file whose
+      // `cnt` is a string, which schema inference (one footer) may
+      // pass over but the job's scan cannot read
+      val stray = s"$base/stray"
+      Seq(("x", "y")).toDF("w", "cnt").coalesce(1).write.parquet(stray)
+      val planted = new java.io.File(v1.table("counts").stripPrefix("file:"),
+        "part-99999-planted.parquet").toPath
+      java.nio.file.Files.copy(new java.io.File(stray).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath, planted)
+      try intercept[Exception](BpeOps.refreshBpe(batch, scope, "tok"))
+      finally java.nio.file.Files.delete(planted)
+      // the previous version is still the one served, whole
+      assert(Artifact.read(spark, scope, "tok") === v1)
+      assert(counts() === c1)
+      assert(merges() === m1)
+      // re-running the same batch applies it, once
+      assert(BpeOps.refreshBpe(batch, scope, "tok"))
+      assert(!BpeOps.refreshBpe(batch, scope, "tok"))
+      assert(counts()("widest") === c1("widest") + 5)
+      assert(BpeOps.bpeRefreshGate(spark, scope, "tok",
+        corpus.unionByName(batch)).count() === 0)
+      // the killed attempt's directory went with the publish
+      assert(versions(scope) === Seq(Artifact.read(spark, scope, "tok").dir
+        .split('/').last))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }

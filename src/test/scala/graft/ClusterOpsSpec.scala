@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.Artifact
 import graft.ops.ClusterOps
 
 class ClusterOpsSpec extends SparkSpec {
@@ -261,11 +262,12 @@ class ClusterOpsSpec extends SparkSpec {
         .count() === 0)
       // the layout is one directory per (split, shard) — what a
       // training job mounts shard-by-shard
-      val dirs = new java.io.File(scope.path("shards/rows")).listFiles()
+      val dirs = new java.io.File(
+          Artifact.read(spark, scope, "shards").table("rows")).listFiles()
         .filter(_.isDirectory).map(_.getName).toSet
       assert(dirs.contains("split=train"), dirs)
       // a single-shard read is satisfied at file-listing time
-      val one = spark.read.parquet(scope.path("shards/rows"))
+      val one = Artifact.load(spark, scope, "shards", "rows")
         .filter(col("split") === "train" && col("shard") === 0)
       val scan = one.queryExecution.executedPlan.toString
       assert(scan.contains("PartitionFilters"), scan)
@@ -286,7 +288,7 @@ class ClusterOpsSpec extends SparkSpec {
         .count() === 0)
       // tamper with exactly one shard's rows: swap two documents' pos.
       // The audit must flag ONLY that (split, shard)
-      val rows = spark.read.parquet(scope.path("shards/rows"))
+      val rows = Artifact.load(spark, scope, "shards", "rows")
       val t0 = rows.filter(col("split") === "train" && col("shard") === 0)
       val two = t0.orderBy("pos").limit(2).collect()
       assert(two.length === 2)
@@ -298,7 +300,8 @@ class ClusterOpsSpec extends SparkSpec {
         .localCheckpoint(true)
       tampered.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("split", "shard").parquet(scope.path("shards/rows"))
+        .partitionBy("split", "shard")
+        .parquet(Artifact.read(spark, scope, "shards").table("rows"))
       val bad = ClusterOps.corpusShardDigestAudit(spark, scope, "shards", docs)
         .collect()
       assert(bad.length === 1)

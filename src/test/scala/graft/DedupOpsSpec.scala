@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.Artifact
 import graft.ops.DedupOps
 
 class DedupOpsSpec extends SparkSpec {
@@ -36,7 +37,7 @@ class DedupOpsSpec extends SparkSpec {
       // from the artifact metadata, not its own defaults
       DedupOps.saveBands(d.filter(col("doc_id") % 2 === 0), scope, "bands",
         numHashes = 8, bandSize = 2, shingleSize = 3)
-      val rowsPath = scope.path("bands/rows")
+      val rowsPath = Artifact.read(spark, scope, "bands").table("rows")
       def files(): Map[String, Long] = {
         val p = new org.apache.hadoop.fs.Path(rowsPath)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

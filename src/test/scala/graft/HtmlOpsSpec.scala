@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.io.Artifact
 import graft.ops.HtmlOps
 
 class HtmlOpsSpec extends SparkSpec {
@@ -192,7 +193,7 @@ class HtmlOpsSpec extends SparkSpec {
       val urls = HtmlOps.plantedDirtyUrlCorpus(docs)
       HtmlOps.saveUrlKeys(urls.filter(col("doc_id") < 250), sc, "uk")
       def listing(): Map[String, (Long, Long)] = {
-        val rows = new java.io.File(sc.path("uk/rows"))
+        val rows = new java.io.File(Artifact.read(spark, sc, "uk").table("rows"))
         rows.listFiles().filter(_.getName.startsWith("bucket=")).flatMap {
           d => d.listFiles().filter(_.getName.endsWith(".parquet"))
             .map(f => f.getPath -> ((f.length(), f.lastModified())))
@@ -227,9 +228,8 @@ class HtmlOpsSpec extends SparkSpec {
         .select("doc_id", "canon", "is_canonical")
       assert(viaArtifact.exceptAll(batch).count() === 0)
       assert(batch.exceptAll(viaArtifact).count() === 0)
-      // a RE-SAVE is an OVERWRITE, not a merge: the old rows must not
-      // survive the recreated registration (DROP TABLE on an external
-      // table keeps files — the save must clear the location too)
+      // a RE-SAVE is a new version, not a merge: the old rows must
+      // not survive it under the new version's registration
       HtmlOps.saveUrlKeys(urls.filter(col("doc_id") < 10), sc, "uk")
       assert(HtmlOps.loadUrlKeys(spark, sc, "uk").count() ===
         HtmlOps.urlCanonicalDedup(urls.filter(col("doc_id") < 10))
@@ -363,7 +363,7 @@ class HtmlOpsSpec extends SparkSpec {
       HtmlOps.saveFetchLog(first, sc, "fl")
       // two-level layout now: bucket=<b>/fetch_day=<d>/*.parquet
       def listing(): Map[String, (Long, Long)] = {
-        val rows = new java.io.File(sc.path("fl/rows"))
+        val rows = new java.io.File(Artifact.read(spark, sc, "fl").table("rows"))
         rows.listFiles().filter(_.getName.startsWith("bucket=")).flatMap {
           b => b.listFiles().filter(_.getName.startsWith("fetch_day="))
             .flatMap(d => d.listFiles().filter(_.getName.endsWith(".parquet"))
@@ -1894,7 +1894,7 @@ class HtmlOpsSpec extends SparkSpec {
       def nFiles(): Int = {
         def walk(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-        walk(new java.io.File(sc.path("fl/rows")))
+        walk(new java.io.File(Artifact.read(spark, sc, "fl").table("rows")))
           .count(_.getName.endsWith(".parquet"))
       }
       def rows() = HtmlOps.loadFetchLog(spark, sc, "fl")

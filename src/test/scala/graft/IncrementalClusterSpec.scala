@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 
 import graft.core.{Scope, Scopes}
+import graft.io.Artifact
 import graft.ops.ClusterOps
 
 /** The q135 label-artifact lifecycle: merge must be bit-identical to a
@@ -56,7 +57,8 @@ class IncrementalClusterSpec extends SparkSpec {
       .head().getInt(0)
 
   private def bucketFiles(scope: Scope, b: Int): Map[String, (Long, Long)] = {
-    val p = new Path(s"${scope.path("labels/rows")}/cbucket=$b")
+    val rows = Artifact.read(spark, scope, "labels").table("rows")
+    val p = new Path(s"$rows/cbucket=$b")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Map.empty
     else fs.listStatus(p).filter(_.isFile)

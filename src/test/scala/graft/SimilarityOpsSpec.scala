@@ -1,5 +1,6 @@
 package graft
 
+import graft.io.Artifact
 import graft.ops.SimilarityOps
 
 class SimilarityOpsSpec extends SparkSpec {
@@ -186,7 +187,8 @@ class SimilarityOpsSpec extends SparkSpec {
       SimilarityOps.saveIvfIndex(idx, scope, "ivf")
       // the artifact is laid out one directory per cell — the physical
       // property the pruned probe's PartitionFilters rely on
-      val cellDirs = new java.io.File(scope.path("ivf/assigned"))
+      val cellDirs = new java.io.File(
+          Artifact.read(spark, scope, "ivf").table("assigned"))
         .listFiles().filter(_.getName.startsWith("cell="))
       assert(cellDirs.nonEmpty)
       val loaded = SimilarityOps.loadIvfIndex(spark, scope, "ivf")
@@ -212,7 +214,7 @@ class SimilarityOpsSpec extends SparkSpec {
       val even = emb.filter(col("vec_id") % 2 === 0)
       val odd = emb.filter(col("vec_id") % 2 === 1)
       SimilarityOps.saveIvfIndex(SimilarityOps.buildIvfIndex(even), scope, "ivf")
-      def assignments() = spark.read.parquet(scope.path("ivf/assigned"))
+      def assignments() = Artifact.load(spark, scope, "ivf", "assigned")
         .select("vec_id", "cell").collect()
         .map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("cell")).toMap
       val before = assignments()
@@ -230,7 +232,7 @@ class SimilarityOpsSpec extends SparkSpec {
         while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
         s
       }
-      val centroids = spark.read.parquet(scope.path("ivf/centroids")).collect()
+      val centroids = Artifact.load(spark, scope, "ivf", "centroids").collect()
         .map(r => r.getAs[Int]("cell") ->
           r.getSeq[Float](r.fieldIndex("centroid")).toArray).sortBy(_._1)
       odd.collect().foreach { r =>
@@ -283,7 +285,7 @@ class SimilarityOpsSpec extends SparkSpec {
       val even = emb.filter(col("vec_id") % 2 === 0)
       val odd = emb.filter(col("vec_id") % 2 === 1)
       SimilarityOps.savePqIndex(SimilarityOps.buildPqIndex(even), scope, "pq")
-      def codes() = spark.read.parquet(scope.path("pq/codes"))
+      def codes() = Artifact.load(spark, scope, "pq", "codes")
         .collect().map(r => r.getAs[Long]("vec_id") ->
           r.getSeq[Int](r.fieldIndex("codes"))).toMap
       val before = codes()
@@ -333,7 +335,7 @@ class SimilarityOpsSpec extends SparkSpec {
         .collect().map(key).toSet
       assert(SimilarityOps.probeIvfPq(reloaded, emb, nQueries = 3, k = 5)
         .collect().map(key).toSet === mem)
-      def stored() = spark.read.parquet(scope.path("ivfpq/cells"))
+      def stored() = Artifact.load(spark, scope, "ivfpq", "cells")
         .select("vec_id", "cell", "codes").collect()
         .map(r => r.getAs[Long]("vec_id") ->
           (r.getAs[Int]("cell"), r.getSeq[Int](r.fieldIndex("codes"))))

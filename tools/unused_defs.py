@@ -21,7 +21,6 @@ ALLOW = {
     "writeTsv",                # the reference's TSV sink (README)
     "runJarMain",              # the reference's runMapReduce
     "plantedCrawlDelays",      # planted fixture, moves with the other planted generators
-    "sweep",                   # scope GC; only ScopesSpec calls it (ROADMAP item 4)
 }
 
 TOKEN = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*(?:.|\n)*?\*/')
