@@ -321,12 +321,11 @@ object BpeOps {
     topWords(wordCountsDf(documents, textCol, pretok), maxWords)
 
   def fitBpe(documents: DataFrame, nMerges: Int = 50,
-             maxWords: Int = 1 << 16, textCol: String = "text",
              pretok: Boolean = false): DataFrame = {
     require(nMerges >= 0, s"nMerges must be non-negative: $nMerges")
     val spark = documents.sparkSession
     import spark.implicits._
-    fitFromCounts(fitDictionary(documents, maxWords, textCol, pretok),
+    fitFromCounts(fitDictionary(documents, 1 << 16, "text", pretok),
         nMerges)
       .toDF("merge_rank", "lhs", "rhs", "freq")
   }
@@ -483,13 +482,12 @@ object BpeOps {
     * one and merge ids to 17+rank) per repetition — all still closed
     * form.
     */
-  def plantedPunctCorpus(documents: DataFrame,
-                         keep: Seq[String] = Seq.empty): DataFrame =
-    documents.select(col("doc_id") +: keep.map(col) :+ expr(
+  def plantedPunctCorpus(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"), expr(
       """trim(repeat(concat(element_at(
         |  array('abab','cdcd','efef','ghgh','ijij','klkl','mnmn','opop'),
         |  cast(doc_id % 8 as int) + 1), '. '), cast(1 + doc_id % 5 as int)))
-        |""".stripMargin.replace("\n", " ")).as("text"): _*)
+        |""".stripMargin.replace("\n", " ")).as("text"))
 
   /** Q148: BPE fit on the planted corpus — the learned merge table,
     * oracle-checked row for row (rank, pair, frequency).
@@ -508,9 +506,8 @@ object BpeOps {
   /** Subword token counts for downstream composition (packing,
     * budgeting): (doc_id, n_tok) from [[encodeStats]].
     */
-  def tokenCounts(documents: DataFrame, merges: DataFrame,
-                  textCol: String = "text"): DataFrame =
-    encodeStats(documents, merges, textCol)
+  def tokenCounts(documents: DataFrame, merges: DataFrame): DataFrame =
+    encodeStats(documents, merges)
       .select(col("doc_id"), col("n_tokens").as("n_tok"))
 
   /** Q157: tokenizer FERTILITY / COMPRESSION profile per domain — the
@@ -518,7 +515,7 @@ object BpeOps {
     * to the full-corpus encode: subword tokens per whitespace word
     * (fertility — how much the model's sequence budget inflates vs
     * word count) and characters per subword token (compression), per
-    * `domainCol`, so a tokenizer fitted on one mix is auditable
+    * `source`, so a tokenizer fitted on one mix is auditable
     * against every domain it will actually encode. Sums are exact
     * BIGINTs; the two ratios ship as 1e6 fixed-point BIGINTs (the
     * q156 convention) so the result is engine-portable bit for bit.
@@ -530,23 +527,18 @@ object BpeOps {
     * domain-cardinality-sized and the only exchange is the final
     * domain-keyed aggregation.
     */
-  def fertilityProfile(documents: DataFrame, merges: DataFrame,
-                       domainCol: String = "source",
-                       textCol: String = "text",
-                       alphabetOpt: Option[Seq[String]] = None,
-                       pretok: Boolean = false): DataFrame = {
+  def fertilityProfile(documents: DataFrame, merges: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     val ms = collectMerges(merges)
-    val alphabet = alphabetOpt.getOrElse(
-      ms.flatMap(m => (m.lhs + m.rhs).map(_.toString)).distinct)
+    val alphabet = ms.flatMap(m => (m.lhs + m.rhs).map(_.toString)).distinct
     val vocab = vocabOf(alphabet, ms)
     val ranks = ms.map(m => (m.lhs, m.rhs) -> m.merge_rank).toMap
     val bc = spark.sparkContext.broadcast((ranks, vocab))
     // word/char counts ride the SAME per-partition encode pass as the
     // subword stats — one scan, no corpus⋈corpus join downstream
     documents
-      .select(col(domainCol).cast("string"), col(textCol).cast("string"))
+      .select(col("source").cast("string"), col("text").cast("string"))
       .as[(String, String)]
       .mapPartitions { it =>
         val (rk, vb) = bc.value
@@ -554,14 +546,10 @@ object BpeOps {
           var words = 0L; var chars = 0L
           var n = 0L; var unk = 0L
           tokenize(text).foreach { w =>
-            // fertility counts whitespace WORDS; the encode may still
-            // run over pretokenized units of each word
             words += 1; chars += w.length
-            (if (pretok) pretokenize(w) else Array(w)).foreach { u =>
-              applyMerges(u, rk).foreach { s =>
-                n += 1
-                if (!vb.contains(s)) unk += 1
-              }
+            applyMerges(w, rk).foreach { s =>
+              n += 1
+              if (!vb.contains(s)) unk += 1
             }
           }
           (domain, words, chars, n, unk)
@@ -576,7 +564,7 @@ object BpeOps {
         sum("__n_tokens").as("n_tokens"),
         sum("__n_unk").as("n_unk"))
       .select(
-        col("__domain").as(domainCol),
+        col("__domain").as("source"),
         col("n_docs"), col("n_words"), col("n_chars"), col("n_tokens"),
         col("n_unk"),
         when(col("n_words") > 0,
@@ -604,15 +592,16 @@ object BpeOps {
 
   /** Fit and persist a BPE tokenizer under `scope/name`: the merge
     * table (`rows`), the fit dictionary's character alphabet
-    * (`alphabet`), and (nMerges, maxWords) as metadata. One corpus
+    * (`alphabet`), and (nMerges, maxWords = 2^16) as metadata. One corpus
     * pass (the dictionary aggregation); both stored tables are
     * model-sized.
     */
   def saveBpe(documents: DataFrame, scope: graft.core.Scope,
-              name: String, nMerges: Int = 50, maxWords: Int = 1 << 16,
-              textCol: String = "text", pretok: Boolean = false): Unit = {
+              name: String, nMerges: Int = 50,
+              pretok: Boolean = false): Unit = {
     require(nMerges >= 0, s"nMerges must be non-negative: $nMerges")
     val spark = documents.sparkSession
+    val maxWords = 1 << 16
     // the PRETOKENIZER SETTING is part of the model: an encode under a
     // different pretokenization is a different token stream, so the
     // flag rides the artifact and encodeWithArtifact obeys the stored
@@ -623,7 +612,7 @@ object BpeOps {
       // the FULL count table rides the artifact as its sufficient
       // statistic: a later refresh (q183) merges batch counts into it
       // and re-fits without ever re-reading the original corpus
-      val counts = wordCountsDf(documents, textCol, pretok)
+      val counts = wordCountsDf(documents, "text", pretok)
         .localCheckpoint(eager = true)
       counts.write.parquet(at("counts"))
       val dict = topWords(counts, maxWords)
@@ -709,8 +698,7 @@ object BpeOps {
     * the failure mode the return value makes observable.
     */
   def refreshBpe(batch: DataFrame, scope: graft.core.Scope,
-                 name: String, textCol: String = "text",
-                 batchId: Option[Long] = None): Boolean = {
+                 name: String, batchId: Option[Long] = None): Boolean = {
     val spark = batch.sparkSession
     val meta = graft.io.Artifact.read(spark, scope, name)
     val (nMerges, maxWords) = (meta.int("n_merges"), meta.int("max_words"))
@@ -719,7 +707,7 @@ object BpeOps {
     // one pass over the batch: the counts feed both the digest and the
     // merge (localCheckpoint so the token and the merged table cannot
     // disagree about what the batch contained)
-    val batchCounts = wordCountsDf(batch, textCol, pretok)
+    val batchCounts = wordCountsDf(batch, "text", pretok)
       .localCheckpoint(eager = true)
     val token = batchId.getOrElse(batchCounts
       .agg(expr("coalesce(bit_xor(xxhash64(w, cnt)), 0L)"))
@@ -753,15 +741,14 @@ object BpeOps {
     * layout, not semantics).
     */
   def bpeRefreshGate(spark: SparkSession, scope: graft.core.Scope,
-                     name: String, corpusPlusBatch: DataFrame,
-                     textCol: String = "text"): DataFrame = {
+                     name: String, corpusPlusBatch: DataFrame): DataFrame = {
     val meta = graft.io.Artifact.read(spark, scope, name)
     val (nMerges, maxWords) = (meta.int("n_merges"), meta.int("max_words"))
     val pretok = meta.int("pretok") == 1
     val alphabet = loadBpeAlphabet(spark, scope, name)
     import spark.implicits._
     val full = fitFromCounts(
-        topWords(wordCountsDf(corpusPlusBatch, textCol, pretok),
+        topWords(wordCountsDf(corpusPlusBatch, "text", pretok),
           maxWords, Some(alphabet)), nMerges)
       .toDF("merge_rank", "lhs", "rhs", "freq")
     val stored = loadBpeMerges(spark, scope, name)
@@ -779,11 +766,10 @@ object BpeOps {
     * [[encodeStats]].
     */
   def encodeWithArtifact(documents: DataFrame, scope: graft.core.Scope,
-                         name: String,
-                         textCol: String = "text"): DataFrame = {
+                         name: String): DataFrame = {
     val spark = documents.sparkSession
     val pretok = graft.io.Artifact.read(spark, scope, name).int("pretok") == 1
-    encodeStats(documents, loadBpeMerges(spark, scope, name), textCol,
+    encodeStats(documents, loadBpeMerges(spark, scope, name), "text",
       Some(loadBpeAlphabet(spark, scope, name)), pretok)
   }
 }

@@ -105,7 +105,6 @@ object ClusterOps {
     *         doc_id of the document's connected component
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-                          maxIter: Int = 20,
                           localMaxEdges: Long = 1L << 19): DataFrame = {
     // materialize each round through an explicitly persisted RDD and
     // re-root the DataFrame on it: this (a) truncates the logical plan,
@@ -139,7 +138,7 @@ object ClusterOps {
     var eCount = e.count()
     var converged = eCount == 0L
     var it = 0
-    while (!converged && it < maxIter) {
+    while (!converged && it < maxStarRounds) {
       val (nextRdd, next) = materialize(smallStar(largeStar(e)))
       val nextCount = next.count()
       converged = nextCount == eCount && next.except(e).isEmpty
@@ -151,7 +150,7 @@ object ClusterOps {
     }
     if (!converged && eCount > 0)
       throw new graft.core.GraftException(
-        s"connectedComponents did not converge in $maxIter rounds")
+        s"connectedComponents did not converge in $maxStarRounds rounds")
     // fixed point is a star per component: (u, componentMin) edges.
     // localCheckpoint (eager) the label set — one row per clustered
     // doc, lineage-free executor-local blocks the ContextCleaner
@@ -169,6 +168,12 @@ object ClusterOps {
       .select(col("doc_id"),
         coalesce(col("canonical"), col("doc_id")).as("canonical_id"))
   }
+
+  /** The round budget of the distributed star loop: large-star /
+    * small-star converges in O(log² n) rounds, so a graph still moving
+    * after 20 is a bug, not a big input.
+    */
+  private val maxStarRounds = 20
 
   /** Q135: the cluster LABEL ARTIFACT — (doc_id, canonical_id) rows
     * persisted under a [[graft.core.Scope]], maintained INCREMENTALLY
@@ -392,9 +397,8 @@ object ClusterOps {
     * partial bounds shuffle volume at one row per (cluster ×
     * partition).
     */
-  def bestOfClusterCorpus(documents: DataFrame,
-                          labelsOpt: Option[DataFrame] = None): DataFrame = {
-    val labels = labelsOpt.getOrElse(nearDupClusters(documents))
+  def bestOfClusterCorpus(documents: DataFrame): DataFrame = {
+    val labels = nearDupClusters(documents)
     val quality = graft.ops.TextOps.qualityScore(documents)
       .select(col("doc_id"), col("quality"))
     labels.join(quality, "doc_id")
@@ -487,10 +491,7 @@ object ClusterOps {
     * affordable when the corpus is 100 TB and the batch is 0.1%
     * of it. The oracle recomposes all four stages in SQL.
     */
-  def incrementalIngest(newDocs: DataFrame, existing: DataFrame,
-                        minQuality: Double = 0.5,
-                        langs: Seq[String] = Seq("en", "de", "fr", "es"),
-                        perSourceCap: Int = 5): DataFrame = {
+  def incrementalIngest(newDocs: DataFrame, existing: DataFrame): DataFrame = {
     val fresh = DedupOps.incrementalExactDedup(newDocs, existing)
       .select("doc_id")
     val nearDup = DedupOps.incrementalNearDupCandidates(newDocs, existing)
@@ -501,11 +502,27 @@ object ClusterOps {
       .join(nearDup, Seq("doc_id"), "left_anti")
       .join(newDocs.select("doc_id", "lang", "source"), "doc_id")
       .join(quality, "doc_id")
-      .filter(col("quality") >= minQuality && col("lang").isin(langs: _*))
+      .filter(col("quality") >= minQuality && col("lang").isin(corpusLangs: _*))
     graft.ops.SampleOps.domainCap(admitted, "doc_id", "source",
-        perSourceCap, salt = "ingest")
+        5, salt = "ingest")
       .select("doc_id", "lang", "source", "n_tokens", "quality")
   }
+
+  /** The q19 composite-quality floor and the language set every corpus
+    * gate admits.
+    */
+  private val minQuality = 0.5
+  private val corpusLangs = Seq("en", "de", "fr", "es")
+
+  /** How many documents a flagship's weighted priority tail selects. */
+  private val corpusTopK = 150
+
+  /** The repetition ceilings of the flagship gates: at most half of a
+    * document's bigrams may be its top bigram, at most half of its
+    * lines duplicates.
+    */
+  private val maxTopBigramFrac = 0.5
+  private val maxDupLineFrac = 0.5
 
   /** Q100 — the flagship composition, GENERATION 2: the round-5
     * operators slotted into their places in the pipeline. Beyond q57:
@@ -527,16 +544,10 @@ object ClusterOps {
     *        benchmark slice) with a plan identical to round 7's.
     */
   def trainingCorpusV2(documents: DataFrame,
-                       minQuality: Double = 0.5,
-                       langs: Seq[String] = Seq("en", "de", "fr", "es"),
-                       maxTopBigramFrac: Double = 0.5,
-                       maxDupLineFrac: Double = 0.5,
-                       topK: Int = 150,
                        benchmarkOpt: Option[DataFrame] = None): DataFrame = {
-    val filtered = gatedCorpusV2(documents, minQuality, langs,
-      maxTopBigramFrac, maxDupLineFrac, benchmarkOpt)
+    val filtered = gatedCorpusV2(documents, benchmarkOpt)
     graft.ops.SampleOps.prioritySample(filtered, "doc_id", "n_tokens",
-        k = topK, salt = "train")
+        k = corpusTopK, salt = "train")
       .select("doc_id", "lang", "source", "n_tokens", "quality", "priority")
   }
 
@@ -547,10 +558,6 @@ object ClusterOps {
     * common gates.
     */
   private def gatedCorpusV2(documents: DataFrame,
-                            minQuality: Double,
-                            langs: Seq[String],
-                            maxTopBigramFrac: Double,
-                            maxDupLineFrac: Double,
                             benchmarkOpt: Option[DataFrame],
                             trainedWeights: Option[Seq[Long]] = None): DataFrame = {
     // the generators' raw edges, duplicates and all: `normalize`
@@ -588,7 +595,7 @@ object ClusterOps {
       .join(repetition, "doc_id")
       .filter(col("top_bigram_frac") <= maxTopBigramFrac &&
         col("dup_line_frac") <= maxDupLineFrac &&
-        col("lang").isin(langs: _*))
+        col("lang").isin(corpusLangs: _*))
     // membership gate: no benchmark doc ever trains (beyond the n-gram
     // leak gate). Default path keeps the round-7 inline mod filter.
     (benchmarkOpt match {
@@ -616,23 +623,16 @@ object ClusterOps {
     * a doc_id equi-join — no new corpus-sized shuffle class.
     */
   def trainingCorpusV3(documents: DataFrame,
-                       minQuality: Double = 0.5,
-                       langs: Seq[String] = Seq("en", "de", "fr", "es"),
-                       maxTopBigramFrac: Double = 0.5,
-                       maxDupLineFrac: Double = 0.5,
                        minLmAvgFp: Long = 460L,
-                       topK: Int = 150,
-                       benchmarkOpt: Option[DataFrame] = None,
                        trainedWeights: Option[Seq[Long]] = None): DataFrame = {
-    val filtered = gatedCorpusV2(documents, minQuality, langs,
-      maxTopBigramFrac, maxDupLineFrac, benchmarkOpt, trainedWeights)
+    val filtered = gatedCorpusV2(documents, None, trainedWeights)
     val lm = graft.ops.TextOps.bigramLmScore(documents)
       .select(col("doc_id"), col("n_bigrams"), col("score_fp"))
     val lmGated = filtered.join(lm, "doc_id")
       .filter(col("score_fp") >= lit(minLmAvgFp) * col("n_bigrams"))
       .drop("n_bigrams", "score_fp")
     graft.ops.SampleOps.prioritySample(lmGated, "doc_id", "n_tokens",
-        k = topK, salt = "train")
+        k = corpusTopK, salt = "train")
       .select("doc_id", "lang", "source", "n_tokens", "quality", "priority")
   }
 
@@ -659,17 +659,17 @@ object ClusterOps {
     * discarded) — NOT one shared `-1` partition, which would funnel
     * ~20% of the selection through a single window task at scale.
     * Partitions are independent, no global sort anywhere. Val/test
-    * rows carry shard = pos = -1 (eval sets ship whole).
+    * rows carry shard = pos = -1 (eval sets ship whole). 10% of the
+    * selection goes to val and 10% to test.
     */
-  def corpusShards(documents: DataFrame, nShards: Int = 8,
-                   valFrac: Double = 0.1, testFrac: Double = 0.1): DataFrame = {
+  def corpusShards(documents: DataFrame, nShards: Int = 8): DataFrame = {
     require(nShards > 0, s"nShards must be positive: $nShards")
     import org.apache.spark.sql.expressions.Window
     val u = SampleOps.hashUnit(col("doc_id"), "split")
     val split = trainingCorpusV2(documents)
       .select(col("doc_id"), col("lang"), col("source"), col("n_tokens"),
-        when(u < testFrac, lit("test"))
-          .when(u < testFrac + valFrac, lit("val"))
+        when(u < 0.1, lit("test"))
+          .when(u < 0.2, lit("val"))
           .otherwise(lit("train")).as("split"))
     // shard/pos computed INLINE over the single selection subtree: the
     // previous filter → shuffleShards → left-join planned the whole
@@ -799,7 +799,7 @@ object ClusterOps {
     * cut is a persisted extract-on-ingest table (q176's shape); the
     * gate semantics are unchanged by the materialization.
     *
-    * `minLmAvgFp` defaults lower than q163's 460: the extracted text
+    * The LM floor is [[crawlLmAvgFp]], lower than q163's 460: the extracted text
     * carries planted boilerplate tokens (nav/footer/entity sentence)
     * whose transitions the corpus-trained bigram LM scores differently
     * than raw fixture text; 300 gates the fluent-gibberish tail
@@ -821,8 +821,6 @@ object ClusterOps {
     * scaladoc promise, spec-pinned in TextOpsSpec).
     */
   def crawlCorpus(documents: DataFrame,
-                  minLmAvgFp: Long = 300L,
-                  topK: Int = 150,
                   trainedGate: Boolean = false): DataFrame = {
     val pages = graft.ops.HtmlOps.plantedHtmlCorpus(
       graft.ops.PiiOps.plantedPiiCorpus(documents))
@@ -830,8 +828,14 @@ object ClusterOps {
       if (trainedGate)
         Some(graft.ops.TextOps.fitQualityWeights(documents))
       else None
-    corpusFromPages(pages, documents, minLmAvgFp, topK, weights)
+    corpusFromPages(pages, documents, weights)
   }
+
+  /** The crawl flagships' LM floor (see [[crawlCorpus]]): the extracted
+    * text's planted boilerplate scores lower than raw fixture text, so
+    * the crawl corpus gates at 300 instead of q163's 460.
+    */
+  private val crawlLmAvgFp = 300L
 
   /** Q186 — the crawl flagship fed from its TRUE FRONT DOOR: raw WARC
     * archive chunks instead of already-parsed pages. The q184 framing
@@ -854,9 +858,7 @@ object ClusterOps {
     * new shuffle class; the payload column never outlives the
     * projection that extracts from it.
     */
-  def warcCorpus(documents: DataFrame,
-                 minLmAvgFp: Long = 300L,
-                 topK: Int = 150): DataFrame = {
+  def warcCorpus(documents: DataFrame): DataFrame = {
     val chunks = graft.ops.HtmlOps.plantedWarcCorpus(
       graft.ops.PiiOps.plantedPiiCorpus(documents))
     // measured WITHOUT a par() spread, same verdict as q177's
@@ -868,14 +870,13 @@ object ClusterOps {
       .select(col("doc_id"),
         graft.ops.HtmlOps.hostOf(col("target_uri")).as("fetch_host"),
         col("body").as("html"))
-    corpusFromPages(pages, documents, minLmAvgFp, topK, None)
+    corpusFromPages(pages, documents, None)
   }
 
   /** The shared q177/q185/q186 corpus tail from a PAGE table
     * (doc_id, fetch_host, html): ingestion verdict, keep-set join,
     * the one-time extraction cut, the gate chain, and the scrub. */
   private def corpusFromPages(pages: DataFrame, documents: DataFrame,
-                              minLmAvgFp: Long, topK: Int,
                               trainedWeights: Option[Seq[Long]]): DataFrame = {
     val keep = graft.ops.HtmlOps.urlCanonicalDedup(
         graft.ops.HtmlOps.plantedDirtyUrlCorpus(documents))
@@ -899,8 +900,8 @@ object ClusterOps {
       .select(col("doc_id"), col("text_clean").as("text"),
         col("lang"), col("source"))
       .localCheckpoint(eager = true)
-    val selected = trainingCorpusV3(crawlDocs, minLmAvgFp = minLmAvgFp,
-      topK = topK, trainedWeights = trainedWeights)
+    val selected = trainingCorpusV3(crawlDocs, minLmAvgFp = crawlLmAvgFp,
+      trainedWeights = trainedWeights)
     graft.ops.PiiOps.piiRedact(
       selected.join(crawlDocs.select("doc_id", "text"), "doc_id"),
       keep = Seq("lang", "source", "n_tokens", "quality", "priority"))
@@ -994,9 +995,6 @@ object ClusterOps {
     *        slice with the round-7 plan — see [[trainingCorpusV2]].
     */
   def trainingCorpus(documents: DataFrame,
-                     minQuality: Double = 0.5,
-                     langs: Seq[String] = Seq("en", "de", "fr", "es"),
-                     maxTopBigramFrac: Double = 0.5,
                      sampleRate: Double = 0.8,
                      benchmarkOpt: Option[DataFrame] = None): DataFrame = {
     val kept = dedupedCorpus(documents)
@@ -1016,7 +1014,7 @@ object ClusterOps {
       .join(repetition, "doc_id")
       .filter(col("quality") >= minQuality &&
         col("top_bigram_frac") <= maxTopBigramFrac &&
-        col("lang").isin(langs: _*))
+        col("lang").isin(corpusLangs: _*))
     val filtered = (benchmarkOpt match {
       case Some(b) => gated.join(b.select("doc_id"), Seq("doc_id"), "left_anti")
       case None => gated.filter(col("doc_id") % 10 =!= 7)

@@ -94,10 +94,7 @@ object DedupOps {
     * map-side partial min-agg shuffles one narrow row per doc, while
     * this form holds the full shingle array per row.
     */
-  def minhashBandsRowwise(documents: DataFrame, numHashes: Int = 12,
-                          bandSize: Int = 2, shingleSize: Int = 3): DataFrame = {
-    require(numHashes % bandSize == 0, // see minhashBands
-      s"numHashes ($numHashes) must be a multiple of bandSize ($bandSize)")
+  def minhashBandsRowwise(documents: DataFrame): DataFrame = {
     // round-16: same fused native expression as the batch form — the
     // two paths can no longer diverge because they ARE one computation
     // (the explode of an empty band array drops shingle-less docs,
@@ -105,15 +102,13 @@ object DedupOps {
     graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
       .withColumn("w", tokens)
-      .select(col("doc_id"), explode(
-        expr(s"minhash_bands(w, $numHashes, $bandSize, $shingleSize)"))
+      .select(col("doc_id"), explode(expr("minhash_bands(w, 12, 2, 3)"))
         .as("band"))
       .select(col("doc_id"), col("band.b").as("b"), col("band.bh").as("bh"))
   }
 
-  def minhashLshPairs(documents: DataFrame, numHashes: Int = 12,
-                      bandSize: Int = 2, shingleSize: Int = 3): DataFrame =
-    lshPairsFromBands(minhashBands(documents, numHashes, bandSize, shingleSize))
+  def minhashLshPairs(documents: DataFrame, numHashes: Int = 12): DataFrame =
+    lshPairsFromBands(minhashBands(documents, numHashes))
 
   /** The candidate-pair join over an already-built band table — shared
     * by the inline path and the STORED band artifact (q137), which is
@@ -284,12 +279,11 @@ object DedupOps {
     * bands against it — the same bucketed equi-join shape as q13,
     * never an all-pairs pass over history.
     */
-  def incrementalNearDupCandidates(newDocs: DataFrame, existing: DataFrame,
-                                   numHashes: Int = 12, bandSize: Int = 2,
-                                   shingleSize: Int = 3): DataFrame = {
-    val nb = minhashBands(newDocs, numHashes, bandSize, shingleSize)
+  def incrementalNearDupCandidates(newDocs: DataFrame,
+                                   existing: DataFrame): DataFrame = {
+    val nb = minhashBands(newDocs)
       .select(col("doc_id").as("doc_new"), col("b"), col("bh"))
-    val eb = minhashBands(existing, numHashes, bandSize, shingleSize)
+    val eb = minhashBands(existing)
       .select(col("doc_id").as("doc_existing"), col("b"), col("bh"))
     nb.join(eb, Seq("b", "bh"))
       .select("doc_new", "doc_existing").distinct()
@@ -348,18 +342,17 @@ object DedupOps {
     * filter. Candidates come from an equi-join on (band, bandValue);
     * with 32,768 values per band, bucket groups stay small at scale.
     */
-  def simhashPairs(documents: DataFrame, maxHamming: Int = 3): DataFrame =
+  def simhashPairs(documents: DataFrame): DataFrame =
     // filter BEFORE distinct: hamming is deterministic per pair, so
     // the result is identical, but at corpus scale most band
     // collisions are far pairs — dropping them first keeps the
     // dedup exchange to only the survivors
-    simhashEdges(documents, maxHamming).distinct()
+    simhashEdges(documents).distinct()
 
   /** [[simhashPairs]] before its `distinct` (one row per shared band);
     * see [[lshEdges]].
     */
-  private[ops] def simhashEdges(documents: DataFrame,
-                                maxHamming: Int = 3): DataFrame = {
+  private[ops] def simhashEdges(documents: DataFrame): DataFrame = {
     val banded = simhashBanded(documents)
     val l = banded.select(col("doc_id").as("doc_a"), col("simhash").as("sig_a"),
       col("k"), col("band"))
@@ -369,11 +362,17 @@ object DedupOps {
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         expr("cast(bit_count(sig_a ^ sig_b) as int)").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= simhashMaxHamming)
   }
 
+  /** The Hamming radius of a SimHash near-dup pair — the radius the
+    * 4-band geometry guarantees to find (pigeonhole: ≤ 3 differing
+    * bits leave at least one band intact).
+    */
+  private val simhashMaxHamming = 3
+
   /** The CROSS-side SimHash candidates for incremental maintenance:
-    * new-batch docs within `maxHamming` of an EXISTING doc. Signatures
+    * new-batch docs within [[simhashMaxHamming]] of an EXISTING doc. Signatures
     * are per-document, so SimHash pairs decompose exactly by side —
     * pairs(hist ∪ batch) = pairs(hist) ∪ pairs(batch) ∪ cross(batch,
     * hist) — which is what lets q135 merge a batch's edges into the
@@ -382,8 +381,7 @@ object DedupOps {
     * the existing side's banded table is a maintained artifact, so a
     * batch joins O(batch) rows against it.
     */
-  def simhashCrossPairs(newDocs: DataFrame, existing: DataFrame,
-                        maxHamming: Int = 3): DataFrame = {
+  def simhashCrossPairs(newDocs: DataFrame, existing: DataFrame): DataFrame = {
     val l = simhashBanded(newDocs).select(col("doc_id").as("doc_a"),
       col("simhash").as("sig_a"), col("k"), col("band"))
     val r = simhashBanded(existing).select(col("doc_id").as("doc_b"),
@@ -392,7 +390,7 @@ object DedupOps {
       .filter(col("doc_a") =!= col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         expr("cast(bit_count(sig_a ^ sig_b) as int)").as("hamming"))
-      .filter(col("hamming") <= maxHamming) // before distinct — see simhashPairs
+      .filter(col("hamming") <= simhashMaxHamming) // before distinct — see simhashPairs
       .distinct()
   }
 
@@ -426,27 +424,25 @@ object DedupOps {
 
   /** Q85b: passage-level duplication candidates — pairs of documents
     * sharing at least one winnowed fingerprint, i.e. (by the gap
-    * bound) every pair sharing a verbatim passage of ≥ k+w-1 tokens,
-    * with `n_shared` as the evidence weight. The join is a bucketed
-    * fingerprint equi-join like q13's bands — never all-pairs — and
-    * fingerprints present in more than maxDf documents (boilerplate)
+    * bound, k = 5, w = 4) every pair sharing a verbatim passage of ≥ 8
+    * tokens, with `n_shared` as the evidence weight. The join is a
+    * bucketed fingerprint equi-join like q13's bands — never all-pairs
+    * — and fingerprints present in more than 50 documents (boilerplate)
     * are dropped first, the same quadratic-blowup guard as q15's
     * hot-shingle cap.
     */
-  def winnowedPassagePairs(documents: DataFrame, k: Int = 5, w: Int = 4,
-                           maxDf: Int = 50): DataFrame =
-    winnowedEdges(documents, k, w, maxDf)
+  def winnowedPassagePairs(documents: DataFrame): DataFrame =
+    winnowedEdges(documents)
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared"))
 
   /** [[winnowedPassagePairs]] before its per-pair count (one row per
     * shared fingerprint); see [[lshEdges]].
     */
-  private[ops] def winnowedEdges(documents: DataFrame, k: Int = 5, w: Int = 4,
-                                 maxDf: Int = 50): DataFrame = {
-    val fps = winnowedFingerprints(documents, k, w)
+  private[ops] def winnowedEdges(documents: DataFrame): DataFrame = {
+    val fps = winnowedFingerprints(documents)
     val keep = fps.groupBy("fp").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf)
+      .filter(col("df") <= 50)
       .select("fp")
     val kept = fps.join(keep, "fp")
     kept.select(col("doc_id").as("doc_a"), col("fp"))
@@ -469,19 +465,17 @@ object DedupOps {
     * every candidate pair meeting through a shared shingle — each
     * metric is one expression over this frame, so the DF-cap/window/
     * join machinery (the correctness- and scale-bearing part) exists
-    * exactly once.
+    * exactly once. Shingles are word 3-grams.
     */
-  private def shingleIntersectionPairs(documents: DataFrame,
-                                       shingleSize: Int,
-                                       maxShingleDf: Int): DataFrame = {
+  private def shingleIntersectionPairs(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sh = par(documents)
       .withColumn("w", tokens)
-      .select(col("doc_id"), explode(shingles(col("w"), shingleSize)).as("g"))
+      .select(col("doc_id"), explode(shingles(col("w"), 3)).as("g"))
       .distinct()
     val capped = sh
       .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
-      .filter(col("df") <= maxShingleDf)
+      .filter(col("df") <= defaultMaxShingleDf)
       .withColumn("sz", count(lit(1)).over(Window.partitionBy("doc_id")))
     val l = capped.select(col("doc_id").as("doc_a"), col("g"), col("sz").as("sz_a"))
     val r = capped.select(col("doc_id").as("doc_b"), col("g"), col("sz").as("sz_b"))
@@ -501,10 +495,8 @@ object DedupOps {
     * shingle rows via a window — no per-document side table, no
     * broadcast, every stage is key-partitioned.
     */
-  def jaccardPairs(documents: DataFrame, shingleSize: Int = 3,
-                   threshold: Double = 0.3,
-                   maxShingleDf: Int = defaultMaxShingleDf): DataFrame = {
-    shingleIntersectionPairs(documents, shingleSize, maxShingleDf)
+  def jaccardPairs(documents: DataFrame, threshold: Double = 0.3): DataFrame = {
+    shingleIntersectionPairs(documents)
       .withColumn("jaccard",
         expr("round(cast(common as double) / (sz_a + sz_b - common), 6)"))
       .filter(col("jaccard") >= threshold)
@@ -521,13 +513,11 @@ object DedupOps {
     * aggregated intersection; candidate pairs only ever meet through
     * a shared shingle, never all-pairs.
     */
-  def overlapPairs(documents: DataFrame, shingleSize: Int = 3,
-                   threshold: Double = 0.8,
-                   maxShingleDf: Int = defaultMaxShingleDf): DataFrame = {
-    shingleIntersectionPairs(documents, shingleSize, maxShingleDf)
+  def overlapPairs(documents: DataFrame): DataFrame = {
+    shingleIntersectionPairs(documents)
       .withColumn("overlap",
         expr("round(cast(common as double) / least(sz_a, sz_b), 6)"))
-      .filter(col("overlap") >= threshold)
+      .filter(col("overlap") >= 0.8)
       .select("doc_a", "doc_b", "overlap")
   }
 

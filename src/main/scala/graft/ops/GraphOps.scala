@@ -120,14 +120,13 @@ object GraphOps {
     * which the crawl was already paying to extract outlinks.
     */
   def saveDomainRank(edges: DataFrame, scope: graft.core.Scope,
-                     name: String, iters: Int = 3,
-                     scale: Long = 1000000000000L): Unit = {
+                     name: String, scale: Long = 1000000000000L): Unit = {
     val exp = math.log10(scale.toDouble).round.toInt
     require(math.pow(10, exp).toLong == scale,
       s"scale must be a power of ten to be meta-recordable: $scale")
     graft.io.Artifact.save(edges.sparkSession, scope, name,
-        "iters" -> iters, "scale_pow10" -> exp) { at =>
-      domainRank(edges, iters, scale).write.parquet(at("rows"))
+        "iters" -> 3, "scale_pow10" -> exp) { at =>
+      domainRank(edges, 3, scale).write.parquet(at("rows"))
     }
   }
 

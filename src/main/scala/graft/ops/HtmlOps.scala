@@ -81,10 +81,9 @@ object HtmlOps {
     * NULL args where Spark's nulls the whole row (FIXTURES.md §3).
     * Emits `fetch_host` beside the page.
     */
-  def plantedHtmlCorpus(documents: DataFrame,
-                        keep: Seq[String] = Seq.empty): DataFrame =
-    documents.select(col("doc_id") +: keep.map(col) :+
-      expr(fetchHostSql).as("fetch_host") :+ expr(
+  def plantedHtmlCorpus(documents: DataFrame): DataFrame =
+    documents.select(col("doc_id"),
+      expr(fetchHostSql).as("fetch_host"), expr(
       """concat('<html><head><title>Doc ', cast(doc_id as string),
         | '</title><style>.m{color:red}</style></head><body>',
         | '<script>var x=', cast(doc_id % 9 as string),
@@ -112,7 +111,7 @@ object HtmlOps {
         | '<a href="/about/', cast(doc_id % 31 as string), '">About</a>',
         | '<div class="footer">&copy; 2026</div></body></html>')"""
         .stripMargin.replace("\n", " "))
-      .as("html"): _*)
+      .as("html"))
 
   /** Block-removal patterns, applied in ORDER before tag stripping:
     * head (drops title/meta/style wholesale), then script, then style
@@ -213,9 +212,8 @@ object HtmlOps {
     * attributes on the original html too (nav links count — they are
     * links even though their anchor text is boilerplate).
     */
-  def htmlExtract(documents: DataFrame,
-                  htmlCol: String = "html"): DataFrame = {
-    val h = coalesce(col(htmlCol), lit(""))
+  def htmlExtract(documents: DataFrame): DataFrame = {
+    val h = coalesce(col("html"), lit(""))
     documents.select(
       col("doc_id"),
       titleOf(h).as("title"),
@@ -251,8 +249,6 @@ object HtmlOps {
       .otherwise(hostOf(url))
 
   def htmlOutlinks(documents: DataFrame,
-                   blocklist: Seq[String] = PiiOps.defaultBlocklist,
-                   htmlCol: String = "html",
                    baseHostCol: Option[String] = None,
                    keep: Seq[String] = Seq.empty): DataFrame = {
     val host = baseHostCol match {
@@ -262,11 +258,10 @@ object HtmlOps {
     PiiOps.blocklistVerdict(
       documents
         .select(col("doc_id") +: (baseHostCol.toSeq ++ keep).map(col) :+
-          posexplode(hrefs(coalesce(col(htmlCol), lit(""))))
+          posexplode(hrefs(coalesce(col("html"), lit(""))))
             .as(Seq("link_idx", "url")): _*)
         .withColumn("host", host)
-        .withColumn("domain", PiiOps.registrableDomain(col("host"))),
-      blocklist)
+        .withColumn("domain", PiiOps.registrableDomain(col("host"))))
       .select(
         Seq(col("doc_id"), col("link_idx").cast("int").as("link_idx"),
           col("url"), col("host"), col("domain"), col("blocked")) ++
@@ -292,11 +287,9 @@ object HtmlOps {
     * pass the fetch host.
     */
   def crawlIngest(pages: DataFrame,
-                  blocklist: Seq[String] = PiiOps.defaultBlocklist,
-                  htmlCol: String = "html",
                   baseHostCol: Option[String] = None): DataFrame = {
-    val h = coalesce(col(htmlCol), lit(""))
-    val blArr = array(blocklist.map(lit): _*)
+    val h = coalesce(col("html"), lit(""))
+    val blArr = array(PiiOps.defaultBlocklist.map(lit): _*)
     def linkHost(u: Column) = baseHostCol match {
       case Some(b) => inheritedHost(u, col(b))
       case None => hostOf(u)
@@ -382,8 +375,8 @@ object HtmlOps {
 
   /** Q189: the CONSERVATIVE canonical key — the documented trade at
     * [[canonicalUrl]], now available as the knob a production crawl
-    * asks for: query params whose NAME is on the caller's allowlist
-    * survive into the key (sorted by full `name=value` string, so
+    * asks for: query params whose NAME is on the allowlist
+    * [[keptParams]] survive into the key (sorted by full `name=value` string, so
     * `?b=2&a=1` and `?a=1&b=2` normalize identically); everything
     * else — tracking params, fragment, scheme, port, `www.` — is
     * dropped exactly as the aggressive key drops it. Two URLs equal
@@ -398,13 +391,12 @@ object HtmlOps {
     * bounded array pipeline over the split query string) — same
     * scan-bound class as the aggressive key.
     */
-  def canonicalUrlParams(url: Column, allow: Seq[String]): Column = {
-    require(allow.nonEmpty, "param allowlist must not be empty")
+  def canonicalUrlParams(url: Column): Column = {
     val stripped = regexp_replace(regexp_replace(
       lower(hostOf(url)), "^www\\.", ""), ":[0-9]+$", "")
     val query = regexp_extract(url, "^[^#]*\\?([^#]*)", 1)
     val kept = array_join(array_sort(filter(split(query, "&"),
-      p => element_at(split(p, "="), 1).isin(allow: _*))), "&")
+      p => element_at(split(p, "="), 1).isin(keptParams: _*))), "&")
     // reference `kept` (a lambda pipeline — outside codegen CSE, so a
     // second reference would run it twice per row) and canonicalUrl's
     // regex chain ONCE each: an empty kept makes the tail "?", which
@@ -412,6 +404,11 @@ object HtmlOps {
     val tail = coalesce(nullif(concat(lit("?"), kept), lit("?")), lit(""))
     when(stripped === "", url).otherwise(concat(canonicalUrl(url), tail))
   }
+
+  /** The query params that identify content rather than track a visit:
+    * the conservative key [[canonicalUrlParams]] keeps them.
+    */
+  private val keptParams = Seq("id", "page")
 
   /** The planted dirty-URL corpus: one URL per doc where the
     * canonical key depends only on `(doc_id%7, doc_id%5, doc_id%11)`
@@ -967,13 +964,13 @@ object HtmlOps {
     * frame fall back to the version-line split and `length_ok` flags
     * them, exactly as before.
     */
-  def warcIngest(chunks: DataFrame, warcCol: String = "warc"): DataFrame =
+  def warcIngest(chunks: DataFrame): DataFrame =
     // measured WITHOUT a par() spread: unlike [[pinnedFrame]] (whose
     // pin is re-read by several channels), this is a single pass whose
     // consumers aggregate immediately — spreading it shuffled the
     // archive payload for no amortized reader and regressed q184
     // 0.23→0.30 s in the round-17 back-to-back bench
-    httpFrame(warcFrame(chunks, warcCol))
+    httpFrame(warcFrame(chunks, "warc"))
       .select(
         col("doc_id"), col("n_records"), col("target_uri"),
         col("warc_date"), col("content_length"), col("length_ok"),
@@ -1217,11 +1214,9 @@ object HtmlOps {
     * survivors of everything upstream), so the columns are monotone
     * non-increasing per row — the funnel invariant, spec-pinned.
     */
-  def fetchFunnel(chunks: DataFrame,
-                  blocklist: Seq[String] = PiiOps.defaultBlocklist,
-                  warcCol: String = "warc"): DataFrame = {
-    val blArr = array(blocklist.map(lit): _*)
-    val framed = httpFrame(warcFrame(chunks, warcCol))
+  def fetchFunnel(chunks: DataFrame): DataFrame = {
+    val blArr = array(PiiOps.defaultBlocklist.map(lit): _*)
+    val framed = httpFrame(warcFrame(chunks, "warc"))
       .withColumn("fetch_host", coalesce(hostOf(col("target_uri")), lit("")))
       // coalesce: a chunk with no parseable target header (missing
       // response record) must roll up under '' — one visible bucket,
@@ -1279,14 +1274,13 @@ object HtmlOps {
     * consumer's, not baked into the edge derivation. The oracle
     * retains self-loops identically.
     */
-  def domainEdges(pages: DataFrame, htmlCol: String = "html",
-                  baseHostCol: String = "fetch_host"): DataFrame = {
-    val linkHost = inheritedHost(col("url"), col(baseHostCol))
+  def domainEdges(pages: DataFrame): DataFrame = {
+    val linkHost = inheritedHost(col("url"), col("fetch_host"))
     par(pages)
-      .select(col(baseHostCol),
-        explode(hrefs(coalesce(col(htmlCol), lit("")))).as("url"))
+      .select(col("fetch_host"),
+        explode(hrefs(coalesce(col("html"), lit("")))).as("url"))
       .select(
-        PiiOps.registrableDomain(col(baseHostCol)).as("src"),
+        PiiOps.registrableDomain(col("fetch_host")).as("src"),
         PiiOps.registrableDomain(linkHost).as("dst"))
       .filter(col("src") =!= "" && col("dst") =!= "")
       .distinct()
@@ -1471,7 +1465,7 @@ object HtmlOps {
     * aggregated into one candidate per key with its reference count,
     * anti-joined against the MAINTAINED key set (q178 — a page
     * already fetched is never fetched again), prioritized by the
-    * target domain's PageRank (q180), and capped at `kPerDomain`
+    * target domain's PageRank (q180), and capped at [[domainCap]]
     * slots per domain (politeness: no domain monopolizes a wave —
     * the q101 WindowGroupLimit shape). Output: one row per frontier
     * URL with (canon, url, domain, n_refs, pr, slot); a consumer
@@ -1487,12 +1481,16 @@ object HtmlOps {
     * shuffle-partition by the same canon hash the candidates do.
     */
   def crawlFrontier(pages: DataFrame, scope: graft.core.Scope,
-                    name: String, ranks: DataFrame,
-                    kPerDomain: Int = 10): DataFrame =
+                    name: String, ranks: DataFrame): DataFrame =
     frontierFromLinks(
       htmlOutlinks(par(pages), baseHostCol = Some("fetch_host"))
         .filter(!col("blocked") && col("host") =!= ""),
-      scope, name, ranks, kPerDomain)
+      scope, name, ranks, domainCap)
+
+  /** The per-domain politeness cap of the waves that do not take one:
+    * no domain gets more than 10 slots of a wave.
+    */
+  private val domainCap = 10
 
   /** Q191: the POLITE frontier — q187's fetch-ordering decision with
     * the robots-exclusion gate (q190) applied to the RESOLVED
@@ -1555,7 +1553,7 @@ object HtmlOps {
     * identical admission head and tail to [[politeFrontier]] (gates,
     * trap filter, canonical aggregation, anti-join, rank ordering),
     * with the flat per-domain cap replaced by [[rankBudgets]]'
-    * table; unranked domains take `minPerDomain`. The chosen cap is
+    * table; unranked domains take one slot. The chosen cap is
     * emitted per row (`k_domain`) so the allocation is auditable.
     */
   /** @param budgetRanks optional SEPARATE weight table for the
@@ -1566,14 +1564,12 @@ object HtmlOps {
     */
   def budgetedFrontier(pages: DataFrame, scope: graft.core.Scope,
                        name: String, ranks: DataFrame, rules: DataFrame,
-                       totalBudget: Int, minPerDomain: Int = 1,
-                       maxPerDomain: Int = 50,
-                       basePathCol: Option[String] = None,
+                       totalBudget: Int, maxPerDomain: Int = 50,
                        budgetRanks: Option[DataFrame] = None): DataFrame =
-    frontierFromLinks(politeGatedLinks(pages, rules, basePathCol),
-      scope, name, ranks, minPerDomain,
+    frontierFromLinks(politeGatedLinks(pages, rules),
+      scope, name, ranks, 1,
       caps = Some(rankBudgets(budgetRanks.getOrElse(ranks), totalBudget,
-        minPerDomain, maxPerDomain)))
+        maxPerDomain = maxPerDomain)))
 
   /** Q228's planted allocation weights: a deliberately SKEWED
     * per-domain score (quadratic ramp `(k+1)²`, with `s6` — a domain
@@ -1634,8 +1630,7 @@ object HtmlOps {
     * filter; the blocklist verdict applies unchanged. Input is the
     * [[httpFrame]]d archive (`redirect_to`, `target_uri` columns).
     */
-  private[graft] def redirectTargets(framed: DataFrame,
-      blocklist: Seq[String] = PiiOps.defaultBlocklist): DataFrame =
+  private[graft] def redirectTargets(framed: DataFrame): DataFrame =
     PiiOps.blocklistVerdict(
       framed
         .filter(col("redirect_to") =!= "")
@@ -1645,8 +1640,7 @@ object HtmlOps {
           // against it (RFC 9110 §10.2.2 references RFC 3986 §5)
           urlPath(col("target_uri")).as("base_path"))
         .withColumn("host", inheritedHost(col("url"), col("fetch_host")))
-        .withColumn("domain", PiiOps.registrableDomain(col("host"))),
-      blocklist)
+        .withColumn("domain", PiiOps.registrableDomain(col("host"))))
       .select(col("doc_id"), col("url"), col("host"), col("domain"),
         col("blocked"), col("base_path"))
 
@@ -1670,11 +1664,10 @@ object HtmlOps {
     * batch persisted (the q203 pattern) pays the archive scan once.
     */
   def redirectFrontier(chunks: DataFrame, scope: graft.core.Scope,
-                       name: String, ranks: DataFrame, rules: DataFrame,
-                       kPerDomain: Int = 10,
-                       warcCol: String = "warc"): DataFrame =
-    redirectFrontierFramed(pinnedFrame(chunks, warcCol),
-      scope, name, ranks, rules, kPerDomain)
+                       name: String, ranks: DataFrame,
+                       rules: DataFrame): DataFrame =
+    redirectFrontierFramed(pinnedFrame(chunks),
+      scope, name, ranks, rules, domainCap)
 
   /** The framed archive PINNED once for the BATCH compositions whose
     * discovery reads it through more than one channel (outlinks AND
@@ -1688,12 +1681,12 @@ object HtmlOps {
     * the standard iterate-over-a-derived-batch pattern: the pinned
     * wave is O(valid pages), not O(archive).
     */
-  private def pinnedFrame(chunks: DataFrame, warcCol: String): DataFrame =
+  private def pinnedFrame(chunks: DataFrame): DataFrame =
     // par: a small archive arrives as one parquet split and would
     // otherwise frame + wire-decode serially in a single task (the
     // whole pin is ONE job); at scale the scan has >= cores splits
     // and par is a no-op (guide §2.5 input skew)
-    httpFrame(warcFrame(par(chunks), warcCol))
+    httpFrame(warcFrame(par(chunks), "warc"))
       // COLUMN-pruned only, deliberately: a row filter here would sit
       // BETWEEN the decode and the projection, and FilterExec shares
       // no subexpressions with ProjectExec — the http_frame tree would
@@ -1906,12 +1899,10 @@ object HtmlOps {
   def retryGatedFrontier(chunks: DataFrame, scope: graft.core.Scope,
                          keysName: String, attemptsName: String,
                          nowS: Long, retryTtlS: Long,
-                         ranks: DataFrame, rules: DataFrame,
-                         kPerDomain: Int = 10,
-                         warcCol: String = "warc"): DataFrame =
-    retryGatedFrontierFramed(pinnedFrame(chunks, warcCol),
+                         ranks: DataFrame, rules: DataFrame): DataFrame =
+    retryGatedFrontierFramed(pinnedFrame(chunks),
       scope, keysName, attemptsName, nowS, retryTtlS, ranks, rules,
-      kPerDomain)
+      domainCap)
 
   /** [[retryGatedFrontier]] over an ALREADY-framed archive — what the
     * attempt-stamping streaming loop calls per wave (the
@@ -1983,9 +1974,8 @@ object HtmlOps {
     * group count is bounded by target-vocabulary × anchor-vocabulary,
     * rows by total anchor tokens — never all-pairs anything.
     */
-  def anchorTerms(pages: DataFrame, htmlCol: String = "html",
-                  baseHostCol: String = "fetch_host"): DataFrame =
-    anchorTermRows(pages, htmlCol, baseHostCol)
+  def anchorTerms(pages: DataFrame): DataFrame =
+    anchorTermRows(pages)
       .groupBy(col("canon"), col("term"))
       .agg(count(lit(1)).cast("long").as("n"))
 
@@ -1995,9 +1985,8 @@ object HtmlOps {
     * exchange: the shuffle then carries only the boost-term rows, not
     * the whole anchor vocabulary.
     */
-  private def anchorTermRows(pages: DataFrame, htmlCol: String,
-                             baseHostCol: String): DataFrame = {
-    val elems = regexp_extract_all(coalesce(col(htmlCol), lit("")),
+  private def anchorTermRows(pages: DataFrame): DataFrame = {
+    val elems = regexp_extract_all(coalesce(col("html"), lit("")),
       lit("(?s)<[Aa]([ \\t\\n\\x0B\\f\\r][^>]*)?>.*?</[Aa]>"), lit(0))
     // href from the START TAG only — an href="…" substring in the
     // visible text (or a nested tag) must not hijack attribution
@@ -2008,12 +1997,12 @@ object HtmlOps {
       regexp_replace(col("a"), "<[^>]*>", " "),
       "[ \\t\\n\\x0B\\f\\r]+", " "))
     pages
-      .select(col(baseHostCol), explode(elems).as("a"))
-      .select(col(baseHostCol), href.as("url"), text.as("anchor"))
+      .select(col("fetch_host"), explode(elems).as("a"))
+      .select(col("fetch_host"), href.as("url"), text.as("anchor"))
       // an href-less (or empty-href) anchor is not a link: its text
       // must not fall through host inheritance onto the site root
       .filter(col("url") =!= "")
-      .withColumn("host", inheritedHost(col("url"), col(baseHostCol)))
+      .withColumn("host", inheritedHost(col("url"), col("fetch_host")))
       .filter(col("host") =!= "")
       .select(canonicalUrl(resolvedUrl(col("url"), col("host")))
         .as("canon"),
@@ -2024,7 +2013,7 @@ object HtmlOps {
 
   /** Q201: the ANCHOR-BOOSTED frontier — q194's weak-label signal
     * finally feeding the decision it was mined for: candidates whose
-    * incoming anchor text carries the caller's boost terms (what the
+    * incoming anchor text carries the boost term `ref` (what the
     * web CALLS the page — "download", "paper", "dataset", whatever
     * the pipeline hunts) outrank same-domain candidates on reference
     * count alone. The wave is q191's polite admission (blocklist →
@@ -2041,9 +2030,7 @@ object HtmlOps {
   def anchorBoostedFrontier(pages: DataFrame, scope: graft.core.Scope,
                             name: String, ranks: DataFrame,
                             rules: DataFrame,
-                            boostTerms: Seq[String] = Seq("ref"),
                             kPerDomain: Int = 10): DataFrame = {
-    require(boostTerms.nonEmpty, "boostTerms must not be empty")
     val cands0 = politeGatedLinks(pages, rules)
       .withColumn("canon", canonicalUrl(col("url")))
       .groupBy(col("canon"))
@@ -2054,8 +2041,8 @@ object HtmlOps {
     // at sf1 the win is small — the anchor REGEX SCAN dominates this
     // composition, not the shuffle — but at 100 TB the difference is
     // shuffling a handful of terms vs every token on the web.)
-    val scores = anchorTermRows(pages, "html", "fetch_host")
-      .filter(col("term").isin(boostTerms: _*))
+    val scores = anchorTermRows(pages)
+      .filter(col("term") === "ref")
       .groupBy(col("canon"))
       .agg(count(lit(1)).cast("long").as("anchor_score"))
     val cands = cands0.join(scores, Seq("canon"), "left")
@@ -2196,10 +2183,7 @@ object HtmlOps {
   def sitemapRefetchWave(sitemaps: DataFrame,
                          spark: org.apache.spark.sql.SparkSession,
                          scope: graft.core.Scope, logName: String,
-                         ranks: DataFrame,
-                         kPerDomain: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(kPerDomain > 0, s"kPerDomain must be positive: $kPerDomain")
+                         ranks: DataFrame): DataFrame = {
     val nBuckets = graft.io.Artifact.read(spark, scope, logName).int("n_buckets")
     val declared = sitemapEntries(sitemaps)
       .withColumn("lastmod_s",
@@ -2220,13 +2204,7 @@ object HtmlOps {
       .drop("bucket", "fetch_day", "etag", "last_modified")
       .join(broadcast(declared.drop("bucket")), Seq("canon"))
       .filter(col("lastmod_s") > col("last_fetch_s"))
-      .join(broadcast(ranks.select(col("domain"), col("pr"))),
-        Seq("domain"), "left")
-      .withColumn("pr", coalesce(col("pr"), lit(0L)))
-    val w = Window.partitionBy(col("domain"))
-      .orderBy(col("last_fetch_s").asc, col("canon").asc)
-    due.withColumn("slot", row_number().over(w))
-      .filter(col("slot") <= kPerDomain)
+    refetchTail(due, "last_fetch_s", ranks, domainCap)
       .select(col("canon"), col("url"), col("domain"),
         col("lastmod_s"), col("last_fetch_s"),
         (col("lastmod_s") - col("last_fetch_s")).as("drift_s"),
@@ -2297,8 +2275,8 @@ object HtmlOps {
     * exchange + broadcast joins.
     */
   def feedSeeds(feeds: DataFrame, scope: graft.core.Scope,
-                name: String, ranks: DataFrame, rules: DataFrame,
-                kPerDomain: Int = 10): DataFrame = {
+                name: String, ranks: DataFrame,
+                rules: DataFrame): DataFrame = {
     val locs = feedEntries(feeds)
     val unblocked = graft.ops.PiiOps.blocklistVerdict(locs)
       .filter(!col("blocked")).drop("blocked")
@@ -2310,7 +2288,7 @@ object HtmlOps {
       .agg(min(col("url")).as("url"), min(col("domain")).as("domain"),
         count(lit(1)).cast("long").as("n_refs"),
         max(col("published_s")).as("published_s"))
-    frontierTail(cands, scope, name, ranks, kPerDomain,
+    frontierTail(cands, scope, name, ranks, domainCap,
       orderBy = Seq(col("published_s").desc_nulls_last, col("canon").asc),
       extra = Seq("published_s"))
   }
@@ -2341,23 +2319,21 @@ object HtmlOps {
     * (spec-pinned). Archive sinks hold page content, which is
     * non-empty by construction in every corpus chain here. Pure codegen'd projection
     * (concat + octet_length [+ the gzip transport]); zero exchanges.
+    * Pages carry `url`, `html` and `fetched_at_s`.
     */
-  def exportWarc(pages: DataFrame, urlCol: String = "url",
-                 bodyCol: String = "html",
-                 fetchedAtCol: String = "fetched_at_s",
-                 gzip: Boolean = false): DataFrame = {
+  def exportWarc(pages: DataFrame, gzip: Boolean = false): DataFrame = {
     graft.functions.GraftFunctions.register(pages.sparkSession)
     val crlf = "\r\n"
     val payload = concat(
       lit("HTTP/1.1 200 OK" + crlf),
       lit("Content-Type: text/html; charset=utf-8" + crlf),
-      lit(crlf), coalesce(col(bodyCol), lit("")))
+      lit(crlf), coalesce(col("html"), lit("")))
     val rec = concat(
       lit("WARC/1.0" + crlf),
       lit("WARC-Type: response" + crlf),
-      lit("WARC-Target-URI: "), col(urlCol), lit(crlf),
+      lit("WARC-Target-URI: "), col("url"), lit(crlf),
       lit("WARC-Date: "), date_format(
-        col(fetchedAtCol).cast("timestamp"), "yyyy-MM-dd'T'HH:mm:ss'Z'"),
+        col("fetched_at_s").cast("timestamp"), "yyyy-MM-dd'T'HH:mm:ss'Z'"),
       lit(crlf),
       lit("Content-Length: "), octet_length(payload).cast("string"),
       lit(crlf), lit(crlf),
@@ -2547,7 +2523,7 @@ object HtmlOps {
     */
   def sitemapSeedsTree(docs: DataFrame, scope: graft.core.Scope,
                        name: String, ranks: DataFrame, rules: DataFrame,
-                       kPerDomain: Int = 10, maxDepth: Int = 3,
+                       maxDepth: Int = 3,
                        rootUrls: Option[DataFrame] = None): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val flat = docs.select(col("url"),
@@ -2607,7 +2583,7 @@ object HtmlOps {
     val live = urlsets
       .filter(col("xml_all").isNotNull) // corrupt member: verdict, no entries
       .select(col("xml_all").as("xml"))
-    sitemapSeeds(live, scope, name, ranks, rules, kPerDomain)
+    sitemapSeeds(live, scope, name, ranks, rules, domainCap)
   }
 
   /** Q198's fixture: per-domain crawl delays (seconds) as a parsed
@@ -2710,9 +2686,8 @@ object HtmlOps {
     * domain-vocabulary-sized input — robots files exist per HOST, so
     * this never touches corpus-sized data.
     */
-  def parseRobotsRules(robots: DataFrame,
-                       txtCol: String = "robots_txt"): DataFrame = {
-    val body = robotsStarGroup(col(txtCol))
+  def parseRobotsRules(robots: DataFrame): DataFrame = {
+    val body = robotsStarGroup(col("robots_txt"))
     // rule values stop at an inline '#' (robots.txt comments are
     // line-suffix legal and '#' cannot occur in a robots path — the
     // fragment never reaches the file); trailing space before the
@@ -2747,10 +2722,9 @@ object HtmlOps {
     * an absolute URL — a loc without an authority cannot be
     * fetched from the file alone).
     */
-  def parseSitemapDecls(robots: DataFrame,
-                        txtCol: String = "robots_txt"): DataFrame =
+  def parseSitemapDecls(robots: DataFrame): DataFrame =
     robots.select(col("domain"),
-      explode(regexp_extract_all(coalesce(col(txtCol), lit("")),
+      explode(regexp_extract_all(coalesce(col("robots_txt"), lit("")),
         lit("(?m)^[Ss][Ii][Tt][Ee][Mm][Aa][Pp]:[ \\t]*([^\\r\\n#]*)"),
         lit(1))).as("raw"))
       .select(col("domain"), rtrim(col("raw")).as("url"))
@@ -2831,7 +2805,7 @@ object HtmlOps {
     *   - 4xx → `allow_all` (§2.3.1.3: unavailability means MAY
     *     access any resources).
     *   - 5xx → `cached` while the held copy is at most
-    *     `maxCacheDays` old (§2.3.1.4 allows a cached copy "for up
+    *     30 days old (§2.3.1.4 allows a cached copy "for up
     *     to 30 days"; `cachedRules` is the previously-parsed table —
     *     the fetch-log shape a real crawler holds), `disallow_all`
     *     after (unreachability means MUST assume complete disallow).
@@ -2846,8 +2820,7 @@ object HtmlOps {
     * `(domain, url, mode, allowed, rule_len)`.
     */
   def robotsAvailabilityGate(links: DataFrame, fetches: DataFrame,
-                             cachedRules: DataFrame,
-                             maxCacheDays: Int = 30): DataFrame = {
+                             cachedRules: DataFrame): DataFrame = {
     val chains = resolveRedirectChains(fetches.select(col("doc_id"),
       col("url"), col("http_status"), col("redirect_to")))
     val st = fetches.join(chains.select(col("origin").as("url"),
@@ -2865,7 +2838,7 @@ object HtmlOps {
     val dm = st.select(col("domain"), effUrl.as("eff_url"),
       when(effStatus.between(200, 299), lit("parsed"))
         .when(effStatus.between(400, 499), lit("allow_all"))
-        .otherwise(when(col("cache_age_days") <= maxCacheDays,
+        .otherwise(when(col("cache_age_days") <= 30,
           lit("cached")).otherwise(lit("disallow_all"))).as("mode"))
     val parsedRules = parseRobotsRules(
       dm.filter(col("mode") === "parsed")
@@ -2898,9 +2871,8 @@ object HtmlOps {
     * malformed-table guard and kill a streaming wave. Same
     * vocabulary-sized projection class as [[parseRobotsRules]].
     */
-  def parseCrawlDelays(robots: DataFrame,
-                       txtCol: String = "robots_txt"): DataFrame = {
-    val body = robotsStarGroup(col(txtCol))
+  def parseCrawlDelays(robots: DataFrame): DataFrame = {
+    val body = robotsStarGroup(col("robots_txt"))
     // same whitespace/comment tolerance as the rule directives: the
     // value may carry trailing blanks, an inline '# comment', and a
     // CRLF terminator — all legal in real files, and a parser that
@@ -2919,14 +2891,13 @@ object HtmlOps {
     * SLOTS into actual fetch offsets: slot `n` on a domain may fire no
     * earlier than `(n-1) × crawl_delay` seconds into the wave, the
     * Crawl-delay reading of the per-domain rate limit. Domains that
-    * publish no delay use the caller's default (conservative beats
+    * publish no delay wait 30 s between slots (conservative beats
     * hammering). Pure broadcast join (the delay table is
     * domain-vocabulary-sized) + per-row integer arithmetic — no new
     * shuffle on top of the wave that is being scheduled.
     */
-  def scheduleWave(wave: DataFrame, delays: DataFrame,
-                   defaultDelayS: Long = 30L): DataFrame =
-    scheduleWaveValidated(wave, checkedDelays(delays)._1, defaultDelayS)
+  def scheduleWave(wave: DataFrame, delays: DataFrame): DataFrame =
+    scheduleWaveValidated(wave, checkedDelays(delays)._1, 30L)
 
   /** The delays GUARDS alone — cast + duplicate-domain +
     * non-positive checks — returning the still-DISTRIBUTED table:
@@ -3274,7 +3245,7 @@ object HtmlOps {
     */
   def refetchWave(fetchLog: DataFrame, nowS: Long, ttlS: Long,
                   ranks: DataFrame, kPerDomain: Int = 10): DataFrame =
-    refetchTail(latestFetchPerKey(fetchLog), nowS, ttlS, ranks, kPerDomain)
+    ttlWave(latestFetchPerKey(fetchLog), nowS, ttlS, ranks, kPerDomain)
 
   /** The latest-fetch reduction shared by [[refetchWave]] (one-shot
     * over a raw log) and the MAINTAINED fetch-log artifact
@@ -3315,27 +3286,60 @@ object HtmlOps {
       if (d.columns.contains(c)) d else d.withColumn(c, lit(""))
     }
 
-  private def refetchTail(last: DataFrame, nowS: Long, ttlS: Long,
-                          ranks: DataFrame, kPerDomain: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  /** The flat-TTL wave of q196/q200 over per-key latest fetches: a
+    * key is due once its age reaches `ttlS`.
+    */
+  private def ttlWave(last: DataFrame, nowS: Long, ttlS: Long,
+                      ranks: DataFrame, kPerDomain: Int): DataFrame = {
     require(ttlS > 0, s"ttlS must be positive: $ttlS")
-    require(kPerDomain > 0, s"kPerDomain must be positive: $kPerDomain")
     val due = withValidatorCols(last).select(col("canon"), col("url"),
         col("last_fetch_s"), col("etag"), col("last_modified"))
       .filter(lit(nowS) - col("last_fetch_s") >= ttlS)
       .withColumn("domain",
         graft.ops.PiiOps.registrableDomain(hostOf(col("url"))))
-      .join(broadcast(ranks.select(col("domain"), col("pr"))),
-        Seq("domain"), "left")
-      .withColumn("pr", coalesce(col("pr"), lit(0L)))
-    val w = Window.partitionBy(col("domain"))
-      .orderBy(col("last_fetch_s").asc, col("canon").asc)
-    due.withColumn("slot", row_number().over(w))
-      .filter(col("slot") <= kPerDomain)
+    refetchTail(due, "last_fetch_s", ranks, kPerDomain)
       .select(col("canon"), col("url"), col("domain"),
         col("last_fetch_s"), col("etag"), col("last_modified"),
         (lit(nowS) - col("last_fetch_s")).as("age_s"),
         col("pr"), col("slot").cast("int").as("slot"))
+  }
+
+  /** THE politeness tail of every refetch wave (q196, q200, q219,
+    * q223, q224, q227): a due set carrying `domain`, `canon` and the
+    * staleness column `staleCol` gets its domain's rank `pr` (a
+    * broadcast join — an unranked domain ranks 0) and keeps at most
+    * `kPerDomain` keys per domain, stalest first with `canon` as the
+    * tiebreak (q187's WindowGroupLimit shape). Adds `pr` and `slot`;
+    * each wave selects its own output columns.
+    */
+  private def refetchTail(due: DataFrame, staleCol: String,
+                          ranks: DataFrame, kPerDomain: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    require(kPerDomain > 0, s"kPerDomain must be positive: $kPerDomain")
+    val w = Window.partitionBy(col("domain"))
+      .orderBy(col(staleCol).asc, col("canon").asc)
+    due.join(broadcast(ranks.select(col("domain"), col("pr"))),
+        Seq("domain"), "left")
+      .withColumn("pr", coalesce(col("pr"), lit(0L)))
+      .withColumn("slot", row_number().over(w))
+      .filter(col("slot") <= kPerDomain)
+  }
+
+  /** The TTL bounds the adaptive waves (q219, q224, q227) take. */
+  private def requireTtlBounds(defaultTtlS: Long, minTtlS: Long,
+                               maxTtlS: Long): Unit =
+    require(minTtlS > 0 && maxTtlS >= minTtlS && defaultTtlS > 0,
+      s"bad TTL bounds: default=$defaultTtlS min=$minTtlS max=$maxTtlS")
+
+  /** RFC 9111 §4.2.2's heuristic freshness lifetime (q219, q224): 10%
+    * of the time between Last-Modified (`lmEpoch`) and the fetch,
+    * clamped to [minTtlS, maxTtlS].
+    */
+  private def heuristicTtl(lmEpoch: Column, minTtlS: Long,
+                           maxTtlS: Long): Column = {
+    val lifetime = floor((col("last_fetch_s") - lmEpoch) / lit(10L))
+      .cast("long")
+    least(greatest(lifetime, lit(minTtlS)), lit(maxTtlS))
   }
 
   /** Q200: the FETCH LOG as a MAINTAINED crawl artifact — the q178
@@ -3555,7 +3559,7 @@ object HtmlOps {
                          scope: graft.core.Scope, name: String,
                          nowS: Long, ttlS: Long, ranks: DataFrame,
                          kPerDomain: Int = 10): DataFrame = {
-    // the coarse twin of refetchTail's exact `age >= ttl` filter:
+    // the coarse twin of ttlWave's exact `age >= ttl` filter:
     // due ⇒ last_fetch_s <= now - ttl ⇒ fetch_day <= floor((now-ttl)
     // / 86400) — a PARTITION predicate, so the scan lists only stale
     // day directories instead of reading the whole log every wave
@@ -3565,7 +3569,7 @@ object HtmlOps {
     // authoritative either way.
     val dueDay = Math.max(Int.MinValue.toLong, Math.min(Int.MaxValue.toLong,
       Math.floorDiv(nowS - ttlS, 86400L))).toInt
-    refetchTail(loadFetchLog(spark, scope, name)
+    ttlWave(loadFetchLog(spark, scope, name)
         .filter(col("fetch_day") <= dueDay),
       nowS, ttlS, ranks, kPerDomain)
   }
@@ -3610,16 +3614,11 @@ object HtmlOps {
                            defaultTtlS: Long, minTtlS: Long,
                            maxTtlS: Long, ranks: DataFrame,
                            kPerDomain: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(minTtlS > 0 && maxTtlS >= minTtlS && defaultTtlS > 0,
-      s"bad TTL bounds: default=$defaultTtlS min=$minTtlS max=$maxTtlS")
-    require(kPerDomain > 0, s"kPerDomain must be positive: $kPerDomain")
+    requireTtlBounds(defaultTtlS, minTtlS, maxTtlS)
     val lmEpoch = httpDateEpoch(col("last_modified"))
-    val heuristic = floor((col("last_fetch_s") - lmEpoch) / lit(10L))
-      .cast("long")
     val ttl = when(lmEpoch.isNull || lmEpoch > col("last_fetch_s"),
         lit(defaultTtlS))
-      .otherwise(least(greatest(heuristic, lit(minTtlS)), lit(maxTtlS)))
+      .otherwise(heuristicTtl(lmEpoch, minTtlS, maxTtlS))
     val due = latestFetchPerKey(fetchLog)
       .select(col("canon"), col("url"), col("last_fetch_s"),
         col("etag"), col("last_modified"))
@@ -3627,13 +3626,7 @@ object HtmlOps {
       .filter(lit(nowS) - col("last_fetch_s") >= col("ttl_s"))
       .withColumn("domain",
         graft.ops.PiiOps.registrableDomain(hostOf(col("url"))))
-      .join(broadcast(ranks.select(col("domain"), col("pr"))),
-        Seq("domain"), "left")
-      .withColumn("pr", coalesce(col("pr"), lit(0L)))
-    val w = Window.partitionBy(col("domain"))
-      .orderBy(col("last_fetch_s").asc, col("canon").asc)
-    due.withColumn("slot", row_number().over(w))
-      .filter(col("slot") <= kPerDomain)
+    refetchTail(due, "last_fetch_s", ranks, kPerDomain)
       .select(col("canon"), col("url"), col("domain"),
         col("last_fetch_s"), col("ttl_s"),
         (lit(nowS) - col("last_fetch_s")).as("age_s"),
@@ -3668,12 +3661,8 @@ object HtmlOps {
     */
   def unifiedRefetchWave(fetchLog: DataFrame, sitemaps: DataFrame,
                          nowS: Long, defaultTtlS: Long, minTtlS: Long,
-                         maxTtlS: Long, ranks: DataFrame,
-                         kPerDomain: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(minTtlS > 0 && maxTtlS >= minTtlS && defaultTtlS > 0,
-      s"bad TTL bounds: default=$defaultTtlS min=$minTtlS max=$maxTtlS")
-    require(kPerDomain > 0, s"kPerDomain must be positive: $kPerDomain")
+                         maxTtlS: Long, ranks: DataFrame): DataFrame = {
+    requireTtlBounds(defaultTtlS, minTtlS, maxTtlS)
     val declared = sitemapEntries(sitemaps)
       .withColumn("lastmod_s",
         try_to_timestamp(col("lastmod"), lit("yyyy-MM-dd")).cast("long"))
@@ -3681,8 +3670,6 @@ object HtmlOps {
       .groupBy(canonicalUrl(col("url")).as("canon"))
       .agg(max(col("lastmod_s")).as("lastmod_s"))
     val lmEpoch = httpDateEpoch(col("last_modified"))
-    val heuristic = floor((col("last_fetch_s") - lmEpoch) / lit(10L))
-      .cast("long")
     val reason = when(col("lastmod_s").isNotNull, lit("sitemap"))
       .when(lmEpoch.isNotNull && lmEpoch <= col("last_fetch_s"),
         lit("heuristic"))
@@ -3691,7 +3678,7 @@ object HtmlOps {
     val due = when(col("reason") === "sitemap",
         col("lastmod_s") > col("last_fetch_s"))
       .when(col("reason") === "heuristic",
-        age >= least(greatest(heuristic, lit(minTtlS)), lit(maxTtlS)))
+        age >= heuristicTtl(lmEpoch, minTtlS, maxTtlS))
       .otherwise(age >= defaultTtlS)
     val merged = latestFetchPerKey(fetchLog)
       .join(broadcast(declared), Seq("canon"), "left")
@@ -3699,13 +3686,7 @@ object HtmlOps {
       .filter(due)
       .withColumn("domain",
         graft.ops.PiiOps.registrableDomain(hostOf(col("url"))))
-      .join(broadcast(ranks.select(col("domain"), col("pr"))),
-        Seq("domain"), "left")
-      .withColumn("pr", coalesce(col("pr"), lit(0L)))
-    val w = Window.partitionBy(col("domain"))
-      .orderBy(col("last_fetch_s").asc, col("canon").asc)
-    merged.withColumn("slot", row_number().over(w))
-      .filter(col("slot") <= kPerDomain)
+    refetchTail(merged, "last_fetch_s", ranks, domainCap)
       .select(col("canon"), col("url"), col("domain"), col("reason"),
         col("last_fetch_s"), age.as("age_s"), col("pr"),
         col("slot").cast("int").as("slot"))
@@ -4050,12 +4031,8 @@ object HtmlOps {
     */
   def adaptiveRefetchWave(versions: DataFrame, nowS: Long,
                           defaultTtlS: Long, minTtlS: Long,
-                          maxTtlS: Long, ranks: DataFrame,
-                          kPerDomain: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(minTtlS > 0 && maxTtlS >= minTtlS && defaultTtlS > 0,
-      s"bad TTL bounds: default=$defaultTtlS min=$minTtlS max=$maxTtlS")
-    require(kPerDomain > 0, s"kPerDomain must be positive: $kPerDomain")
+                          maxTtlS: Long, ranks: DataFrame): DataFrame = {
+    requireTtlBounds(defaultTtlS, minTtlS, maxTtlS)
     val hist = versions.groupBy(col("canon")).agg(
       count(lit(1)).cast("long").as("n_versions"),
       min(col("content_fetch_s")).as("first_s"),
@@ -4068,13 +4045,7 @@ object HtmlOps {
       .filter(lit(nowS) - col("last_s") >= col("ttl_s"))
       .withColumn("domain",
         graft.ops.PiiOps.registrableDomain(hostOf(col("canon"))))
-      .join(broadcast(ranks.select(col("domain"), col("pr"))),
-        Seq("domain"), "left")
-      .withColumn("pr", coalesce(col("pr"), lit(0L)))
-    val w = Window.partitionBy(col("domain"))
-      .orderBy(col("last_s").asc, col("canon").asc)
-    due.withColumn("slot", row_number().over(w))
-      .filter(col("slot") <= kPerDomain)
+    refetchTail(due, "last_s", ranks, domainCap)
       .select(col("canon"), col("domain"), col("n_versions"),
         col("ttl_s"), col("last_s"),
         (lit(nowS) - col("last_s")).as("age_s"), col("pr"),
@@ -4121,10 +4092,8 @@ object HtmlOps {
     * tables — nothing corpus-sized crosses a second exchange.
     */
   def crawlFunnel(pages: DataFrame, scope: graft.core.Scope,
-                  name: String, rules: DataFrame,
-                  kPerDomain: Int = 10): DataFrame = {
+                  name: String, rules: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(kPerDomain > 0, s"kPerDomain must be positive: $kPerDomain")
     val links = htmlOutlinks(par(pages), baseHostCol = Some("fetch_host"))
       .filter(col("host") =!= "")
     // same contract as politeFrontier: the robots stage sees the
@@ -4158,7 +4127,7 @@ object HtmlOps {
     val w = Window.partitionBy(col("domain"))
       .orderBy(col("n_refs").desc, col("canon").asc)
     val schedStats = fresh.withColumn("slot", row_number().over(w))
-      .filter(col("slot") <= kPerDomain)
+      .filter(col("slot") <= domainCap)
       .groupBy(col("domain"))
       .agg(count(lit(1)).cast("long").as("n_scheduled"))
     val zero = (c: String) => coalesce(col(c), lit(0L)).as(c)
@@ -4465,8 +4434,7 @@ object HtmlOps {
     * exchange on the coarser key — two shuffles total, both on
     * bounded-size groups (per-page duplication, not corpus size).
     */
-  def urlParamDedup(urls: DataFrame,
-                    allow: Seq[String] = Seq("id", "page")): DataFrame = {
+  def urlParamDedup(urls: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wp = Window.partitionBy(col("canon_p")).orderBy(col("doc_id"))
     val wpAll = wp.rowsBetween(
@@ -4475,7 +4443,7 @@ object HtmlOps {
       Window.unboundedPreceding, Window.unboundedFollowing)
     urls
       .withColumn("canon", canonicalUrl(col("url")))
-      .withColumn("canon_p", canonicalUrlParams(col("url"), allow))
+      .withColumn("canon_p", canonicalUrlParams(col("url")))
       .withColumn("n_dups", count(lit(1)).over(wa))
       .withColumn("n_dups_p", count(lit(1)).over(wpAll))
       .withColumn("is_canonical", row_number().over(wp) === 1)

@@ -349,28 +349,25 @@ object MultimodalOps {
     * and partial sum is an exact integer in the double fold (q50 runs
     * these vectors through [[graft.ops.SimilarityOps.bruteForceKnn]]).
     * Unreadable or bomb-sized payloads degrade to the ZERO vector — at
-    * 100 TB a corrupt image is data, not an outage. Batched
+    * 100 TB a corrupt image is data, not an outage. Runs
     * per-partition like [[decode]]; the binary column never leaves its
     * partition and the output row is the narrow `Array[Float]`
     * embedding shape the similarity operators consume directly.
     */
-  def featureExtract(media: Dataset[MediaRecord], bins: Int = 8,
-                     batchSize: Int = 64,
-                     maxPixels: Long = MaxExactHistogramPixels): Dataset[MediaFeatures] = {
+  def featureExtract(media: Dataset[MediaRecord], bins: Int = 8): Dataset[MediaFeatures] = {
     require(bins > 0 && bins <= 256 && Integer.bitCount(bins) == 1,
       s"bins must be a power of two in [1,256], got $bins")
-    // the exactness contract (integer counts carried in floats) holds
-    // only while every bin stays below 2^24 — a single-color image puts
-    // its whole area in one bin, so the pixel budget IS the bin budget
-    require(maxPixels <= MaxExactHistogramPixels,
-      s"maxPixels=$maxPixels would allow bins beyond float's exact-integer range (2^24)")
     val shift = Integer.numberOfTrailingZeros(256 / bins)
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.map { r =>
+      it.map { r =>
         val f = new Array[Float](3 * bins)
-        readImage(r.media, maxPixels).foreach { case (img, _) =>
+        // the exactness contract (integer counts carried in floats)
+        // holds only while every bin stays below 2^24 — a single-color
+        // image puts its whole area in one bin, so the pixel budget IS
+        // the bin budget
+        readImage(r.media, MaxExactHistogramPixels).foreach { case (img, _) =>
           val w = img.getWidth
           val h = img.getHeight
           var y = 0
@@ -387,26 +384,24 @@ object MultimodalOps {
           }
         }
         MediaFeatures(r.doc_id, f)
-      })
+      }
     }
   }
 
   /** REAL resize: decode → rescale the raster (bilinear, aspect
     * preserved, longest side capped at `maxSide`, never upscaled) →
-    * re-encode PNG. Runs batched per-partition like [[decode]]; the
+    * re-encode PNG. Runs per-partition like [[decode]]; the
     * output payload is a real image a downstream stage can decode
     * again (q51 does exactly that round trip). Unreadable or
     * bomb-sized payloads degrade to (-1, -1, empty payload).
     */
-  def resizeImages(media: Dataset[MediaRecord], maxSide: Int = 256,
-                   batchSize: Int = 64,
-                   maxPixels: Long = DefaultMaxPixels): DataFrame = {
+  def resizeImages(media: Dataset[MediaRecord], maxSide: Int = 256): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false)
-      it.grouped(batchSize).flatMap(_.map { r =>
-        readImage(r.media, maxPixels) match {
+      it.map { r =>
+        readImage(r.media) match {
           case Some((img, _)) =>
             val scale = math.min(1.0,
               maxSide.toDouble / math.max(img.getWidth, img.getHeight))
@@ -425,7 +420,7 @@ object MultimodalOps {
             (r.doc_id, ow, oh, bos.toByteArray)
           case None => (r.doc_id, -1, -1, Array.empty[Byte])
         }
-      })
+      }
     }.toDF("doc_id", "out_width", "out_height", "media")
   }
 
@@ -435,11 +430,10 @@ object MultimodalOps {
     * so a resize that does not produce a decodable image at the exact
     * target geometry cannot pass.
     */
-  def resizeRoundTripFrom(media: Dataset[MediaRecord],
-                          maxSide: Int = 32): DataFrame = {
+  def resizeRoundTripFrom(media: Dataset[MediaRecord]): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    val resized = resizeImages(media, maxSide)
+    val resized = resizeImages(media, 32)
       .select(col("doc_id"), col("media")).as[MediaRecord]
     decode(resized, ImageIoDecoder)
       .toDF().select("doc_id", "width", "height", "format")
@@ -504,13 +498,11 @@ object MultimodalOps {
     * opened once per payload, and only the narrow per-frame metadata
     * rows leave the stage.
     */
-  def frameSampleImages(media: Dataset[MediaRecord], maxFrames: Int = 4,
-                        batchSize: Int = 64,
-                        maxPixels: Long = DefaultMaxPixels): DataFrame = {
+  def frameSampleImages(media: Dataset[MediaRecord], maxFrames: Int = 4): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(_.flatMap { r =>
+      it.flatMap { r =>
         withImageReader(r.media) { reader =>
           val n = reader.getNumImages(true)
           val s = math.min(maxFrames, n)
@@ -519,14 +511,14 @@ object MultimodalOps {
             // same bomb guard as readImage: header dims BEFORE the
             // per-frame raster allocation
             val (w, h) = (reader.getWidth(fi), reader.getHeight(fi))
-            if (w <= 0 || h <= 0 || w.toLong * h > maxPixels) Seq.empty
+            if (w <= 0 || h <= 0 || w.toLong * h > DefaultMaxPixels) Seq.empty
             else {
               val img = reader.read(fi)
               Seq((r.doc_id, k, fi, img.getWidth, img.getHeight, n))
             }
           })
         }.getOrElse(Seq.empty)
-      })
+      }
     }.toDF("doc_id", "sample_idx", "frame_idx", "width", "height", "n_frames")
   }
 

@@ -63,14 +63,13 @@ object PiiOps {
     * derived purely from `doc_id` (an email on every doc, a phone on
     * doc_id%3==0, an IPv4 on doc_id%4==1) — the same expression the
     * DuckDB oracle regenerates, so detection/redaction counts are
-    * closed-form. Pure projection; `keep` columns ride along.
+    * closed-form. Pure projection.
     */
-  def plantedPiiCorpus(documents: DataFrame,
-                       keep: Seq[String] = Seq.empty): DataFrame =
+  def plantedPiiCorpus(documents: DataFrame): DataFrame =
     // coalesce matches DuckDB's NULL-skipping concat: a NULL-text row
     // still gets its planted PII (Spark's concat would null the whole
     // expression and the planting would silently vanish)
-    documents.select(col("doc_id") +: keep.map(col) :+ expr(
+    documents.select(col("doc_id"), expr(
       """concat(coalesce(text, ''),
         | ' Contact user', cast(doc_id as string),
         | '@mail', cast(doc_id % 5 as string), '.example.com today.',
@@ -82,33 +81,31 @@ object PiiOps {
         |   then concat(' Host 10.', cast((doc_id * 3) % 256 as string),
         |     '.0.', cast((doc_id * 7) % 256 as string), ' up.')
         |   else '' end)""".stripMargin.replace("\n", " "))
-      .as("text"): _*)
+      .as("text"))
 
   /** Per-document PII counts — one `n_<class>` BIGINT column per
-    * configured pattern plus an any-hit flag. One codegen'd projection
+    * [[defaultPatterns]] class plus an any-hit flag. One codegen'd projection
     * — no shuffle, no UDF; BIGINT matches the oracle's
     * `len(regexp_extract_all(...))`.
     */
-  def piiDetect(documents: DataFrame,
-                patterns: Seq[(String, String, String)] = defaultPatterns): DataFrame = {
+  def piiDetect(documents: DataFrame): DataFrame = {
     // null-safe: a null doc has zero PII, not null counts — a null
     // count would slip through every `=== 0` / `=!= 0` audit filter
     val text = coalesce(col("text"), lit(""))
-    val counts = patterns.map { case (name, re, _) =>
+    val counts = defaultPatterns.map { case (name, re, _) =>
       regexp_count(text, lit(re)).cast("long").as(s"n_$name")
     }
-    val total = patterns.map { case (name, _, _) => col(s"n_$name") }
+    val total = defaultPatterns.map { case (name, _, _) => col(s"n_$name") }
       .reduce(_ + _)
     documents.select(col("doc_id") +: counts: _*)
       .withColumn("has_pii", total > 0)
   }
 
-  /** The redacted text column: each configured pattern replaced by its
-    * placeholder, in inventory order.
+  /** The redacted text column: each [[defaultPatterns]] pattern replaced
+    * by its placeholder, in inventory order.
     */
-  def redactedText(text: Column,
-                   patterns: Seq[(String, String, String)] = defaultPatterns): Column =
-    patterns.foldLeft(text) { case (c, (_, re, ph)) =>
+  def redactedText(text: Column): Column =
+    defaultPatterns.foldLeft(text) { case (c, (_, re, ph)) =>
       regexp_replace(c, re, ph)
     }
 
@@ -153,14 +150,13 @@ object PiiOps {
     * doc_id expression (`w<k>.s<m>.example`), so the extracted
     * registrable domain and the blocklist verdict are closed-form.
     */
-  def plantedUrlCorpus(documents: DataFrame,
-                       keep: Seq[String] = Seq.empty): DataFrame =
+  def plantedUrlCorpus(documents: DataFrame): DataFrame =
     // coalesce for DuckDB concat parity — see [[plantedPiiCorpus]]
-    documents.select(col("doc_id") +: keep.map(col) :+ expr(
+    documents.select(col("doc_id"), expr(
       """concat(coalesce(text, ''), ' See https://w', cast(doc_id % 97 as string),
         | '.s', cast(doc_id % 13 as string), '.example/p/',
         | cast(doc_id as string), ' ok.')""".stripMargin.replace("\n", " "))
-      .as("text"): _*)
+      .as("text"))
 
   /** Default blocked registrable domains for the planted fixture. */
   val defaultBlocklist: Seq[String] =
@@ -176,15 +172,13 @@ object PiiOps {
     * match straight through a tab; and per [[OpsUtil.tokens]] a
     * bare `\s` would diverge between the engines on \x0B.
     */
-  def urlBlocklistFilter(documents: DataFrame,
-                         blocklist: Seq[String] = defaultBlocklist): DataFrame =
+  def urlBlocklistFilter(documents: DataFrame): DataFrame =
     blocklistVerdict(
       documents.select(
         col("doc_id"),
         regexp_extract(col("text"),
           "https?://([^/ \\t\\n\\x0B\\f\\r]+)", 1).as("host"))
-        .withColumn("domain", registrableDomain(col("host"))),
-      blocklist)
+        .withColumn("domain", registrableDomain(col("host"))))
       .select(col("doc_id"), col("host"), col("domain"), col("blocked"))
 
   /** The registrable domain of a host: lowercased, an explicit
@@ -207,11 +201,10 @@ object PiiOps {
     * semantics (broadcast left join on exact domain, absent = not
     * blocked) can never diverge between them.
     */
-  def blocklistVerdict(withDomain: DataFrame,
-                       blocklist: Seq[String] = defaultBlocklist): DataFrame = {
+  def blocklistVerdict(withDomain: DataFrame): DataFrame = {
     val spark = withDomain.sparkSession
     import spark.implicits._
-    val bl = blocklist.toDF("domain").withColumn("bl_hit", lit(true))
+    val bl = defaultBlocklist.toDF("domain").withColumn("bl_hit", lit(true))
     withDomain
       .join(broadcast(bl), Seq("domain"), "left")
       .withColumn("blocked", coalesce(col("bl_hit"), lit(false)))

@@ -22,12 +22,12 @@ import org.apache.spark.sql.functions._
 object Relational {
 
   /** Order-independent exact sum of a 2-decimal money/quantity column. */
-  def exactSum(c: Column, scale: Int = 2): Column =
-    sum(c.cast(s"decimal(18,$scale)")).cast("double")
+  def exactSum(c: Column): Column =
+    sum(c.cast("decimal(18,2)")).cast("double")
 
   /** exactSum / count — deterministic avg. */
-  def exactAvg(c: Column, cnt: Column, scale: Int = 2): Column =
-    sum(c.cast(s"decimal(18,$scale)")).cast("double") / cnt
+  def exactAvg(c: Column, cnt: Column): Column =
+    exactSum(c) / cnt
 
   /** Q2: projection + filter with parquet pushdown. Mirrors the
     * reference's pushdown-query contract incl. the parenthesized-OR
@@ -90,29 +90,31 @@ object Relational {
     * Correctness signal comes from [[approxDistinctGate]] (q26), which
     * bounds the estimate against the exact count in the same job.
     */
-  def approxDistinct(orders: DataFrame, rsd: Double = 0.01): DataFrame =
+  def approxDistinct(orders: DataFrame): DataFrame =
     orders.groupBy("o_orderpriority")
-      .agg(approx_count_distinct(col("o_custkey"), rsd).as("approx_cust"))
+      .agg(approx_count_distinct(col("o_custkey"), hllRsd).as("approx_cust"))
+
+  /** The HLL++ relative standard deviation [[approxDistinct]] asks for. */
+  private val hllRsd = 0.01
 
   /** Q26 gate: the HLL++ estimate checked against the exact distinct
     * count computed in the same job — emits only groups whose relative
-    * error exceeds `tolSigmas` standard deviations of the sketch
+    * error exceeds 5 standard deviations of the sketch
     * (rsd = 0.01). Expected output: EMPTY — which the DuckDB oracle can
     * verify, giving the approximate operator a real correctness signal.
     */
-  def approxDistinctGate(orders: DataFrame, rsd: Double = 0.01,
-                         tolSigmas: Double = 5.0): DataFrame = {
+  def approxDistinctGate(orders: DataFrame): DataFrame = {
     // two independent scans + a join on the tiny group set: combining
     // countDistinct with the HLL in ONE agg makes the distinct-rewrite
     // Expand drag the HLL buffers through a doubled row stream
-    val approx = approxDistinct(orders, rsd)
+    val approx = approxDistinct(orders)
       .withColumnRenamed("approx_cust", "n_approx")
     val exact = orders.groupBy("o_orderpriority")
       .agg(countDistinct(col("o_custkey")).as("n_exact"))
     exact.join(approx, "o_orderpriority")
       .withColumn("rel_err",
         abs(col("n_approx") - col("n_exact")).cast("double") / col("n_exact"))
-      .filter(col("rel_err") > rsd * tolSigmas)
+      .filter(col("rel_err") > hllRsd * 5.0)
       .select("o_orderpriority", "n_exact", "n_approx", "rel_err")
   }
 
@@ -120,16 +122,15 @@ object Relational {
     * fixed-size state — the 100 TB path q37's exact sort-based
     * percentiles cannot take) checked in-job against the exact rank
     * window: the sketch's contract is RANK error ≤ 1/accuracy, so the
-    * approximate p50 must land between the exact p(0.5-eps) and
-    * p(0.5+eps) values. Violations only; oracle expects empty.
+    * approximate p50 must land between the exact p45 and p55 values. Violations only; oracle expects empty.
     */
-  def approxPercentileGate(lineitem: DataFrame, eps: Double = 0.05): DataFrame =
+  def approxPercentileGate(lineitem: DataFrame): DataFrame =
     lineitem.groupBy("l_returnflag")
       .agg(
         expr("percentile_approx(l_quantity, 0.5)").as("p50_approx"),
         // both exact bounds from ONE percentile buffer (array form),
         // not two independent full-copy aggregates
-        expr(s"percentile(l_quantity, array(${0.5 - eps}, ${0.5 + eps}))").as("b"))
+        expr("percentile(l_quantity, array(0.45, 0.55))").as("b"))
       .select(col("l_returnflag"), col("p50_approx").cast("double").as("p50_approx"),
         expr("b[0]").as("lo"), expr("b[1]").as("hi"))
       .filter(col("p50_approx") < col("lo") || col("p50_approx") > col("hi"))
@@ -145,19 +146,18 @@ object Relational {
     * sort-merge an ASOF needs anyway, without a range-join explosion.
     *
     * Concrete binding: for each event, the most recent order date in
-    * its key bucket (user_id/custkey mod `buckets`).
+    * its key bucket (user_id/custkey mod [[asofBuckets]]).
     */
-  def eventOrderAsof(events: DataFrame, orders: DataFrame,
-                     buckets: Int = 50): DataFrame = {
+  def eventOrderAsof(events: DataFrame, orders: DataFrame): DataFrame = {
     val r = orders
       // fixture dates are TIMESTAMP_NTZ; session tz is UTC, so the
       // cast is value-preserving and unix_micros applies
-      .selectExpr(s"o_custkey % $buckets as key",
+      .selectExpr(s"o_custkey % $asofBuckets as key",
         "cast(o_orderdate as timestamp) as rt").distinct()
       .select(col("key"), expr("unix_micros(rt)").as("t"), lit(0).as("side"),
         lit(null).cast("bigint").as("event_id"), col("rt"))
     val l = events
-      .selectExpr(s"user_id % $buckets as key", "unix_micros(ts) as t", "event_id")
+      .selectExpr(s"user_id % $asofBuckets as key", "unix_micros(ts) as t", "event_id")
       .select(col("key"), col("t"), lit(1).as("side"), col("event_id"),
         lit(null).cast("timestamp").as("rt"))
     val w = Window.partitionBy("key")
@@ -178,42 +178,44 @@ object Relational {
     * one shuffles each side separately (smaller payloads, no union
     * through one sort) and merges with O(1) state per partition.
     */
-  def eventOrderAsofNative(events: DataFrame, orders: DataFrame,
-                           buckets: Int = 50): DataFrame = {
-    val (l, r) = asofSides(events, orders, buckets)
+  def eventOrderAsofNative(events: DataFrame, orders: DataFrame): DataFrame = {
+    val (l, r) = asofSides(events, orders)
     graft.plans.AsOf.join(l, r, key = "key", time = "t",
         payload = Seq("rt" -> "asof_rt"))
       .select(col("event_id"), col("key"),
         date_format(col("asof_rt"), "yyyy-MM-dd").as("asof_date"))
   }
 
-  private def asofSides(events: DataFrame, orders: DataFrame, buckets: Int) = {
+  /** The key-bucket count every as-of binding folds user and customer
+    * keys into.
+    */
+  private val asofBuckets = 50
+
+  private def asofSides(events: DataFrame, orders: DataFrame) = {
     val r = orders
-      .selectExpr(s"o_custkey % $buckets as key",
+      .selectExpr(s"o_custkey % $asofBuckets as key",
         "cast(o_orderdate as timestamp) as rt").distinct()
       .withColumn("t", expr("unix_micros(rt)"))
     val l = events
-      .selectExpr(s"user_id % $buckets as key", "unix_micros(ts) as t",
+      .selectExpr(s"user_id % $asofBuckets as key", "unix_micros(ts) as t",
         "event_id")
     (l, r)
   }
 
   /** Q79: the native as-of with FORWARD direction and a tolerance
     * bound — for each event, the next order date in its key bucket,
-    * nulled when it is more than `tolDays` ahead. DuckDB oracles the
+    * nulled when it is more than 30 days ahead. DuckDB oracles the
     * direction natively (`r.t >= l.t` ASOF) and the tolerance as a
     * post-filter — equivalent because the forward pick is the
     * EARLIEST at-or-after row: if it is beyond tolerance, no
     * at-or-after row is within it.
     */
-  def eventOrderAsofForwardTol(events: DataFrame, orders: DataFrame,
-                               buckets: Int = 50,
-                               tolDays: Int = 30): DataFrame = {
-    val (l, r) = asofSides(events, orders, buckets)
+  def eventOrderAsofForwardTol(events: DataFrame, orders: DataFrame): DataFrame = {
+    val (l, r) = asofSides(events, orders)
     graft.plans.AsOf.join(l, r, key = "key", time = "t",
         payload = Seq("rt" -> "asof_rt"),
         direction = "forward",
-        toleranceUs = Some(tolDays * 86400L * 1000000L))
+        toleranceUs = Some(30 * 86400L * 1000000L))
       .select(col("event_id"), col("key"),
         date_format(col("asof_rt"), "yyyy-MM-dd").as("asof_date"))
   }
@@ -224,9 +226,8 @@ object Relational {
     * ASOF picks and takes the smaller distance with the same
     * tie-break, which is exactly the operator's candidate structure.
     */
-  def eventOrderAsofNearest(events: DataFrame, orders: DataFrame,
-                            buckets: Int = 50): DataFrame = {
-    val (l, r) = asofSides(events, orders, buckets)
+  def eventOrderAsofNearest(events: DataFrame, orders: DataFrame): DataFrame = {
+    val (l, r) = asofSides(events, orders)
     graft.plans.AsOf.join(l, r, key = "key", time = "t",
         payload = Seq("rt" -> "asof_rt"),
         direction = "nearest")
@@ -244,11 +245,11 @@ object Relational {
     * are bounded by bin occupancy, not n².
     *
     * Concrete binding: for each event, how many events of the same
-    * type occurred in the preceding `windowMinutes` (exclusive of the
+    * type occurred in the preceding 30 minutes (exclusive of the
     * event's own instant).
     */
-  def eventRangeCount(events: DataFrame, windowMinutes: Int = 30): DataFrame = {
-    val wUs = windowMinutes * 60L * 1000000L
+  def eventRangeCount(events: DataFrame): DataFrame = {
+    val wUs = 30 * 60L * 1000000L
     val e = events.select(col("event_id"), col("event_type"),
       expr("unix_micros(ts)").as("t"))
     val probes = e
@@ -267,13 +268,13 @@ object Relational {
     * driver; no global sort at any scale. Ties broken by key for
     * determinism.
     */
-  def topKCustomers(orders: DataFrame, customer: DataFrame, k: Int = 10): DataFrame =
+  def topKCustomers(orders: DataFrame, customer: DataFrame): DataFrame =
     orders
       .join(customer, col("o_custkey") === col("c_custkey"))
       .groupBy("c_custkey", "c_name")
       .agg(exactSum(col("o_totalprice")).as("revenue"))
       .orderBy(col("revenue").desc, col("c_custkey").asc)
-      .limit(k)
+      .limit(10)
 
   /** Q29: rollup — subtotals along the (returnflag, linestatus)
     * hierarchy in one pass (Expand + single hash agg).

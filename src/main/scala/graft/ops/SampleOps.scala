@@ -100,15 +100,14 @@ object SampleOps {
   }
 
   def stratifiedSample(df: DataFrame, keyCol: String, stratumCol: String,
-                       rates: Map[String, Double], defaultRate: Double = 1.0,
-                       salt: String = ""): DataFrame = {
+                       rates: Map[String, Double], defaultRate: Double = 1.0): DataFrame = {
     (rates.values.toSeq :+ defaultRate).foreach(r =>
       require(r >= 0.0 && r <= 1.0, s"rate must be in [0,1]: $r"))
     // sorted for a deterministic expression tree (Map order isn't)
     val rateExpr = rates.toSeq.sortBy(_._1).foldLeft(lit(defaultRate)) {
       case (acc, (k, r)) => when(col(stratumCol) === k, lit(r)).otherwise(acc)
     }
-    df.filter(hashUnit(col(keyCol), salt) < rateExpr)
+    df.filter(hashUnit(col(keyCol)) < rateExpr)
   }
 
   /** Q101: PER-DOMAIN CAP — at most `cap` documents per stratum
@@ -235,7 +234,7 @@ object SampleOps {
     * sort, no rate×count rounding drift.
     */
   def mixtureSample(df: DataFrame, keyCol: String, domainCol: String,
-                    budget: Long, salt: String = "mix"): DataFrame = {
+                    budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
     val spark = df.sparkSession
     val domains = df.groupBy(col(domainCol)).agg(count(lit(1)).as("n"))
@@ -260,7 +259,7 @@ object SampleOps {
       .partitionBy(col(domainCol))
       .orderBy(col("priority").asc, col(keyCol).asc)
     df.select(col(keyCol), col(domainCol))
-      .withColumn("priority", hashUnit(col(keyCol), salt))
+      .withColumn("priority", hashUnit(col(keyCol), mixSalt))
       .withColumn("rk", row_number().over(win))
       .filter(col("rk") <= maxQuota) // constant: map-side WindowGroupLimit
       .join(broadcast(quotaDf), domainCol)
@@ -294,8 +293,7 @@ object SampleOps {
     * place of ranks).
     */
   def costBudgetMixture(df: DataFrame, keyCol: String, domainCol: String,
-                        costCol: String, budget: Long,
-                        salt: String = "mix"): DataFrame = {
+                        costCol: String, budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
     val spark = df.sparkSession
     val domains = df.groupBy(col(domainCol))
@@ -317,7 +315,7 @@ object SampleOps {
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
     df.select(col(keyCol), col(domainCol), col(costCol))
-      .withColumn("priority", hashUnit(col(keyCol), salt))
+      .withColumn("priority", hashUnit(col(keyCol), mixSalt))
       .withColumn("cum", sum(col(costCol)).over(win).cast("long"))
       .join(broadcast(quotaDf), domainCol)
       .filter(col("cum") - col(costCol) < col("quota"))
@@ -350,8 +348,7 @@ object SampleOps {
     */
   def costBudgetMixtureThinned(df: DataFrame, keyCol: String,
                                domainCol: String, costCol: String,
-                               budget: Long, thinRate: Double,
-                               salt: String = "mix"): DataFrame = {
+                               budget: Long, thinRate: Double): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
     require(thinRate > 0.0 && thinRate <= 1.0,
       s"thinRate must be in (0,1]: $thinRate")
@@ -371,7 +368,7 @@ object SampleOps {
         r.getAs[Long]("n_full"))
     }
     val thinned = thinnedAdmissionPlan(df, keyCol, domainCol, costCol,
-      thinRate, salt, quotas)
+      thinRate, mixSalt, quotas)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the audit aggregate is domain-sized; absent domains (zero
@@ -400,6 +397,12 @@ object SampleOps {
         .localCheckpoint(eager = true)
     } finally thinned.unpersist(blocking = false)
   }
+
+  /** The hash salt of the budgeted mixtures ([[mixtureSample]],
+    * [[costBudgetMixture]], [[costBudgetMixtureThinned]]), so all three
+    * rank a domain's documents in the same priority order.
+    */
+  private val mixSalt = "mix"
 
   /** The thinned admission plan before persist/audit — factored out so
     * PlanSpec-style tests can assert the executed shape (the returned

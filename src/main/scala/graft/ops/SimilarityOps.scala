@@ -100,9 +100,9 @@ object SimilarityOps {
     * semantic-dedup candidate surface (the embedding-space analogue of
     * the q13/q27 lexical candidate generators). Exact by construction.
     */
-  def embeddingNearDupPairs(embeddings: DataFrame, threshold: Double = 0.45,
-                            blocks: Int = 32): DataFrame =
-    scoredPairs(embeddings, blocks)
+  def embeddingNearDupPairs(embeddings: DataFrame,
+                            threshold: Double = 0.45): DataFrame =
+    scoredPairs(embeddings, 32)
       .filter(col("sim") >= threshold)
       .select("id_a", "id_b", "sim")
 
@@ -115,9 +115,8 @@ object SimilarityOps {
     * MinHash (q13), SimHash (q14/q27), n-gram Jaccard (q15), and
     * embedding-cosine (q65/q66).
     */
-  def semanticDedupApply(embeddings: DataFrame, threshold: Double = 0.5,
-                         blocks: Int = 32): DataFrame = {
-    val pairs = embeddingNearDupPairs(embeddings, threshold, blocks)
+  def semanticDedupApply(embeddings: DataFrame, threshold: Double = 0.5): DataFrame = {
+    val pairs = embeddingNearDupPairs(embeddings, threshold)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     val vertices = embeddings.select(col("vec_id").as("doc_id"))
     val labels = ClusterOps.connectedComponents(vertices, pairs)
@@ -163,7 +162,6 @@ object SimilarityOps {
     * corpus.
     */
   def buildIvfIndex(embeddings: DataFrame, nlist: Int = 16,
-                    trainN: Int = 2000,
                     trainOpt: Option[DataFrame] = None): IvfIndex = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
@@ -184,7 +182,7 @@ object SimilarityOps {
     // under-delivery fallback in [[trainSample]] covers the vanishing
     // remainder). One parquet count + a per-row filter replaces
     // ranking every corpus row just to pick trainN of them.
-    val train = trainOpt.getOrElse(trainSample(embeddings, trainN))
+    val train = trainOpt.getOrElse(trainSample(embeddings))
       .withColumn("fv", array_to_vector(col("embedding")))
     val model = new KMeans().setK(nlist).setSeed(42L).setMaxIter(5)
       .setFeaturesCol("fv").setPredictionCol("cell").fit(train)
@@ -376,26 +374,32 @@ object SimilarityOps {
       .select("query_id", "recall")
   }
 
-  /** Q28 gate: LSH kNN recall@k vs the exact scan — violations only. */
-  def lshKnnRecallGate(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10,
-                       numPlanes: Int = 4, numTables: Int = 8,
-                       minRecall: Double = 0.8): DataFrame =
-    knnRecallGate(lshKnn(embeddings, nQueries, k, numPlanes, numTables),
-      bruteForceKnn(embeddings, nQueries, k), k, minRecall)
+  /** Q28 gate: LSH kNN recall@10 of 5 queries vs the exact scan —
+    * violations (recall < 0.8) only.
+    */
+  def lshKnnRecallGate(embeddings: DataFrame): DataFrame =
+    knnRecallGate(lshKnn(embeddings), bruteForceKnn(embeddings), 10, 0.8)
 
-  /** Q34 gate: IVF kNN recall@k vs the exact scan — violations only.
-    * minRecall is 0.7 (vs 0.8 for LSH): the fixture's embeddings are
-    * near-random (rank-10 neighbors at cosine ≈ 0.25-0.39), the worst
+  /** Q34 gate: IVF kNN recall@10 of 5 queries vs the exact scan —
+    * violations only. minRecall is 0.7 (vs 0.8 for LSH): the fixture's
+    * embeddings are near-random (rank-10 neighbors at cosine ≈ 0.25-0.39), the worst
     * case for a coarse quantizer — measured recall@10 with nprobe=8/16
     * is 0.7-1.0 across sf0.001-sf0.1 (see tools.RecallProbe). On a
     * corpus with real cluster structure the same geometry scores far
     * higher at a smaller probe fraction.
     */
-  def ivfKnnRecallGate(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10,
-                       nlist: Int = 16, nprobe: Int = 8,
-                       minRecall: Double = 0.7): DataFrame =
-    knnRecallGate(ivfKnn(embeddings, nQueries, k, nlist, nprobe),
-      bruteForceKnn(embeddings, nQueries, k), k, minRecall)
+  def ivfKnnRecallGate(embeddings: DataFrame): DataFrame =
+    knnRecallGate(ivfKnn(embeddings), bruteForceKnn(embeddings), 10, 0.7)
+
+  /** The LSH code geometry: `numPlanes`-bit codes (16 buckets per
+    * table) in `numTables` independent tables. SIZING: 4 planes are
+    * tuned for the test fixture; average bucket occupancy is
+    * corpus/2^numPlanes, so at corpus scale raise numPlanes until that
+    * stays bounded — an undersized code prunes nothing and the
+    * "approximate" path silently becomes a full scan.
+    */
+  private val numPlanes = 4
+  private val numTables = 8
 
   /** Per-table sign-code expression over `numPlanes` hyperplanes;
     * `table` offsets the deterministic plane seeds so tables are
@@ -404,9 +408,9 @@ object SimilarityOps {
     * so float precision is immaterial) — far cheaper than an
     * interpreted per-element lambda.
     */
-  private def codeExpr(table: Int, numPlanes: Int, dim: Int): String = {
+  private def codeExpr(table: Int): String = {
     val bits = (0 until numPlanes).map { p =>
-      val plane = (0 until dim)
+      val plane = (0 until embeddingDim)
         .map(d => s"${planeComponent(table * numPlanes + p, d)}F")
       val arr = plane.mkString("array(", ", ", ")")
       s"(case when vec_dot(embedding, $arr) >= 0 then ${1 << p} else 0 end)"
@@ -422,12 +426,11 @@ object SimilarityOps {
     * vec_dot trees. Keeps the generated class small (janino) and the
     * dot products computed once per (vector, table).
     */
-  private def tableCodes(df: DataFrame, numTables: Int, numPlanes: Int,
-                         dim: Int): DataFrame =
+  private def tableCodes(df: DataFrame): DataFrame =
     par(df.select(col("vec_id"), col("embedding")))
       .select(col("vec_id"), explode(expr(
         (0 until numTables).map(t =>
-          s"struct(${t} as t, ${codeExpr(t, numPlanes, dim)} as code)")
+          s"struct(${t} as t, ${codeExpr(t)} as code)")
           .mkString("array(", ", ", ")"))).as("tc"))
       .select(col("vec_id"), col("tc.t").as("t"), col("tc.code").as("code"))
 
@@ -444,17 +447,10 @@ object SimilarityOps {
     * the embeddings are re-attached for exact re-scoring, so the wide
     * float arrays never ride a candidate-multiplicity shuffle.
     * Recall is gated against the exact scan by [[lshKnnRecallGate]].
-    *
-    * SIZING: the default numPlanes=4 (16 buckets/table) is tuned for
-    * the test fixture; average bucket occupancy is corpus/2^numPlanes,
-    * so at corpus scale raise numPlanes until that stays bounded — an
-    * undersized code prunes nothing and the "approximate" path
-    * silently becomes a full scan.
     */
-  def lshKnn(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10,
-             numPlanes: Int = 4, numTables: Int = 8, dim: Int = 64): DataFrame = {
+  def lshKnn(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10): DataFrame = {
     val corpus = withNorm(embeddings, "embedding", "cn")
-    val corpusCodes = tableCodes(corpus, numTables, numPlanes, dim)
+    val corpusCodes = tableCodes(corpus)
     // query probes: own code plus each single-bit flip, per table —
     // flips are XORs over the MATERIALIZED code column, so the plane
     // dot products are computed once per (query, table), not once per
@@ -510,6 +506,16 @@ object SimilarityOps {
   private val corpusCounts =
     new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
 
+  /** The training-sample size of every quantizer fit (IVF cells, PQ
+    * codebooks): bounded, so no fit grows with the corpus.
+    */
+  private val trainN = 2000
+
+  /** The embedding width the LSH planes and the PQ subspace split are
+    * laid out for.
+    */
+  private val embeddingDim = 64
+
   /** Shared by the IVF and PQ builds: the deterministic hash-sampled,
     * vec_id-sorted, single-partition training frame (see
     * [[buildIvfIndex]]'s scaladoc for why each property matters).
@@ -526,7 +532,7 @@ object SimilarityOps {
     * unthinned tournament; either way the returned sample is exactly
     * the trainN smallest (hash, vec_id) rows of the corpus.
     */
-  private def trainSample(embeddings: DataFrame, trainN: Int): DataFrame = {
+  private def trainSample(embeddings: DataFrame): DataFrame = {
     val spark = embeddings.sparkSession
     val hkey = "(hash(vec_id) & 2147483647)"
     val planKey = embeddings.queryExecution.analyzed.semanticHash()
@@ -636,23 +642,23 @@ object SimilarityOps {
     *
     * Assignment is the tree's second deliberate UDF (precedent: the
     * Bloom probe): the per-row argmin over m broadcast codebooks has
-    * no expression-API form short of inlining m×2^nbits×dsub float
+    * no expression-API form short of inlining m×256×dsub float
     * literals into codegen (a janino bomb), it runs once per corpus
     * row at BUILD time (not per query), and it reads only the
     * embedding column.
     */
-  def buildPqIndex(embeddings: DataFrame, m: Int = 32, nbits: Int = 8,
-                   trainN: Int = 2000, dim: Int = 64,
+  def buildPqIndex(embeddings: DataFrame, m: Int = 32,
                    trainOpt: Option[DataFrame] = None): PqIndex = {
-    require(dim % m == 0, s"dim $dim must divide into m=$m subvectors")
-    val dsub = dim / m
+    require(embeddingDim % m == 0,
+      s"dim $embeddingDim must divide into m=$m subvectors")
+    val dsub = embeddingDim / m
     val spark = embeddings.sparkSession
     import spark.implicits._
-    val train = trainOpt.getOrElse(trainSample(embeddings, trainN))
+    val train = trainOpt.getOrElse(trainSample(embeddings))
       .select("embedding").collect()
       .map(_.getSeq[Float](0).toArray)
     require(train.nonEmpty, "cannot fit PQ codebooks on an empty corpus")
-    val kEff = math.min(1 << nbits, train.length)
+    val kEff = math.min(256, train.length) // one-byte codes
     val codebooks: Array[Array[Array[Float]]] = Array.tabulate(m) { s =>
       val pts = train.map(v =>
         Array.tabulate(dsub)(j => v(s * dsub + j).toDouble))
@@ -747,9 +753,8 @@ object SimilarityOps {
     * x̂, trading the decode join for an m-term per-row lookup sum.
     */
   def pqKnn(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10,
-            m: Int = 32, nbits: Int = 8, dim: Int = 64): DataFrame =
-    probePq(buildPqIndex(embeddings, m, nbits, dim = dim), embeddings,
-      nQueries, k)
+            m: Int = 32): DataFrame =
+    probePq(buildPqIndex(embeddings, m), embeddings, nQueries, k)
 
   /** The per-query-batch half of the PQ pair (like [[probeIvfPruned]]
     * for IVF): score full-precision queries against an ALREADY-BUILT
@@ -811,18 +816,16 @@ object SimilarityOps {
       meta.int("m"), meta.int("dsub"))
   }
 
-  /** Q80 gate: PQ-ADC recall@k vs the exact scan — violations only.
+  /** Q80 gate: PQ-ADC recall@10 of 5 queries vs the exact scan —
+    * violations only.
     * Geometry and threshold are set for the fixture's near-random
     * embeddings (the hardest case for any quantizer — see the q34
     * note): measured recall@10 with m=32 is 0.9-1.0 across
     * sf0.001-sf0.1 (tools.RecallProbe), so 0.7 gates with margin;
     * structured corpora score far higher at coarser m.
     */
-  def pqKnnRecallGate(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10,
-                      m: Int = 32, nbits: Int = 8,
-                      minRecall: Double = 0.7): DataFrame =
-    knnRecallGate(pqKnn(embeddings, nQueries, k, m, nbits),
-      bruteForceKnn(embeddings, nQueries, k), k, minRecall)
+  def pqKnnRecallGate(embeddings: DataFrame): DataFrame =
+    knnRecallGate(pqKnn(embeddings), bruteForceKnn(embeddings), 10, 0.7)
 
   /** Q125: IVF-PQ — the production ANN composition, completing the
     * ladder exact (q16) → LSH (q28) → IVF (q34) → int8 (q69) → PQ
@@ -844,15 +847,13 @@ object SimilarityOps {
   final case class IvfPqIndex(cellCodes: DataFrame, centroids: DataFrame,
                               codebooks: DataFrame, m: Int, dsub: Int)
 
-  def buildIvfPqIndex(embeddings: DataFrame, nlist: Int = 16, m: Int = 32,
-                      nbits: Int = 8, trainN: Int = 2000,
-                      dim: Int = 64): IvfPqIndex = {
+  def buildIvfPqIndex(embeddings: DataFrame): IvfPqIndex = {
     // ONE train sample feeds both fits — the sample is deterministic
     // for (embeddings, trainN), so results are identical to sampling
     // twice, at half the corpus-scan cost of the compound build
-    val train = trainSample(embeddings, trainN)
-    val ivf = buildIvfIndex(embeddings, nlist, trainN, Some(train))
-    val pq = buildPqIndex(embeddings, m, nbits, trainN, dim, Some(train))
+    val train = trainSample(embeddings)
+    val ivf = buildIvfIndex(embeddings, trainOpt = Some(train))
+    val pq = buildPqIndex(embeddings, trainOpt = Some(train))
     IvfPqIndex(
       pq.codes.join(ivf.assigned.select("vec_id", "cell"), "vec_id"),
       ivf.centroids, pq.codebooks, pq.m, pq.dsub)
@@ -949,12 +950,12 @@ object SimilarityOps {
       .select("query_id", "rnk", "vec_id", "sim")
   }
 
-  def ivfPqKnnRecallGate(embeddings: DataFrame, nQueries: Int = 5,
-                         k: Int = 10, nprobe: Int = 8,
-                         minRecall: Double = 0.6): DataFrame =
-    knnRecallGate(
-      probeIvfPq(buildIvfPqIndex(embeddings), embeddings, nQueries, k, nprobe),
-      bruteForceKnn(embeddings, nQueries, k), k, minRecall)
+  /** Q125 gate: IVF-PQ recall@10 of 5 queries vs the exact scan —
+    * violations (recall < 0.6) only.
+    */
+  def ivfPqKnnRecallGate(embeddings: DataFrame): DataFrame =
+    knnRecallGate(probeIvfPq(buildIvfPqIndex(embeddings), embeddings),
+      bruteForceKnn(embeddings), 10, 0.6)
 
   /** Q69: INT8 scalar quantization — the storage/bandwidth scale path
     * for the embedding column: per-vector symmetric max-abs scaling to
@@ -994,7 +995,7 @@ object SimilarityOps {
     * from the IVF cells they trained, q34/q83) and a training pipeline
     * uses for class prototypes. Floating-point SUMS are
     * order-dependent under shuffle, so the mean is computed in exact
-    * FIXED-POINT: each component is scaled by 2^`scaleBits` (a
+    * FIXED-POINT: each component is scaled by 2^[[fxBits]] (a
     * power-of-two scale is exact in double) and rounded to a long once
     * per element — the per-element rounding is deterministic, the long
     * sum is associative, and the single final division is one IEEE op,
@@ -1008,7 +1009,7 @@ object SimilarityOps {
     * slices merge by addition into EXACTLY the full-corpus sums — the
     * property q129 turns into an incremental artifact.
     */
-  def labelCentroidSums(embeddings: DataFrame, scaleBits: Int = 20,
+  def labelCentroidSums(embeddings: DataFrame,
                         labelCol: String = "label"): DataFrame = {
     // round-16: quantize the whole vector in one native pass
     // (vec_quantize_fx — Spark Round semantics per element, pinned in
@@ -1018,7 +1019,7 @@ object SimilarityOps {
     GraftFunctions.register(embeddings.sparkSession)
     par(embeddings)
       .select(col(labelCol), posexplode(
-        expr(s"vec_quantize_fx(embedding, $scaleBits)")).as(Seq("dim", "vq")))
+        expr(s"vec_quantize_fx(embedding, $fxBits)")).as(Seq("dim", "vq")))
       .groupBy(labelCol, "dim")
       .agg(sum(col("vq")).as("ssum"), count(lit(1)).as("n"))
   }
@@ -1029,27 +1030,30 @@ object SimilarityOps {
     * centroid is BIT-IDENTICAL to a full recompute (q129's oracle is
     * the full-corpus q113 SQL, not an approximation gate).
     */
-  def mergeCentroidSums(sumSets: Seq[DataFrame],
-                        labelCol: String = "label"): DataFrame = {
+  def mergeCentroidSums(sumSets: Seq[DataFrame]): DataFrame = {
     require(sumSets.nonEmpty, "need at least one sum set")
     sumSets.reduce(_.unionByName(_))
-      .groupBy(labelCol, "dim")
+      .groupBy("label", "dim")
       .agg(sum("ssum").as("ssum"), sum("n").as("n"))
   }
 
   /** Finalize sums into the [[labelCentroids]] output shape. */
-  def centroidsFromSums(sums: DataFrame, scaleBits: Int = 20,
+  def centroidsFromSums(sums: DataFrame,
                         labelCol: String = "label"): DataFrame = {
-    val s = 1L << scaleBits
+    val s = 1L << fxBits
     sums.select(col(labelCol), col("dim"),
       (col("ssum").cast("double") / (col("n") * s)).as("centroid"),
       col("n"))
   }
 
-  def labelCentroids(embeddings: DataFrame, scaleBits: Int = 20,
+  def labelCentroids(embeddings: DataFrame,
                      labelCol: String = "label"): DataFrame =
-    centroidsFromSums(labelCentroidSums(embeddings, scaleBits, labelCol),
-      scaleBits, labelCol)
+    centroidsFromSums(labelCentroidSums(embeddings, labelCol), labelCol)
+
+  /** The fixed-point scale exponent of the exact vector operators: a
+    * component quantizes to a long at 2^20.
+    */
+  private val fxBits = 20
 
   /** Q114: one EXACT distributed Lloyd (k-means) iteration — the
     * building block of the IVF quantizer fit (q34/q83) exposed as a
@@ -1059,7 +1063,7 @@ object SimilarityOps {
     * seeds are the k corpus rows with the smallest md5-derived unit
     * hash (the q52/q110 hash family — stable across engines and
     * corpus partitioning); assignment measures squared L2 distance on
-    * 2^`scaleBits` fixed-point vectors, so the argmin compares LONGS
+    * 2^[[fxBits]] fixed-point vectors, so the argmin compares LONGS
     * (no FP summation-order hazard; the worst case |dx| ≤ 2^21,
     * dims·dx² < 2^48 fits a long), ties broken by seed rank; the
     * update is the [[labelCentroids]] fixed-point mean. The oracle
@@ -1079,8 +1083,7 @@ object SimilarityOps {
   /** The seed table of [[kmeansStep]]: the k corpus rows with the
     * smallest md5-derived hash, ranked 1..k, vectors pre-quantized.
     */
-  def kmeansSeeds(embeddings: DataFrame, k: Int,
-                  scaleBits: Int = 20): DataFrame = {
+  def kmeansSeeds(embeddings: DataFrame, k: Int): DataFrame = {
     val hk = conv(substring(md5(concat(col("vec_id").cast("string"),
       lit(":seed"))), 1, 8), 16, 10).cast("long")
     par(embeddings)
@@ -1088,7 +1091,7 @@ object SimilarityOps {
       .orderBy(col("hk").asc, col("vec_id").asc).limit(k)
       .select(row_number().over(Window.orderBy(col("hk").asc, col("vec_id").asc))
           .cast("int").as("cid"),
-        quantFx(col("embedding"), 1L << scaleBits).as("sq"))
+        quantFx(col("embedding"), 1L << fxBits).as("sq"))
   }
 
   /** The assignment stage of [[kmeansStep]]: each vector mapped to its
@@ -1104,8 +1107,7 @@ object SimilarityOps {
     * Carries the original float vector so the update stage needs no
     * second corpus join.
     */
-  def kmeansAssign(embeddings: DataFrame, seeds: DataFrame,
-                   scaleBits: Int = 20): DataFrame = {
+  def kmeansAssign(embeddings: DataFrame, seeds: DataFrame): DataFrame = {
     val sp = embeddings.sparkSession
     import sp.implicits._
     GraftFunctions.register(sp)
@@ -1122,17 +1124,16 @@ object SimilarityOps {
     // corpus shuffle.
     par(embeddings)
       .withColumn("__seeds", typedlit(seedRows))
-      .withColumn("m", expr(s"l2q_argmin(embedding, __seeds, $scaleBits)"))
+      .withColumn("m", expr(s"l2q_argmin(embedding, __seeds, $fxBits)"))
       .select(col("vec_id"), col("m.cid").as("cluster"),
         col("m.d2").as("d2"), col("embedding"))
   }
 
-  def kmeansStep(embeddings: DataFrame, k: Int = 8,
-                 scaleBits: Int = 20): DataFrame =
+  def kmeansStep(embeddings: DataFrame, k: Int = 8): DataFrame =
     labelCentroids(
-      kmeansAssign(embeddings, kmeansSeeds(embeddings, k, scaleBits), scaleBits)
+      kmeansAssign(embeddings, kmeansSeeds(embeddings, k))
         .select(col("cluster"), col("embedding")),
-      scaleBits, labelCol = "cluster")
+      labelCol = "cluster")
 
   /** Q117: ITERATED exact k-means — [[kmeansStep]] composed t times,
     * each round's fixed-point centroids re-quantized as the next
@@ -1148,18 +1149,17 @@ object SimilarityOps {
     * t-deep recursive plan. Clusters that capture no vectors drop out
     * (standard Lloyd behavior, reproduced by the oracle).
     */
-  def kmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 3,
-             scaleBits: Int = 20): DataFrame = {
+  def kmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
     val sp = embeddings.sparkSession
     import sp.implicits._
-    val s = 1L << scaleBits
-    var seeds = kmeansSeeds(embeddings, k, scaleBits)
+    val s = 1L << fxBits
+    var seeds = kmeansSeeds(embeddings, k)
     var cents: DataFrame = null
     for (_ <- 1 to iters) {
       cents = labelCentroids(
-        kmeansAssign(embeddings, seeds, scaleBits)
+        kmeansAssign(embeddings, seeds)
           .select(col("cluster"), col("embedding")),
-        scaleBits, labelCol = "cluster")
+        labelCol = "cluster")
       val next = cents.collect()
         .groupBy(_.getAs[Int]("cluster"))
         .toSeq
@@ -1190,8 +1190,7 @@ object SimilarityOps {
     * never the corpus.
     */
   def hybridSearch(documents: DataFrame, embeddings: DataFrame,
-                   nQueries: Int = 5, perList: Int = 20, k: Int = 10,
-                   c: Int = 60): DataFrame = {
+                   nQueries: Int = 5, perList: Int = 20, k: Int = 10): DataFrame = {
     import OpsUtil.tokens
     val dense = bruteForceKnn(embeddings, nQueries, perList)
       .select(col("query_id"), col("vec_id").as("doc_id"),
@@ -1212,8 +1211,8 @@ object SimilarityOps {
       .select("query_id", "doc_id", "r_lex")
     val fused = dense.join(sparse, Seq("query_id", "doc_id"), "full_outer")
       .withColumn("rrf", round(
-        coalesce(lit(1.0) / (lit(c) + col("r_vec")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(c) + col("r_lex")), lit(0.0)), 6))
+        coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)), 6))
     val wf = Window.partitionBy("query_id")
       .orderBy(col("rrf").desc, col("doc_id").asc)
     fused.withColumn("rnk", row_number().over(wf).cast("int"))
@@ -1230,7 +1229,7 @@ object SimilarityOps {
     * row-wise).
     *
     * Every stage is integer-exact so the ranking reproduces on any
-    * engine: vectors quantize to 2^`scaleBits` fixed-point longs (the
+    * engine: vectors quantize to 2^[[fxBits]] fixed-point longs (the
     * q113/q114 family), each label centroid is the fixed-point mean
     * RE-quantized to longs by the q117 chain (one double division, one
     * half-away-from-zero round — proven engine-stable there), and the
@@ -1244,40 +1243,38 @@ object SimilarityOps {
     * is the per-label top-k window, map-side-bounded by
     * WindowGroupLimit at topK × partitions rows per label.
     */
-  def centroidOutliers(embeddings: DataFrame, topK: Int = 5,
-                       scaleBits: Int = 20,
-                       labelCol: String = "label"): DataFrame = {
+  def centroidOutliers(embeddings: DataFrame, topK: Int = 5): DataFrame = {
     val sp = embeddings.sparkSession
     import sp.implicits._
     // the collected centroid map and the element_at key below both
     // read the label as Int — fail at plan time on any other type
     // instead of a ClassCastException mid-job
-    require(embeddings.schema(labelCol).dataType ==
+    require(embeddings.schema("label").dataType ==
         org.apache.spark.sql.types.IntegerType,
       s"centroidOutliers requires an INT label column, got " +
-        s"${embeddings.schema(labelCol).dataType.simpleString} for '$labelCol'")
-    val s = 1L << scaleBits
-    val cents: Map[Int, Seq[Long]] = labelCentroids(embeddings, scaleBits, labelCol)
+        s"${embeddings.schema("label").dataType.simpleString} for 'label'")
+    val s = 1L << fxBits
+    val cents: Map[Int, Seq[Long]] = labelCentroids(embeddings)
       .collect()
-      .groupBy(_.getAs[Int](labelCol))
+      .groupBy(_.getAs[Int]("label"))
       .map { case (label, rows) =>
         (label, rows.sortBy(_.getAs[Int]("dim")).map(r =>
           BigDecimal(r.getAs[Double]("centroid") * s)
             .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong).toSeq)
       }
-    val w = Window.partitionBy(labelCol)
+    val w = Window.partitionBy("label")
       .orderBy(col("d2").desc, col("vec_id").asc)
     // round-16: the per-row distance is the native vec_l2q (quantize +
     // squared L2 in one loop; VectorFixedPointSpec) — replacing the
     // interpreted quantFx + zip_with/aggregate chain
     GraftFunctions.register(sp)
     par(embeddings)
-      .select(col(labelCol), col("vec_id"), col("embedding"),
+      .select(col("label"), col("vec_id"), col("embedding"),
         typedlit(cents).as("__cents"))
       .withColumn("d2", expr(
-        s"vec_l2q(embedding, element_at(__cents, $labelCol), $scaleBits)"))
+        s"vec_l2q(embedding, element_at(__cents, label), $fxBits)"))
       .withColumn("rnk", row_number().over(w).cast("int"))
       .filter(col("rnk") <= topK)
-      .select(col(labelCol), col("rnk"), col("vec_id"), col("d2"))
+      .select(col("label"), col("rnk"), col("vec_id"), col("d2"))
   }
 }

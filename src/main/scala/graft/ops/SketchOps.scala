@@ -30,12 +30,11 @@ object SketchOps {
 
   /** Per-key HLL sketch of `valueCol`'s distinct values. One binary
     * row per key — the shuffle carries sketch buffers (bounded by
-    * 2^lgK registers), not distinct values.
+    * 2^12 registers), not distinct values.
     */
-  def perKeySketch(df: DataFrame, keyCol: String, valueCol: String,
-                   lgK: Int = 12): DataFrame =
+  def perKeySketch(df: DataFrame, keyCol: String, valueCol: String): DataFrame =
     df.groupBy(keyCol)
-      .agg(hll_sketch_agg(col(valueCol), lgK).as("sketch"))
+      .agg(hll_sketch_agg(col(valueCol), 12).as("sketch"))
 
   /** Merge any number of per-key sketch sets (history artifact +
     * fresh batch sketches) into one estimate per key. The merge is
@@ -52,7 +51,7 @@ object SketchOps {
 
   /** Q111 gate: the RELOADED-artifact + batch-sketch merged estimate
     * checked against the exact distinct count over the same unioned
-    * inputs — emits only keys whose relative error exceeds `tol`
+    * inputs — emits only keys whose relative error exceeds 0.08
     * (datasketches HLL at lgK=12 has RSE ≈ 1.04/2^6 ≈ 1.6%; 0.08 is
     * five sigma). Expected output: EMPTY — which the DuckDB oracle
     * verifies, giving the whole persist → reload → merge lifecycle a
@@ -60,8 +59,7 @@ object SketchOps {
     */
   def distinctSketchGate(historySketches: DataFrame, batch: DataFrame,
                          exactUnion: DataFrame,
-                         keyCol: String, valueCol: String,
-                         tol: Double = 0.08): DataFrame = {
+                         keyCol: String, valueCol: String): DataFrame = {
     val batchSketches = perKeySketch(batch, keyCol, valueCol)
     val approx =
       mergedDistinctEstimate(Seq(historySketches, batchSketches), keyCol)
@@ -74,7 +72,7 @@ object SketchOps {
       .withColumn("n_approx", coalesce(col("n_approx"), lit(0L)))
       .withColumn("rel_err",
         abs(col("n_approx") - col("n_exact")).cast("double") / col("n_exact"))
-      .filter(col("rel_err") > tol)
+      .filter(col("rel_err") > 0.08)
       .select(keyCol, "n_exact", "n_approx", "rel_err")
   }
 }

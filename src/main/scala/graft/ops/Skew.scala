@@ -15,16 +15,15 @@ object Skew {
 
   /** Two-phase salted aggregation: groupBy(keys + salt) partial sums
     * → groupBy(keys) final combine. A single hot key spreads over
-    * `buckets` reducers in phase 1; phase 2 merges `buckets` tiny rows
-    * per key. Correct for any commutative+associative aggregate —
+    * [[saltBuckets]] reducers in phase 1; phase 2 merges that many tiny
+    * rows per key. Correct for any commutative+associative aggregate —
     * callers pass the partial and final combine expressions.
     */
-  def saltedSum(df: DataFrame, keys: Seq[String], valueCol: String,
-                buckets: Int = 16): DataFrame = {
+  def saltedSum(df: DataFrame, keys: Seq[String], valueCol: String): DataFrame = {
     // salt must be row-unique-ish, NOT value-derived: a hot key whose
     // rows share one value would otherwise land in a single bucket
     val salted = df.withColumn("_salt",
-      pmod(crc32(monotonically_increasing_id().cast("string")), lit(buckets)))
+      pmod(crc32(monotonically_increasing_id().cast("string")), lit(saltBuckets)))
     salted
       .groupBy((keys.map(col) :+ col("_salt")): _*)
       .agg(sum(col(valueCol)).as("_partial"))
@@ -33,17 +32,19 @@ object Skew {
   }
 
   /** Salted equi-join for a skewed left side: left rows get a random-
-    * but-deterministic salt in [0, buckets); the (small) right side is
-    * exploded ×buckets so every salted left key finds its match. The
-    * hot key's rows spread across `buckets` tasks.
+    * but-deterministic salt in [0, saltBuckets); the (small) right side
+    * is exploded ×saltBuckets so every salted left key finds its match.
+    * The hot key's rows spread across [[saltBuckets]] tasks.
     */
-  def saltedJoin(skewed: DataFrame, small: DataFrame, key: String,
-                 buckets: Int = 16): DataFrame = {
+  def saltedJoin(skewed: DataFrame, small: DataFrame, key: String): DataFrame = {
     val l = skewed.withColumn("_salt",
-      pmod(crc32(monotonically_increasing_id().cast("string")), lit(buckets)))
-    val r = small.withColumn("_salt", explode(expr(s"sequence(0, ${buckets - 1})")))
+      pmod(crc32(monotonically_increasing_id().cast("string")), lit(saltBuckets)))
+    val r = small.withColumn("_salt", explode(expr(s"sequence(0, ${saltBuckets - 1})")))
     l.join(r, Seq(key, "_salt")).drop("_salt")
   }
+
+  /** The salt fan-out of [[saltedSum]] and [[saltedJoin]]. */
+  private val saltBuckets = 16
 
   /** Q122: BLOOM-PRUNED equi-join — explicit semi-join reduction for a
     * fact ⋈ selective-dim join where the dim side is too big (or the
@@ -64,9 +65,8 @@ object Skew {
     * `util.sketch.BloomFilter`, and it runs on the narrow key column.
     */
   def bloomPrunedJoin(fact: DataFrame, dim: DataFrame, factKey: String,
-                      dimKey: String, expectedItems: Long = 1000000L,
-                      fpp: Double = 0.01): DataFrame = {
-    val bloom = dim.stat.bloomFilter(dimKey, expectedItems, fpp)
+                      dimKey: String): DataFrame = {
+    val bloom = dim.stat.bloomFilter(dimKey, 1000000L, 0.01)
     val bc = fact.sparkSession.sparkContext.broadcast(bloom)
     // null keys never match an equi-join: "definitely absent" is exact
     val might = udf((k: java.lang.Long) =>

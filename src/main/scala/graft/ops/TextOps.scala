@@ -146,6 +146,9 @@ object TextOps {
 
   private val fitDims = 5
 
+  /** The perceptron rounds of every quality fit. */
+  private val fitIters = 3
+
   /** Q181: the quality classifier TRAINED IN-ENGINE — exact
     * fixed-point batch-perceptron gradient steps in the q114
     * Lloyd-step shape: each round broadcasts the 5-weight model as a
@@ -161,23 +164,23 @@ object TextOps {
     * Model state crosses the driver once per round at 5 longs — the
     * q117 per-round collect convention, bounded by model size.
     */
-  def qualityFitTrajectory(documents: DataFrame, iters: Int = 3): DataFrame = {
+  def qualityFitTrajectory(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     // one materialization: every round reads the same feature rows
     // (lazy — round 1's aggregation job materializes the cut)
     val f = qualityFitFeatures(documents).localCheckpoint(eager = false)
-    fitRounds(f, iters).toDF("round", "dim", "w")
+    fitRounds(f).toDF("round", "dim", "w")
   }
 
   /** The fit loop over an ALREADY-MATERIALIZED feature table — shared
     * by the trajectory and the evaluation so the eval never pays the
     * feature pipeline twice.
     */
-  private def fitRounds(f: DataFrame, iters: Int): Seq[(Int, Int, Long)] = {
+  private def fitRounds(f: DataFrame): Seq[(Int, Int, Long)] = {
     val w = Array.fill(fitDims)(0L)
     val traj = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long)]
-    for (r <- 1 to iters) {
+    for (r <- 1 to fitIters) {
       val margin = col("y") * (0 until fitDims)
         .map(d => lit(w(d)) * col(s"x$d")).reduce(_ + _)
       val sums = f.filter(margin <= 0L)
@@ -197,9 +200,9 @@ object TextOps {
     * its gate chain (q185): fit once on the labeled set, broadcast
     * the literals everywhere the gate runs.
     */
-  def fitQualityWeights(documents: DataFrame, iters: Int = 3): Seq[Long] = {
-    val wFinal = qualityFitTrajectory(documents, iters)
-      .filter(col("round") === iters)
+  def fitQualityWeights(documents: DataFrame): Seq[Long] = {
+    val wFinal = qualityFitTrajectory(documents)
+      .filter(col("round") === fitIters)
       .collect().map(r => r.getAs[Int]("dim") -> r.getAs[Long]("w")).toMap
     (0 until fitDims).map(wFinal)
   }
@@ -231,10 +234,10 @@ object TextOps {
     * just TRAINED instead of q115's fixed constants; kept ⟺ score
     * > 0, decided on the exact integer score.
     */
-  def trainedQualityGate(documents: DataFrame, iters: Int = 3): DataFrame =
+  def trainedQualityGate(documents: DataFrame): DataFrame =
     qualityScore(documents)
       .select(col("doc_id"),
-        fixedPointScore(fitQualityWeights(documents, iters)).as("score"))
+        fixedPointScore(fitQualityWeights(documents)).as("score"))
       .withColumn("kept", col("score") > 0L)
 
   /** Q193: the fit EVALUATED per round — the confusion matrix of
@@ -242,24 +245,24 @@ object TextOps {
     * curve a training pipeline reads before promoting a classifier
     * (is the fit improving? where did it converge? what does the
     * final gate cost in false drops?). The trajectory's weights cross
-    * the driver once (iters × 5 longs — the q117 model-size
+    * the driver once (fitIters × 5 longs — the q117 model-size
     * convention); the evaluation is then ONE scan over the feature
-    * rows computing all rounds' counts as 4·iters bounded aggregates
+    * rows computing all rounds' counts as 4·fitIters bounded aggregates
     * (each round's score a per-row dot product with its weights as
     * plan literals — the q182 expression shape, `pred ⟺ score > 0`
     * exactly like the gate). All-integer, so the oracle replays the
     * fit and the counts exactly.
     */
-  def qualityFitEval(documents: DataFrame, iters: Int = 3): DataFrame = {
+  def qualityFitEval(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     // ONE feature materialization feeds both the fit rounds and the
     // evaluation scan — the regex-heavy feature pipeline runs once
     // (lazy: round 1's aggregation job materializes the cut)
     val f = qualityFitFeatures(documents).localCheckpoint(eager = false)
-    val traj = fitRounds(f, iters)
+    val traj = fitRounds(f)
       .map { case (r, d, w) => (r, d) -> w }.toMap
-    val aggs = (1 to iters).flatMap { r =>
+    val aggs = (1 to fitIters).flatMap { r =>
       val score = (0 until fitDims)
         .map(d => lit(traj((r, d))) * col(s"x$d")).reduce(_ + _)
       val pos = score > 0L
@@ -270,7 +273,7 @@ object TextOps {
         sum(when(!pos && col("y") === -1L, 1L).otherwise(0L)).as(s"tn$r"))
     }
     val row = f.agg(aggs.head, aggs.tail: _*).head()
-    (1 to iters).map(r => (r,
+    (1 to fitIters).map(r => (r,
         row.getAs[Long](s"tp$r"), row.getAs[Long](s"fp$r"),
         row.getAs[Long](s"fn$r"), row.getAs[Long](s"tn$r")))
       .toDF("round", "tp", "fp", "fn", "tn")
@@ -314,15 +317,15 @@ object TextOps {
     * to bound the quadratic DP). Partitioned by source — no global
     * sort, scales with sources × docs-per-source.
     */
-  def neighborEditDistance(documents: DataFrame, cap: Int = 200): DataFrame = {
+  def neighborEditDistance(documents: DataFrame): DataFrame = {
     val w = Window.partitionBy("source").orderBy(col("doc_id").asc)
     documents
       .withColumn("nxt_id", lead("doc_id", 1).over(w))
       .withColumn("nxt", lead("text", 1).over(w))
       .filter(col("nxt").isNotNull)
       .select(col("source"), col("doc_id"), col("nxt_id"),
-        levenshtein(substring(col("text"), 1, cap),
-          substring(col("nxt"), 1, cap)).as("edit_dist"))
+        levenshtein(substring(col("text"), 1, 200),
+          substring(col("nxt"), 1, 200)).as("edit_dist"))
   }
 
   /** Q21: document fingerprint — order-independent content hash over
@@ -444,11 +447,10 @@ object TextOps {
     * column (at 100 TB, a gram-digest Bloom artifact would replace
     * the join's build side the way q61 upgrades q59).
     */
-  def ngramNovelty(newDocs: DataFrame, existing: DataFrame,
-                   n: Int = 5): DataFrame = {
+  def ngramNovelty(newDocs: DataFrame, existing: DataFrame): DataFrame = {
     def grams(df: DataFrame) = df
       .withColumn("w", tokens)
-      .select(col("doc_id"), explode(OpsUtil.shingles(col("w"), n)).as("gram"))
+      .select(col("doc_id"), explode(OpsUtil.shingles(col("w"), 5)).as("gram"))
     val corpusGrams = grams(existing).select("gram").distinct()
       .withColumn("seen", lit(1))
     grams(newDocs).distinct()
@@ -575,11 +577,10 @@ object TextOps {
     */
   def searchPostingsArtifact(spark: org.apache.spark.sql.SparkSession,
                              scope: graft.core.Scope, name: String,
-                             queries: Map[String, Seq[String]],
-                             k: Int = 10): DataFrame = {
+                             queries: Map[String, Seq[String]]): DataFrame = {
     val m = graft.io.Artifact.read(spark, scope, name)
-    searchPostings(spark.read.parquet(m.table("rows")), queries, k,
-      m.int("n_buckets"))
+    searchPostings(spark.read.parquet(m.table("rows")), queries,
+      nBuckets = m.int("n_buckets"))
   }
 
   /** The probe half of the q120 artifact: [[keywordSearch]] semantics
@@ -692,10 +693,10 @@ object TextOps {
     * aggregation bounds shuffle volume at (distinct grams ×
     * partitions), not corpus size.
     */
-  def nGramCounts(documents: DataFrame, n: Int = 2): DataFrame =
+  def nGramCounts(documents: DataFrame): DataFrame =
     documents
       .withColumn("w", tokens)
-      .select(col("lang"), explode(OpsUtil.shingles(col("w"), n)).as("gram"))
+      .select(col("lang"), explode(OpsUtil.shingles(col("w"), 2)).as("gram"))
       .groupBy("lang", "gram")
       .agg(count(lit(1)).as("cnt"))
 
@@ -720,11 +721,10 @@ object TextOps {
     * semantics identical modulo hash collisions, so the string form
     * stays the oracle-checked definition.
     */
-  def benchmarkContamination(corpus: DataFrame, benchmark: DataFrame,
-                             n: Int = 5): DataFrame = {
+  def benchmarkContamination(corpus: DataFrame, benchmark: DataFrame): DataFrame = {
     def grams(df: DataFrame) = df
       .withColumn("w", tokens)
-      .select(col("doc_id"), explode(OpsUtil.shingles(col("w"), n)).as("gram"))
+      .select(col("doc_id"), explode(OpsUtil.shingles(col("w"), 5)).as("gram"))
     grams(corpus).distinct()
       .join(grams(benchmark).select("gram").distinct(), Seq("gram"), "left_semi")
       .groupBy("doc_id")
@@ -823,16 +823,16 @@ object TextOps {
     * not just the counts). Pure regexp expressions in whole-stage
     * codegen; no UDF, no shuffle.
     */
-  def redactPii(documents: DataFrame, textCol: String = "text"): DataFrame =
+  def redactPii(documents: DataFrame): DataFrame =
     // function-API only: a pattern routed through a Spark SQL string
     // LITERAL would have its backslashes re-escaped by the SQL parser
     // and silently diverge from the oracle's RE2 pattern
     documents.select(
       col("doc_id"),
-      regexp_count(col(textCol), lit(emailRe)).cast("int").as("n_emails"),
-      regexp_count(col(textCol), lit(phoneRe)).cast("int").as("n_phones"),
+      regexp_count(col("text"), lit(emailRe)).cast("int").as("n_emails"),
+      regexp_count(col("text"), lit(phoneRe)).cast("int").as("n_phones"),
       md5(regexp_replace(
-        regexp_replace(col(textCol), emailRe, "[EMAIL]"),
+        regexp_replace(col("text"), emailRe, "[EMAIL]"),
         phoneRe, "[PHONE]")).as("redacted_fp"))
 
   /** Q63 fixture: plant deterministic PII into every 5th document —
@@ -972,12 +972,12 @@ object TextOps {
     * "how much did the model actually know" diagnostic. The corpus
     * never shuffles before its per-doc roll-up.
     */
-  def stupidBackoffScore(documents: DataFrame, maxVocab: Int = 1 << 16,
+  def stupidBackoffScore(documents: DataFrame,
                          maxBigrams: Int = 1 << 18,
                          maxTrigrams: Int = 1 << 19): DataFrame = {
-    require(maxVocab > 0 && maxBigrams > 0 && maxTrigrams > 0,
+    require(maxBigrams > 0 && maxTrigrams > 0,
       "model caps must be positive")
-    val uni = prunedNgramCounts(documents, Seq("u1"), "cu", maxVocab)
+    val uni = prunedNgramCounts(documents, Seq("u1"), "cu", lmVocab)
     // token total from the un-exploded arrays — a second corpus-wide
     // explode would materialize one row per token just to count them;
     // greatest(...,0) guards size(null) = -1 on null-text rows
@@ -1033,11 +1033,9 @@ object TextOps {
     * target-domain documents themselves are excluded (selection is
     * over the raw pool, the q162 model split).
     */
-  def dsirSelect(documents: DataFrame, targetSource: String, k: Int,
-                 maxVocab: Int = 1 << 16,
-                 maxBigrams: Int = 1 << 18): DataFrame = {
+  def dsirSelect(documents: DataFrame, targetSource: String, k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
-    dsirWeights(documents, targetSource, maxVocab, maxBigrams)
+    dsirWeights(documents, targetSource)
       .join(documents.filter(col("source") =!= targetSource)
         .select("doc_id", "source"), "doc_id")
       .orderBy(col("weight_fp").desc, col("doc_id").asc)
@@ -1106,14 +1104,10 @@ object TextOps {
       .orderBy(col(cntCol).desc +: gramCols.map(col(_).asc): _*)
       .limit(limit)
 
-  def dsirWeights(documents: DataFrame, targetSource: String,
-                  maxVocab: Int = 1 << 16,
-                  maxBigrams: Int = 1 << 18): DataFrame = {
-    require(maxVocab > 0, s"maxVocab must be positive: $maxVocab")
-    require(maxBigrams > 0, s"maxBigrams must be positive: $maxBigrams")
+  def dsirWeights(documents: DataFrame, targetSource: String): DataFrame = {
     def model(docs: DataFrame, tag: String): (DataFrame, DataFrame) = (
-      prunedNgramCounts(docs, Seq("w1"), s"cu_$tag", maxVocab),
-      prunedNgramCounts(docs, Seq("w1", "w2"), s"cb_$tag", maxBigrams))
+      prunedNgramCounts(docs, Seq("w1"), s"cu_$tag", lmVocab),
+      prunedNgramCounts(docs, Seq("w1", "w2"), s"cb_$tag", 1 << 18))
     val (uniT, biT) = model(
       documents.filter(col("source") === targetSource), "t")
     val (uniR, biR) = model(
@@ -1121,9 +1115,9 @@ object TextOps {
     val ratioFp = expr(
       s"""cast(round(1e6 * (
          |  (cast(coalesce(cb_t, 0) + 1 as double)
-         |    * cast(coalesce(cu_r, 0) + $maxVocab as double))
+         |    * cast(coalesce(cu_r, 0) + $lmVocab as double))
          |  / (cast(coalesce(cb_r, 0) + 1 as double)
-         |    * cast(coalesce(cu_t, 0) + $maxVocab as double))))
+         |    * cast(coalesce(cu_t, 0) + $lmVocab as double))))
          |as bigint)""".stripMargin.replace("\n", " "))
     ngramStream(documents, Seq("w1", "w2"), keepDocId = true)
       .join(broadcast(biT), Seq("w1", "w2"), "left")
@@ -1136,11 +1130,15 @@ object TextOps {
         sum(col("ratio_fp")).as("weight_fp"))
   }
 
-  def bigramLmScore(documents: DataFrame, maxVocab: Int = 1 << 16,
+  /** The pruned LM vocabulary of the n-gram scorers: the 2^16 most
+    * frequent unigrams, also the V of add-one smoothing.
+    */
+  private val lmVocab = 1 << 16
+
+  def bigramLmScore(documents: DataFrame,
                     maxBigrams: Int = 1 << 18): DataFrame = {
-    require(maxVocab > 0, s"maxVocab must be positive: $maxVocab")
     require(maxBigrams > 0, s"maxBigrams must be positive: $maxBigrams")
-    val uni = prunedNgramCounts(documents, Seq("w1"), "cu", maxVocab)
+    val uni = prunedNgramCounts(documents, Seq("w1"), "cu", lmVocab)
     val bi = prunedNgramCounts(documents, Seq("w1", "w2"), "cb", maxBigrams)
     ngramStream(documents, Seq("w1", "w2"), keepDocId = true)
       .join(broadcast(bi), Seq("w1", "w2"), "left")
@@ -1150,7 +1148,7 @@ object TextOps {
         coalesce(col("cu"), lit(0L)).as("cu"))
       .withColumn("p_fp", expr(
         s"""cast(round(1e6 * (cast(cb + 1 as double)
-           |  / cast(cu + $maxVocab as double))) as bigint)"""
+           |  / cast(cu + $lmVocab as double))) as bigint)"""
           .stripMargin.replace("\n", " ")))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
@@ -1178,12 +1176,10 @@ object TextOps {
     * executes once. Output is one row. All arithmetic is integer, so
     * any engine reproduces the floor bit-for-bit.
     */
-  def lmFloorCalibrate(documents: DataFrame, gatePct: Int = 15,
-                       maxVocab: Int = 1 << 16,
-                       maxBigrams: Int = 1 << 18): DataFrame = {
+  def lmFloorCalibrate(documents: DataFrame, gatePct: Int = 15): DataFrame = {
     require(0 < gatePct && gatePct < 100,
       s"gatePct must be in (0, 100): $gatePct")
-    val avg = bigramLmScore(documents, maxVocab, maxBigrams)
+    val avg = bigramLmScore(documents)
       .select(col("doc_id"), expr("score_fp DIV n_bigrams").as("avg_fp"))
     // the window inputs are the value histogram (distinct avg values),
     // never corpus rows — same bound as q123's per-stratum windows.

@@ -52,19 +52,18 @@ object EventsStreaming {
         col("event_type"), col("n"), col("sum_value"))
 
   /** Q32: sessionization, batch form — classic gaps-and-islands with
-    * window functions: a session breaks after `gapMinutes` of
+    * window functions: a session breaks after 30 minutes of
     * inactivity. One shuffle on user_id; exact integer microsecond
     * arithmetic so the oracle replays it bit-for-bit.
     */
-  def sessionize(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
-    val gapUs = gapMinutes * 60L * 1000000L
+  def sessionize(events: DataFrame): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
     val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     events
       .withColumn("us", expr("unix_micros(ts)"))
       .withColumn("prev_us", lag("us", 1).over(w))
       .withColumn("new_sess",
-        when(col("prev_us").isNull || col("us") - col("prev_us") > gapUs, 1).otherwise(0))
+        when(col("prev_us").isNull || col("us") - col("prev_us") > sessionGapUs, 1).otherwise(0))
       .withColumn("session_id", sum("new_sess").over(run).cast("int"))
       .groupBy("user_id", "session_id")
       .agg(
@@ -72,6 +71,9 @@ object EventsStreaming {
         count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
   }
+
+  /** The inactivity gap that closes a session: 30 minutes. */
+  private val sessionGapUs = 30 * 60L * 1000000L
 
   /** One closed session (stateful-streaming output shape). */
   final case class Session(user_id: Long, session_start_us: Long,
@@ -82,22 +84,20 @@ object EventsStreaming {
 
   /** Q32 streaming form: custom per-key state via
     * flatMapGroupsWithState — the engine's arbitrary-stateful-operator
-    * surface. Sessions close after `gapMinutes` of event-time silence;
+    * surface. Sessions close after 30 minutes of event-time silence;
     * the still-open session is flushed at end-of-input (a production
     * continuous stream would instead use GroupStateTimeout.EventTimeTimeout
     * and keep it in state). State per key is one fixed-size OpenSession
     * — bounded regardless of input size.
     */
   def sessionizeStreaming(spark: SparkSession, dir: String,
-                          gapMinutes: Int = 30,
-                          queryName: String = "graft_stream_sessions",
-                          statePartitions: Int = 8): DataFrame = {
+                          queryName: String = "graft_stream_sessions"): DataFrame = {
     // stateful shuffle sized for key cardinality (see
     // viewClickJoinStreaming); isolated session, shared context
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     import ss.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
+    val gapUs = sessionGapUs
     // this bounded-fixture form flushes ALL state at end of each
     // micro-batch, which is only correct when the whole fixture lands
     // in ONE batch — oneBatch forces that (the file source otherwise
@@ -155,10 +155,8 @@ object EventsStreaming {
     * engines (unix_micros / epoch_us) so ns-vs-µs precision can't
     * diverge.
     */
-  def funnelStages(events: DataFrame,
-                   steps: Seq[String] = Seq("view", "click", "purchase")): DataFrame = {
-    require(steps.nonEmpty, "funnel needs at least one step")
-    val stages = steps.scanLeft(Option.empty[DataFrame]) { (prevOpt, step) =>
+  def funnelStages(events: DataFrame): DataFrame = {
+    val stages = funnelSteps.scanLeft(Option.empty[DataFrame]) { (prevOpt, step) =>
       val hits = events.filter(col("event_type") === step)
         .select(col("user_id"), expr("unix_micros(ts)").as("us"))
       val qualified = prevOpt match {
@@ -169,11 +167,14 @@ object EventsStreaming {
       }
       Some(qualified.groupBy("user_id").agg(min(col("us")).as("t")))
     }.flatten
-    stages.zip(steps).zipWithIndex.map { case ((df, step), i) =>
+    stages.zip(funnelSteps).zipWithIndex.map { case ((df, step), i) =>
       df.agg(count(lit(1)).as("users"))
         .select(lit(i + 1).as("stage"), lit(step).as("step"), col("users"))
     }.reduce(_ unionByName _)
   }
+
+  /** The funnel's ordered stages. */
+  private val funnelSteps = Seq("view", "click", "purchase")
 
   /** Q93: cohort retention — distinct users active in week N after
     * their own first event. Two aggregates and one join: per-user
@@ -206,8 +207,7 @@ object EventsStreaming {
     * ordinary partial-aggregated groupBy, and top-k plans as
     * TakeOrderedAndProject. One shuffle on user_id, one on path.
     */
-  def topEventPaths(events: DataFrame, n: Int = 3,
-                    topK: Int = 10): DataFrame = {
+  def topEventPaths(events: DataFrame): DataFrame = {
     val perUser = events
       .select(col("user_id"),
         struct(expr("unix_micros(ts)").as("us"),
@@ -216,13 +216,13 @@ object EventsStreaming {
       .agg(expr("transform(array_sort(collect_list(e)), x -> x.event_type)")
         .as("types"))
     val paths = perUser
-      .filter(size(col("types")) >= n)
+      .filter(size(col("types")) >= 3)
       .select(explode(expr(
-        s"transform(sequence(0, size(types) - $n), i -> concat_ws('>', slice(types, i + 1, $n)))"))
+        "transform(sequence(0, size(types) - 3), i -> concat_ws('>', slice(types, i + 1, 3)))"))
         .as("path"))
     paths.groupBy("path").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("path").asc)
-      .limit(topK)
+      .limit(10)
   }
 
   /** Per-user funnel progress: the stage reached so far and the entry
@@ -244,13 +244,11 @@ object EventsStreaming {
     * counts and the query is held to batch q92's oracle.
     */
   def funnelStagesStreaming(spark: SparkSession, dir: String,
-                            steps: Seq[String] = Seq("view", "click", "purchase"),
-                            queryName: String = "graft_stream_funnel",
-                            statePartitions: Int = 8): DataFrame = {
+                            queryName: String = "graft_stream_funnel"): DataFrame = {
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     import ss.implicits._
-    val stepsLoc = steps
+    val stepsLoc = funnelSteps
     val src = graft.io.Tables.eventsStream(ss, dir, oneBatch = true)
       .selectExpr("user_id", "unix_micros(ts) as us", "event_id", "event_type")
       .as[(Long, Long, Long, String)]
@@ -277,7 +275,7 @@ object EventsStreaming {
     try q.awaitTermination() finally q.stop()
     val perUser = ss.table(queryName)
     perUser.cache(); perUser.count()
-    steps.zipWithIndex.map { case (step, i) =>
+    funnelSteps.zipWithIndex.map { case (step, i) =>
       perUser.filter(col("stage") >= i + 1)
         .agg(count(lit(1)).as("users"))
         .select(lit(i + 1).as("stage"), lit(step).as("step"), col("users"))
@@ -300,10 +298,9 @@ object EventsStreaming {
     * in checkpoint-durable state across batches.
     */
   def cdcApplyStreaming(spark: SparkSession, dir: String,
-                        queryName: String = "graft_stream_cdc",
-                        statePartitions: Int = 8): DataFrame = {
+                        queryName: String = "graft_stream_cdc"): DataFrame = {
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     import ss.implicits._
     // o_orderdate deliberately absent: the parquet scan prunes to the
     // narrow merge columns, streaming like batch.
@@ -357,9 +354,7 @@ object EventsStreaming {
     * the identical row set on a drained fixture.
     */
   def viewClickJoinStreaming(spark: SparkSession, dir: String,
-                             windowMinutes: Int = 30,
-                             queryName: String = "graft_stream_join",
-                             statePartitions: Int = 8): DataFrame = {
+                             queryName: String = "graft_stream_join"): DataFrame = {
     // a stream-stream join maintains FOUR state stores per shuffle
     // partition and commits each of them every micro-batch — that
     // fixed cost, not the data, dominates at moderate rates. Size the
@@ -367,7 +362,7 @@ object EventsStreaming {
     // batch session's default; newSession() scopes the setting to this
     // query (shared SparkContext, isolated SQL conf)
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     val src = graft.io.Tables.eventsStream(ss, dir)
     val views = src.filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
@@ -378,8 +373,8 @@ object EventsStreaming {
         col("ts").as("c_ts"))
       .withWatermark("c_ts", "1 hour")
     val joined = views.join(clicks,
-      expr(s"""v_user = c_user AND c_ts >= v_ts AND
-               c_ts < v_ts + interval $windowMinutes minutes"""))
+      expr("""v_user = c_user AND c_ts >= v_ts AND
+               c_ts < v_ts + interval 30 minutes"""))
       .select(col("view_id"), col("click_id"), col("v_user").as("user_id"),
         (expr("unix_micros(c_ts)") - expr("unix_micros(v_ts)")).as("delay_us"))
     val q = joined.writeStream.format("memory").queryName(queryName)
@@ -403,9 +398,8 @@ object EventsStreaming {
     * The oracle is the equivalent batch left join, which must produce
     * the identical row set on the drained fixture.
     */
-  def enrichEventsStreaming(spark: SparkSession, dir: String,
-                            queryName: String = "graft_q74_enrich",
-                            buckets: Int = 50): DataFrame = {
+  def enrichEventsStreaming(spark: SparkSession, dir: String): DataFrame = {
+    val (queryName, buckets) = ("graft_q74_enrich", 50)
     val ss = spark.newSession()
     val dim = graft.io.Tables.parquet(ss, dir, "orders")
       .groupBy((col("o_custkey") % buckets).as("bucket"))
@@ -442,12 +436,11 @@ object EventsStreaming {
     * Held to batch q60's oracle (same band geometry, same pair set).
     */
   def streamingNearDupCandidates(spark: SparkSession, dir: String,
-                                 queryName: String = "graft_stream_neardup",
-                                 statePartitions: Int = 8): DataFrame = {
+                                 queryName: String = "graft_stream_neardup"): DataFrame = {
     // isolated session: size the stateful shuffle for the pair-dedup
     // state stores (like q54), without touching the caller's conf
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     // CACHE the static side: a stream-static join re-evaluates the
     // static plan every micro-batch, and the band table is the
     // expensive half (minhash over the corpus). In production it is a
@@ -922,10 +915,10 @@ object EventsStreaming {
     * the final one-row frame, off the streaming plan.
     */
   def constraintAuditStreaming(spark: SparkSession, dir: String,
-                               queryName: String = "graft_stream_audit",
-                               statePartitions: Int = 1): DataFrame = {
+                               queryName: String = "graft_stream_audit"): DataFrame = {
+    // one row of counters: one state partition
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", "1")
     val src = graft.io.Tables.eventsStream(ss, dir)
     val agg = src.agg(
       count(lit(1)).as("n_checked"),
@@ -953,13 +946,12 @@ object EventsStreaming {
   }
 
   def hourlyByTypeStreaming(spark: SparkSession, dir: String,
-                            queryName: String = "graft_stream_hourly",
-                            statePartitions: Int = 8): DataFrame = {
+                            queryName: String = "graft_stream_hourly"): DataFrame = {
     // stateful shuffle sized for the group cardinality (windows ×
     // types), not the batch default — per-partition state commits are
     // the fixed cost of a micro-batch (see viewClickJoinStreaming)
     val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     val src = graft.io.Tables.eventsStream(ss, dir)
     val agg = windowAgg(src.withWatermark("ts", "1 hour"))
     val q = agg.writeStream

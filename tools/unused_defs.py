@@ -1,8 +1,11 @@
 #!/usr/bin/env python3
-"""List main-source `def`/`val` names that nothing else in the main source
-or in perfbench refers to. Comments are skipped; strings are kept, so a
-name spelled inside SQL text counts as a use. Overrides are skipped. Exits
-1 if any name is found that is not on the allow-list below.
+"""Two dead-code checks; exits 1 if either finds a name not on its allow-list.
+1. Main-source `def`/`val` names that nothing else in the main source or in
+   perfbench refers to. Comments are skipped; strings are kept, so a name
+   spelled inside SQL text counts as a use. Overrides are skipped.
+2. Defaulted parameters of the graft.ops and graft.streaming operators (the
+   mapreduce-wsi surface Jobs, PipeOps and MapReduceOps aside) that no call
+   in src/main, perfbench/src or src/test passes, by name or by position.
 Usage: python3 tools/unused_defs.py"""
 import pathlib, re, sys
 
@@ -23,7 +26,11 @@ ALLOW = {
     "plantedCrawlDelays",      # planted fixture, moves with the other planted generators
 }
 
-TOKEN = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"|//[^\n]*|/\*(?:.|\n)*?\*/')
+# Defaulted parameters kept although no call sets them ("def.param").
+ALLOW_PARAMS = set()
+PARAM_SCOPE = re.compile(r"^src/main/scala/graft/(ops|streaming)/(?!(Jobs|PipeOps|MapReduceOps)\.scala)")
+STRING = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"')
+TOKEN = re.compile(STRING.pattern + r'|//[^\n]*|/\*(?:.|\n)*?\*/')
 DEF = re.compile(r"(?<![\w.])(override\s+)?(?:(?:private|protected)(?:\[\w+\])?\s+)?"
                  r"(?:lazy\s+)?(?:def|val|var)\s+([A-Za-z_]\w*)")
 
@@ -33,10 +40,59 @@ def strip_comments(src):
                      else "\n" * m.group(0).count("\n") or " ", src)
 
 
+def skip(s, k):
+    """Index past the string literal or bracket group at s[k], else k + 1."""
+    depth = 0
+    while True:
+        m = STRING.match(s, k)
+        k, depth = (m.end(), depth) if m else (k + 1, depth + (s[k] in "([{") - (s[k] in ")]}"))
+        if depth <= 0:
+            return k
+
+
+def arg_lists(src, i):
+    """The (...) parameter or argument lists right after src[i], past a [..],
+    each as its top-level comma-separated items."""
+    lists, i = [], skip(src, i) if src.startswith("[", i) else i
+    while src.startswith("(", i):
+        items, k, i = [""], i + 1, skip(src, i)
+        while k < i - 1:
+            j = skip(src, k)
+            if src[k] == ",":
+                items.append("")
+            else:
+                items[-1] += src[k:j]
+            k = j
+        lists.append([a for a in items if a.strip()])
+    return lists
+
+
+def unset_params(files):
+    params, passed = [], set()  # params: (path, line, def, list, position, name)
+    for path, src in files.items():
+        for m in re.finditer(r"\bdef\s+(\w+)", src if PARAM_SCOPE.search(str(path.relative_to(ROOT))) else ""):
+            for g, plist in enumerate(arg_lists(src, m.end())):
+                for k, p in enumerate(plist):
+                    d = re.match(r"\s*(?:implicit\s+)?(\w+)\s*:(?:[^=]|=>)*?=(?!>)", p)
+                    if d:
+                        params.append((path, src.count("\n", 0, m.start()) + 1, m.group(1), g, k, d.group(1)))
+    names = "|".join(sorted({p[2] for p in params}))
+    for src in files.values():
+        for m in re.finditer(rf"(?<!def )(?<![\w$])({names})\b", src):
+            for g, alist in enumerate(arg_lists(src, m.end())):
+                named = [re.match(r"\s*(\w+)\s*=(?![=>])", a) for a in alist]
+                passed |= {(m.group(1), n.group(1)) for n in named if n}
+                passed |= {(m.group(1), g, i) for i in range(named.count(None))}
+    unset = [f"{p.relative_to(ROOT)}:{l}: {d}.{n}" for p, l, d, g, k, n in params
+             if not {(d, n), (d, g, k)} & passed and f"{d}.{n}" not in ALLOW_PARAMS]
+    print(f"{len(params)} defaulted operator parameters, {len(unset)} set by no call")
+    return unset
+
+
 def main():
     files = {p: strip_comments(p.read_text())
-             for d in SOURCES for p in sorted(d.rglob("*.scala"))}
-    text = "\n".join(files.values())
+             for d in SOURCES + [ROOT / "src/test"] for p in sorted(d.rglob("*.scala"))}
+    text = "\n".join(v for p, v in files.items() if not p.is_relative_to(ROOT / "src/test"))
     uses = {}
     for w in re.findall(r"[A-Za-z_]\w*", text):
         uses[w] = uses.get(w, 0) + 1
@@ -51,7 +107,9 @@ def main():
             line = src.count("\n", 0, m.start()) + 1
             found.append(f"{path.relative_to(ROOT)}:{line}: {name}")
     print("\n".join(found) if found else "no unused definitions")
-    return 1 if found else 0
+    unset = unset_params(files)
+    print("\n".join(unset), end="\n" if unset else "")
+    return 1 if found or unset else 0
 
 
 if __name__ == "__main__":
