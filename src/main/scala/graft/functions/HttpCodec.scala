@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -556,4 +558,18 @@ case class DeflateTransport(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** Column constructors for the HTTP and WARC wire expressions: the
+  * ones above, [[HttpFrame]] and [[WarcRecords]].
+  */
+object HttpFunctions {
+  def httpFrame(payload: Column): Column = column(HttpFrame(expression(payload)))
+  def warcRecords(warc: Column): Column = column(WarcRecords(expression(warc)))
+  def chunkedDecode(body: Column): Column = column(ChunkedDecode(expression(body)))
+  def inflateBody(body: Column, encoding: Column): Column =
+    column(InflateBody(expression(body), expression(encoding)))
+  def gzipTransport(s: Column): Column = column(GzipTransport(expression(s)))
+  def deflateTransport(s: Column): Column = column(DeflateTransport(expression(s)))
+  def zstdTransport(s: Column): Column = column(ZstdTransport(expression(s)))
 }

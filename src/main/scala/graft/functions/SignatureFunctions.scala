@@ -2,6 +2,8 @@ package graft.functions
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -293,4 +295,15 @@ case class WinnowFps(child: Expression, k: Int, w: Int)
       s"${ev.value} = graft.functions.SignatureImpl.winnowFps($c, $k, $w);")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** Column constructors for the signature expressions above. */
+object SignatureFunctions {
+  def minhashBands(tokens: Column, numHashes: Int, bandSize: Int,
+                   shingleSize: Int): Column =
+    column(MinhashBands(expression(tokens), numHashes, bandSize, shingleSize))
+  def simhash60(tokens: Column, bits: Int): Column =
+    column(Simhash60(expression(tokens), bits))
+  def winnowFps(tokens: Column, k: Int, w: Int): Column =
+    column(WinnowFps(expression(tokens), k, w))
 }

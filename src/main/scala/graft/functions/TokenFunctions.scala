@@ -244,9 +244,7 @@ case class TokenChars(child: Expression) extends UnaryExpression with ExpectsInp
     copy(child = newChild)
 }
 
-/** Column builders over the expressions above — the form the ops
-  * modules use, so no call site needs the SQL function registry.
-  */
+/** Column constructors for the token expressions above. */
 object TokenFunctions {
   def wsTokens(text: Column): Column = column(WsTokens(expression(text)))
   def nonBlankLines(text: Column): Column = column(NonBlankLines(expression(text)))

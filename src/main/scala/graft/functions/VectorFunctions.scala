@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 
@@ -349,104 +348,15 @@ case class L2QArgmin(left: Expression, right: Expression, scaleBits: Int)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration of graft's native functions — both as a runtime helper
-  * and as a [[SparkSessionExtensions]] hook
-  * (`spark.sql.extensions=graft.functions.GraftSparkExtensions`).
-  */
-object GraftFunctions {
-  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (args: Seq[Expression]) => VecDot(args(0), args(1))),
-    (FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (args: Seq[Expression]) => RollingHash(args(0))),
-    (FunctionIdentifier("chunked_decode"),
-      new ExpressionInfo(classOf[ChunkedDecode].getName, "chunked_decode"),
-      (args: Seq[Expression]) => ChunkedDecode(args(0))),
-    (FunctionIdentifier("inflate_body"),
-      new ExpressionInfo(classOf[InflateBody].getName, "inflate_body"),
-      (args: Seq[Expression]) => InflateBody(args(0), args(1))),
-    (FunctionIdentifier("http_frame"),
-      new ExpressionInfo(classOf[HttpFrame].getName, "http_frame"),
-      (args: Seq[Expression]) => HttpFrame(args(0))),
-    (FunctionIdentifier("warc_records"),
-      new ExpressionInfo(classOf[WarcRecords].getName, "warc_records"),
-      (args: Seq[Expression]) => WarcRecords(args(0))),
-    (FunctionIdentifier("gzip_transport"),
-      new ExpressionInfo(classOf[GzipTransport].getName, "gzip_transport"),
-      (args: Seq[Expression]) => GzipTransport(args(0))),
-    (FunctionIdentifier("deflate_transport"),
-      new ExpressionInfo(classOf[DeflateTransport].getName, "deflate_transport"),
-      (args: Seq[Expression]) => DeflateTransport(args(0))),
-    (FunctionIdentifier("zstd_transport"),
-      new ExpressionInfo(classOf[ZstdTransport].getName, "zstd_transport"),
-      (args: Seq[Expression]) => ZstdTransport(args(0))),
-    (FunctionIdentifier("remove_dots"),
-      new ExpressionInfo(classOf[RemoveDots].getName, "remove_dots"),
-      (args: Seq[Expression]) => RemoveDots(args(0))),
-    (FunctionIdentifier("canonical_url"),
-      new ExpressionInfo(classOf[CanonicalUrl].getName, "canonical_url"),
-      (args: Seq[Expression]) => CanonicalUrl(args(0))),
-    (FunctionIdentifier("resolved_url"),
-      new ExpressionInfo(classOf[ResolvedUrl].getName, "resolved_url"),
-      (args: Seq[Expression]) => ResolvedUrl(args(0), args(1), args(2))),
-    (FunctionIdentifier("url_path"),
-      new ExpressionInfo(classOf[UrlPath].getName, "url_path"),
-      (args: Seq[Expression]) => UrlPath(args(0))),
-    (FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(classOf[MinhashBands].getName, "minhash_bands"),
-      (args: Seq[Expression]) => MinhashBands(args(0),
-        GraftFunctions.intLit(args(1), "minhash_bands.numHashes"),
-        GraftFunctions.intLit(args(2), "minhash_bands.bandSize"),
-        GraftFunctions.intLit(args(3), "minhash_bands.shingleSize"))),
-    (FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[Simhash60].getName, "simhash60"),
-      (args: Seq[Expression]) => Simhash60(args(0),
-        GraftFunctions.intLit(args(1), "simhash60.bits"))),
-    (FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
-      (args: Seq[Expression]) => WinnowFps(args(0),
-        GraftFunctions.intLit(args(1), "winnow_fps.k"),
-        GraftFunctions.intLit(args(2), "winnow_fps.w"))),
-    (FunctionIdentifier("vec_quantize_fx"),
-      new ExpressionInfo(classOf[VecQuantizeFx].getName, "vec_quantize_fx"),
-      (args: Seq[Expression]) => VecQuantizeFx(args(0),
-        GraftFunctions.intLit(args(1), "vec_quantize_fx.scaleBits"))),
-    (FunctionIdentifier("vec_l2q"),
-      new ExpressionInfo(classOf[VecL2Q].getName, "vec_l2q"),
-      (args: Seq[Expression]) => VecL2Q(args(0), args(1),
-        GraftFunctions.intLit(args(2), "vec_l2q.scaleBits"))),
-    (FunctionIdentifier("l2q_argmin"),
-      new ExpressionInfo(classOf[L2QArgmin].getName, "l2q_argmin"),
-      (args: Seq[Expression]) => L2QArgmin(args(0), args(1),
-        GraftFunctions.intLit(args(2), "l2q_argmin.scaleBits"))))
-
-  /** Geometry arguments of the signature functions must be integer
-    * LITERALS — they shape the expression, they are not data.
-    */
-  private[functions] def intLit(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
-  }
-
-  /** Idempotent in-session registration. */
-  def register(spark: SparkSession): Unit = all.foreach { case (id, info, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-  }
-}
-
-/** `--conf spark.sql.extensions=graft.functions.GraftSparkExtensions`
-  * installs graft's native functions AND its plan-level extension (the
-  * as-of join: strategy + pruning rule) into every session built with
-  * the conf; [[org.apache.spark.sql.GraftPlanBridge.installPlanning]]
-  * is the runtime equivalent for sessions that already exist.
-  */
-class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach(ext.injectFunction)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => graft.plans.PruneAsOfJoin)
-  }
+/** Column constructors for the expressions above. */
+object VectorFunctions {
+  def vecDot(a: Column, b: Column): Column =
+    column(VecDot(expression(a), expression(b)))
+  def rollingHash(text: Column): Column = column(RollingHash(expression(text)))
+  def vecQuantizeFx(embedding: Column, scaleBits: Int): Column =
+    column(VecQuantizeFx(expression(embedding), scaleBits))
+  def vecL2Q(embedding: Column, sq: Column, scaleBits: Int): Column =
+    column(VecL2Q(expression(embedding), expression(sq), scaleBits))
+  def l2qArgmin(embedding: Column, seeds: Column, scaleBits: Int): Column =
+    column(L2QArgmin(expression(embedding), expression(seeds), scaleBits))
 }

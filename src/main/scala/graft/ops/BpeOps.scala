@@ -271,7 +271,7 @@ object BpeOps {
     * refresh algebra exact (stored counts + batch counts = counts of
     * the union, bit for bit).
     */
-  private[graft] def wordCountsDf(documents: DataFrame, textCol: String,
+  private[graft] def wordCountsDf(documents: DataFrame,
                                   pretok: Boolean): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
@@ -279,11 +279,11 @@ object BpeOps {
       if (pretok)
         // the pretokenizer is Scala (Unicode char classes) — run it in
         // the same distributed pass via flatMap; still one partial agg
-        documents.select(col(textCol).cast("string")).as[String]
+        documents.select(col("text").cast("string")).as[String]
           .flatMap(t => units(t, pretok = true)).toDF("w")
       else
         documents.select(
-          explode(graft.functions.TokenFunctions.wsTokens(col(textCol))).as("w"))
+          explode(graft.functions.TokenFunctions.wsTokens(col("text"))).as("w"))
     unitsDf.groupBy("w").agg(count(lit(1)).as("cnt"))
   }
 
@@ -315,18 +315,19 @@ object BpeOps {
       .as[(String, Long)].collect().toSeq
   }
 
-  private[graft] def fitDictionary(documents: DataFrame, maxWords: Int,
-                                   textCol: String,
+  /** The trainer dictionary's size: the top 2^16 words by count. */
+  private val maxWords = 1 << 16
+
+  private[graft] def fitDictionary(documents: DataFrame,
                                    pretok: Boolean = false): Seq[(String, Long)] =
-    topWords(wordCountsDf(documents, textCol, pretok), maxWords)
+    topWords(wordCountsDf(documents, pretok), maxWords)
 
   def fitBpe(documents: DataFrame, nMerges: Int = 50,
              pretok: Boolean = false): DataFrame = {
     require(nMerges >= 0, s"nMerges must be non-negative: $nMerges")
     val spark = documents.sparkSession
     import spark.implicits._
-    fitFromCounts(fitDictionary(documents, 1 << 16, "text", pretok),
-        nMerges)
+    fitFromCounts(fitDictionary(documents, pretok), nMerges)
       .toDF("merge_rank", "lhs", "rhs", "freq")
   }
 
@@ -402,7 +403,6 @@ object BpeOps {
     *        never merged must still get ids
     */
   def encodeStats(documents: DataFrame, merges: DataFrame,
-                  textCol: String = "text",
                   alphabetOpt: Option[Seq[String]] = None,
                   pretok: Boolean = false): DataFrame = {
     val spark = documents.sparkSession
@@ -413,7 +413,7 @@ object BpeOps {
     val vocab = vocabOf(alphabet, ms)
     val ranks = ms.map(m => (m.lhs, m.rhs) -> m.merge_rank).toMap
     val bc = spark.sparkContext.broadcast((ranks, vocab))
-    documents.select(col("doc_id").cast("long"), col(textCol).cast("string"))
+    documents.select(col("doc_id").cast("long"), col("text").cast("string"))
       .as[(Long, String)]
       .mapPartitions { it =>
         val (rk, vb) = bc.value
@@ -492,15 +492,15 @@ object BpeOps {
   /** Q148: BPE fit on the planted corpus — the learned merge table,
     * oracle-checked row for row (rank, pair, frequency).
     */
-  def plantedFit(documents: DataFrame, nMerges: Int = 12): DataFrame =
-    fitBpe(plantedCorpus(documents), nMerges)
+  def plantedFit(documents: DataFrame): DataFrame =
+    fitBpe(plantedCorpus(documents), 12)
 
   /** Q149: BPE encode on the planted corpus under the q148 merges —
     * per-document (n_tokens, n_unk, ids_sum), oracle-pinned.
     */
-  def plantedEncode(documents: DataFrame, nMerges: Int = 12): DataFrame = {
+  def plantedEncode(documents: DataFrame): DataFrame = {
     val planted = plantedCorpus(documents)
-    encodeStats(planted, fitBpe(planted, nMerges))
+    encodeStats(planted, fitBpe(planted, 12))
   }
 
   /** Subword token counts for downstream composition (packing,
@@ -601,7 +601,6 @@ object BpeOps {
               pretok: Boolean = false): Unit = {
     require(nMerges >= 0, s"nMerges must be non-negative: $nMerges")
     val spark = documents.sparkSession
-    val maxWords = 1 << 16
     // the PRETOKENIZER SETTING is part of the model: an encode under a
     // different pretokenization is a different token stream, so the
     // flag rides the artifact and encodeWithArtifact obeys the stored
@@ -612,7 +611,7 @@ object BpeOps {
       // the FULL count table rides the artifact as its sufficient
       // statistic: a later refresh (q183) merges batch counts into it
       // and re-fits without ever re-reading the original corpus
-      val counts = wordCountsDf(documents, "text", pretok)
+      val counts = wordCountsDf(documents, pretok)
         .localCheckpoint(eager = true)
       counts.write.parquet(at("counts"))
       val dict = topWords(counts, maxWords)
@@ -707,7 +706,7 @@ object BpeOps {
     // one pass over the batch: the counts feed both the digest and the
     // merge (localCheckpoint so the token and the merged table cannot
     // disagree about what the batch contained)
-    val batchCounts = wordCountsDf(batch, "text", pretok)
+    val batchCounts = wordCountsDf(batch, pretok)
       .localCheckpoint(eager = true)
     val token = batchId.getOrElse(batchCounts
       .agg(expr("coalesce(bit_xor(xxhash64(w, cnt)), 0L)"))
@@ -748,7 +747,7 @@ object BpeOps {
     val alphabet = loadBpeAlphabet(spark, scope, name)
     import spark.implicits._
     val full = fitFromCounts(
-        topWords(wordCountsDf(corpusPlusBatch, "text", pretok),
+        topWords(wordCountsDf(corpusPlusBatch, pretok),
           maxWords, Some(alphabet)), nMerges)
       .toDF("merge_rank", "lhs", "rhs", "freq")
     val stored = loadBpeMerges(spark, scope, name)
@@ -769,7 +768,7 @@ object BpeOps {
                          name: String): DataFrame = {
     val spark = documents.sparkSession
     val pretok = graft.io.Artifact.read(spark, scope, name).int("pretok") == 1
-    encodeStats(documents, loadBpeMerges(spark, scope, name), "text",
+    encodeStats(documents, loadBpeMerges(spark, scope, name),
       Some(loadBpeAlphabet(spark, scope, name)), pretok)
   }
 }

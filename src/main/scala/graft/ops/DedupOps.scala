@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.SignatureFunctions
+
 /** Deduplication operators for the training-data pipeline surface
   * (SURVEY §2.2 Q12): exact, MinHash+LSH (Broder 1997, "On the
   * resemblance and containment of documents"), SimHash (Charikar 2002,
@@ -73,11 +75,10 @@ object DedupOps {
     // needed an exchange: this removes one corpus-wide HashAggregate +
     // Exchange per invocation AND the per-shingle hex/string churn
     // (one reused digest, byte-compared minima).
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     par(documents)
       .withColumn("w", tokens)
       .select(col("doc_id"), explode(
-        expr(s"minhash_bands(w, $numHashes, $bandSize, $shingleSize)"))
+        SignatureFunctions.minhashBands(col("w"), numHashes, bandSize, shingleSize))
         .as("band"))
       .select(col("doc_id"), col("band.b").as("b"), col("band.bh").as("bh"))
   }
@@ -99,11 +100,10 @@ object DedupOps {
     // two paths can no longer diverge because they ARE one computation
     // (the explode of an empty band array drops shingle-less docs,
     // replacing the explicit size(sarr) > 0 filter bit-identically).
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents
       .withColumn("w", tokens)
-      .select(col("doc_id"), explode(expr("minhash_bands(w, 12, 2, 3)"))
-        .as("band"))
+      .select(col("doc_id"),
+        explode(SignatureFunctions.minhashBands(col("w"), 12, 2, 3)).as("band"))
       .select(col("doc_id"), col("band.b").as("b"), col("band.bh").as("bh"))
   }
 
@@ -150,12 +150,11 @@ object DedupOps {
     * dedup upstream is q59's job).
     */
   def saveBands(documents: DataFrame, scope: graft.core.Scope,
-                name: String, numHashes: Int = 12, bandSize: Int = 2,
-                shingleSize: Int = 3): Unit = {
+                name: String, numHashes: Int = 12): Unit = {
     graft.io.Artifact.save(documents.sparkSession, scope, name,
-        "num_hashes" -> numHashes, "band_size" -> bandSize,
-        "shingle_size" -> shingleSize) { at =>
-      minhashBands(documents, numHashes, bandSize, shingleSize)
+        "num_hashes" -> numHashes, "band_size" -> 2,
+        "shingle_size" -> 3) { at =>
+      minhashBands(documents, numHashes, 2, 3)
         .write.partitionBy("b").parquet(at("rows"))
     }
   }
@@ -316,12 +315,11 @@ object DedupOps {
     // exchanged the corpus only to add up votes that all came from
     // one input row). Token-less docs emitted no vote row there and
     // are filtered here — same absent-row contract.
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     par(documents)
       .withColumn("w", tokens)
       .filter(size(col("w")) > 0)
       .select(col("doc_id"),
-        expr(s"simhash60(w, $simhashBits)").as("simhash"))
+        SignatureFunctions.simhash60(col("w"), simhashBits).as("simhash"))
   }
 
   /** Each doc's 4 (band index, 15-bit band value) rows — the bucketing
@@ -415,11 +413,10 @@ object DedupOps {
     // (position × window) and is pinned equivalent in
     // SignatureFunctionsSpec. The explode of an empty fingerprint
     // array drops too-short docs exactly like the size filter did.
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     par(documents)
       .withColumn("w", tokens)
       .select(col("doc_id"),
-        explode(expr(s"winnow_fps(w, $k, $w)")).as("fp"))
+        explode(SignatureFunctions.winnowFps(col("w"), k, w)).as("fp"))
   }
 
   /** Q85b: passage-level duplication candidates — pairs of documents

@@ -1,8 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
+import graft.functions.HttpFunctions
 import graft.ops.OpsUtil.par
 
 /** HTML/crawl ingestion — the extraction stages a web-crawl training
@@ -324,7 +326,7 @@ object HtmlOps {
     * callers (the fetch page's directory comes from its target URI).
     */
   def urlPath(url: Column): Column =
-    org.apache.spark.sql.GraftPlanBridge.column(graft.functions.UrlPath(org.apache.spark.sql.GraftPlanBridge.expression(url)))
+    column(graft.functions.UrlPath(expression(url)))
 
   /** RFC 3986 §5.2.4 dot-segment removal as a BOUNDED regex
     * fix-point ([[graft.functions.RemoveDotsImpl]] — ONE native
@@ -346,9 +348,7 @@ object HtmlOps {
     * node keeps every URL-touching plan small.
     */
   def removeDotSegments(path: Column): Column =
-    org.apache.spark.sql.GraftPlanBridge.column(
-      graft.functions.RemoveDots(
-        org.apache.spark.sql.GraftPlanBridge.expression(path)))
+    column(graft.functions.RemoveDots(expression(path)))
 
   /** The canonical-URL key: lowercased host minus a leading `www.`
     * and any explicit port, concatenated with the path minus trailing
@@ -371,7 +371,7 @@ object HtmlOps {
     // inlines projection aliases into consumers, and the frontier's
     // resolve → trap → canonicalize → re-canonicalize stack
     // multiplied the regex trees into minutes of analysis.
-    org.apache.spark.sql.GraftPlanBridge.column(graft.functions.CanonicalUrl(org.apache.spark.sql.GraftPlanBridge.expression(url)))
+    column(graft.functions.CanonicalUrl(expression(url)))
 
   /** Q189: the CONSERVATIVE canonical key — the documented trade at
     * [[canonicalUrl]], now available as the knob a production crawl
@@ -758,11 +758,10 @@ object HtmlOps {
     * `warcIngest(gunzipWarcChunks(gz))` and the whole front door
     * stays scan-bound.
     */
-  def gunzipWarcChunks(chunks: DataFrame,
-                       gzCol: String = "warc_gz"): DataFrame = {
+  def gunzipWarcChunks(chunks: DataFrame): DataFrame = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    chunks.select(col("doc_id"), col(gzCol)).as[(Long, Array[Byte])]
+    chunks.select(col("doc_id"), col("warc_gz")).as[(Long, Array[Byte])]
       .mapPartitions { it =>
         // STRUCTURAL corruption detection
         // ([[graft.functions.HttpCodec.inflateMembers]]): members are
@@ -808,7 +807,6 @@ object HtmlOps {
     * payload arrives verbatim.
     */
   def plantedEncodedMessages(documents: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     val crlf = "\r\n"
     plantedHtmlCorpus(documents)
       .select(col("doc_id"), concat(col("html"),
@@ -828,9 +826,9 @@ object HtmlOps {
         // contract of the structural codings)
         when(col("doc_id") % 17 === 3, col("b0"))
           .when(col("doc_id") % 17 === 9, col("b0"))
-          .when(col("enc") === "zstd", expr("zstd_transport(b0)"))
-          .when(col("enc") === "gzip", expr("gzip_transport(b0)"))
-          .when(col("enc") === "deflate", expr("deflate_transport(b0)"))
+          .when(col("enc") === "zstd", HttpFunctions.zstdTransport(col("b0")))
+          .when(col("enc") === "gzip", HttpFunctions.gzipTransport(col("b0")))
+          .when(col("enc") === "deflate", HttpFunctions.deflateTransport(col("b0")))
           .otherwise(col("b0")))
       .select(col("doc_id"), concat(
         lit("HTTP/1.1 200 OK" + crlf),
@@ -882,7 +880,6 @@ object HtmlOps {
     */
   private[graft] def warcFrame(chunks: DataFrame,
                                warcCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(chunks.sparkSession)
     // ISO 28500 named fields are case-insensitive and the colon's
     // whitespace is optional — same treatment as the HTTP header
     // block and the strict walk's Content-Length lookup, so a
@@ -895,10 +892,7 @@ object HtmlOps {
     // (round-14 Missing #2, closed); structurally unframeable chunks
     // keep the exact split behavior, so every malformed leg stays a
     // length_ok verdict
-    // backquoted (with embedded backticks doubled): warcCol is a
-    // caller-supplied COLUMN NAME, not a SQL fragment
-    val recs = expr(
-      s"warc_records(coalesce(`${warcCol.replace("`", "``")}`, ''))")
+    val recs = HttpFunctions.warcRecords(coalesce(col(warcCol), lit("")))
     val body = regexp_replace(
       regexp_extract(col("rec"), "(?s)\r\n\r\n(.*)$", 1),
       s"(\r\n)+$$", "")
@@ -997,7 +991,6 @@ object HtmlOps {
     * exchanges, scan-bound at 100 TB like the framing itself.
     */
   private[graft] def httpFrame(framed: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(framed.sparkSession)
     // ONE fused expression, not a staged alias chain: round 14 built
     // this as body_raw → body_framed → body projections and the
     // planner's alias inlining duplicated the regex+inflate trees
@@ -1008,7 +1001,7 @@ object HtmlOps {
     // semantics are the literal transcription, field by field
     // ([[graft.functions.HttpFrameImpl]]), so the DuckDB mirrors hold
     // unchanged.
-    val h = expr("http_frame(payload)")
+    val h = HttpFunctions.httpFrame(col("payload"))
     framed.select(col("*"),
       h.getField("http_status").as("http_status"),
       h.getField("mime").as("mime"),
@@ -1033,7 +1026,6 @@ object HtmlOps {
     * fixture. Never called from an operator.
     */
   private[graft] def httpFrameStaged(framed: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(framed.sparkSession)
     val pay = col("payload")
     val isHttp = pay.rlike("^HTTP/1\\.[01] [0-9]{3}")
     // the header BLOCK: everything before the first blank line — and
@@ -1122,14 +1114,12 @@ object HtmlOps {
       // or mojibake is forever). Non-HTTP payloads skip the wire
       // stages entirely (no headers to trust).
       .withColumn("body_framed",
-        when(!isHttp, col("body_raw")).otherwise(expr(
-          """inflate_body(
-            |  case when transfer_encoding in ('', 'identity')
-            |         then body_raw
-            |       when transfer_encoding = 'chunked'
-            |         then chunked_decode(body_raw)
-            |       else cast(null as string) end,
-            |  content_encoding)""".stripMargin)))
+        when(!isHttp, col("body_raw")).otherwise(HttpFunctions.inflateBody(
+          when(col("transfer_encoding").isin("", "identity"), col("body_raw"))
+            .when(col("transfer_encoding") === "chunked",
+              HttpFunctions.chunkedDecode(col("body_raw")))
+            .otherwise(lit(null).cast("string")),
+          col("content_encoding"))))
       // the wire-decode VERDICT: false ⟺ a declared coding could not
       // be reversed (truncated chunk, lying gzip trailer, br/zstd…) —
       // the record framed and the status parsed, but the BODY is not
@@ -2322,7 +2312,6 @@ object HtmlOps {
     * Pages carry `url`, `html` and `fetched_at_s`.
     */
   def exportWarc(pages: DataFrame, gzip: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(pages.sparkSession)
     val crlf = "\r\n"
     val payload = concat(
       lit("HTTP/1.1 200 OK" + crlf),
@@ -2346,7 +2335,7 @@ object HtmlOps {
       // contract, exactly as it is outside every planted gzip chain
       pages.select(col("doc_id"), rec.as("rec"))
         .select(col("doc_id"),
-          encode(expr("gzip_transport(rec)"), "ISO-8859-1")
+          encode(HttpFunctions.gzipTransport(col("rec")), "ISO-8859-1")
             .as("warc_gz"))
     else pages.select(col("doc_id"), rec.as("warc"))
   }
@@ -2424,7 +2413,6 @@ object HtmlOps {
     * of xml/xml_gz per row.
     */
   def plantedSitemapTree(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val flat = plantedSitemaps(spark)
       .withColumn("k", regexp_extract(col("domain"), "s([0-9]+)", 1)
         .cast("int"))
@@ -2463,26 +2451,25 @@ object HtmlOps {
       concat(lit("https://"), col("domain"), lit("/sitemap-a.xml.gz"))
         .as("url"),
       lit(null).cast("string").as("xml"),
-      encode(expr("gzip_transport(xml_a)"), "ISO-8859-1").as("xml_gz"))
+      encode(HttpFunctions.gzipTransport(col("xml_a")), "ISO-8859-1").as("xml_gz"))
     val childB = halves.select(
       concat(lit("https://"), col("domain"), lit("/sitemap-b.xml.gz"))
         .as("url"),
       lit(null).cast("string").as("xml"),
-      encode(expr("gzip_transport(xml_b)"), "ISO-8859-1").as("xml_gz"))
+      encode(HttpFunctions.gzipTransport(col("xml_b")), "ISO-8859-1").as("xml_gz"))
     // the s8 mid-tree index: gzipped like any member, pointing DOWN
     // at sitemap-a and BACK at the root (the cycle leg)
     val childIdx = flat.filter(col("k") === 8).select(
       concat(lit("https://"), col("domain"), lit("/sitemap-idx1.xml.gz"))
         .as("url"),
       lit(null).cast("string").as("xml"),
-      encode(expr(
-        """gzip_transport(concat(
-          |  '<?xml version="1.0"?><sitemapindex>',
-          |  '<sitemap><loc>https://', domain,
-          |  '/sitemap-a.xml.gz</loc></sitemap>',
-          |  '<sitemap><loc>https://', domain,
-          |  '/sitemap.xml</loc></sitemap>',
-          |  '</sitemapindex>'))""".stripMargin), "ISO-8859-1")
+      encode(HttpFunctions.gzipTransport(concat(
+        lit("<?xml version=\"1.0\"?><sitemapindex>"),
+        lit("<sitemap><loc>https://"), col("domain"),
+        lit("/sitemap-a.xml.gz</loc></sitemap>"),
+        lit("<sitemap><loc>https://"), col("domain"),
+        lit("/sitemap.xml</loc></sitemap>"),
+        lit("</sitemapindex>"))), "ISO-8859-1")
         .as("xml_gz"))
     plain.unionByName(index).unionByName(childA).unionByName(childB)
       .unionByName(childIdx)
@@ -2525,11 +2512,10 @@ object HtmlOps {
                        name: String, ranks: DataFrame, rules: DataFrame,
                        maxDepth: Int = 3,
                        rootUrls: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val flat = docs.select(col("url"),
       when(col("xml").isNotNull, col("xml"))
-        .otherwise(expr(
-          "inflate_body(decode(xml_gz, 'ISO-8859-1'), 'gzip')"))
+        .otherwise(HttpFunctions.inflateBody(
+          decode(col("xml_gz"), "ISO-8859-1"), lit("gzip")))
         .as("xml_all"))
       // cached, not checkpointed: every wave joins against it, but a
       // sitemap table is vocabulary-sized by nature — the lazy cache
@@ -2897,7 +2883,7 @@ object HtmlOps {
     * shuffle on top of the wave that is being scheduled.
     */
   def scheduleWave(wave: DataFrame, delays: DataFrame): DataFrame =
-    scheduleWaveValidated(wave, checkedDelays(delays)._1, 30L)
+    scheduleWaveValidated(wave, checkedDelays(delays)._1)
 
   /** The delays GUARDS alone — cast + duplicate-domain +
     * non-positive checks — returning the still-DISTRIBUTED table:
@@ -2980,13 +2966,12 @@ object HtmlOps {
     * original semantics.
     */
   private[graft] def scheduleWaveValidated(wave: DataFrame, d: DataFrame,
-                                           defaultDelayS: Long,
                                            startOffsets: Option[DataFrame] =
                                              None): DataFrame = {
-    require(defaultDelayS > 0, s"defaultDelayS must be positive: $defaultDelayS")
+    // a domain with no delay row waits 30 s between fetches
     val based = wave
       .join(broadcast(d), Seq("domain"), "left")
-      .withColumn("delay_s", coalesce(col("delay_s"), lit(defaultDelayS)))
+      .withColumn("delay_s", coalesce(col("delay_s"), lit(30L)))
     val withStart = startOffsets match {
       case Some(st) => based
         .join(broadcast(st.select(col("domain"),
@@ -3138,7 +3123,7 @@ object HtmlOps {
 
   /** Q209's sibling for the VERSIONED TINY-STATE artifacts
     * (`schedstate`/`robotsstate`): drop every superseded `wave=<N`
-    * directory, keeping the latest `keepLatest`. Wave N's state folds
+    * directory, keeping only the latest. Wave N's state folds
     * everything earlier (the [[saveWaveState]] contract), so older
     * dirs are replay inputs only for batches the stream's checkpoint
     * has already committed past — prune at the compaction EPOCH, when
@@ -3149,8 +3134,7 @@ object HtmlOps {
     * state). Returns the pruned wave ids.
     */
   def pruneWaveStates(spark: org.apache.spark.sql.SparkSession,
-                      dir: String, keepLatest: Int = 1): Seq[Long] = {
-    require(keepLatest >= 1, s"keepLatest must be >= 1: $keepLatest")
+                      dir: String): Seq[Long] = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Seq.empty
@@ -3158,7 +3142,7 @@ object HtmlOps {
       .filter(_.startsWith("wave="))
       .flatMap(n => scala.util.Try(n.stripPrefix("wave=").toLong).toOption)
       .sorted
-    val drop = waves.dropRight(keepLatest)
+    val drop = waves.dropRight(1)
     drop.foreach(w => graft.core.Scopes.deletePath(fs,
       new org.apache.hadoop.fs.Path(s"$dir/wave=$w")))
     drop
@@ -3811,11 +3795,9 @@ object HtmlOps {
     */
   private[graft] def warcRevisits(chunks: DataFrame,
                                   warcCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(chunks.sparkSession)
     def header(rec: Column, name: String): Column =
       regexp_extract(rec, s"(?m)^(?i:$name):[ \t]*([^\r\n]+)", 1)
-    val recs = expr(
-      s"warc_records(coalesce(`${warcCol.replace("`", "``")}`, ''))")
+    val recs = HttpFunctions.warcRecords(coalesce(col(warcCol), lit("")))
     chunks
       .select(col("doc_id"), recs.as("recs"))
       .select(col("doc_id"), explode(filter(col("recs"),
@@ -4158,8 +4140,8 @@ object HtmlOps {
     resolvedUrl(url, host, lit("/"))
 
   def resolvedUrl(url: Column, host: Column, basePath: Column): Column =
-    org.apache.spark.sql.GraftPlanBridge.column(graft.functions.ResolvedUrl(org.apache.spark.sql.GraftPlanBridge.expression(url),
-      org.apache.spark.sql.GraftPlanBridge.expression(host), org.apache.spark.sql.GraftPlanBridge.expression(basePath)))
+    column(graft.functions.ResolvedUrl(expression(url), expression(host),
+      expression(basePath)))
 
   /** Q216's CRAWL-TRAP verdict, a pure per-row expression pair: a URL
     * longer than `maxLen` characters, or whose path repeats segments
@@ -4175,8 +4157,7 @@ object HtmlOps {
     */
   def urlTrapped(url: Column, maxLen: Int = 2048,
                  maxDupSegs: Int = 3): Column =
-    org.apache.spark.sql.GraftPlanBridge.column(graft.functions.UrlTrapped(org.apache.spark.sql.GraftPlanBridge.expression(url),
-      maxLen, maxDupSegs))
+    column(graft.functions.UrlTrapped(expression(url), maxLen, maxDupSegs))
 
   /** Q216's fixture: link-shaped URLs with planted traps — `%7 == 0`
     * cycles one segment six deep (`/t/t/t/t/t/t/x`), `%7 == 1`
@@ -4390,11 +4371,8 @@ object HtmlOps {
   }
 
   /** [[graft.functions.RobotsMatch]] through the Column DSL. */
-  private def robotsMatch(target: Column, pattern: Column): Column =
-    org.apache.spark.sql.GraftPlanBridge.column(
-      graft.functions.RobotsMatch(
-        org.apache.spark.sql.GraftPlanBridge.expression(target),
-        org.apache.spark.sql.GraftPlanBridge.expression(pattern)))
+  private[graft] def robotsMatch(target: Column, pattern: Column): Column =
+    column(graft.functions.RobotsMatch(expression(target), expression(pattern)))
 
   /** Q-url-canonical-dedup: per-URL canonical key, duplicate-group
     * size, and the keep verdict (lowest doc_id per key survives —

@@ -339,8 +339,8 @@ object MultimodalOps {
 
   /** Feature extraction (the embed-the-image step): a REAL decoded-
     * raster feature — the per-channel color histogram of the decoded
-    * pixels (`bins` bins per R/G/B channel, vector layout
-    * `channel * bins + (value >> log2(256/bins))`, dim = 3·bins).
+    * pixels (8 bins per R/G/B channel, vector layout
+    * `channel * 8 + (value >> 5)`, dim = 24).
     *
     * Counts are emitted RAW (integers carried as floats — exact below
     * 2^24 pixels/bin): a SQL oracle can predict them for a
@@ -354,10 +354,9 @@ object MultimodalOps {
     * partition and the output row is the narrow `Array[Float]`
     * embedding shape the similarity operators consume directly.
     */
-  def featureExtract(media: Dataset[MediaRecord], bins: Int = 8): Dataset[MediaFeatures] = {
-    require(bins > 0 && bins <= 256 && Integer.bitCount(bins) == 1,
-      s"bins must be a power of two in [1,256], got $bins")
-    val shift = Integer.numberOfTrailingZeros(256 / bins)
+  def featureExtract(media: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
+    // 8 bins per channel: a sample's bin is its top three bits
+    val (bins, shift) = (8, 5)
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
@@ -490,7 +489,7 @@ object MultimodalOps {
 
   /** REAL frame sampling over a multi-frame container: open the
     * payload with the actual imageio reader, count the frames, decode
-    * `min(maxFrames, n)` evenly-spaced ones (frame k·n/s for sample
+    * `min(4, n)` evenly-spaced ones (frame k·n/s for sample
     * k — the oracle-predictable spacing rule), and emit each sampled
     * frame's recovered dimensions. Unreadable payloads emit nothing
     * (corrupt media is data, not an outage). This is the shape a video
@@ -498,14 +497,14 @@ object MultimodalOps {
     * opened once per payload, and only the narrow per-frame metadata
     * rows leave the stage.
     */
-  def frameSampleImages(media: Dataset[MediaRecord], maxFrames: Int = 4): DataFrame = {
+  def frameSampleImages(media: Dataset[MediaRecord]): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
       it.flatMap { r =>
         withImageReader(r.media) { reader =>
           val n = reader.getNumImages(true)
-          val s = math.min(maxFrames, n)
+          val s = math.min(4, n)
           Some((0 until s).flatMap { k =>
             val fi = k * n / s
             // same bomb guard as readImage: header dims BEFORE the

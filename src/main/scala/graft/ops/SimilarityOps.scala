@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Scope
-import graft.functions.GraftFunctions
+import graft.functions.VectorFunctions.{l2qArgmin, vecDot, vecL2Q, vecQuantizeFx}
 
 /** Similarity search over an embedding column (SURVEY §2.2 Q13/Q16-Q17):
   * brute-force cosine top-k as the exact baseline, and a random-
@@ -22,14 +22,12 @@ object SimilarityOps {
     * comparability.
     */
   private def sim(a: String, b: String, normA: String, normB: String) =
-    expr(s"round(vec_dot($a, $b) / ($normA * $normB), 6)")
+    round(vecDot(col(a), col(b)) / (col(normA) * col(normB)), 6)
 
   import OpsUtil.par
 
-  private def withNorm(df: DataFrame, vecCol: String, normCol: String): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
-    par(df).withColumn(normCol, expr(s"sqrt(vec_dot($vecCol, $vecCol))"))
-  }
+  private def withNorm(df: DataFrame, vecCol: String, normCol: String): DataFrame =
+    par(df).withColumn(normCol, sqrt(vecDot(col(vecCol), col(vecCol))))
 
   /** Q16: exact brute-force top-k cosine neighbors for each query
     * vector (vec_id < nQueries). The query side is tiny and broadcast;
@@ -167,7 +165,6 @@ object SimilarityOps {
     import org.apache.spark.ml.functions.array_to_vector
     val spark = embeddings.sparkSession
     import spark.implicits._
-    GraftFunctions.register(spark)
 
     val withFv = par(embeddings).withColumn("fv", array_to_vector(col("embedding")))
     // SELECTION is hash-ordered (unbiased w.r.t. ingest order); the
@@ -188,7 +185,7 @@ object SimilarityOps {
       .setFeaturesCol("fv").setPredictionCol("cell").fit(train)
     val assigned = model.transform(withFv)
       .select(col("vec_id"), col("embedding"), col("cell"),
-        expr("sqrt(vec_dot(embedding, embedding))").as("cn"))
+        sqrt(vecDot(col("embedding"), col("embedding"))).as("cn"))
     val centroids = model.clusterCenters.zipWithIndex
       .map { case (c, i) => (i, c.toArray.map(_.toFloat).toSeq) }
       .toSeq.toDF("cell", "centroid")
@@ -206,7 +203,8 @@ object SimilarityOps {
                            nprobe: Int): DataFrame =
     queries.crossJoin(broadcast(centroids))
       .withColumn("dist2",
-        expr("qn * qn - 2 * vec_dot(q, centroid) + vec_dot(centroid, centroid)"))
+        col("qn") * col("qn") - lit(2) * vecDot(col("q"), col("centroid")) +
+          vecDot(col("centroid"), col("centroid")))
       .withColumn("pr", row_number().over(
         Window.partitionBy("query_id").orderBy(col("dist2").asc, col("cell").asc)))
       .filter(col("pr") <= nprobe)
@@ -222,7 +220,8 @@ object SimilarityOps {
   private def assignCells(batch: DataFrame, centroids: DataFrame): DataFrame =
     batch.crossJoin(broadcast(centroids))
       .withColumn("dist2",
-        expr("cn * cn - 2 * vec_dot(embedding, centroid) + vec_dot(centroid, centroid)"))
+        col("cn") * col("cn") - lit(2) * vecDot(col("embedding"), col("centroid")) +
+          vecDot(col("centroid"), col("centroid")))
       .groupBy(col("vec_id"))
       .agg(
         first(col("embedding")).as("embedding"),
@@ -294,7 +293,6 @@ object SimilarityOps {
     */
   def appendToIvfIndex(batch: DataFrame, scope: Scope, name: String): Unit = {
     val spark = batch.sparkSession
-    GraftFunctions.register(spark)
     val m = graft.io.Artifact.read(spark, scope, name)
     val assigned = assignCells(withNorm(batch, "embedding", "cn"),
         spark.read.parquet(m.table("centroids")))
@@ -408,15 +406,15 @@ object SimilarityOps {
     * so float precision is immaterial) — far cheaper than an
     * interpreted per-element lambda.
     */
-  private def codeExpr(table: Int): String = {
-    val bits = (0 until numPlanes).map { p =>
+  private def codeExpr(table: Int): Column =
+    (0 until numPlanes).map { p =>
+      // the plane's float literals, each the float nearest to the
+      // decimal form of its double component
       val plane = (0 until embeddingDim)
-        .map(d => s"${planeComponent(table * numPlanes + p, d)}F")
-      val arr = plane.mkString("array(", ", ", ")")
-      s"(case when vec_dot(embedding, $arr) >= 0 then ${1 << p} else 0 end)"
-    }
-    s"cast(${bits.mkString(" + ")} as int)"
-  }
+        .map(d => lit(planeComponent(table * numPlanes + p, d).toString.toFloat))
+      when(vecDot(col("embedding"), array(plane: _*)) >= 0, lit(1 << p))
+        .otherwise(lit(0))
+    }.reduce(_ + _).cast("int")
 
   /** One (vec_id, t, code) row per table: the per-table sign code
     * projected ONCE — the plane-literal expression appears exactly
@@ -428,10 +426,8 @@ object SimilarityOps {
     */
   private def tableCodes(df: DataFrame): DataFrame =
     par(df.select(col("vec_id"), col("embedding")))
-      .select(col("vec_id"), explode(expr(
-        (0 until numTables).map(t =>
-          s"struct(${t} as t, ${codeExpr(t)} as code)")
-          .mkString("array(", ", ", ")"))).as("tc"))
+      .select(col("vec_id"), explode(array((0 until numTables).map(t =>
+          struct(lit(t).as("t"), codeExpr(t).as("code"))): _*)).as("tc"))
       .select(col("vec_id"), col("tc.t").as("t"), col("tc.code").as("code"))
 
   /** Q16b: approximate top-k via MULTI-TABLE, MULTI-PROBE sign LSH
@@ -752,9 +748,8 @@ object SimilarityOps {
     * point at test scale — at 100 TB the LUT form avoids materializing
     * x̂, trading the decode join for an m-term per-row lookup sum.
     */
-  def pqKnn(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10,
-            m: Int = 32): DataFrame =
-    probePq(buildPqIndex(embeddings, m), embeddings, nQueries, k)
+  def pqKnn(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10): DataFrame =
+    probePq(buildPqIndex(embeddings), embeddings, nQueries, k)
 
   /** The per-query-batch half of the PQ pair (like [[probeIvfPruned]]
     * for IVF): score full-precision queries against an ALREADY-BUILT
@@ -904,7 +899,6 @@ object SimilarityOps {
     */
   def appendToIvfPqIndex(batch: DataFrame, scope: Scope, name: String): Unit = {
     val spark = batch.sparkSession
-    GraftFunctions.register(spark)
     val meta = graft.io.Artifact.read(spark, scope, name)
     val (m, dsub) = (meta.int("m"), meta.int("dsub"))
     val centroids = spark.read.parquet(meta.table("centroids"))
@@ -1016,10 +1010,9 @@ object SimilarityOps {
     // VectorFixedPointSpec) and explode LONGS, instead of exploding
     // floats and paying an interpreted Round per (row × dim). Same
     // per-element values, same aggregation, same shuffle shape.
-    GraftFunctions.register(embeddings.sparkSession)
     par(embeddings)
       .select(col(labelCol), posexplode(
-        expr(s"vec_quantize_fx(embedding, $fxBits)")).as(Seq("dim", "vq")))
+        vecQuantizeFx(col("embedding"), fxBits)).as(Seq("dim", "vq")))
       .groupBy(labelCol, "dim")
       .agg(sum(col("vq")).as("ssum"), count(lit(1)).as("n"))
   }
@@ -1110,7 +1103,6 @@ object SimilarityOps {
   def kmeansAssign(embeddings: DataFrame, seeds: DataFrame): DataFrame = {
     val sp = embeddings.sparkSession
     import sp.implicits._
-    GraftFunctions.register(sp)
     val seedRows: Seq[(Int, Seq[Long])] = seeds.collect()
       .map(r => (r.getAs[Int]("cid"),
         r.getSeq[Long](r.fieldIndex("sq")).toSeq))
@@ -1124,7 +1116,7 @@ object SimilarityOps {
     // corpus shuffle.
     par(embeddings)
       .withColumn("__seeds", typedlit(seedRows))
-      .withColumn("m", expr(s"l2q_argmin(embedding, __seeds, $fxBits)"))
+      .withColumn("m", l2qArgmin(col("embedding"), col("__seeds"), fxBits))
       .select(col("vec_id"), col("m.cid").as("cluster"),
         col("m.d2").as("d2"), col("embedding"))
   }
@@ -1267,12 +1259,11 @@ object SimilarityOps {
     // round-16: the per-row distance is the native vec_l2q (quantize +
     // squared L2 in one loop; VectorFixedPointSpec) — replacing the
     // interpreted quantFx + zip_with/aggregate chain
-    GraftFunctions.register(sp)
     par(embeddings)
       .select(col("label"), col("vec_id"), col("embedding"),
         typedlit(cents).as("__cents"))
-      .withColumn("d2", expr(
-        s"vec_l2q(embedding, element_at(__cents, label), $fxBits)"))
+      .withColumn("d2", vecL2Q(col("embedding"),
+        element_at(col("__cents"), col("label")), fxBits))
       .withColumn("rnk", row_number().over(w).cast("int"))
       .filter(col("rnk") <= topK)
       .select(col("label"), col("rnk"), col("vec_id"), col("d2"))

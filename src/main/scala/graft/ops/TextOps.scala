@@ -305,10 +305,9 @@ object TextOps {
     // `aggregate(split(text,''), ...)` HOF evaluates an interpreted
     // lambda per character; rolling_hash is a primitive loop (proven
     // equivalent in RollingHashSpec)
-    graft.functions.GraftFunctions.register(documents.sparkSession)
     documents.select(
       col("doc_id"),
-      expr("rolling_hash(text)").as("rh"),
+      graft.functions.VectorFunctions.rollingHash(col("text")).as("rh"),
       length(col("text")).as("n_chars"))
   }
 
@@ -1158,8 +1157,8 @@ object TextOps {
 
   /** Q170: LM-floor CALIBRATION — turns q163's scaladoc promise ("a
     * production deployment calibrates `minLmAvgFp` per corpus") into
-    * an executed operator: the exact `gatePct`-th percentile
-    * (percentile_disc semantics, k = ceil(pct·n/100)) of each
+    * an executed operator: the exact 15th percentile
+    * (percentile_disc semantics, k = ceil(15·n/100)) of each
     * document's integer average transition score
     * `avg_fp = score_fp div n_bigrams` under the q156 model.
     *
@@ -1176,9 +1175,7 @@ object TextOps {
     * executes once. Output is one row. All arithmetic is integer, so
     * any engine reproduces the floor bit-for-bit.
     */
-  def lmFloorCalibrate(documents: DataFrame, gatePct: Int = 15): DataFrame = {
-    require(0 < gatePct && gatePct < 100,
-      s"gatePct must be in (0, 100): $gatePct")
+  def lmFloorCalibrate(documents: DataFrame): DataFrame = {
     val avg = bigramLmScore(documents)
       .select(col("doc_id"), expr("score_fp DIV n_bigrams").as("avg_fp"))
     // the window inputs are the value histogram (distinct avg values),
@@ -1194,7 +1191,7 @@ object TextOps {
       .withColumn("cum", sum("cnt").over(w))
       .withColumn("n_docs", max(col("cum")).over(Window.partitionBy()))
       .withColumn("k",
-        expr(s"CAST((n_docs * $gatePct + 99) DIV 100 AS BIGINT)"))
+        expr("CAST((n_docs * 15 + 99) DIV 100 AS BIGINT)"))
     hist.agg(
       min(when(col("cum") >= col("k"), col("avg_fp"))).as("floor_fp"),
       max(col("n_docs")).as("n_docs"),

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * optimizer `Rule` (right-side column pruning through the node, which
   * Catalyst's built-in pruning cannot see), a planner `SparkStrategy`,
   * and a physical `SparkPlan` whose execution is the textbook
-  * partitioned merge — registered via [[graft.functions.GraftSparkExtensions]]
-  * or per-session through `experimental` methods (see [[AsOf.join]]).
+  * partitioned merge — installed per session through `experimental`
+  * methods (see [[AsOf.join]]).
   *
   * Semantics (identical to the composed form `Relational.eventOrderAsof`
   * and to DuckDB's native `ASOF LEFT JOIN`, which oracles both): every
@@ -125,16 +125,12 @@ object AsOfJoin {
   * and payload inputs. The left child streams through unchanged, so
   * its needed set comes from the consumer: a `Project` directly above
   * the node. With both cases the projection reaches the parquet scan
-  * (`ReadSchema` shrinks) exactly as it does for built-in joins; the
-  * batch placement depends on the registration route: injected via
-  * `GraftSparkExtensions.injectOptimizerRule` it joins the fixed-point
-  * operator-optimization batch (pushed `Project`s keep sinking toward
-  * the scans in the same pass); installed through
-  * `GraftPlanBridge.installPlanning`'s `experimental.extraOptimizations`
-  * it runs in the later once-per-plan "User Provided Optimizers" batch,
-  * where the rule still converges because each introduced `Project` is
-  * itself matched by the built-in `ColumnPruning` collapse on the next
-  * batch iteration.
+  * (`ReadSchema` shrinks) exactly as it does for built-in joins.
+  * Installed through `GraftPlanBridge.installPlanning`'s
+  * `experimental.extraOptimizations`, it runs in the once-per-plan
+  * "User Provided Optimizers" batch, where the rule still converges
+  * because each introduced `Project` is itself matched by the built-in
+  * `ColumnPruning` collapse on the next batch iteration.
   */
 object PruneAsOfJoin extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {

@@ -212,7 +212,7 @@ private[graft] object CrawlQueries {
           Seq(("s0.example", 100L * (w + 1))).toDF("domain", "next_allowed_s"),
           stDir, w)
       }
-      val dropped = HtmlOps.pruneWaveStates(s, stDir, keepLatest = 1)
+      val dropped = HtmlOps.pruneWaveStates(s, stDir)
       require(dropped == Seq(0L, 1L), s"unexpected prune set: $dropped")
       require(HtmlOps.loadSchedState(s, stDir, beforeWave = 99L)
         .head().getLong(1) == 300L, "latest state must survive the prune")
@@ -237,14 +237,14 @@ private[graft] object CrawlQueries {
     val ranks = epochRanks(s, dir)
     val w0 = HtmlOps.scheduleWaveValidated(
         HtmlOps.politeFrontier(pages.filter(col("doc_id") < 250),
-          scope, "urlkeys", ranks, rules), d, 30L)
+          scope, "urlkeys", ranks, rules), d)
       // feeds the output AND the state; lazy — the first consumer's
       // job materializes it, no separate up-front round-trip
       .localCheckpoint(eager = false)
     val st = HtmlOps.advanceSchedState(w0, HtmlOps.emptySchedState(s))
     val w1 = HtmlOps.scheduleWaveValidated(
       HtmlOps.politeFrontier(pages.filter(col("doc_id") >= 250),
-        scope, "urlkeys", ranks, rules), d, 30L, Some(st))
+        scope, "urlkeys", ranks, rules), d, Some(st))
     w0.withColumn("wave", lit(0L)).unionByName(
       w1.withColumn("wave", lit(1L)))
   }
@@ -1439,7 +1439,7 @@ private[graft] object CrawlQueries {
       HtmlOps.exportWarc(pages), "warc"))
     val gz = HtmlOps.httpFrame(HtmlOps.warcFrame(
       HtmlOps.gunzipWarcChunks(
-        HtmlOps.exportWarc(pages, gzip = true), "warc_gz"), "warc"))
+        HtmlOps.exportWarc(pages, gzip = true)), "warc"))
     def shape(df: DataFrame, arm: String) = df.select(col("doc_id"),
       lit(arm).as("arm"), col("target_uri"), col("warc_date"),
       HtmlOps.titleOf(col("body")).as("title"),

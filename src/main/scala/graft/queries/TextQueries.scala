@@ -517,7 +517,7 @@ private[graft] object TextQueries {
       // ONE dictionary pass feeds both the alphabet and the merges —
       // calling fitBpe separately would re-run the identical corpus
       // aggregation a second time
-      val dict = BpeOps.fitDictionary(planted, 1 << 16, "text")
+      val dict = BpeOps.fitDictionary(planted)
       val alphabet = dict.flatMap(_._1.map(_.toString)).distinct.sorted
       val s2 = s; import s2.implicits._
       val merges = BpeOps.fitFromCounts(dict, nMerges = 12)

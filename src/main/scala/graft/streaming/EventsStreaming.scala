@@ -690,7 +690,7 @@ object EventsStreaming {
               graft.ops.HtmlOps.politeFrontier(
                 b.select(col("doc_id"), col("fetch_host"), col("html")),
                 scope, name, ranks, rules),
-              vDelays, defaultDelayS = 30L, startOffsets = Some(st0))
+              vDelays, startOffsets = Some(st0))
             .write.mode("overwrite").parquet(s"$outDir/wave=$batchId")
           // advance from the WRITTEN wave (tiny read-back) — deriving
           // it from the un-persisted plan would recompute the whole
@@ -718,8 +718,7 @@ object EventsStreaming {
                   graft.ops.HtmlOps.refetchWaveFromLog(bs,
                     scope, fetchLogName.get, nowRow.getLong(0), ttlS,
                     ranks),
-                  vDelays, defaultDelayS = 30L,
-                  startOffsets = Some(state))
+                  vDelays, startOffsets = Some(state))
                 .write.mode("overwrite")
                 .parquet(s"$refetchDir/wave=$batchId")
               state = graft.ops.HtmlOps.advanceSchedState(
@@ -860,7 +859,7 @@ object EventsStreaming {
                 scope, name, ranks, rules)
           }
           graft.ops.HtmlOps.scheduleWaveValidated(frontier,
-              vDelays, defaultDelayS = 30L, startOffsets = Some(st0))
+              vDelays, startOffsets = Some(st0))
             .write.mode("overwrite").parquet(s"$outDir/wave=$batchId")
           // STAMP every dispatched slot into the attempt log — from
           // the WRITTEN wave (tiny read-back, the advanceSchedState

@@ -26,7 +26,7 @@ object RecallProbe {
       for ((label, approx) <- Seq(
           "lsh" -> SimilarityOps.lshKnn(emb),
           "ivf" -> SimilarityOps.ivfKnn(emb),
-          "pq" -> SimilarityOps.pqKnn(emb, m = 32))) {
+          "pq" -> SimilarityOps.pqKnn(emb))) {
         val hits = approx.select("query_id", "vec_id")
           .join(exact.select("query_id", "vec_id"), Seq("query_id", "vec_id"))
           .groupBy("query_id").agg(count(lit(1)).as("n_hits"))

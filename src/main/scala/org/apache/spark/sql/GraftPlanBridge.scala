@@ -18,10 +18,9 @@ object GraftPlanBridge {
   def analyzed(df: DataFrame): LogicalPlan =
     df.queryExecution.analyzed
 
-  /** Column ⇄ Expression for graft's native expressions used through
-    * the Column DSL (vec_dot et al. go through the SQL registry; a
-    * helper taking arbitrary Column arguments needs the direct
-    * wrap — same `private[sql]` door as [[ofRows]]).
+  /** Column ⇄ Expression: every native expression in
+    * `graft.functions` is built through these by its typed Column
+    * constructor (same `private[sql]` door as [[ofRows]]).
     */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
@@ -30,10 +29,8 @@ object GraftPlanBridge {
     classic.ExpressionUtils.expression(c)
 
   /** Idempotently install graft's planner strategy + optimizer rule on
-    * an EXISTING session via `experimental` methods — the runtime
-    * counterpart of configuring
-    * `spark.sql.extensions=graft.functions.GraftSparkExtensions`
-    * before session construction.
+    * a session via `experimental` methods — the one way the as-of
+    * join's planning is installed.
     */
   def installPlanning(spark: SparkSession): Unit = {
     val em = spark.asInstanceOf[classic.SparkSession].experimental

@@ -55,7 +55,7 @@ class BpeOpsSpec extends SparkSpec {
 
   test("planted fit matches the closed-form chain order on the fixture") {
     val docs = graft.io.Tables.parquet(spark, sf, "documents")
-    val got = BpeOps.plantedFit(docs, nMerges = 12).collect()
+    val got = BpeOps.plantedFit(docs).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
     // closed form: c_j = sum of (1 + doc_id % 5) over docs ≡ j (mod 8);
     // chains (x_j, y_j)@2c_j and (x_j y_j, x_j y_j)@c_j in static
@@ -75,9 +75,9 @@ class BpeOpsSpec extends SparkSpec {
 
   test("planted encode pins token counts and id sums in closed form") {
     val docs = graft.io.Tables.parquet(spark, sf, "documents")
-    val got = BpeOps.plantedEncode(docs, nMerges = 12).collect()
+    val got = BpeOps.plantedEncode(docs).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
-    val fit = BpeOps.plantedFit(docs, nMerges = 12).collect()
+    val fit = BpeOps.plantedFit(docs).collect()
       .map(r => ((r.getString(1), r.getString(2)), r.getInt(0))).toMap
     val words = Seq("abab", "cdcd", "efef", "ghgh", "ijij", "klkl", "mnmn", "opop")
     docs.select("doc_id").collect().map(_.getLong(0)).foreach { id =>
@@ -192,7 +192,7 @@ class BpeOpsSpec extends SparkSpec {
     val withPre = BpeOps.fitBpe(punct, nMerges = 12, pretok = true)
       .collect().map(r =>
         (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    val plain = BpeOps.plantedFit(docs, nMerges = 12)
+    val plain = BpeOps.plantedFit(docs)
       .collect().map(r =>
         (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     assert(withPre === plain)

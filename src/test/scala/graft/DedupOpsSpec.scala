@@ -36,7 +36,7 @@ class DedupOpsSpec extends SparkSpec {
       // build under a NON-default geometry: append must pick it up
       // from the artifact metadata, not its own defaults
       DedupOps.saveBands(d.filter(col("doc_id") % 2 === 0), scope, "bands",
-        numHashes = 8, bandSize = 2, shingleSize = 3)
+        numHashes = 8)
       val rowsPath = Artifact.read(spark, scope, "bands").table("rows")
       def files(): Map[String, Long] = {
         val p = new org.apache.hadoop.fs.Path(rowsPath)

@@ -959,7 +959,8 @@ class HtmlOpsSpec extends SparkSpec {
         "</sitemap></sitemapindex>"
       val deep = tree.withColumn("xml_gz",
         when(col("url") === "https://s10.example/sitemap-a.xml.gz",
-          expr(s"encode(gzip_transport('$nested'), 'ISO-8859-1')"))
+          encode(graft.functions.HttpFunctions.gzipTransport(lit(nested)),
+            "ISO-8859-1"))
           .otherwise(col("xml_gz")))
       val deepSeeds = seeds(deep)
       val s10Base = baseline.filter(_._2 == "s10.example")
@@ -1065,7 +1066,7 @@ class HtmlOpsSpec extends SparkSpec {
             r.getBoolean(4) && r.getBoolean(5), r.getString(6))).toMap
     val plain = ingest(HtmlOps.exportWarc(pages))
     val gz = ingest(HtmlOps.gunzipWarcChunks(
-      HtmlOps.exportWarc(pages, gzip = true), "warc_gz"))
+      HtmlOps.exportWarc(pages, gzip = true)))
     for (m <- Seq(plain, gz)) {
       assert(m.keySet === Set(1L, 2L, 3L))
       assert(m(1L) === (("https://a.example/p/1",
@@ -2130,7 +2131,7 @@ class HtmlOpsSpec extends SparkSpec {
           Seq(("s0.example", 10L * (w + 1)), ("s1.example", 7L))
             .toDF("domain", "next_allowed_s"), dir, w)
       }
-      assert(HtmlOps.pruneWaveStates(spark, dir, keepLatest = 1) ===
+      assert(HtmlOps.pruneWaveStates(spark, dir) ===
         Seq(0L, 1L, 2L))
       // only wave=3 remains on disk
       val left = new java.io.File(dir).listFiles()
@@ -2142,7 +2143,7 @@ class HtmlOpsSpec extends SparkSpec {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(st === Map("s0.example" -> 40L, "s1.example" -> 7L))
       // idempotent: pruning again drops nothing
-      assert(HtmlOps.pruneWaveStates(spark, dir, keepLatest = 1).isEmpty)
+      assert(HtmlOps.pruneWaveStates(spark, dir).isEmpty)
       // a missing dir is a no-op, not an error
       assert(HtmlOps.pruneWaveStates(spark,
         base.resolve("absent").toString).isEmpty)
@@ -2159,7 +2160,7 @@ class HtmlOpsSpec extends SparkSpec {
     try {
       (0 to 2).foreach(w => base.resolve(s"wave=$w").toFile.mkdirs())
       val e = intercept[graft.core.GraftException] {
-        HtmlOps.pruneWaveStates(spark, s"nodelete://$base", keepLatest = 1)
+        HtmlOps.pruneWaveStates(spark, s"nodelete://$base")
       }
       assert(e.getMessage.contains(s"$base/wave=0"), e.getMessage)
       assert(base.toFile.list().sorted.toSeq === Seq("wave=0", "wave=1", "wave=2"))

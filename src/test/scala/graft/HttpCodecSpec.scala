@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.HttpCodec
+import graft.functions.HttpFunctions.{deflateTransport, gzipTransport, httpFrame, inflateBody, zstdTransport}
 import graft.ops.HtmlOps
 
 /** The wire-codec layer behind the crawl front door: RFC 9112 §7.1
@@ -95,19 +97,18 @@ class HttpCodecSpec extends SparkSpec {
   }
 
   test("inflate_body: gzip, deflate (both wrappings), identity, unknown") {
-    graft.functions.GraftFunctions.register(spark)
     val plain = "hello <b>body</b> with bytes"
     val rows = Seq(plain).toDF("p")
-      .withColumn("g", expr("gzip_transport(p)"))
-      .withColumn("d", expr("deflate_transport(p)"))
+      .withColumn("g", gzipTransport(col("p")))
+      .withColumn("d", deflateTransport(col("p")))
       .select(
-        expr("inflate_body(g, 'gzip')").as("ig"),
-        expr("inflate_body(g, 'x-gzip')").as("ixg"),
-        expr("inflate_body(d, 'deflate')").as("id"),
-        expr("inflate_body(p, '')").as("ii"),
-        expr("inflate_body(p, 'identity')").as("iid"),
-        expr("inflate_body(p, 'br')").as("ibr"),
-        expr("inflate_body(p, 'gzip')").as("inot"))
+        inflateBody(col("g"), lit("gzip")).as("ig"),
+        inflateBody(col("g"), lit("x-gzip")).as("ixg"),
+        inflateBody(col("d"), lit("deflate")).as("id"),
+        inflateBody(col("p"), lit("")).as("ii"),
+        inflateBody(col("p"), lit("identity")).as("iid"),
+        inflateBody(col("p"), lit("br")).as("ibr"),
+        inflateBody(col("p"), lit("gzip")).as("inot"))
       .head()
     assert(rows.getString(0) === plain)
     assert(rows.getString(1) === plain)
@@ -126,12 +127,11 @@ class HttpCodecSpec extends SparkSpec {
       new String(buf.take(n), "ISO-8859-1")
     }
     val r2 = Seq(raw).toDF("r")
-      .select(expr("inflate_body(r, 'deflate')")).head()
+      .select(inflateBody(col("r"), lit("deflate"))).head()
     assert(r2.getString(0) === plain)
   }
 
   test("an unknown Content-Encoding is the null verdict on every inflate seam") {
-    graft.functions.GraftFunctions.register(spark)
     val body = "brotli-shaped body bytes"
     for (enc <- Seq("br", "xz", "lz4")) {
       assert(HttpCodec.inflateBodyString(body, enc) === null)
@@ -139,8 +139,9 @@ class HttpCodecSpec extends SparkSpec {
         "Content-Type: text/html; charset=utf-8\r\n" +
         s"Content-Encoding: $enc\r\n\r\n" + body
       val framed = Seq(payload).toDF("payload")
-      val sql = framed.selectExpr(s"inflate_body(payload, '$enc')",
-        "http_frame(payload).body_ok", "http_frame(payload).body").head()
+      val sql = framed.select(inflateBody(col("payload"), lit(enc)),
+        httpFrame(col("payload")).getField("body_ok"),
+        httpFrame(col("payload")).getField("body")).head()
       assert(sql.isNullAt(0))
       assert(!sql.getBoolean(1) && sql.isNullAt(2))
       val staged = HtmlOps.httpFrameStaged(framed).select("body_ok").head()
@@ -150,11 +151,10 @@ class HttpCodecSpec extends SparkSpec {
 
   test("zstd is a built-in coding: round trip, frame verdicts, bomb guard") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val plain = "zstd body résumé café" // non-ASCII survives the transport
     // round trip at the expression layer — inflate ∘ deflate = id
     val r = Seq(plain).toDF("b")
-      .selectExpr("inflate_body(zstd_transport(b), 'zstd')").head()
+      .select(inflateBody(zstdTransport(col("b")), lit("zstd"))).head()
     assert(r.getString(0) === plain)
     // ... and through the fused frame, before the charset seam: the
     // compressed bytes carry the utf-8 C3A9 pairs, the decode
@@ -165,9 +165,9 @@ class HttpCodecSpec extends SparkSpec {
     val payload = "HTTP/1.1 200 OK\r\n" +
       "Content-Type: text/html; charset=utf-8\r\n" +
       "Content-Encoding: zstd\r\n\r\n" + wire
-    val f = Seq(payload).toDF("payload").selectExpr(
-      "http_frame(payload).body as body",
-      "http_frame(payload).body_ok as ok").head()
+    val f = Seq(payload).toDF("payload").select(
+      httpFrame(col("payload")).getField("body").as("body"),
+      httpFrame(col("payload")).getField("body_ok").as("ok")).head()
     assert(f.getBoolean(1))
     assert(f.getString(0) === plain)
     // declared zstd over plain bytes: the verdict (the %17==9 leg)
@@ -192,7 +192,6 @@ class HttpCodecSpec extends SparkSpec {
   }
 
   test("inflate_body: zlib FDICT stream is a verdict, not an infinite loop") {
-    graft.functions.GraftFunctions.register(spark)
     // 0x78 0x20: CMF=0x78 (deflate, 32K window), FLG with the FDICT
     // bit set and a valid check (0x7820 = 30752 = 961*32, divisible
     // by 31) — inflate() on this returns 0 with needsDictionary()
@@ -201,7 +200,7 @@ class HttpCodecSpec extends SparkSpec {
     val fdict = new String(Array[Byte](0x78.toByte, 0x20.toByte,
       0x01, 0x02, 0x03, 0x04, 0x05, 0x06, 0x07, 0x08), "ISO-8859-1")
     val r = Seq(fdict).toDF("b")
-      .select(expr("inflate_body(b, 'deflate')")).head()
+      .select(inflateBody(col("b"), lit("deflate"))).head()
     assert(r.isNullAt(0))
   }
 
@@ -349,13 +348,13 @@ class HttpCodecSpec extends SparkSpec {
     val payload = "HTTP/1.1 200 OK\r\n" +
       "Content-Type: text/html; charset=shift_jis\r\n\r\n" + bad
     val row = Seq(payload).toDF("payload")
-      .selectExpr("http_frame(payload).body as body").head()
+      .select(httpFrame(col("payload")).getField("body").as("body")).head()
     assert(row.getString(0) === bad)
     // an alias spelling routes to the same decoder
     val alias = Seq("HTTP/1.1 200 OK\r\n" +
       "Content-Type: text/html; charset=sjis\r\n\r\n" +
       HtmlOps.sjisLeg._1).toDF("payload")
-      .selectExpr("http_frame(payload).body as body").head()
+      .select(httpFrame(col("payload")).getField("body").as("body")).head()
     assert(alias.getString(0) === HtmlOps.sjisLeg._2)
   }
 
@@ -518,13 +517,12 @@ class HttpCodecSpec extends SparkSpec {
   }
 
   test("httpFrame: Content-Encoding gzip/deflate bodies inflate before the charset seam") {
-    graft.functions.GraftFunctions.register(spark)
     // a gzip body whose INFLATED bytes are the utf-8 C3A9 pair under a
     // declared utf-8 charset: inflate must run FIRST or the charset
     // decode sees compressed bytes (mojibake / DFA failure)
-    def chunk(enc: String, bodyExpr: String): org.apache.spark.sql.DataFrame =
+    def chunk(enc: String, bodyWire: Column): org.apache.spark.sql.DataFrame =
       Seq(1L).toDF("doc_id")
-        .withColumn("body_wire", expr(bodyExpr))
+        .withColumn("body_wire", bodyWire)
         .withColumn("pay", concat(
           lit("HTTP/1.1 200 OK\r\nContent-Type: text/html; charset=utf-8\r\n" +
             s"Content-Encoding: $enc\r\n\r\n"), col("body_wire")))
@@ -535,12 +533,12 @@ class HttpCodecSpec extends SparkSpec {
           octet_length(col("pay")).cast("string"), lit("\r\n\r\n"),
           col("pay"), lit("\r\n\r\n")))
         .select(col("doc_id"), col("warc"))
-    val plain = "'<p>caf' || chr(195) || chr(169) || '</p>'"
-    val g = HtmlOps.warcIngest(chunk("gzip", s"gzip_transport($plain)")).head()
+    val plain = expr("'<p>caf' || chr(195) || chr(169) || '</p>'")
+    val g = HtmlOps.warcIngest(chunk("gzip", gzipTransport(plain))).head()
     assert(g.getAs[Boolean]("body_ok"))
     assert(g.getAs[String]("text_clean") === "café")
     val d = HtmlOps.warcIngest(
-      chunk("deflate", s"deflate_transport($plain)")).head()
+      chunk("deflate", deflateTransport(plain))).head()
     assert(d.getAs[Boolean]("body_ok"))
     assert(d.getAs[String]("text_clean") === "café")
     // an undecodable coding is a verdict, not an exception

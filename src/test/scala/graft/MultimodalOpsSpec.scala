@@ -35,7 +35,7 @@ class MultimodalOpsSpec extends SparkSpec {
     val media = Seq(MediaRecord(1L, bos.toByteArray),
       MediaRecord(2L, bos.toByteArray),
       MediaRecord(3L, "not an image".getBytes)).toDS()
-    val f = MultimodalOps.featureExtract(media, bins = 8).collect()
+    val f = MultimodalOps.featureExtract(media).collect()
       .map(m => m.doc_id -> m.features.toSeq).toMap
     assert(f(1L).size === 24)
     // R channel: three pixels at 0 (bin 0), one at 255 (bin 7)
@@ -101,7 +101,7 @@ class MultimodalOpsSpec extends SparkSpec {
     // doc 3 → 5 frames (2 + 3%5), dims 4x22; doc 10 → 2 frames, 11x23
     val docs = Seq(3L, 10L).toDF("doc_id")
     val out = MultimodalOps.frameSampleImages(
-      MultimodalOps.syntheticGifTable(docs), maxFrames = 4).collect()
+      MultimodalOps.syntheticGifTable(docs)).collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> ((r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5))))
       .toMap
     // 5 frames sampled down to 4: indices k*5/4 = 0,1,2,3

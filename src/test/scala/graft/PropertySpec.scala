@@ -218,16 +218,16 @@ class PropertySpec extends SparkSpec {
   }
 
   test("rolling_hash ≡ the interpreted lambda fold for arbitrary strings") {
-    graft.functions.GraftFunctions.register(spark)
+    import org.apache.spark.sql.functions.{col, expr}
     val gen = Gen.listOfN(30, Gen.oneOf(
       Gen.alphaNumStr.map(_.take(40)),
       Gen.listOfN(10, Gen.chooseNum(32, 0x24F).map(_.toChar)).map(_.mkString),
       Gen.const("")))
     samples(gen, 3).foreach { strs =>
-      val df = strs.toDF("s").selectExpr(
-        "rolling_hash(s) as native",
-        """aggregate(split(s, ''), cast(0 as bigint),
-          |  (acc, c) -> (acc * 31 + ascii(c)) % 2147483647) as hof""".stripMargin)
+      val df = strs.toDF("s").select(
+        graft.functions.VectorFunctions.rollingHash(col("s")).as("native"),
+        expr("""aggregate(split(s, ''), cast(0 as bigint),
+          |  (acc, c) -> (acc * 31 + ascii(c)) % 2147483647)""".stripMargin).as("hof"))
       df.collect().foreach(r => assert(r.getLong(0) === r.getLong(1), r))
     }
   }

@@ -22,16 +22,17 @@ class SimilarityOpsSpec extends SparkSpec {
   }
 
   test("vec_dot types its inputs at analysis time: double arrays coerce, scalars are rejected") {
-    graft.functions.GraftFunctions.register(spark)
+    import org.apache.spark.sql.functions.{array, lit}
+    import graft.functions.VectorFunctions.vecDot
     // ImplicitCastInputTypes: array<double> literals coerce to
     // array<float> during analysis instead of mis-reading the array
     // buffer at execution time
     val r = Seq(1).toDF("x")
-      .selectExpr("vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) as d")
+      .select(vecDot(array(lit(1.0), lit(2.0)), array(lit(3.0), lit(4.0))).as("d"))
       .collect().head
     assert(r.getDouble(0) === 11.0)
     val err = intercept[org.apache.spark.sql.AnalysisException] {
-      Seq(1).toDF("x").selectExpr("vec_dot(1, 2)").collect()
+      Seq(1).toDF("x").select(vecDot(lit(1), lit(2))).collect()
     }
     assert(err.getMessage.toLowerCase.contains("vec_dot"), err.getMessage)
   }

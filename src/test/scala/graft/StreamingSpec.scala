@@ -234,7 +234,7 @@ class StreamingSpec extends SparkSpec {
       val replay1 = graft.ops.HtmlOps.scheduleWaveValidated(
         graft.ops.HtmlOps.redirectFrontierFramed(wave1Framed, scope,
           "keys", ranks, rules),
-        graft.ops.HtmlOps.validatedDelays(delays), 30L,
+        graft.ops.HtmlOps.validatedDelays(delays),
         Some(graft.ops.HtmlOps.loadSchedState(spark,
           scope.path("schedstate"), 1)))
       val w1 = spark.read.parquet(scope.path("waves"))
@@ -476,7 +476,7 @@ class StreamingSpec extends SparkSpec {
       val replay1 = graft.ops.HtmlOps.scheduleWaveValidated(
         graft.ops.HtmlOps.politeFrontier(
           pages.filter(col("doc_id") >= 375), scope, "keys", ranks, rules),
-        vd, 30L, Some(st1))
+        vd, Some(st1))
       val w1 = waves.filter(col("wave") === 1).drop("wave")
         .select(replay1.columns.map(col): _*)
       assert(w1.exceptAll(replay1).isEmpty && replay1.exceptAll(w1).isEmpty)
@@ -516,7 +516,7 @@ class StreamingSpec extends SparkSpec {
         waves.filter(col("wave") === 1), st1)
       val replayR1 = graft.ops.HtmlOps.scheduleWaveValidated(
         graft.ops.HtmlOps.refetchWaveFromLog(spark, scope, "flog",
-          now1, ttl, ranks), vd, 30L, Some(stR1))
+          now1, ttl, ranks), vd, Some(stR1))
       val r1 = refetches.filter(col("wave") === 1).drop("wave")
         .select(replayR1.columns.map(col): _*)
       assert(r1.exceptAll(replayR1).isEmpty && replayR1.exceptAll(r1).isEmpty)

@@ -389,7 +389,7 @@ class TextOpsSpec extends SparkSpec {
   test("lmFloorCalibrate: exact percentile, and the v3 gate composes exactly") {
     import org.apache.spark.sql.functions.{col, expr}
     val fixture = graft.io.Tables.parquet(spark, sf, "documents")
-    val row = TextOps.lmFloorCalibrate(fixture, gatePct = 15).head()
+    val row = TextOps.lmFloorCalibrate(fixture).head()
     val floor = row.getAs[Long]("floor_fp")
     val nDocs = row.getAs[Long]("n_docs")
     val nGated = row.getAs[Long]("n_gated")

@@ -85,21 +85,6 @@ class TokenFunctionsSpec extends SparkSpec {
         StructField("w", ArrayType(StringType, containsNull = true)))))
   }
 
-  /** Run `body` once per evaluation path: interpreted projections
-    * (`eval`), then whole-stage generated code only.
-    */
-  private def inBothPaths(body: String => Unit): Unit =
-    Seq("NO_CODEGEN" -> "false", "CODEGEN_ONLY" -> "true").foreach {
-      case (mode, wscg) =>
-        spark.conf.set("spark.sql.codegen.factoryMode", mode)
-        spark.conf.set("spark.sql.codegen.wholeStage", wscg)
-        try body(mode)
-        finally {
-          spark.conf.unset("spark.sql.codegen.factoryMode")
-          spark.conf.unset("spark.sql.codegen.wholeStage")
-        }
-    }
-
   /** Every row's `lambda` and `native` values must be equal (null-safe,
     * byte-wise); returns the row count so callers can check it is not
     * vacuous.

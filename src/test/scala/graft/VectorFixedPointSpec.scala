@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions.{l2qArgmin, vecL2Q, vecQuantizeFx}
 import graft.ops.SimilarityOps
 
 /** Round-16 optimization gate: the native fixed-point vector
@@ -14,8 +15,6 @@ import graft.ops.SimilarityOps
   */
 class VectorFixedPointSpec extends SparkSpec {
   import spark.implicits._
-
-  graft.functions.GraftFunctions.register(spark)
 
   private def emb: DataFrame =
     graft.io.Tables.parquet(spark, sf, "embeddings")
@@ -29,7 +28,7 @@ class VectorFixedPointSpec extends SparkSpec {
   test("vec_quantize_fx equals transform(round(x*s) cast long)") {
     val s = 1L << 20
     val a = emb.select(col("vec_id"),
-      expr("vec_quantize_fx(embedding, 20)").as("q"))
+      vecQuantizeFx(col("embedding"), 20).as("q"))
     val b = emb.select(col("vec_id"),
       expr(s"transform(embedding, x -> cast(round(cast(x as double) * ${s}L) as long))").as("q"))
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
@@ -44,7 +43,7 @@ class VectorFixedPointSpec extends SparkSpec {
       4 -> Seq.fill(64)(0L)) // duplicate of seed 1: exercises the cid tie
     val base = emb.withColumn("__seeds", typedlit(seedRows))
     val fused = base
-      .withColumn("m", expr("l2q_argmin(embedding, __seeds, 20)"))
+      .withColumn("m", l2qArgmin(col("embedding"), col("__seeds"), 20))
       .select(col("vec_id"), col("m.cid"), col("m.d2"))
     val legacy = base
       .withColumn("vq", expr(
@@ -63,7 +62,7 @@ class VectorFixedPointSpec extends SparkSpec {
     val sq = (0 until 64).map(i => (i * 37 % 200 - 100).toLong)
     val base = emb.withColumn("__sq", typedlit(sq))
     val fused = base.select(col("vec_id"),
-      expr("vec_l2q(embedding, __sq, 20)").as("d2"))
+      vecL2Q(col("embedding"), col("__sq"), 20).as("d2"))
     val legacy = base
       .withColumn("vq", expr(
         s"transform(embedding, x -> cast(round(cast(x as double) * ${s}L) as long))"))
@@ -84,7 +83,7 @@ class VectorFixedPointSpec extends SparkSpec {
       900103L -> Seq(java.lang.Float.MIN_VALUE, -0.0f, 1.0f, -1.0f)
     ).toDF("vec_id", "embedding")
     val a = boundary.select(col("vec_id"),
-      expr("vec_quantize_fx(embedding, 20)").as("q"))
+      vecQuantizeFx(col("embedding"), 20).as("q"))
     val b = boundary.select(col("vec_id"),
       expr(s"transform(embedding, x -> cast(round(cast(x as double) * ${s}L) as long))").as("q"))
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
@@ -98,7 +97,7 @@ class VectorFixedPointSpec extends SparkSpec {
     val row = Seq(900101L -> Seq(Float.NaN, Float.PositiveInfinity,
       Float.NegativeInfinity, Float.MaxValue, Float.MinValue))
       .toDF("vec_id", "embedding")
-    val got = row.select(expr("vec_quantize_fx(embedding, 20)").as("q"))
+    val got = row.select(vecQuantizeFx(col("embedding"), 20).as("q"))
       .head.getSeq[Long](0)
     assert(got == Seq(0L, Long.MaxValue, Long.MinValue,
       Long.MaxValue, Long.MinValue))
@@ -111,14 +110,14 @@ class VectorFixedPointSpec extends SparkSpec {
     val df = Seq(1L).toDF("id").select(col("id"), expr(
       "array(cast(1.0 as float), cast(null as float), cast(2.0 as float))")
       .as("embedding"))
-    val q = df.select(expr("vec_quantize_fx(embedding, 20)").as("q"))
+    val q = df.select(vecQuantizeFx(col("embedding"), 20).as("q"))
     val legacy = df.select(expr(
       "transform(embedding, x -> cast(round(cast(x as double) * 1048576L) as long))").as("q"))
     assert(q.exceptAll(legacy).isEmpty && legacy.exceptAll(q).isEmpty)
-    val d = df.select(expr("vec_l2q(embedding, array(0L, 0L, 0L), 20)")).head
+    val d = df.select(vecL2Q(col("embedding"), array(lit(0L), lit(0L), lit(0L)), 20)).head
     assert(d.isNullAt(0))
-    val m = df.select(expr(
-      "l2q_argmin(embedding, array(struct(1, array(0L, 0L, 0L))), 20)")).head
+    val m = df.select(l2qArgmin(col("embedding"),
+      array(struct(lit(1), array(lit(0L), lit(0L), lit(0L)))), 20)).head
     assert(m.isNullAt(0))
   }
 
@@ -128,7 +127,7 @@ class VectorFixedPointSpec extends SparkSpec {
     // (try_element_at — the plain ANSI element_at throws instead)
     val df = emb.limit(4)
     val seedsSql = "cast(array() as array<struct<cid: int, sq: array<bigint>>>)"
-    val fused = df.select(expr(s"l2q_argmin(embedding, $seedsSql, 20)").as("m"))
+    val fused = df.select(l2qArgmin(col("embedding"), expr(seedsSql), 20).as("m"))
     assert(fused.collect().forall(_.isNullAt(0)))
     val legacy = df.select(expr(
       s"""try_element_at(array_sort(transform($seedsSql, s -> struct(

@@ -5,7 +5,9 @@
    spelled inside SQL text counts as a use. Overrides are skipped.
 2. Defaulted parameters of the graft.ops and graft.streaming operators (the
    mapreduce-wsi surface Jobs, PipeOps and MapReduceOps aside) that no call
-   in src/main, perfbench/src or src/test passes, by name or by position.
+   in src/main, perfbench/src or src/test sets, by name or by position. A
+   call that passes the parameter's own default expression verbatim does not
+   set it.
 Usage: python3 tools/unused_defs.py"""
 import pathlib, re, sys
 
@@ -69,20 +71,25 @@ def arg_lists(src, i):
 
 def unset_params(files):
     params, passed = [], set()  # params: (path, line, def, list, position, name)
+    defaults = {}  # (def, name) and (def, list, position) -> default expressions
+    norm = lambda e: " ".join(e.split())
     for path, src in files.items():
         for m in re.finditer(r"\bdef\s+(\w+)", src if PARAM_SCOPE.search(str(path.relative_to(ROOT))) else ""):
             for g, plist in enumerate(arg_lists(src, m.end())):
                 for k, p in enumerate(plist):
-                    d = re.match(r"\s*(?:implicit\s+)?(\w+)\s*:(?:[^=]|=>)*?=(?!>)", p)
+                    d = re.match(r"\s*(?:implicit\s+)?(\w+)\s*:(?:[^=]|=>)*?=(?!>)(.*)", p, re.S)
                     if d:
                         params.append((path, src.count("\n", 0, m.start()) + 1, m.group(1), g, k, d.group(1)))
+                        for key in ((m.group(1), d.group(1)), (m.group(1), g, k)):
+                            defaults.setdefault(key, set()).add(norm(d.group(2)))
     names = "|".join(sorted({p[2] for p in params}))
     for src in files.values():
         for m in re.finditer(rf"(?<!def )(?<![\w$])({names})\b", src):
             for g, alist in enumerate(arg_lists(src, m.end())):
-                named = [re.match(r"\s*(\w+)\s*=(?![=>])", a) for a in alist]
-                passed |= {(m.group(1), n.group(1)) for n in named if n}
-                passed |= {(m.group(1), g, i) for i in range(named.count(None))}
+                named = [re.match(r"\s*(\w+)\s*=(?![=>])(.*)", a, re.S) for a in alist]
+                keys = [((m.group(1), n.group(1)), n.group(2)) if n else ((m.group(1), g, i), a)
+                        for i, (n, a) in enumerate(zip(named, alist))]
+                passed |= {key for key, arg in keys if norm(arg) not in defaults.get(key, ())}
     unset = [f"{p.relative_to(ROOT)}:{l}: {d}.{n}" for p, l, d, g, k, n in params
              if not {(d, n), (d, g, k)} & passed and f"{d}.{n}" not in ALLOW_PARAMS]
     print(f"{len(params)} defaulted operator parameters, {len(unset)} set by no call")
