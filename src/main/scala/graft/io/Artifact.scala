@@ -132,10 +132,9 @@ object Artifact {
     }
   }
 
-  /** Table `table` of the current version. */
-  def load(spark: SparkSession, scope: Scope, name: String,
-           table: String = "rows"): DataFrame =
-    spark.read.parquet(read(spark, scope, name).table(table))
+  /** The `rows` table of the current version. */
+  def load(spark: SparkSession, scope: Scope, name: String): DataFrame =
+    spark.read.parquet(read(spark, scope, name).table("rows"))
 
   /** The catalog name of an external table registered over the
     * artifact table at `path`: deterministic, so a fresh session

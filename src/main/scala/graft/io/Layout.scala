@@ -32,13 +32,13 @@ object Layout {
       .parquet(path)
   }
 
-  /** Bucketed + sorted managed table (bucket pre-shuffle on the key).
-    * Drops any stale catalog entry AND its warehouse directory first:
+  /** Bucketed + sorted managed table (bucket pre-shuffle on the key,
+    * 16 buckets). Drops any stale catalog entry AND its warehouse
+    * directory first:
     * a location left by a previous process is invisible to the fresh
     * in-memory catalog but still blocks `saveAsTable`.
     */
-  def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    numBuckets: Int = 16): Unit = {
+  def writeBucketed(df: DataFrame, table: String, bucketCol: String): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
     val loc = new org.apache.hadoop.fs.Path(
@@ -46,13 +46,16 @@ object Layout {
     graft.core.Scopes.deletePath(
       loc.getFileSystem(spark.sparkContext.hadoopConfiguration), loc)
     df.write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, bucketCol)
+      .bucketBy(16, bucketCol)
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
   }
 
-  /** Bit-interleaved Z-VALUE of two non-negative `bits`-bit integers:
+  /** The width of each z-order axis: keys scale onto a 16-bit grid. */
+  private val zBits = 16
+
+  /** Bit-interleaved Z-VALUE of two non-negative [[zBits]]-bit integers:
     * bit i of `a` lands at position 2i, bit i of `b` at 2i+1. Rows
     * close in z are close in BOTH dimensions, so range-partitioning
     * and sorting by z gives parquet min/max statistics selectivity on
@@ -60,18 +63,16 @@ object Layout {
     * ([[writePartitioned]]'s `sortCols`) buys skipping on one column
     * and leaves the other unclustered. Pure bit arithmetic, fully
     * codegen'd; monotonic in each argument with the other fixed, and
-    * a bijection on the `bits`×`bits` grid (LayoutSpec asserts both).
+    * a bijection on the grid (LayoutSpec asserts both).
     */
-  def zValue(a: Column, b: Column, bits: Int = 16): Column = {
-    require(bits >= 1 && bits <= 31, s"bits must be in [1,31]: $bits")
-    (0 until bits).map { i =>
+  def zValue(a: Column, b: Column): Column =
+    (0 until zBits).map { i =>
       shiftleft(shiftright(a, i).bitwiseAND(lit(1L)), 2 * i)
         .bitwiseOR(shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), 2 * i + 1))
     }.reduce(_.bitwiseOR(_))
-  }
 
   /** Min-max normalize a non-negative integer column onto the
-    * `bits`-bit grid. `floor(n / d)` over doubles here EQUALS exact
+    * [[zBits]]-bit grid. `floor(n / d)` over doubles here EQUALS exact
     * integer division, so any engine reproduces the value bit-for-bit
     * (the q112 oracle's integer `//` does): n ≤ keyRange·(2^bits − 1)
     * stays far under 2^53 (exact in double), and when d ∤ n the true
@@ -79,8 +80,8 @@ object Layout {
     * division's rounding error is ≤ 2^bits·2^−53 — floor cannot flip.
     * Degenerate ranges map to 0.
     */
-  def gridScale(x: Column, lo: Column, hi: Column, bits: Int = 16): Column = {
-    val m = (1L << bits) - 1
+  private def gridScale(x: Column, lo: Column, hi: Column): Column = {
+    val m = (1L << zBits) - 1
     when(hi <= lo, lit(0L))
       .otherwise(floor(((x - lo) * lit(m)).cast("double") /
         (hi - lo).cast("double")).cast("long"))
@@ -89,15 +90,14 @@ object Layout {
   /** The q112 surface: rows of `df` with their z-order key (named
     * `__z`) over min-max-scaled `colA`, `colB`.
     */
-  def zorderKey(df: DataFrame, colA: String, colB: String,
-                bits: Int = 16): DataFrame = {
+  def zorderKey(df: DataFrame, colA: String, colB: String): DataFrame = {
     val bounds = df.agg(
       min(col(colA)).as("__alo"), max(col(colA)).as("__ahi"),
       min(col(colB)).as("__blo"), max(col(colB)).as("__bhi"))
     df.crossJoin(broadcast(bounds))
       .withColumn("__z", zValue(
-        gridScale(col(colA), col("__alo"), col("__ahi"), bits),
-        gridScale(col(colB), col("__blo"), col("__bhi"), bits), bits))
+        gridScale(col(colA), col("__alo"), col("__ahi")),
+        gridScale(col(colB), col("__blo"), col("__bhi"))))
       .drop("__alo", "__ahi", "__blo", "__bhi")
   }
 

@@ -318,16 +318,18 @@ object BpeOps {
   /** The trainer dictionary's size: the top 2^16 words by count. */
   private val maxWords = 1 << 16
 
-  private[graft] def fitDictionary(documents: DataFrame,
-                                   pretok: Boolean = false): Seq[(String, Long)] =
-    topWords(wordCountsDf(documents, pretok), maxWords)
+  /** The trainer dictionary of whitespace-split words (no
+    * pretokenizer; a pretokenized fit goes through [[saveBpe]], which
+    * records the setting).
+    */
+  private[graft] def fitDictionary(documents: DataFrame): Seq[(String, Long)] =
+    topWords(wordCountsDf(documents, pretok = false), maxWords)
 
-  def fitBpe(documents: DataFrame, nMerges: Int = 50,
-             pretok: Boolean = false): DataFrame = {
+  def fitBpe(documents: DataFrame, nMerges: Int = 50): DataFrame = {
     require(nMerges >= 0, s"nMerges must be non-negative: $nMerges")
     val spark = documents.sparkSession
     import spark.implicits._
-    fitFromCounts(fitDictionary(documents, pretok), nMerges)
+    fitFromCounts(fitDictionary(documents), nMerges)
       .toDF("merge_rank", "lhs", "rhs", "freq")
   }
 
@@ -689,6 +691,9 @@ object BpeOps {
     * correctly, and replays of the SAME id still skip. (The caller
     * owns batch ordering either way, same as the q178 ingest
     * contract's fetch-order requirement.)
+    *
+    * No production call passes `batchId` yet; BpeOpsSpec's replay
+    * specs pass it to pin the same-content defect's fix.
     *
     * RETURNS whether the count merge APPLIED (`true`) or was skipped
     * as a detected replay (`false`) — a digest-path caller whose feed

@@ -101,6 +101,10 @@ object ClusterOps {
     * @param vertices one row per document, column `doc_id` (singletons
     *                 — docs with no candidate edge — map to themselves)
     * @param edges    candidate pairs, columns `doc_a`, `doc_b`
+    * @param localMaxEdges the driver-side union-find budget; no
+    *                 production call passes it, but ClusterOpsSpec's
+    *                 star-loop tests pass -1, the only way a
+    *                 fixture-sized graph reaches the distributed loop
     * @return (doc_id, canonical_id) where canonical_id is the minimum
     *         doc_id of the document's connected component
     */
@@ -193,7 +197,10 @@ object ClusterOps {
     * rewrites only touched buckets (dynamic partition overwrite) —
     * untouched components' files are never rewritten. nBuckets rides
     * beside the rows as artifact metadata (the q128 contract: a probe
-    * or append can never assume a different bucket universe).
+    * or append can never assume a different bucket universe); no
+    * production call passes it, but ArtifactSpec's killed-save spec
+    * varies it to prove a killed re-save never serves rows under the
+    * other bucket count.
     */
   def saveClusterLabels(labels: DataFrame, scope: graft.core.Scope,
                         name: String, nBuckets: Int = 32): Unit =
@@ -421,10 +428,8 @@ object ClusterOps {
     * far below corpus rows — and the self-join key is the cluster id,
     * so no pair of unrelated sources ever meets.
     */
-  def sourceOverlap(documents: DataFrame,
-                    labelsOpt: Option[DataFrame] = None): DataFrame = {
-    val labels = labelsOpt.getOrElse(nearDupClusters(documents))
-    val cs = labels
+  def sourceOverlap(documents: DataFrame): DataFrame = {
+    val cs = nearDupClusters(documents)
       .join(documents.select("doc_id", "source"), "doc_id")
       .select("canonical_id", "source").distinct()
     val a = cs.select(col("canonical_id"), col("source").as("source_a"))
@@ -443,9 +448,8 @@ object ClusterOps {
     * both shuffles carry one row per cluster / per size — never
     * corpus rows.
     */
-  def clusterSizeHistogram(documents: DataFrame,
-                           labelsOpt: Option[DataFrame] = None): DataFrame =
-    labelsOpt.getOrElse(nearDupClusters(documents))
+  def clusterSizeHistogram(documents: DataFrame): DataFrame =
+    nearDupClusters(documents)
       .groupBy("canonical_id")
       .agg(count(lit(1)).as("cluster_size"))
       .groupBy("cluster_size")
@@ -462,19 +466,15 @@ object ClusterOps {
     * DuckDB oracle replays it), stable under corpus growth (a cluster
     * keeps its split as new members join it), and uncorrelated with
     * any other salt in the suite. Pure per-row expression over the
-    * q41 labels — the split itself adds no shuffle at any scale.
+    * q41 labels — the split itself adds no shuffle at any scale. 10% of
+    * the clusters go to val and 10% to test, as in [[corpusShards]].
     */
-  def leakageFreeSplit(documents: DataFrame,
-                       valFrac: Double = 0.1, testFrac: Double = 0.1,
-                       salt: String = "split",
-                       labelsOpt: Option[DataFrame] = None): DataFrame = {
-    require(valFrac >= 0 && testFrac >= 0 && valFrac + testFrac < 1.0,
-      s"fractions must be non-negative and sum below 1: val=$valFrac test=$testFrac")
-    val u = SampleOps.hashUnit(col("canonical_id"), salt)
-    labelsOpt.getOrElse(nearDupClusters(documents))
+  def leakageFreeSplit(documents: DataFrame): DataFrame = {
+    val u = SampleOps.hashUnit(col("canonical_id"), "split")
+    nearDupClusters(documents)
       .select(col("doc_id"), col("canonical_id"),
-        when(u < testFrac, lit("test"))
-          .when(u < testFrac + valFrac, lit("val"))
+        when(u < 0.1, lit("test"))
+          .when(u < 0.2, lit("val"))
           .otherwise(lit("train")).as("split"))
   }
 
@@ -535,17 +535,11 @@ object ClusterOps {
     * w = n_tokens) instead of a flat rate — the corpus budget prefers
     * substantial documents, deterministically. Still ONE declarative
     * plan, and the oracle composes the same stages' SQL, so the
-    * END-TO-END corpus stays hash-checked.
+    * END-TO-END corpus stays hash-checked. The held-out benchmark is
+    * the fixture's `doc_id % 10 == 7` slice.
     */
-  /** @param benchmarkOpt the held-out benchmark documents to
-    *        decontaminate against (columns `doc_id`, `text`). A real
-    *        pipeline brings its own eval sets; the default `None`
-    *        keeps the fixture convention (`doc_id % 10 == 7` is the
-    *        benchmark slice) with a plan identical to round 7's.
-    */
-  def trainingCorpusV2(documents: DataFrame,
-                       benchmarkOpt: Option[DataFrame] = None): DataFrame = {
-    val filtered = gatedCorpusV2(documents, benchmarkOpt)
+  def trainingCorpusV2(documents: DataFrame): DataFrame = {
+    val filtered = gatedCorpusV2(documents)
     graft.ops.SampleOps.prioritySample(filtered, "doc_id", "n_tokens",
         k = corpusTopK, salt = "train")
       .select("doc_id", "lang", "source", "n_tokens", "quality", "priority")
@@ -558,7 +552,6 @@ object ClusterOps {
     * common gates.
     */
   private def gatedCorpusV2(documents: DataFrame,
-                            benchmarkOpt: Option[DataFrame],
                             trainedWeights: Option[Seq[Long]] = None): DataFrame = {
     // the generators' raw edges, duplicates and all: `normalize`
     // deduplicates the union once (union-find ignores repeats anyway),
@@ -583,26 +576,26 @@ object ClusterOps {
     }).select(col("doc_id"), col("n_tokens"), col("quality"))
     val repetition = graft.ops.TextOps.repetitionStats(documents)
       .select(col("doc_id"), col("dup_line_frac"), col("top_bigram_frac"))
-    val (train, bench) = benchmarkOpt match {
-      case Some(b) =>
-        (documents.join(b.select("doc_id"), Seq("doc_id"), "left_anti"), b)
-      case None => (documents.filter(col("doc_id") % 10 =!= 7),
-        documents.filter(col("doc_id") % 10 === 7))
-    }
-    val contaminated = graft.ops.TextOps.benchmarkContamination(train, bench)
-      .select("doc_id")
-    val gated = kept.join(quality, "doc_id")
+    val contaminated = benchmarkLeaks(documents)
+    kept.join(quality, "doc_id")
       .join(repetition, "doc_id")
       .filter(col("top_bigram_frac") <= maxTopBigramFrac &&
         col("dup_line_frac") <= maxDupLineFrac &&
         col("lang").isin(corpusLangs: _*))
-    // membership gate: no benchmark doc ever trains (beyond the n-gram
-    // leak gate). Default path keeps the round-7 inline mod filter.
-    (benchmarkOpt match {
-      case Some(b) => gated.join(b.select("doc_id"), Seq("doc_id"), "left_anti")
-      case None => gated.filter(col("doc_id") % 10 =!= 7)
-    }).join(contaminated, Seq("doc_id"), "left_anti")
+      // membership gate: no benchmark doc ever trains (beyond the
+      // n-gram leak gate)
+      .filter(col("doc_id") % 10 =!= 7)
+      .join(contaminated, Seq("doc_id"), "left_anti")
   }
+
+  /** The training documents that leak n-grams of the held-out
+    * benchmark, the fixture's `doc_id % 10 == 7` slice.
+    */
+  private def benchmarkLeaks(documents: DataFrame): DataFrame =
+    graft.ops.TextOps.benchmarkContamination(
+        documents.filter(col("doc_id") % 10 =!= 7),
+        documents.filter(col("doc_id") % 10 === 7))
+      .select("doc_id")
 
   /** Q163 — flagship V3: the v2 gates PLUS the statistical LM quality
     * gate (q156): a candidate must clear an absolute per-transition
@@ -625,7 +618,7 @@ object ClusterOps {
   def trainingCorpusV3(documents: DataFrame,
                        minLmAvgFp: Long = 460L,
                        trainedWeights: Option[Seq[Long]] = None): DataFrame = {
-    val filtered = gatedCorpusV2(documents, None, trainedWeights)
+    val filtered = gatedCorpusV2(documents, trainedWeights)
     val lm = graft.ops.TextOps.bigramLmScore(documents)
       .select(col("doc_id"), col("n_bigrams"), col("score_fp"))
     val lmGated = filtered.join(lm, "doc_id")
@@ -719,13 +712,14 @@ object ClusterOps {
     * rest; rows within a shard file are written in `pos` order, so a
     * sequential scan of the file IS the epoch's read order. Same
     * scope/artifact lifecycle as the label (q135) and index (q136)
-    * artifacts.
+    * artifacts. The eight shards are recorded as `n_shards`, which the
+    * artifact gates replay.
     */
   def saveCorpusShards(documents: DataFrame, scope: graft.core.Scope,
-                       name: String, nShards: Int = 8): Unit =
+                       name: String): Unit =
     graft.io.Artifact.save(documents.sparkSession, scope, name,
-        "n_shards" -> nShards) { at =>
-      corpusShards(documents, nShards)
+        "n_shards" -> 8) { at =>
+      corpusShards(documents)
         .repartition(col("split"), col("shard"))
         .sortWithinPartitions(col("pos"))
         .write.partitionBy("split", "shard").parquet(at("rows"))
@@ -990,36 +984,25 @@ object ClusterOps {
         "digest_artifact", "digest_expected")
   }
 
-  /** @param benchmarkOpt caller-supplied benchmark documents
-    *        (`doc_id`, `text`); `None` keeps the fixture's mod-10
-    *        slice with the round-7 plan — see [[trainingCorpusV2]].
+  /** The q68 corpus: deduplicated canonicals through the quality,
+    * repetition, language and benchmark gates (the held-out benchmark
+    * is the fixture's `doc_id % 10 == 7` slice), then an 80% hash
+    * sample.
     */
-  def trainingCorpus(documents: DataFrame,
-                     sampleRate: Double = 0.8,
-                     benchmarkOpt: Option[DataFrame] = None): DataFrame = {
+  def trainingCorpus(documents: DataFrame): DataFrame = {
     val kept = dedupedCorpus(documents)
     val quality = graft.ops.TextOps.qualityScore(documents)
       .select(col("doc_id"), col("n_tokens"), col("quality"))
     val repetition = graft.ops.TextOps.topBigramFrac(documents)
-    // default q68 split: doc_id % 10 = 7 is the held-out benchmark
-    val (train, bench) = benchmarkOpt match {
-      case Some(b) =>
-        (documents.join(b.select("doc_id"), Seq("doc_id"), "left_anti"), b)
-      case None => (documents.filter(col("doc_id") % 10 =!= 7),
-        documents.filter(col("doc_id") % 10 === 7))
-    }
-    val contaminated = graft.ops.TextOps.benchmarkContamination(train, bench)
-      .select("doc_id")
-    val gated = kept.join(quality, "doc_id")
+    val contaminated = benchmarkLeaks(documents)
+    val filtered = kept.join(quality, "doc_id")
       .join(repetition, "doc_id")
       .filter(col("quality") >= minQuality &&
         col("top_bigram_frac") <= maxTopBigramFrac &&
         col("lang").isin(corpusLangs: _*))
-    val filtered = (benchmarkOpt match {
-      case Some(b) => gated.join(b.select("doc_id"), Seq("doc_id"), "left_anti")
-      case None => gated.filter(col("doc_id") % 10 =!= 7)
-    }).join(contaminated, Seq("doc_id"), "left_anti")
-    graft.ops.SampleOps.sampleByHash(filtered, "doc_id", sampleRate, salt = "train")
+      .filter(col("doc_id") % 10 =!= 7)
+      .join(contaminated, Seq("doc_id"), "left_anti")
+    graft.ops.SampleOps.sampleByHash(filtered, "doc_id", 0.8, salt = "train")
       .select("doc_id", "lang", "source", "n_tokens", "quality")
   }
 }

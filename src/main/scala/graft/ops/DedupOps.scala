@@ -107,8 +107,8 @@ object DedupOps {
       .select(col("doc_id"), col("band.b").as("b"), col("band.bh").as("bh"))
   }
 
-  def minhashLshPairs(documents: DataFrame, numHashes: Int = 12): DataFrame =
-    lshPairsFromBands(minhashBands(documents, numHashes))
+  def minhashLshPairs(documents: DataFrame): DataFrame =
+    lshPairsFromBands(minhashBands(documents))
 
   /** The candidate-pair join over an already-built band table — shared
     * by the inline path and the STORED band artifact (q137), which is
@@ -147,7 +147,10 @@ object DedupOps {
     * runs the STORED artifact's self-join against q13's full-corpus
     * oracle. CONTRACT: append batches must be doc-disjoint from the
     * stored corpus (re-ingesting a doc would duplicate its bands;
-    * dedup upstream is q59's job).
+    * dedup upstream is q59's job). No
+    * production call passes `numHashes`; ArtifactSpec's killed-save spec
+    * varies it to prove a killed re-save never serves rows under the
+    * other geometry.
     */
   def saveBands(documents: DataFrame, scope: graft.core.Scope,
                 name: String, numHashes: Int = 12): Unit = {
@@ -208,8 +211,8 @@ object DedupOps {
   /** Q61: Bloom-accelerated incremental exact dedup — the 100 TB form
     * of [[incrementalExactDedup]]. History's fingerprint set can be
     * billions of rows; a Bloom filter over it is a BOUNDED build
-    * artifact (`expectedItems`/`fpp` sized, e.g. ~1.2 GB for 10^9 fps
-    * at 1% fpp) that each ingest batch broadcasts and probes
+    * artifact (sized for 10^6 fingerprints at 1% fpp here; ~1.2 GB
+    * for 10^9) that each ingest batch broadcasts and probes
     * per-row. The filter alone would be approximate (false positives
     * drop fresh content), so rows the filter flags are re-checked with
     * the EXACT anti-join — but that join's probe side has shrunk to
@@ -222,12 +225,10 @@ object DedupOps {
     * `util.sketch.BloomFilter`, and the UDF runs on the already-narrow
     * fp column, never on document payloads.
     */
-  def incrementalExactDedupBloom(newDocs: DataFrame, existing: DataFrame,
-                                 expectedItems: Long = 1000000L,
-                                 fpp: Double = 0.01): DataFrame = {
+  def incrementalExactDedupBloom(newDocs: DataFrame, existing: DataFrame): DataFrame = {
     val fps = newDocs.select(col("doc_id"), expr(contentFingerprintSql).as("fp"))
     val bloom = existing.select(expr(contentFingerprintSql).as("fp"))
-      .stat.bloomFilter("fp", expectedItems, fpp)
+      .stat.bloomFilter("fp", 1000000L, 0.01)
     val bloomBc = newDocs.sparkSession.sparkContext.broadcast(bloom)
     // null fp (null text) routes through the exact re-check: the
     // anti-join is null-safe (the q59 semantics — null-text history
@@ -401,10 +402,10 @@ object DedupOps {
     * selected in BOTH — a shared passage that long can never be
     * missed, while only ~2/(w+1) of all shingle hashes are kept.
     * Selection is pure per-row expression work (no UDF, no shuffle);
-    * docs too short for one full window contribute nothing.
+    * docs too short for one full window contribute nothing. k = 5,
+    * w = 4.
     */
-  def winnowedFingerprints(documents: DataFrame, k: Int = 5,
-                           w: Int = 4): DataFrame = {
+  def winnowedFingerprints(documents: DataFrame): DataFrame = {
     // round-16: fused per-row native form (graft.functions.WinnowFps)
     // — same k-shingle md5s, same w-window minima (selected on digest
     // BYTES, whose order lowercase hex encoding preserves), same
@@ -416,7 +417,7 @@ object DedupOps {
     par(documents)
       .withColumn("w", tokens)
       .select(col("doc_id"),
-        explode(SignatureFunctions.winnowFps(col("w"), k, w)).as("fp"))
+        explode(SignatureFunctions.winnowFps(col("w"), 5, 4)).as("fp"))
   }
 
   /** Q85b: passage-level duplication candidates — pairs of documents
@@ -490,13 +491,14 @@ object DedupOps {
     * dropped on BOTH the size and the intersection side, so it remains
     * a true Jaccard of the filtered sets). Sizes are folded into the
     * shingle rows via a window — no per-document side table, no
-    * broadcast, every stage is key-partitioned.
+    * broadcast, every stage is key-partitioned. Pairs at Jaccard
+    * ≥ 0.3 are kept.
     */
-  def jaccardPairs(documents: DataFrame, threshold: Double = 0.3): DataFrame = {
+  def jaccardPairs(documents: DataFrame): DataFrame = {
     shingleIntersectionPairs(documents)
       .withColumn("jaccard",
         expr("round(cast(common as double) / (sz_a + sz_b - common), 6)"))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= 0.3)
       .select("doc_a", "doc_b", "jaccard")
   }
 
@@ -520,7 +522,7 @@ object DedupOps {
 
   /** SPAN-LEVEL exact dedup — the sub-document granularity between
     * doc-level exact dedup (q12) and near-dup detection: cut every
-    * document into fixed `span`-token non-overlapping windows and keep
+    * document into fixed 20-token non-overlapping windows and keep
     * only the globally FIRST occurrence of each distinct span content
     * (first = min (doc_id, span_idx) — the practice of deduplicating
     * repeated boilerplate/quotation spans across a crawl corpus at a
@@ -541,9 +543,9 @@ object DedupOps {
     * O(corpus) narrow join, still no text exchange beyond the final
     * project.
     */
-  def spanDedup(documents: DataFrame, span: Int = 20): DataFrame = {
-    require(span > 0, s"span must be positive: $span")
+  def spanDedup(documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val span = 20
     val spans = documents
       .withColumn("w", tokens)
       .withColumn("n_tok", size(col("w")))

@@ -18,6 +18,13 @@ object GraphOps {
 
   import OpsUtil.par
 
+  /** Every rank table runs three power-iteration rounds at the decimal
+    * scale 10^12 (the oracles replay the same trajectory).
+    */
+  private val Iters = 3
+  private val ScalePow10 = 12
+  private val Scale = math.pow(10, ScalePow10).toLong
+
   /** Q118: PageRank over the nation-level trade graph — an edge
     * (supplier nation → customer nation) exists when any lineitem
     * ships between them. The edge derivation is the interesting part
@@ -34,8 +41,7 @@ object GraphOps {
     */
   def nationTradeRank(lineitem: DataFrame, orders: DataFrame,
                       customer: DataFrame, supplier: DataFrame,
-                      nation: DataFrame, iters: Int = 3,
-                      scale: Long = 1000000000000L): DataFrame = {
+                      nation: DataFrame): DataFrame = {
     val edges = par(lineitem).select("l_orderkey", "l_suppkey")
       .join(orders.select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
@@ -48,7 +54,7 @@ object GraphOps {
       .distinct()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     val nodes = nation.select(col("n_nationkey").cast("long").as("node"))
-    powerIterate(nodes, edges, deg, iters, scale)
+    powerIterate(nodes, edges, deg)
   }
 
   /** The shared exact power-iteration loop over a bounded edge set —
@@ -58,13 +64,12 @@ object GraphOps {
     * never the corpus.
     */
   private def powerIterate(nodes: DataFrame, edges: DataFrame,
-                           deg: DataFrame, iters: Int,
-                           scale: Long): DataFrame = {
+                           deg: DataFrame): DataFrame = {
     val nodeCol = nodes.columns.head
     val n = nodes.count()
-    val base = ((15L * scale) / 100) / n
-    var ranks = nodes.withColumn("pr", lit(scale / n))
-    for (_ <- 1 to iters) {
+    val base = ((15L * Scale) / 100) / n
+    var ranks = nodes.withColumn("pr", lit(Scale / n))
+    for (_ <- 1 to Iters) {
       val inflow = edges.join(deg, "src")
         .join(ranks, col("src") === col(nodeCol))
         .select(col("dst"), expr("pr div deg").as("c"))
@@ -87,15 +92,14 @@ object GraphOps {
     * [[nationTradeRank]]: ranks at a fixed decimal scale, integral
     * division throughout, the oracle replays the full trajectory.
     */
-  def domainRank(edges: DataFrame, iters: Int = 3,
-                 scale: Long = 1000000000000L): DataFrame = {
+  def domainRank(edges: DataFrame): DataFrame = {
     val e = edges.persist() // feeds deg, nodes (twice), and each round
     try {
       val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
       val nodes = e.select(col("src").as("domain"))
         .union(e.select(col("dst")))
         .distinct()
-      powerIterate(nodes, e, deg, iters, scale)
+      powerIterate(nodes, e, deg)
         .select(col("domain"), col("pr"))
         .localCheckpoint(eager = true)
     } finally { e.unpersist(blocking = false); () }
@@ -107,7 +111,7 @@ object GraphOps {
     * each call. Stored under a Scope with the iteration count and the
     * rank scale recorded in its manifest (the q137 artifact convention), so a
     * reader knows exactly which trajectory it is consuming and
-    * [[loadDomainRank]] can refuse a scale it does not expect.
+    * [[loadDomainRank]] can refuse a trajectory it does not compute.
     *
     * Refresh policy — stated honestly: this is a FULL-RECOMPUTE
     * artifact. PageRank is a global fixed point; an edge delta
@@ -120,34 +124,23 @@ object GraphOps {
     * which the crawl was already paying to extract outlinks.
     */
   def saveDomainRank(edges: DataFrame, scope: graft.core.Scope,
-                     name: String, scale: Long = 1000000000000L): Unit = {
-    val exp = math.log10(scale.toDouble).round.toInt
-    require(math.pow(10, exp).toLong == scale,
-      s"scale must be a power of ten to be meta-recordable: $scale")
+                     name: String): Unit =
     graft.io.Artifact.save(edges.sparkSession, scope, name,
-        "iters" -> 3, "scale_pow10" -> exp) { at =>
-      domainRank(edges, 3, scale).write.parquet(at("rows"))
+        "iters" -> Iters, "scale_pow10" -> ScalePow10) { at =>
+      domainRank(edges).write.parquet(at("rows"))
     }
-  }
 
   /** Reads a [[saveDomainRank]] artifact back as (domain, pr), gated
-    * on the recorded manifest: the caller states the trajectory it
-    * expects and a mismatched artifact fails loudly instead of
-    * silently feeding ranks at the wrong scale into a frontier sort.
+    * on the recorded manifest: an artifact of another trajectory fails
+    * loudly instead of silently feeding ranks at the wrong scale into a
+    * frontier sort.
     */
   def loadDomainRank(spark: org.apache.spark.sql.SparkSession,
-                     scope: graft.core.Scope, name: String,
-                     expectIters: Int = 3,
-                     expectScale: Long = 1000000000000L): DataFrame = {
+                     scope: graft.core.Scope, name: String): DataFrame = {
     val meta = graft.io.Artifact.read(spark, scope, name)
-    val exp = math.log10(expectScale.toDouble).round.toInt
-    // validate like the save path: a non-power-of-ten expectation
-    // would ROUND to a recorded exponent and pass the gate wrongly
-    require(math.pow(10, exp).toLong == expectScale,
-      s"expectScale must be a power of ten: $expectScale")
-    require(meta.int("iters") == expectIters && meta.int("scale_pow10") == exp,
+    require(meta.int("iters") == Iters && meta.int("scale_pow10") == ScalePow10,
       s"domain-rank artifact $name has meta ${meta.fields}; expected " +
-        s"iters=$expectIters scale_pow10=$exp")
+        s"iters=$Iters scale_pow10=$ScalePow10")
     spark.read.parquet(meta.table("rows"))
       .select(col("domain"), col("pr"))
   }

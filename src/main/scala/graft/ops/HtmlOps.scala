@@ -1293,7 +1293,10 @@ object HtmlOps {
     * CONTRACT: ingest batches arrive in fetch order
     * (every id in a batch exceeds every stored id) — that is what
     * makes the incremental artifact equal the batch q174 recompute,
-    * and it is the physical truth of a crawl frontier.
+    * and it is the physical truth of a crawl frontier. No
+    * production call passes `nBuckets`; ArtifactSpec's killed-save spec
+    * varies it to prove a killed re-save never serves rows under the
+    * other bucket count.
     */
   def saveUrlKeys(urls: DataFrame, scope: graft.core.Scope,
                   name: String, nBuckets: Int = 64): Unit = {
@@ -1477,8 +1480,9 @@ object HtmlOps {
         .filter(!col("blocked") && col("host") =!= ""),
       scope, name, ranks, domainCap)
 
-  /** The per-domain politeness cap of the waves that do not take one:
-    * no domain gets more than 10 slots of a wave.
+  /** The per-domain politeness cap of the waves that do not take one
+    * (every refetch wave among them): no domain gets more than 10
+    * slots of a wave.
     */
   private val domainCap = 10
 
@@ -1494,21 +1498,14 @@ object HtmlOps {
     * Scale shape: q187's plan plus the q190 projection (broadcast
     * rule sets + per-row verdict) ahead of the candidate
     * aggregation — no new shuffle class; the gate THINS the one
-    * canon-key exchange.
-    */
-  /** @param basePathCol when the caller tracks the fetching page's
-    *                     PATH (the WARC flows carry the target URI),
-    *                     page-relative hrefs merge against its
-    *                     directory per RFC 3986 §5.2.3; absent, the
-    *                     root base applies (plain-HTML fixtures have
-    *                     no page URL — stated at [[resolvedUrl]])
+    * canon-key exchange. Page-relative hrefs resolve against the root
+    * (plain-HTML pages carry no page URL — stated at [[resolvedUrl]]).
     */
   def politeFrontier(pages: DataFrame, scope: graft.core.Scope,
-                     name: String, ranks: DataFrame, rules: DataFrame,
-                     kPerDomain: Int = 10,
-                     basePathCol: Option[String] = None): DataFrame =
-    frontierFromLinks(politeGatedLinks(pages, rules, basePathCol),
-      scope, name, ranks, kPerDomain)
+                     name: String, ranks: DataFrame,
+                     rules: DataFrame): DataFrame =
+    frontierFromLinks(politeGatedLinks(pages, rules),
+      scope, name, ranks, domainCap)
 
   /** Q228: RANK-PROPORTIONAL crawl BUDGETS — the per-domain cap
     * table [[budgetedFrontier]] feeds the admission tail: domain `d`
@@ -1524,18 +1521,16 @@ object HtmlOps {
     * input and output — always a broadcast.
     */
   def rankBudgets(ranks: DataFrame, totalBudget: Int,
-                  minPerDomain: Int = 1,
                   maxPerDomain: Int = 50): DataFrame = {
     require(totalBudget > 0, s"totalBudget must be positive: $totalBudget")
-    require(minPerDomain > 0 && maxPerDomain >= minPerDomain,
-      s"bad budget bounds: min=$minPerDomain max=$maxPerDomain")
+    require(maxPerDomain >= 1, s"maxPerDomain must be positive: $maxPerDomain")
     val tot = ranks.agg(
       greatest(sum(col("pr")), lit(1L)).as("tot"))
     ranks.crossJoin(broadcast(tot))
       .select(col("domain"),
         least(greatest(
           expr(s"(CAST($totalBudget AS BIGINT) * pr) div tot"),
-          lit(minPerDomain.toLong)), lit(maxPerDomain.toLong))
+          lit(1L)), lit(maxPerDomain.toLong))
           .cast("int").as("k_domain"))
   }
 
@@ -1788,7 +1783,7 @@ object HtmlOps {
     * store can collapse the whole chain onto one key (the move
     * `/old → /tmp → /new` must count as ONE page, and its inbound
     * links must credit `/new`). Browsers and crawlers cap the walk —
-    * `maxHops` edges, default 5 (cf. RFC 9110 §15.4's historic
+    * 5 edges here (cf. RFC 9110 §15.4's historic
     * 5-redirect guidance) — and a chain that revisits a URL is a
     * `loop` verdict, one that exhausts the cap `too_deep`; both stay
     * countable rows, never an unbounded iteration.
@@ -1804,7 +1799,7 @@ object HtmlOps {
     *
     * Scale shape: the edge table is O(3xx fetches) — a bounded
     * fraction of the archive — pinned ONCE (`localCheckpoint`, the
-    * q205 discipline) and re-read by at most `maxHops` bounded
+    * q205 discipline) and re-read by at most 5 bounded
     * waves. Each wave is one shuffle join of the SHRINKING active
     * set against the pinned edges (chains are short on real crawls,
     * so the frontier collapses geometrically; the walk exits early
@@ -1814,8 +1809,8 @@ object HtmlOps {
     * loop > resolved > too_deep, mirrored exactly by the oracle's
     * recursive replay.
     */
-  def resolveRedirectChains(framed: DataFrame,
-                            maxHops: Int = 5): DataFrame = {
+  def resolveRedirectChains(framed: DataFrame): DataFrame = {
+    val maxHops = 5
     // one row per fetched URL, latest fetch wins. LAZY checkpoints
     // (round-17): the lineage cut is identical, but materialization
     // rides the first consuming job (hop 1's count) instead of paying
@@ -2019,8 +2014,7 @@ object HtmlOps {
     */
   def anchorBoostedFrontier(pages: DataFrame, scope: graft.core.Scope,
                             name: String, ranks: DataFrame,
-                            rules: DataFrame,
-                            kPerDomain: Int = 10): DataFrame = {
+                            rules: DataFrame): DataFrame = {
     val cands0 = politeGatedLinks(pages, rules)
       .withColumn("canon", canonicalUrl(col("url")))
       .groupBy(col("canon"))
@@ -2037,7 +2031,7 @@ object HtmlOps {
       .agg(count(lit(1)).cast("long").as("anchor_score"))
     val cands = cands0.join(scores, Seq("canon"), "left")
       .withColumn("anchor_score", coalesce(col("anchor_score"), lit(0L)))
-    frontierTail(cands, scope, name, ranks, kPerDomain,
+    frontierTail(cands, scope, name, ranks, domainCap,
       orderBy = Seq(col("anchor_score").desc, col("n_refs").desc,
         col("canon").asc),
       extra = Seq("anchor_score"))
@@ -2194,7 +2188,7 @@ object HtmlOps {
       .drop("bucket", "fetch_day", "etag", "last_modified")
       .join(broadcast(declared.drop("bucket")), Seq("canon"))
       .filter(col("lastmod_s") > col("last_fetch_s"))
-    refetchTail(due, "last_fetch_s", ranks, domainCap)
+    refetchTail(due, "last_fetch_s", ranks)
       .select(col("canon"), col("url"), col("domain"),
         col("lastmod_s"), col("last_fetch_s"),
         (col("lastmod_s") - col("last_fetch_s")).as("drift_s"),
@@ -2480,7 +2474,7 @@ object HtmlOps {
     * a flat `<urlset>` or a `<sitemapindex>` whose members — often
     * `.xml.gz`, inflated through the same structurally-verified gzip
     * door as archive bodies — carry the entries. The walk is a
-    * BOUNDED-DEPTH-N recursion with a VISITED set (round-16: the
+    * recursion bounded at depth 3 with a VISITED set (round-16: the
     * sitemaps.org spec forbids indexes of indexes, but real
     * publishers nest anyway, and a production walker needs both the
     * depth bound and the cycle guard — a child index pointing back at
@@ -2510,8 +2504,8 @@ object HtmlOps {
     */
   def sitemapSeedsTree(docs: DataFrame, scope: graft.core.Scope,
                        name: String, ranks: DataFrame, rules: DataFrame,
-                       maxDepth: Int = 3,
                        rootUrls: Option[DataFrame] = None): DataFrame = {
+    val maxDepth = 3
     val flat = docs.select(col("url"),
       when(col("xml").isNotNull, col("xml"))
         .otherwise(HttpFunctions.inflateBody(
@@ -3006,17 +3000,12 @@ object HtmlOps {
   }
 
   /** The carried-politeness state artifact: one tiny
-    * (domain, next_allowed_s) table per wave, written under
-    * `dir/wave=<id>` with OVERWRITE so a replayed micro-batch
-    * rewrites its own state instead of double-advancing — the same
-    * idempotency-by-layout as the wave outputs themselves. A batch
-    * reads the LATEST wave strictly before its own id (wave N-1's
-    * state already folds everything earlier), so replay after a crash
-    * mid-batch never sees its own half-written advance.
+    * (domain, next_allowed_s) table per wave, saved by
+    * [[saveWaveState]]. A batch reads the LATEST wave strictly before
+    * its own id (wave N-1's state already folds everything earlier),
+    * so replay after a crash mid-batch never sees its own half-written
+    * advance.
     */
-  def saveSchedState(state: DataFrame, dir: String, wave: Long): Unit =
-    saveWaveState(state, dir, wave)
-
   def loadSchedState(spark: org.apache.spark.sql.SparkSession,
                      dir: String, beforeWave: Long): DataFrame =
     loadWaveState(spark, dir, beforeWave, Seq("domain", "next_allowed_s"),
@@ -3087,7 +3076,7 @@ object HtmlOps {
 
   /** The maintained ROBOTS artifact (q208): latest robots bytes per
     * domain — domain-vocabulary-sized, versioned per wave exactly
-    * like the politeness state ([[saveSchedState]]): wave N reads the
+    * like the politeness state ([[loadSchedState]]): wave N reads the
     * state strictly before N (seed when none), so its gate verdicts
     * are deterministic and a replayed batch re-derives the identical
     * artifact. A robots fetch landing in wave N changes wave N+1's
@@ -3102,9 +3091,6 @@ object HtmlOps {
       .select(col("domain"),
         coalesce(col("batch_txt"), col("prior_txt")).as("robots_txt"))
 
-  def saveRobotsState(state: DataFrame, dir: String, wave: Long): Unit =
-    saveWaveState(state, dir, wave)
-
   def loadRobotsState(spark: org.apache.spark.sql.SparkSession,
                       dir: String, beforeWave: Long,
                       seed: DataFrame): DataFrame =
@@ -3112,14 +3098,32 @@ object HtmlOps {
       fallback = seed.select(col("domain"), col("robots_txt")))
 
   /** The ONE versioned tiny-state protocol behind the politeness and
-    * robots artifacts: full overwrite under `dir/wave=<id>`, read the
-    * LATEST wave strictly before a given id (the caller's fallback
-    * when none) — the replay contract lives here once, so the two
-    * artifacts can never diverge on it.
+    * robots artifacts: full overwrite under `dir/wave=<id>`, so a
+    * replayed micro-batch rewrites its own state instead of
+    * double-advancing (the same idempotency-by-layout as the wave
+    * outputs themselves); readers take the LATEST wave strictly before
+    * a given id (the caller's fallback when none) — the replay
+    * contract lives here once, so the two artifacts can never diverge
+    * on it.
     */
-  private def saveWaveState(state: DataFrame, dir: String,
-                            wave: Long): Unit =
+  def saveWaveState(state: DataFrame, dir: String, wave: Long): Unit =
     state.write.mode("overwrite").parquet(s"$dir/wave=$wave")
+
+  /** The wave ids saved under `dir`, ascending (none when `dir` does
+    * not exist), with the file system that holds them.
+    */
+  private def waveStateIds(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): (org.apache.hadoop.fs.FileSystem, Seq[Long]) = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val waves =
+      if (!fs.exists(p)) Seq.empty[Long]
+      else fs.listStatus(p).toSeq.map(_.getPath.getName)
+        .filter(_.startsWith("wave="))
+        .flatMap(n => scala.util.Try(n.stripPrefix("wave=").toLong).toOption)
+        .sorted
+    (fs, waves)
+  }
 
   /** Q209's sibling for the VERSIONED TINY-STATE artifacts
     * (`schedstate`/`robotsstate`): drop every superseded `wave=<N`
@@ -3135,13 +3139,7 @@ object HtmlOps {
     */
   def pruneWaveStates(spark: org.apache.spark.sql.SparkSession,
                       dir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Seq.empty
-    val waves = fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("wave="))
-      .flatMap(n => scala.util.Try(n.stripPrefix("wave=").toLong).toOption)
-      .sorted
+    val (fs, waves) = waveStateIds(spark, dir)
     val drop = waves.dropRight(1)
     drop.foreach(w => graft.core.Scopes.deletePath(fs,
       new org.apache.hadoop.fs.Path(s"$dir/wave=$w")))
@@ -3151,21 +3149,12 @@ object HtmlOps {
   private def loadWaveState(spark: org.apache.spark.sql.SparkSession,
                             dir: String, beforeWave: Long,
                             cols: Seq[String],
-                            fallback: => DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prior =
-      if (!fs.exists(p)) Seq.empty[Long]
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("wave="))
-        .flatMap(n => scala.util.Try(n.stripPrefix("wave=").toLong).toOption)
-        .filter(_ < beforeWave)
-    prior.sorted.lastOption match {
+                            fallback: => DataFrame): DataFrame =
+    waveStateIds(spark, dir)._2.filter(_ < beforeWave).lastOption match {
       case Some(w) => spark.read.parquet(s"$dir/wave=$w")
         .select(cols.map(col): _*)
       case None => fallback
     }
-  }
 
   /** A robots.txt fetch as a WARC chunk — the fixture side of q208:
     * an octet-exact response record wrapping a `200 text/plain` HTTP
@@ -3228,8 +3217,8 @@ object HtmlOps {
     * any engine.
     */
   def refetchWave(fetchLog: DataFrame, nowS: Long, ttlS: Long,
-                  ranks: DataFrame, kPerDomain: Int = 10): DataFrame =
-    ttlWave(latestFetchPerKey(fetchLog), nowS, ttlS, ranks, kPerDomain)
+                  ranks: DataFrame): DataFrame =
+    ttlWave(latestFetchPerKey(fetchLog), nowS, ttlS, ranks)
 
   /** The latest-fetch reduction shared by [[refetchWave]] (one-shot
     * over a raw log) and the MAINTAINED fetch-log artifact
@@ -3274,14 +3263,14 @@ object HtmlOps {
     * key is due once its age reaches `ttlS`.
     */
   private def ttlWave(last: DataFrame, nowS: Long, ttlS: Long,
-                      ranks: DataFrame, kPerDomain: Int): DataFrame = {
+                      ranks: DataFrame): DataFrame = {
     require(ttlS > 0, s"ttlS must be positive: $ttlS")
     val due = withValidatorCols(last).select(col("canon"), col("url"),
         col("last_fetch_s"), col("etag"), col("last_modified"))
       .filter(lit(nowS) - col("last_fetch_s") >= ttlS)
       .withColumn("domain",
         graft.ops.PiiOps.registrableDomain(hostOf(col("url"))))
-    refetchTail(due, "last_fetch_s", ranks, kPerDomain)
+    refetchTail(due, "last_fetch_s", ranks)
       .select(col("canon"), col("url"), col("domain"),
         col("last_fetch_s"), col("etag"), col("last_modified"),
         (lit(nowS) - col("last_fetch_s")).as("age_s"),
@@ -3292,21 +3281,20 @@ object HtmlOps {
     * q223, q224, q227): a due set carrying `domain`, `canon` and the
     * staleness column `staleCol` gets its domain's rank `pr` (a
     * broadcast join — an unranked domain ranks 0) and keeps at most
-    * `kPerDomain` keys per domain, stalest first with `canon` as the
+    * [[domainCap]] keys per domain, stalest first with `canon` as the
     * tiebreak (q187's WindowGroupLimit shape). Adds `pr` and `slot`;
     * each wave selects its own output columns.
     */
   private def refetchTail(due: DataFrame, staleCol: String,
-                          ranks: DataFrame, kPerDomain: Int): DataFrame = {
+                          ranks: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(kPerDomain > 0, s"kPerDomain must be positive: $kPerDomain")
     val w = Window.partitionBy(col("domain"))
       .orderBy(col(staleCol).asc, col("canon").asc)
     due.join(broadcast(ranks.select(col("domain"), col("pr"))),
         Seq("domain"), "left")
       .withColumn("pr", coalesce(col("pr"), lit(0L)))
       .withColumn("slot", row_number().over(w))
-      .filter(col("slot") <= kPerDomain)
+      .filter(col("slot") <= domainCap)
   }
 
   /** The TTL bounds the adaptive waves (q219, q224, q227) take. */
@@ -3541,8 +3529,7 @@ object HtmlOps {
     */
   def refetchWaveFromLog(spark: org.apache.spark.sql.SparkSession,
                          scope: graft.core.Scope, name: String,
-                         nowS: Long, ttlS: Long, ranks: DataFrame,
-                         kPerDomain: Int = 10): DataFrame = {
+                         nowS: Long, ttlS: Long, ranks: DataFrame): DataFrame = {
     // the coarse twin of ttlWave's exact `age >= ttl` filter:
     // due ⇒ last_fetch_s <= now - ttl ⇒ fetch_day <= floor((now-ttl)
     // / 86400) — a PARTITION predicate, so the scan lists only stale
@@ -3555,7 +3542,7 @@ object HtmlOps {
       Math.floorDiv(nowS - ttlS, 86400L))).toInt
     ttlWave(loadFetchLog(spark, scope, name)
         .filter(col("fetch_day") <= dueDay),
-      nowS, ttlS, ranks, kPerDomain)
+      nowS, ttlS, ranks)
   }
 
   /** An HTTP-date (IMF-fixdate, RFC 9110 §5.6.7) as epoch seconds,
@@ -3596,8 +3583,7 @@ object HtmlOps {
     */
   def heuristicRefetchWave(fetchLog: DataFrame, nowS: Long,
                            defaultTtlS: Long, minTtlS: Long,
-                           maxTtlS: Long, ranks: DataFrame,
-                           kPerDomain: Int = 10): DataFrame = {
+                           maxTtlS: Long, ranks: DataFrame): DataFrame = {
     requireTtlBounds(defaultTtlS, minTtlS, maxTtlS)
     val lmEpoch = httpDateEpoch(col("last_modified"))
     val ttl = when(lmEpoch.isNull || lmEpoch > col("last_fetch_s"),
@@ -3610,7 +3596,7 @@ object HtmlOps {
       .filter(lit(nowS) - col("last_fetch_s") >= col("ttl_s"))
       .withColumn("domain",
         graft.ops.PiiOps.registrableDomain(hostOf(col("url"))))
-    refetchTail(due, "last_fetch_s", ranks, kPerDomain)
+    refetchTail(due, "last_fetch_s", ranks)
       .select(col("canon"), col("url"), col("domain"),
         col("last_fetch_s"), col("ttl_s"),
         (lit(nowS) - col("last_fetch_s")).as("age_s"),
@@ -3670,7 +3656,7 @@ object HtmlOps {
       .filter(due)
       .withColumn("domain",
         graft.ops.PiiOps.registrableDomain(hostOf(col("url"))))
-    refetchTail(merged, "last_fetch_s", ranks, domainCap)
+    refetchTail(merged, "last_fetch_s", ranks)
       .select(col("canon"), col("url"), col("domain"), col("reason"),
         col("last_fetch_s"), age.as("age_s"), col("pr"),
         col("slot").cast("int").as("slot"))
@@ -3884,9 +3870,12 @@ object HtmlOps {
     */
   def plantedRevisitCorpus(documents: DataFrame): DataFrame = {
     val crlf = "\r\n"
+    // pinned, so the stages below carry none of the archive
+    // generator's and framing's expression tree in their task binaries
     val framed1 = httpFrame(warcFrame(plantedWarcCorpus(documents), "warc"))
       .filter(col("length_ok") && col("http_ok") && col("body_ok"))
       .select(col("target_uri"), col("body"))
+      .localCheckpoint(eager = true)
     val stored = framed1
       .groupBy(canonicalUrl(col("target_uri")).as("canon"))
       .agg(min(col("target_uri")).as("url"),
@@ -4027,7 +4016,7 @@ object HtmlOps {
       .filter(lit(nowS) - col("last_s") >= col("ttl_s"))
       .withColumn("domain",
         graft.ops.PiiOps.registrableDomain(hostOf(col("canon"))))
-    refetchTail(due, "last_s", ranks, domainCap)
+    refetchTail(due, "last_s", ranks)
       .select(col("canon"), col("domain"), col("n_versions"),
         col("ttl_s"), col("last_s"),
         (lit(nowS) - col("last_s")).as("age_s"), col("pr"),

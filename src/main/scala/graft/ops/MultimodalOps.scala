@@ -265,14 +265,13 @@ object MultimodalOps {
       "no installed reader accepts the payload")
   }
 
-  def readWavStats(bytes: Array[Byte], maxSamples: Long = 1L << 24)
-      : Option[(Int, Int, Int, Int, Int, Long)] =
+  def readWavStats(bytes: Array[Byte]): Option[(Int, Int, Int, Int, Int, Long)] =
     try {
       val ais = openAudioStream(bytes)
       try {
         val fmt = ais.getFormat
         val n = ais.getFrameLength
-        if (n <= 0 || n > maxSamples || fmt.getChannels != 1 ||
+        if (n <= 0 || n > (1L << 24) || fmt.getChannels != 1 ||
             fmt.getSampleSizeInBits != 16 || fmt.isBigEndian) None
         else {
           val pcm = ais.readAllBytes()
@@ -314,14 +313,15 @@ object MultimodalOps {
       "peak", "ssum")
   }
 
-  /** Batched per-partition decode/feature-extraction. */
+  /** Batched per-partition decode/feature-extraction, 64 records per
+    * batch.
+    */
   def decode(media: Dataset[MediaRecord],
-             decoder: MediaDecoder = ImageIoDecoder,
-             batchSize: Int = 64): Dataset[MediaMeta] = {
+             decoder: MediaDecoder = ImageIoDecoder): Dataset[MediaMeta] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap(b => decoder.decodeBatch(b))
+      it.grouped(64).flatMap(b => decoder.decodeBatch(b))
     }
   }
 

@@ -120,20 +120,19 @@ object PiiOps {
     * corpus is [[redactedText]] minus the audit columns.
     */
   def piiRedact(documents: DataFrame,
-                patterns: Seq[(String, String, String)] = defaultPatterns,
                 keep: Seq[String] = Seq.empty): DataFrame = {
     val text = coalesce(col("text"), lit(""))
     // count each pattern on the text THAT STAGE actually rewrites
     // (the scan-left prefix chain) — an independent per-class count
     // on the raw input would overcount when one class's match
     // contains another's (an IP inside an email's domain)
-    val stages = patterns.scanLeft(text) { case (c, (_, re, ph)) =>
+    val stages = defaultPatterns.scanLeft(text) { case (c, (_, re, ph)) =>
       regexp_replace(c, re, ph)
     }
-    val matched = patterns.zip(stages).map { case ((_, re, _), pre) =>
+    val matched = defaultPatterns.zip(stages).map { case ((_, re, _), pre) =>
       regexp_count(pre, lit(re))
     }.reduce(_ + _)
-    val residual = patterns.map { case (_, re, _) =>
+    val residual = defaultPatterns.map { case (_, re, _) =>
       regexp_count(col("redacted"), lit(re))
     }.reduce(_ + _)
     documents

@@ -45,9 +45,10 @@ object SampleOps {
     * per-row filter, no join, no shuffle.
     */
   /** Q76: TEMPERATURE-SCALED source mixing — downsample-only
-    * rebalancing toward a `n^alpha` target mix (alpha = 1 keeps the
-    * natural distribution, alpha = 0 equalizes sources): each
-    * stratum's keep-rate is `(n_min / n_s)^(1 - alpha)`, so the
+    * rebalancing toward a `n^alpha` target mix at alpha = 0.7 (alpha =
+    * 1 would keep the natural distribution, alpha = 0 equalize
+    * sources): each stratum's keep-rate is `(n_min / n_s)^(1 - alpha)`,
+    * so the
     * smallest source keeps everything and larger sources are
     * deterministically hash-thinned toward the tempered proportions —
     * the standard mixing-weights step of a pretraining pipeline.
@@ -62,8 +63,8 @@ object SampleOps {
     * corpus-sized shuffle at any scale.
     */
   def temperatureSample(df: DataFrame, keyCol: String, stratumCol: String,
-                        alpha: Double = 0.7, salt: String = ""): DataFrame = {
-    require(alpha >= 0.0 && alpha <= 1.0, s"alpha must be in [0,1]: $alpha")
+                        salt: String = ""): DataFrame = {
+    val alpha = 0.7
     val counts = df.groupBy(stratumCol).agg(count(lit(1)).as("n_s"))
     val rates = counts
       .withColumn("n_min", min("n_s").over(
@@ -72,7 +73,7 @@ object SampleOps {
         pow(col("n_min").cast("double") / col("n_s"), 1.0 - alpha).as("rate"))
     // null-SAFE join: a NULL stratum is a stratum like any other (it
     // was counted above) — a plain equi-join would silently drop every
-    // NULL-stratum row, breaking "alpha = 1 keeps everything"
+    // NULL-stratum row
     df.join(broadcast(rates), col(stratumCol) <=> col("_stratum"))
       .filter(hashUnit(col(keyCol), salt) < col("rate"))
       .drop("_stratum", "rate")
@@ -147,8 +148,8 @@ object SampleOps {
   }
 
   /** Q123: EXACT per-stratum WINSORIZATION — robust clipping of an
-    * integer feature (length, token count, score) at exact order-
-    * statistic percentiles, the outlier-taming step before a feature
+    * integer feature (length, token count, score) at the exact 1st and
+    * 99th order-statistic percentiles, the outlier-taming step before a feature
     * feeds a mix weight or a quality model (one 10^9-char document
     * must not own the length budget of its language).
     *
@@ -163,10 +164,7 @@ object SampleOps {
     * thresholds and sums bit-for-bit; no sampled sketch
     * (approx_percentile) enters the result.
     */
-  def winsorize(df: DataFrame, valueCol: String, stratumCol: String,
-                pLowPct: Int = 1, pHighPct: Int = 99): DataFrame = {
-    require(0 <= pLowPct && pLowPct < pHighPct && pHighPct <= 100,
-      s"need 0 <= lo < hi <= 100: $pLowPct, $pHighPct")
+  def winsorize(df: DataFrame, valueCol: String, stratumCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(stratumCol)).orderBy(col(valueCol).asc)
     val hist = df.groupBy(col(stratumCol), col(valueCol))
@@ -179,8 +177,8 @@ object SampleOps {
     val thresholds = hist
       .groupBy(col(stratumCol))
       .agg(
-        min(when(col("cum") >= kth(pLowPct), col(valueCol))).as("lo"),
-        min(when(col("cum") >= kth(pHighPct), col(valueCol))).as("hi"))
+        min(when(col("cum") >= kth(1), col(valueCol))).as("lo"),
+        min(when(col("cum") >= kth(99), col(valueCol))).as("hi"))
     df.join(broadcast(thresholds), stratumCol)
       .withColumn("clipped",
         greatest(least(col(valueCol), col("hi")), col("lo")))
@@ -202,8 +200,9 @@ object SampleOps {
     * WITHIN a shard, which is exactly the parallelism grain training
     * consumes shards at — size nShards to the reader fleet (hundreds
     * to thousands at 100 TB), never 1 (that would be a global sort).
-    * Salt decorrelates re-shuffles across epochs: salt "epoch1" and
-    * "epoch2" give independent orders over the same corpus.
+    * The hash salt "shuffle" decorrelates the order from every other
+    * hash-derived assignment (the "split" salt's train/val/test split
+    * among them).
     */
   /** Q144: BUDGET-CONSTRAINED domain mixture — the allocation twin of
     * [[temperatureSample]] (q76): where q76 rebalances PROPORTIONS by
@@ -427,11 +426,10 @@ object SampleOps {
       .join(broadcast(quotaDf), domainCol)
   }
 
-  def shuffleShards(df: DataFrame, keyCol: String, nShards: Int,
-                    salt: String = "shuffle"): DataFrame = {
+  def shuffleShards(df: DataFrame, keyCol: String, nShards: Int): DataFrame = {
     require(nShards > 0, s"nShards must be positive: $nShards")
     import org.apache.spark.sql.expressions.Window
-    df.select(col(keyCol), hashUnit(col(keyCol), salt).as("u"))
+    df.select(col(keyCol), hashUnit(col(keyCol), "shuffle").as("u"))
       .withColumn("shard",
         least(floor(col("u") * nShards), lit((nShards - 1).toDouble))
           .cast("int"))

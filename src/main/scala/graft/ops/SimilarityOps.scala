@@ -30,19 +30,19 @@ object SimilarityOps {
     par(df).withColumn(normCol, sqrt(vecDot(col(vecCol), col(vecCol))))
 
   /** Q16: exact brute-force top-k cosine neighbors for each query
-    * vector (vec_id < nQueries). The query side is tiny and broadcast;
+    * vector (vec_id < 5). The query side is tiny and broadcast;
     * the candidate scan is embarrassingly parallel, one pass over the
     * corpus; the window-rank top-k shuffles only (query_id, k) rows.
     *
     * Plan note: the non-equi condition makes this a
     * BroadcastNestedLoopJoin — intended and scale-safe HERE because
-    * the broadcast side is BOUNDED (nQueries rows) and the corpus
+    * the broadcast side is BOUNDED (5 rows) and the corpus
     * streams once past it; the harmful nested loop is the one with an
     * unbounded side, which [[closestPairs]] eliminates.
     */
-  def bruteForceKnn(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10): DataFrame = {
+  def bruteForceKnn(embeddings: DataFrame, k: Int = 10): DataFrame = {
     val cands = withNorm(embeddings, "embedding", "cn")
-    val queries = cands.filter(col("vec_id") < nQueries)
+    val queries = cands.filter(col("vec_id") < probeQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"), col("cn").as("qn"))
     val scored = cands.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .withColumn("sim", sim("q", "embedding", "qn", "cn"))
@@ -58,7 +58,8 @@ object SimilarityOps {
     * in a block-partitioned equi-join (see [[closestPairs]] scaladoc)
     * and is scored with the codegen'd cosine.
     */
-  private def scoredPairs(embeddings: DataFrame, blocks: Int): DataFrame = {
+  private def scoredPairs(embeddings: DataFrame): DataFrame = {
+    val blocks = 32
     val n = withNorm(embeddings, "embedding", "n")
     // pmod, not %: Spark's % is sign-preserving, so a negative vec_id
     // would land in a block the left side never replicates to and all
@@ -83,14 +84,13 @@ object SimilarityOps {
     * — in the partition of b's block. That is a plain shuffled
     * equi-join on the block key (parallelism = `blocks`, replication
     * cost `blocks`·n ≪ n² compute), no BroadcastNestedLoopJoin, no
-    * corpus broadcast, and the final top-N plans as
-    * TakeOrderedAndProject (per-partition heaps).
+    * corpus broadcast, and the final top-20 plans as
+    * TakeOrderedAndProject (per-partition heaps). 32 blocks.
     */
-  def closestPairs(embeddings: DataFrame, topN: Int = 20,
-                   blocks: Int = 32): DataFrame =
-    scoredPairs(embeddings, blocks)
+  def closestPairs(embeddings: DataFrame): DataFrame =
+    scoredPairs(embeddings)
       .orderBy(col("sim").desc, col("id_a").asc, col("id_b").asc)
-      .limit(topN)
+      .limit(20)
       .select("id_a", "id_b", "sim")
 
   /** Q65: embedding-cosine NEAR-DUP pairs — the threshold form of
@@ -100,11 +100,11 @@ object SimilarityOps {
     */
   def embeddingNearDupPairs(embeddings: DataFrame,
                             threshold: Double = 0.45): DataFrame =
-    scoredPairs(embeddings, 32)
+    scoredPairs(embeddings)
       .filter(col("sim") >= threshold)
       .select("id_a", "id_b", "sim")
 
-  /** Q66: SEMANTIC DEDUP applied — near-dup pairs above `threshold`
+  /** Q66: SEMANTIC DEDUP applied — near-dup pairs at cosine ≥ 0.5
     * resolved into connected components (the same size-adaptive
     * machinery as the lexical q41), keeping each component's canonical
     * (minimum) vector with the count of near-duplicates it absorbed.
@@ -113,8 +113,8 @@ object SimilarityOps {
     * MinHash (q13), SimHash (q14/q27), n-gram Jaccard (q15), and
     * embedding-cosine (q65/q66).
     */
-  def semanticDedupApply(embeddings: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val pairs = embeddingNearDupPairs(embeddings, threshold)
+  def semanticDedupApply(embeddings: DataFrame): DataFrame = {
+    val pairs = embeddingNearDupPairs(embeddings, 0.5)
       .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
     val vertices = embeddings.select(col("vec_id").as("doc_id"))
     val labels = ClusterOps.connectedComponents(vertices, pairs)
@@ -159,7 +159,7 @@ object SimilarityOps {
     * sample; only the cheap assignment transform touches the full
     * corpus.
     */
-  def buildIvfIndex(embeddings: DataFrame, nlist: Int = 16,
+  def buildIvfIndex(embeddings: DataFrame,
                     trainOpt: Option[DataFrame] = None): IvfIndex = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
@@ -199,8 +199,7 @@ object SimilarityOps {
     * caller (probeIvf, probeIvfPruned, probeIvfPq) routes through
     * here. Input: (query_id, q, qn); output: (p_qid, cell).
     */
-  private def nearestCells(queries: DataFrame, centroids: DataFrame,
-                           nprobe: Int): DataFrame =
+  private def nearestCells(queries: DataFrame, centroids: DataFrame): DataFrame =
     queries.crossJoin(broadcast(centroids))
       .withColumn("dist2",
         col("qn") * col("qn") - lit(2) * vecDot(col("q"), col("centroid")) +
@@ -233,12 +232,11 @@ object SimilarityOps {
     * tiny broadcast cross-join (queries × centroids); candidate scoring
     * joins on the cell key.
     */
-  def probeIvf(index: IvfIndex, nQueries: Int = 5, k: Int = 10,
-               nprobe: Int = 8): DataFrame = {
+  def probeIvf(index: IvfIndex): DataFrame = {
     // nprobe nearest cells per query: ||q-c||² = |q|² - 2q·c + |c|²
-    val queries = index.assigned.filter(col("vec_id") < nQueries)
+    val queries = index.assigned.filter(col("vec_id") < probeQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"), col("cn").as("qn"))
-    val probes = nearestCells(queries, index.centroids, nprobe)
+    val probes = nearestCells(queries, index.centroids)
 
     val cands = index.assigned.join(
         broadcast(probes.join(queries, col("p_qid") === col("query_id"))), Seq("cell"))
@@ -247,7 +245,7 @@ object SimilarityOps {
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("vec_id").asc)
     cands.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= probeK)
       .select("query_id", "rnk", "vec_id", "sim")
   }
 
@@ -312,14 +310,13 @@ object SimilarityOps {
     * Queries arrive as their own frame (vec_id, embedding) — a probe
     * against a stored index must not rescan the index to find them.
     */
-  def probeIvfPruned(index: IvfIndex, queryVecs: DataFrame, nQueries: Int = 5,
-                     k: Int = 10, nprobe: Int = 8): DataFrame = {
+  def probeIvfPruned(index: IvfIndex, queryVecs: DataFrame): DataFrame = {
     val spark = index.assigned.sparkSession
-    val queries = withNorm(queryVecs.filter(col("vec_id") < nQueries),
+    val queries = withNorm(queryVecs.filter(col("vec_id") < probeQueries),
         "embedding", "qn")
       .select(col("vec_id").as("query_id"), col("embedding").as("q"), col("qn"))
-    val probes = nearestCells(queries, index.centroids, nprobe)
-    // BOUNDED collect: nQueries × nprobe (query, cell) pairs — never
+    val probes = nearestCells(queries, index.centroids)
+    // BOUNDED collect: queries × nprobe (query, cell) pairs — never
     // corpus rows — traded for a literal IN the scan can prune on
     val probedRows = probes.collect()
     val cells = probedRows.map(_.get(1)).distinct.toSeq
@@ -334,16 +331,15 @@ object SimilarityOps {
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("vec_id").asc)
     cands.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= probeK)
       .select("query_id", "rnk", "vec_id", "sim")
   }
 
   /** Q16c: IVF approximate kNN — build + probe in one call (the shape
     * the oracle harness drives; production splits the two).
     */
-  def ivfKnn(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10,
-             nlist: Int = 16, nprobe: Int = 8): DataFrame =
-    probeIvf(buildIvfIndex(embeddings, nlist), nQueries, k, nprobe)
+  def ivfKnn(embeddings: DataFrame): DataFrame =
+    probeIvf(buildIvfIndex(embeddings))
 
   /** Self-check gate for an approximate kNN against the exact one,
     * computed in the SAME job: per-query recall@k, emitting only the
@@ -444,7 +440,7 @@ object SimilarityOps {
     * float arrays never ride a candidate-multiplicity shuffle.
     * Recall is gated against the exact scan by [[lshKnnRecallGate]].
     */
-  def lshKnn(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10): DataFrame = {
+  def lshKnn(embeddings: DataFrame): DataFrame = {
     val corpus = withNorm(embeddings, "embedding", "cn")
     val corpusCodes = tableCodes(corpus)
     // query probes: own code plus each single-bit flip, per table —
@@ -459,13 +455,13 @@ object SimilarityOps {
     // it on the query rows: the plane expression exists once in the
     // whole plan, so both sides of the bucket join share one generated
     // projection (one janino compile, one codegen-cache entry)
-    val queryProbes = corpusCodes.filter(col("vec_id") < nQueries)
+    val queryProbes = corpusCodes.filter(col("vec_id") < probeQueries)
       .select(col("vec_id").as("query_id"), col("t"),
         explode(expr(flipArray)).as("code"))
     val candIds = corpusCodes.join(broadcast(queryProbes), Seq("t", "code"))
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "vec_id").distinct()
-    val queries = corpus.filter(col("vec_id") < nQueries)
+    val queries = corpus.filter(col("vec_id") < probeQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"),
         col("cn").as("qn"))
     val scored = candIds
@@ -475,7 +471,7 @@ object SimilarityOps {
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("vec_id").asc)
     scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= probeK)
       .select("query_id", "rnk", "vec_id", "sim")
   }
 
@@ -511,6 +507,16 @@ object SimilarityOps {
     * laid out for.
     */
   private val embeddingDim = 64
+
+  /** The approximate-kNN geometry every probe shares, replayed by the
+    * recall gates and the oracles: the vectors with vec_id below 5 are
+    * the queries, each gets its 10 nearest neighbors, and an IVF probe
+    * visits the 8 nearest of 16 cells.
+    */
+  private val probeQueries = 5
+  private val probeK = 10
+  private val nlist = 16
+  private val nprobe = 8
 
   /** Shared by the IVF and PQ builds: the deterministic hash-sampled,
     * vec_id-sorted, single-partition training frame (see
@@ -643,10 +649,9 @@ object SimilarityOps {
     * row at BUILD time (not per query), and it reads only the
     * embedding column.
     */
-  def buildPqIndex(embeddings: DataFrame, m: Int = 32,
+  def buildPqIndex(embeddings: DataFrame,
                    trainOpt: Option[DataFrame] = None): PqIndex = {
-    require(embeddingDim % m == 0,
-      s"dim $embeddingDim must divide into m=$m subvectors")
+    val m = 32
     val dsub = embeddingDim / m
     val spark = embeddings.sparkSession
     import spark.implicits._
@@ -748,8 +753,8 @@ object SimilarityOps {
     * point at test scale — at 100 TB the LUT form avoids materializing
     * x̂, trading the decode join for an m-term per-row lookup sum.
     */
-  def pqKnn(embeddings: DataFrame, nQueries: Int = 5, k: Int = 10): DataFrame =
-    probePq(buildPqIndex(embeddings), embeddings, nQueries, k)
+  def pqKnn(embeddings: DataFrame): DataFrame =
+    probePq(buildPqIndex(embeddings), embeddings)
 
   /** The per-query-batch half of the PQ pair (like [[probeIvfPruned]]
     * for IVF): score full-precision queries against an ALREADY-BUILT
@@ -757,18 +762,17 @@ object SimilarityOps {
     * their own frame; a probe against a stored index must not rescan
     * the corpus to find them.
     */
-  def probePq(index: PqIndex, queryVecs: DataFrame, nQueries: Int = 5,
-              k: Int = 10): DataFrame = {
+  def probePq(index: PqIndex, queryVecs: DataFrame): DataFrame = {
     val recon = withNorm(reconstructPq(index), "embedding", "cn")
     val queries = withNorm(queryVecs, "embedding", "qn")
-      .filter(col("vec_id") < nQueries)
+      .filter(col("vec_id") < probeQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"), col("qn"))
     val scored = recon.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .withColumn("sim", sim("q", "embedding", "qn", "cn"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("vec_id").asc)
     scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= probeK)
       .select("query_id", "rnk", "vec_id", "sim")
   }
 
@@ -913,14 +917,13 @@ object SimilarityOps {
       .parquet(meta.table("cells"))
   }
 
-  def probeIvfPq(index: IvfPqIndex, queryVecs: DataFrame, nQueries: Int = 5,
-                 k: Int = 10, nprobe: Int = 8): DataFrame = {
+  def probeIvfPq(index: IvfPqIndex, queryVecs: DataFrame): DataFrame = {
     val spark = index.cellCodes.sparkSession
-    val queries = withNorm(queryVecs.filter(col("vec_id") < nQueries),
+    val queries = withNorm(queryVecs.filter(col("vec_id") < probeQueries),
         "embedding", "qn")
       .select(col("vec_id").as("query_id"), col("embedding").as("q"), col("qn"))
-    val probes = nearestCells(queries, index.centroids, nprobe)
-    // bounded collect, as in probeIvfPruned: nQueries × nprobe pairs
+    val probes = nearestCells(queries, index.centroids)
+    // bounded collect, as in probeIvfPruned: queries × nprobe pairs
     val probedRows = probes.collect()
     val cells = probedRows.map(_.get(1)).distinct.toSeq
     val probesLocal = spark.createDataFrame(
@@ -940,7 +943,7 @@ object SimilarityOps {
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("vec_id").asc)
     cands.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= probeK)
       .select("query_id", "rnk", "vec_id", "sim")
   }
 
@@ -1121,13 +1124,16 @@ object SimilarityOps {
         col("m.d2").as("d2"), col("embedding"))
   }
 
-  def kmeansStep(embeddings: DataFrame, k: Int = 8): DataFrame =
+  def kmeansStep(embeddings: DataFrame): DataFrame =
     labelCentroids(
-      kmeansAssign(embeddings, kmeansSeeds(embeddings, k))
+      kmeansAssign(embeddings, kmeansSeeds(embeddings, kmeansK))
         .select(col("cluster"), col("embedding")),
       labelCol = "cluster")
 
-  /** Q117: ITERATED exact k-means — [[kmeansStep]] composed t times,
+  /** The k of [[kmeansStep]] and [[kmeans]]. */
+  private val kmeansK = 8
+
+  /** Q117: ITERATED exact k-means — [[kmeansStep]] composed 3 times,
     * each round's fixed-point centroids re-quantized as the next
     * round's seeds. Because every stage of every round is integer-
     * exact, the full t-round trajectory is engine-reproducible: the
@@ -1141,13 +1147,13 @@ object SimilarityOps {
     * t-deep recursive plan. Clusters that capture no vectors drop out
     * (standard Lloyd behavior, reproduced by the oracle).
     */
-  def kmeans(embeddings: DataFrame, k: Int = 8, iters: Int = 3): DataFrame = {
+  def kmeans(embeddings: DataFrame): DataFrame = {
     val sp = embeddings.sparkSession
     import sp.implicits._
     val s = 1L << fxBits
-    var seeds = kmeansSeeds(embeddings, k)
+    var seeds = kmeansSeeds(embeddings, kmeansK)
     var cents: DataFrame = null
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to 3) {
       cents = labelCentroids(
         kmeansAssign(embeddings, seeds)
           .select(col("cluster"), col("embedding")),
@@ -1172,7 +1178,7 @@ object SimilarityOps {
     * arithmetic is a two-term double chain any engine reproduces.
     *
     * Dense list: the [[bruteForceKnn]] machinery (per-corpus-row dot
-    * products against nQueries broadcast vectors). Sparse list:
+    * products against the 5 broadcast query vectors). Sparse list:
     * distinct-token overlap with the query document — the token
     * stream joins a BROADCAST query-token table, so the corpus-side
     * pass is map-side; the only shuffles are the two per-query-bounded
@@ -1181,15 +1187,15 @@ object SimilarityOps {
     * the full-outer join and final top-k touch only candidate rows,
     * never the corpus.
     */
-  def hybridSearch(documents: DataFrame, embeddings: DataFrame,
-                   nQueries: Int = 5, perList: Int = 20, k: Int = 10): DataFrame = {
+  def hybridSearch(documents: DataFrame, embeddings: DataFrame): DataFrame = {
     import OpsUtil.tokens
-    val dense = bruteForceKnn(embeddings, nQueries, perList)
+    val perList = 20
+    val dense = bruteForceKnn(embeddings, k = perList)
       .select(col("query_id"), col("vec_id").as("doc_id"),
         col("rnk").as("r_vec"))
     val toks = par(documents).select(col("doc_id"),
       explode(array_distinct(tokens)).as("token"))
-    val qToks = toks.filter(col("doc_id") < nQueries)
+    val qToks = toks.filter(col("doc_id") < probeQueries)
       .select(col("doc_id").as("query_id"), col("token"))
     val overlap = toks.join(broadcast(qToks), Seq("token"))
       .filter(col("doc_id") =!= col("query_id"))
@@ -1208,13 +1214,13 @@ object SimilarityOps {
     val wf = Window.partitionBy("query_id")
       .orderBy(col("rrf").desc, col("doc_id").asc)
     fused.withColumn("rnk", row_number().over(wf).cast("int"))
-      .filter(col("rnk") <= k)
+      .filter(col("rnk") <= probeK)
       .select(col("query_id"), col("rnk"), col("doc_id"), col("rrf"),
         col("r_vec"), col("r_lex"))
   }
 
   /** Q119: CENTROID-DISTANCE OUTLIERS — the embedding-space data-
-    * cleaning gate: the `topK` vectors FARTHEST from their own label's
+    * cleaning gate: the 5 vectors FARTHEST from their own label's
     * centroid per label, i.e. the mislabeled / corrupted / off-
     * distribution rows a training pipeline inspects or drops before a
     * run (the distance the drift monitors of q113 alarm on, applied
@@ -1235,7 +1241,7 @@ object SimilarityOps {
     * is the per-label top-k window, map-side-bounded by
     * WindowGroupLimit at topK × partitions rows per label.
     */
-  def centroidOutliers(embeddings: DataFrame, topK: Int = 5): DataFrame = {
+  def centroidOutliers(embeddings: DataFrame): DataFrame = {
     val sp = embeddings.sparkSession
     import sp.implicits._
     // the collected centroid map and the element_at key below both
@@ -1265,7 +1271,7 @@ object SimilarityOps {
       .withColumn("d2", vecL2Q(col("embedding"),
         element_at(col("__cents"), col("label")), fxBits))
       .withColumn("rnk", row_number().over(w).cast("int"))
-      .filter(col("rnk") <= topK)
+      .filter(col("rnk") <= 5)
       .select(col("label"), col("rnk"), col("vec_id"), col("d2"))
   }
 }

@@ -386,11 +386,11 @@ object TextOps {
     * cross-engine reproducible without any transcendental (the reason
     * lift, not log-PMI, is the shipped score — same ranking). Two
     * token-level aggregates, two broadcast-friendly joins on single
-    * tokens, one global-count broadcast; min-count pruning caps the
-    * join input before it grows.
+    * tokens, one global-count broadcast; min-count pruning (bigrams
+    * seen at least 5 times) caps the join input before it grows. The
+    * top 20 by lift are returned.
     */
-  def collocations(documents: DataFrame, minCount: Long = 5,
-                   topK: Int = 20): DataFrame = {
+  def collocations(documents: DataFrame): DataFrame = {
     val toks = documents.withColumn("w", tokens)
     val uni = toks.select(explode(col("w")).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
@@ -398,7 +398,7 @@ object TextOps {
     val bi = toks
       .select(explode(OpsUtil.shingles(col("w"), 2)).as("gram"))
       .groupBy("gram").agg(count(lit(1)).as("c_ab"))
-      .filter(col("c_ab") >= minCount)
+      .filter(col("c_ab") >= 5)
     bi
       .withColumn("a", expr("element_at(split(gram, ' '), 1)"))
       .withColumn("b", expr("element_at(split(gram, ' '), 2)"))
@@ -409,7 +409,7 @@ object TextOps {
         expr("round(cast(c_ab * n_total as double) / cast(c_a * c_b as double), 6)")
           .as("lift"))
       .orderBy(col("lift").desc, col("gram").asc)
-      .limit(topK)
+      .limit(20)
   }
 
   /** Q87: within-document repeated-line removal — drop every repeat
@@ -478,8 +478,7 @@ object TextOps {
     * repeated query batches; this operator is the query-time path.
     */
   def keywordSearch(documents: DataFrame,
-                    queries: Map[String, Seq[String]],
-                    k: Int = 10): DataFrame = {
+                    queries: Map[String, Seq[String]]): DataFrame = {
     require(queries.nonEmpty, "keywordSearch needs at least one query")
     val spark = documents.sparkSession
     import spark.implicits._
@@ -495,7 +494,7 @@ object TextOps {
       .agg(countDistinct(col("term")).as("n_terms"),
         count(lit(1)).as("tf_sum"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= searchK)
       .select("query_id", "rank", "doc_id", "n_terms", "tf_sum")
   }
 
@@ -533,7 +532,10 @@ object TextOps {
     * separately-built frame could have been bucketed under a different
     * universe than a caller-repeated parameter claims) and
     * [[appendPostings]]/[[searchPostingsArtifact]] read the metadata
-    * back instead of taking an independent parameter.
+    * back instead of taking an independent parameter. No
+    * production call passes `nBuckets`; ArtifactSpec's killed-save spec
+    * varies it to prove a killed re-save never serves rows under the
+    * other bucket count.
     */
   def savePostings(documents: DataFrame, scope: graft.core.Scope,
                    name: String, nBuckets: Int = 64): Unit =
@@ -582,6 +584,11 @@ object TextOps {
       nBuckets = m.int("n_buckets"))
   }
 
+  /** How many documents [[keywordSearch]] and [[searchPostings]]
+    * return per query.
+    */
+  private val searchK = 10
+
   /** The probe half of the q120 artifact: [[keywordSearch]] semantics
     * evaluated against the postings instead of the corpus. The query
     * terms' buckets are re-derived with the build-side hash (a
@@ -592,7 +599,7 @@ object TextOps {
     */
   def searchPostings(postings: DataFrame,
                      queries: Map[String, Seq[String]],
-                     k: Int = 10, nBuckets: Int = 64): DataFrame = {
+                     nBuckets: Int = 64): DataFrame = {
     require(queries.nonEmpty, "searchPostings needs at least one query")
     val spark = postings.sparkSession
     import spark.implicits._
@@ -615,7 +622,7 @@ object TextOps {
       .agg(countDistinct(col("term")).as("n_terms"),
         sum(col("tf")).as("tf_sum"))
       .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= searchK)
       .select("query_id", "rank", "doc_id", "n_terms", "tf_sum")
   }
 
@@ -635,7 +642,7 @@ object TextOps {
     * stratum window). cum_frac = int/int division, IEEE-exact
     * cross-engine.
     */
-  def vocabulary(documents: DataFrame, minCount: Long = 1L): DataFrame = {
+  def vocabulary(documents: DataFrame): DataFrame = {
     val counts = documents
       .select(explode(tokens).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
@@ -648,16 +655,11 @@ object TextOps {
           sum(col("cnt")).over(Window.partitionBy().rowsBetween(
             Window.unboundedPreceding, Window.unboundedFollowing))
             .cast("double")))
-      // trimming AFTER ranking keeps ids a contiguous 1..V prefix
-      // (cnt-desc order puts every survivor ahead of every trimmed
-      // token) and keeps cum_frac CORPUS-global, so 1 - cum_frac at
-      // the cutoff is exactly the OOV occurrence rate the trim buys.
-      .filter(col("cnt") >= minCount)
       .select("token_id", "token", "cnt", "cum_frac")
   }
 
   /** Q124: VOCABULARY APPLY — the other half of q102's fit: encode
-    * the corpus with the fitted vocabulary TRIMMED to `vocabSize`,
+    * the corpus with the fitted vocabulary TRIMMED to 1,000 entries,
     * per document reporting token count, OOV count, and the sum of
     * assigned ids (a digest that pins every token→id assignment
     * through the oracle without shipping ragged id arrays through the
@@ -666,16 +668,15 @@ object TextOps {
     * cum_frac predicted at the chosen vocab size.
     *
     * Scale shape: the trim is what makes apply cheap — the vocabulary
-    * becomes a `vocabSize`-bounded MODEL artifact, broadcast onto the
+    * becomes a size-bounded MODEL artifact, broadcast onto the
     * token stream (never the reverse), so the corpus-sized work is
     * one map-side join + one doc_id-keyed aggregation. Fitting still
     * pays q102's vocab-sized rank window once; re-encoding N shards
     * against a saved vocabulary pays only the broadcast.
     */
-  def encodeWithVocabulary(documents: DataFrame,
-                           vocabSize: Long = 1000): DataFrame = {
+  def encodeWithVocabulary(documents: DataFrame): DataFrame = {
     val vocab = vocabulary(documents)
-      .filter(col("token_id") <= vocabSize)
+      .filter(col("token_id") <= 1000L)
       .select("token", "token_id")
     documents
       .select(col("doc_id"), explode(tokens).as("token"))
@@ -730,7 +731,7 @@ object TextOps {
       .agg(count(lit(1)).as("n_shared"))
   }
 
-  /** Q70: SEQUENCE PACKING — assign documents to fixed token-budget
+  /** Q70: SEQUENCE PACKING — assign documents to 512-token
     * training sequences: each document's pack is the budget-window its
     * START offset falls in, under a deterministic (lang, shard,
     * doc_id) order. The standard pre-tokenization step that turns a
@@ -738,21 +739,19 @@ object TextOps {
     *
     * A single global running sum would serialize the corpus through
     * one partition; instead the running offset is per (lang, shard)
-    * with shard = doc_id % `shards`, so parallelism is lang×shards
-    * while each pack stays homogeneous in language and fully
-    * deterministic. At 100 TB, `shards` scales with the cluster (it
-    * only changes which docs share a pack, not the semantics), and the
-    * one shuffle is the window's hash partition on (lang, shard).
+    * with shard = doc_id % 8, so parallelism is lang×shards while each
+    * pack stays homogeneous in language and fully deterministic. At
+    * 100 TB the shard count would scale with the cluster (it only
+    * changes which docs share a pack, not the semantics), and the one
+    * shuffle is the window's hash partition on (lang, shard).
     */
-  def packSequences(documents: DataFrame, budget: Int = 512,
-                    shards: Int = 8): DataFrame =
+  def packSequences(documents: DataFrame): DataFrame =
     // size() yields -1 (not 0) on a NULL array under Spark's default
     // sizeOfNull — uncorrected, one NULL text would DECREMENT the
     // running offset for every later doc in its stream; pin NULL text
     // to 0 tokens instead
     packSequencesByCount(documents.select(col("doc_id"), col("lang"),
-        greatest(size(tokens), lit(0)).cast("long").as("n_tok")),
-      budget, shards)
+        greatest(size(tokens), lit(0)).cast("long").as("n_tok")))
 
   /** The packing window over CALLER-SUPPLIED token counts — q70's
     * machinery decoupled from the word tokenizer so the cost unit can
@@ -762,13 +761,11 @@ object TextOps {
     * unchanged: one hash exchange on (lang, shard), per-partition
     * running sums, no global sort.
     */
-  def packSequencesByCount(counts: DataFrame, budget: Int = 512,
-                           shards: Int = 8): DataFrame = {
+  def packSequencesByCount(counts: DataFrame, budget: Int = 512): DataFrame = {
     require(budget > 0, s"budget must be positive: $budget")
-    require(shards > 0, s"shards must be positive: $shards")
     val toks = counts.select(col("doc_id"), col("lang"),
       greatest(col("n_tok").cast("long"), lit(0L)).as("n_tok"),
-      (col("doc_id") % shards).as("shard"))
+      (col("doc_id") % 8).as("shard"))
     val w = Window.partitionBy("lang", "shard").orderBy("doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     toks
@@ -778,21 +775,18 @@ object TextOps {
   }
 
   /** Q77: OVERLAPPING TOKEN-WINDOW CHUNKING — the retrieval/embedding
-    * ingestion primitive: split each document into `chunk`-token
-    * windows starting every `stride` tokens (stride < chunk ⇒
-    * overlap), the shape RAG pipelines and long-context embedding
-    * models consume. Chunks start at every multiple of `stride` below
+    * ingestion primitive: split each document into 64-token windows
+    * starting every 48 tokens (so consecutive windows overlap by 16),
+    * the shape RAG pipelines and long-context embedding models
+    * consume. Chunks start at every multiple of the stride below
     * the token count (the final window may be short); zero-token
     * documents produce no chunks. Pure expression pipeline — the
     * explode is the only row expansion, there is no shuffle at all,
     * and the emitted chunk is pinned by its md5 so the oracle checks
     * CONTENT, not just offsets, without shipping the text twice.
     */
-  def chunkDocuments(documents: DataFrame, chunk: Int = 64,
-                     stride: Int = 48): DataFrame = {
-    require(chunk > 0, s"chunk must be positive: $chunk")
-    require(stride > 0 && stride <= chunk,
-      s"stride must be in [1, chunk]: $stride")
+  def chunkDocuments(documents: DataFrame): DataFrame = {
+    val (chunk, stride) = (64, 48)
     documents
       .withColumn("w", tokens)
       .withColumn("n_tok", greatest(size(col("w")), lit(0)))
@@ -885,9 +879,10 @@ object TextOps {
     * one pass, fixed-size partial-mergeable state, no full
     * token-frequency shuffle kept around.
     *
-    * The published error bound for a stream of n items with
-    * `maxTracked` map slots is eps·n with eps = 3.5/maxTracked
-    * (DataSketches frequent-items documentation). Violations emitted:
+    * The sketch reports the top 20 items from 8192 map slots, and the
+    * published error bound for a stream of n items with `maxTracked`
+    * map slots is eps·n with eps = 3.5/maxTracked (DataSketches
+    * frequent-items documentation). Violations emitted:
     *  - `deviation`: a sketch-reported item whose estimate differs
     *    from its exact count by more than ceil(3.5·n/maxTracked);
     *  - `missing`: an item whose exact count strictly exceeds the
@@ -896,8 +891,8 @@ object TextOps {
     *    the error band).
     * Expected output: EMPTY — which the DuckDB oracle verifies.
     */
-  def topTokensGate(documents: DataFrame, k: Int = 20,
-                    maxTracked: Int = 8192): DataFrame = {
+  def topTokensGate(documents: DataFrame): DataFrame = {
+    val (k, maxTracked) = (20, 8192)
     val toks = OpsUtil.par(documents).select(explode(tokens).as("tok"))
     val approx = toks
       .agg(expr(s"approx_top_k(tok, $k, $maxTracked)").as("tk"))
@@ -962,7 +957,8 @@ object TextOps {
     * position: S = c3/c2 when the trigram survives the model, else
     * 0.4·(c2'/c1') off the bigram, else 0.4·0.4·(c1''/N) off the
     * unigram. All three count tables are frequency-truncated under
-    * total orders to MODEL size and BROADCAST (q156's pruned-LM
+    * total orders to MODEL size (2^16 unigrams, 2^18 bigrams, 2^19
+    * trigrams) and BROADCAST (q156's pruned-LM
     * shape); N is the exact full token count. Each branch is one
     * double division of exact integers snapped to 1e6 fixed point
     * (0.4 parses to the identical double on both engines; the
@@ -971,20 +967,16 @@ object TextOps {
     * "how much did the model actually know" diagnostic. The corpus
     * never shuffles before its per-doc roll-up.
     */
-  def stupidBackoffScore(documents: DataFrame,
-                         maxBigrams: Int = 1 << 18,
-                         maxTrigrams: Int = 1 << 19): DataFrame = {
-    require(maxBigrams > 0 && maxTrigrams > 0,
-      "model caps must be positive")
+  def stupidBackoffScore(documents: DataFrame): DataFrame = {
     val uni = prunedNgramCounts(documents, Seq("u1"), "cu", lmVocab)
     // token total from the un-exploded arrays — a second corpus-wide
     // explode would materialize one row per token just to count them;
     // greatest(...,0) guards size(null) = -1 on null-text rows
     val total = documents.select(tokens.as("w"))
       .agg(sum(greatest(size(col("w")), lit(0))).cast("long").as("n_total"))
-    val bi = prunedNgramCounts(documents, Seq("b1", "b2"), "cb", maxBigrams)
+    val bi = prunedNgramCounts(documents, Seq("b1", "b2"), "cb", lmBigrams)
     val tri = prunedNgramCounts(documents, Seq("t1", "t2", "t3"), "ct",
-      maxTrigrams)
+      1 << 19)
     ngramStream(documents, Seq("w1", "w2", "w3"), keepDocId = true)
       .join(broadcast(tri.select(col("t1").as("w1"), col("t2").as("w2"),
         col("t3").as("w3"), col("ct"))), Seq("w1", "w2", "w3"), "left")
@@ -1106,7 +1098,7 @@ object TextOps {
   def dsirWeights(documents: DataFrame, targetSource: String): DataFrame = {
     def model(docs: DataFrame, tag: String): (DataFrame, DataFrame) = (
       prunedNgramCounts(docs, Seq("w1"), s"cu_$tag", lmVocab),
-      prunedNgramCounts(docs, Seq("w1", "w2"), s"cb_$tag", 1 << 18))
+      prunedNgramCounts(docs, Seq("w1", "w2"), s"cb_$tag", lmBigrams))
     val (uniT, biT) = model(
       documents.filter(col("source") === targetSource), "t")
     val (uniR, biR) = model(
@@ -1134,11 +1126,12 @@ object TextOps {
     */
   private val lmVocab = 1 << 16
 
-  def bigramLmScore(documents: DataFrame,
-                    maxBigrams: Int = 1 << 18): DataFrame = {
-    require(maxBigrams > 0, s"maxBigrams must be positive: $maxBigrams")
+  /** The bigram table size of the pruned LMs. */
+  private val lmBigrams = 1 << 18
+
+  def bigramLmScore(documents: DataFrame): DataFrame = {
     val uni = prunedNgramCounts(documents, Seq("w1"), "cu", lmVocab)
-    val bi = prunedNgramCounts(documents, Seq("w1", "w2"), "cb", maxBigrams)
+    val bi = prunedNgramCounts(documents, Seq("w1", "w2"), "cb", lmBigrams)
     ngramStream(documents, Seq("w1", "w2"), keepDocId = true)
       .join(broadcast(bi), Seq("w1", "w2"), "left")
       .join(broadcast(uni), Seq("w1"), "left")

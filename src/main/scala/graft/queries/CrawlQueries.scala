@@ -67,13 +67,17 @@ private[graft] object CrawlQueries {
     s.read.parquet(scope.path(name)).withColumn("wave", col("wave").cast("long"))
 
   /** The "urlkeys" artifact seeded from the first 250 WARC records
-    * that frame cleanly (length, HTTP status and body all check).
+    * that frame cleanly (length, HTTP status and body all check). The
+    * seed key set is pinned once, so the save's scan carries none of
+    * the chunk generator's and framing's expression tree in its task
+    * binary.
     */
   private def seedWarcKeys(chunks: DataFrame, sc: graft.core.Scope): Unit =
     HtmlOps.saveUrlKeys(HtmlOps.httpFrame(HtmlOps.warcFrame(chunks, "warc"))
       .filter(col("length_ok") && col("http_ok") && col("body_ok"))
       .filter(col("doc_id") < 250)
-      .select(col("doc_id"), col("target_uri").as("url")), sc, "urlkeys")
+      .select(col("doc_id"), col("target_uri").as("url"))
+      .localCheckpoint(eager = true), sc, "urlkeys")
 
   /** The stream source of a two-batch loop: fetches [250, 375) as
     * wave 0 and [375, 500) as wave 1, one file each.
@@ -208,7 +212,7 @@ private[graft] object CrawlQueries {
       val stDir = sc.path("schedstate")
       import s.implicits._
       (0L to 2L).foreach { w =>
-        HtmlOps.saveSchedState(
+        HtmlOps.saveWaveState(
           Seq(("s0.example", 100L * (w + 1))).toDF("domain", "next_allowed_s"),
           stDir, w)
       }
@@ -566,7 +570,8 @@ private[graft] object CrawlQueries {
     * counted into the four confusion cells — `pred ⟺ score > 0`,
     * exactly the gate's decision rule.
     */
-  private def qualityFitEvalSql(iters: Int = 3): String = {
+  private def qualityFitEvalSql: String = {
+    val iters = 3
     val rounds = (1 to iters).map { i =>
       s"""SELECT $i AS round,
          |  CAST(sum(CASE WHEN score > 0 AND y = 1 THEN 1 ELSE 0 END)
@@ -691,7 +696,7 @@ private[graft] object CrawlQueries {
        |  ANTI JOIN ${pfx}stored s USING (canon)),
        |${pfx}fresh AS (SELECT u.* FROM ${pfx}unseen u${excludeCanons
       .map(x => s" ANTI JOIN $x USING (canon)").getOrElse("")}),
-       |${pfx}ranks AS (SELECT domain, pr FROM (${hostRankSql()})),
+       |${pfx}ranks AS (SELECT domain, pr FROM (${hostRankSql})),
        |${pfx}j AS (SELECT f.canon, f.url, f.domain, f.n_refs,
        |  coalesce(r.pr, 0) AS pr FROM ${pfx}fresh f
        |  LEFT JOIN ${pfx}ranks r ON r.domain = f.domain),
@@ -1214,7 +1219,7 @@ private[graft] object CrawlQueries {
        |  WHERE ($now - last_fetch_s) >= ttl_s),
        |vg AS (SELECT canon, url, ${duckDomainOf("host")} AS domain,
        |  last_fetch_s, ttl_s FROM vh),
-       |vranks AS (SELECT domain, pr FROM (${hostRankSql()})),
+       |vranks AS (SELECT domain, pr FROM (${hostRankSql})),
        |vj AS (SELECT g.*, coalesce(r.pr, 0) AS pr FROM vg g
        |  LEFT JOIN vranks r USING (domain)),
        |vfs AS (SELECT *, row_number() OVER (PARTITION BY domain
@@ -1371,7 +1376,7 @@ private[graft] object CrawlQueries {
        |avg2 AS (SELECT canon, ${duckDomainOf(
       s"regexp_extract(canon, '^(?i)(?:https?:)?//([^/?#]+)', 1)")}
        |    AS domain, n_versions, ttl_s, last_s FROM avd),
-       |avranks AS (SELECT domain, pr FROM (${hostRankSql()})),
+       |avranks AS (SELECT domain, pr FROM (${hostRankSql})),
        |avj AS (SELECT g.*, coalesce(r.pr, 0) AS pr FROM avg2 g
        |  LEFT JOIN avranks r USING (domain)),
        |avfs AS (SELECT *, row_number() OVER (PARTITION BY domain
@@ -1539,7 +1544,7 @@ private[graft] object CrawlQueries {
        |  FROM (SELECT $duckDirtyUrl AS u FROM documents)),
        |ffresh AS (SELECT c.* FROM fcand c
        |  ANTI JOIN fstored s USING (canon)),
-       |franks AS (SELECT domain, pr FROM (${hostRankSql()})),
+       |franks AS (SELECT domain, pr FROM (${hostRankSql})),
        |fj AS (SELECT f.canon, f.url, f.domain, f.n_refs, f.published_s,
        |  coalesce(r.pr, 0) AS pr FROM ffresh f
        |  LEFT JOIN franks r ON r.domain = f.domain),
@@ -1603,7 +1608,7 @@ private[graft] object CrawlQueries {
        |  last_fetch_s FROM ud),
        |ug AS (SELECT canon, url, ${duckDomainOf("host")} AS domain,
        |  reason, last_fetch_s FROM uh),
-       |uranks AS (SELECT domain, pr FROM (${hostRankSql()})),
+       |uranks AS (SELECT domain, pr FROM (${hostRankSql})),
        |uj AS (SELECT g.*, coalesce(r.pr, 0) AS pr FROM ug g
        |  LEFT JOIN uranks r USING (domain)),
        |ufs AS (SELECT *, row_number() OVER (PARTITION BY domain
@@ -1671,7 +1676,7 @@ private[graft] object CrawlQueries {
        |tdue AS (SELECT l.canon, l.url, d.domain, d.lastmod_s,
        |  l.last_fetch_s FROM tlast l JOIN tdec d USING (canon)
        |  WHERE d.lastmod_s > l.last_fetch_s),
-       |trk AS (SELECT domain, pr FROM (${hostRankSql()})),
+       |trk AS (SELECT domain, pr FROM (${hostRankSql})),
        |tjn AS (SELECT d.*, coalesce(r.pr, 0) AS pr FROM tdue d
        |  LEFT JOIN trk r ON r.domain = d.domain),
        |tsl AS (SELECT *, row_number() OVER (PARTITION BY domain
@@ -1836,7 +1841,7 @@ private[graft] object CrawlQueries {
        |  FROM (SELECT $duckDirtyUrl AS u FROM documents)),
        |sfresh AS (SELECT c.* FROM scand c
        |  ANTI JOIN sstored s USING (canon)),
-       |sranks AS (SELECT domain, pr FROM (${hostRankSql()})),
+       |sranks AS (SELECT domain, pr FROM (${hostRankSql})),
        |sj AS (SELECT f.canon, f.url, f.domain, f.n_refs, f.lastmod,
        |  coalesce(r.pr, 0) AS pr FROM sfresh f
        |  LEFT JOIN sranks r ON r.domain = f.domain),
@@ -1873,7 +1878,7 @@ private[graft] object CrawlQueries {
       s"regexp_extract(url, '^(?i)(?:https?:)?//([^/?#]+)', 1)")}
        |    AS domain
        |  FROM rlast WHERE $now - last_fetch_s >= $ttl),
-       |rrk AS (SELECT domain, pr FROM (${hostRankSql()})),
+       |rrk AS (SELECT domain, pr FROM (${hostRankSql})),
        |rjn AS (SELECT d.canon, d.url, d.domain, d.last_fetch_s, d.etag,
        |  d.last_modified,
        |  coalesce(r.pr, 0) AS pr FROM rdue d
@@ -1963,7 +1968,7 @@ private[graft] object CrawlQueries {
     s"""$duckRobotsRuleCtes,
        |$duckRobotsTxtCtes,
        |$duckDelayCte,
-       |eranks AS (SELECT domain, pr FROM (${hostRankSql()})),
+       |eranks AS (SELECT domain, pr FROM (${hostRankSql})),
        |$w0,
        |$w1,
        |${refetchWaveCtes("ra", "doc_id < 375",
@@ -2315,7 +2320,7 @@ private[graft] object CrawlQueries {
     QueryDef("q193_fit_eval", family, (s, dir) =>
       TextOps.qualityFitEval(t(s, dir, "documents")),
       // per-round confusion counts over the replayed trajectory
-      qualityFitEvalSql()),
+      qualityFitEvalSql),
     // the fetch-ordering decision: outlinks → canonical candidates →
     // anti-join the maintained key set (q178) → domain-rank priority
     // (q180) → politeness cap per domain
@@ -2328,7 +2333,7 @@ private[graft] object CrawlQueries {
     QueryDef("q188_rank_artifact", family, domainRankArtifact,
       // persisted rank artifact: the reload must replay the exact q180
       // trajectory — same SQL, artifact layout is Spark-side only
-      hostRankSql()),
+      hostRankSql),
     // the conservative canonical key (q189): allowlisted query params
     // survive (sorted) into the key, refining the aggressive grouping
     // — the dedup audit a crawl runs before switching keys

@@ -417,7 +417,7 @@ private[graft] object DedupQueries {
     // first-occurrence keep, per-doc survivors pinned by a
     // digest-of-digests — no text in either exchange
     QueryDef("q155_span_dedup", family, (s, dir) =>
-      DedupOps.spanDedup(t(s, dir, "documents"), span = 20),
+      DedupOps.spanDedup(t(s, dir, "documents")),
       // span-level exact dedup: 20-token windows, global first-keep,
       // survivors pinned per doc by the digest-of-digests
       s"""WITH toks AS (SELECT doc_id, $duckToks w FROM documents),

@@ -780,8 +780,8 @@ private[queries] object DuckSql {
     * ends dropped; DISTINCT to the domains² bound) and domains as the
     * node vocabulary.
     */
-  def hostRankSql(iters: Int = 3,
-                          scale: Long = 1000000000000L): String = {
+  def hostRankSql: String = {
+    val (iters, scale) = (3, 1000000000000L)
     val rounds = (1 to iters).map { i =>
       s"""r$i AS (
          |  SELECT n.domain,

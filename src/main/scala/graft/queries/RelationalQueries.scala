@@ -80,8 +80,8 @@ private[graft] object RelationalQueries {
     * arithmetic (`//` floor division equals Spark's `div` truncation —
     * every quantity is non-negative).
     */
-  private def pagerankSql(iters: Int = 3,
-                          scale: Long = 1000000000000L): String = {
+  private def pagerankSql: String = {
+    val (iters, scale) = (3, 1000000000000L)
     val rounds = (1 to iters).map { i =>
       s"""r$i AS (
          |  SELECT n.node,
@@ -366,7 +366,7 @@ private[graft] object RelationalQueries {
     QueryDef("q118_pagerank", family, (s, dir) =>
       GraphOps.nationTradeRank(t(s, dir, "lineitem"), t(s, dir, "orders"),
         t(s, dir, "customer"), t(s, dir, "supplier"), t(s, dir, "nation")),
-      pagerankSql()),
+      pagerankSql),
     // fact rows Bloom-pruned before the shuffle; the oracle is the
     // PLAIN join — the sketch must be semantics-invariant
     QueryDef("q122_bloom_join", family, (s, dir) =>

@@ -124,7 +124,7 @@ private[graft] object SamplingQueries {
         |GROUP BY 1""".stripMargin),
     QueryDef("q76_temperature_sample", family, (s, dir) =>
       SampleOps.temperatureSample(t(s, dir, "documents"), "doc_id", "source",
-          alpha = 0.7, salt = "mix")
+          salt = "mix")
         .select("doc_id", "source", "lang"),
       // Temperature mixing: the exponent is interpolated from the SAME
       // double arithmetic the engine uses (1.0 - alpha is not the

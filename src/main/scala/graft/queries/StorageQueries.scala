@@ -204,8 +204,8 @@ private[graft] object StorageQueries {
     * SQL provably matches [[graft.io.Layout.zValue]]'s bit placement:
     * bit i of `a` → position 2i, bit i of `b` → 2i+1.
     */
-  private def zInterleaveSql(a: String, b: String, bits: Int = 16): String =
-    (0 until bits).flatMap { i =>
+  private def zInterleaveSql(a: String, b: String): String =
+    (0 until 16).flatMap { i =>
       Seq(s"((($a >> $i) & 1) << ${2 * i})", s"((($b >> $i) & 1) << ${2 * i + 1})")
     }.mkString(" | ")
 

@@ -181,7 +181,8 @@ private[graft] object TextQueries {
     * CTEs — the oracle replays every gradient step, not just the
     * final model.
     */
-  private def qualityFitSql(iters: Int = 3): String = {
+  private def qualityFitSql: String = {
+    val iters = 3
     val rows = (1 to iters).flatMap(i => (0 until 5).map(d =>
       s"SELECT $i AS round, $d AS dim, a$d AS w FROM w$i"))
     s"""WITH ${qualityFitCtes(iters)}
@@ -191,12 +192,14 @@ private[graft] object TextQueries {
   /** q182: the composed gate — every doc scored by the FINAL round's
     * weights through the same dot-product shape, kept ⟺ score > 0.
     */
-  private def trainedGateSql(iters: Int = 3): String =
+  private def trainedGateSql: String = {
+    val iters = 3
     s"""WITH ${qualityFitCtes(iters)}
        |SELECT doc_id, score, score > 0 AS kept FROM (
        |  SELECT f.doc_id,
        |    ${(0 until 5).map(d => s"a$d * x$d").mkString(" + ")} AS score
        |  FROM f CROSS JOIN w$iters) s""".stripMargin
+  }
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q11_termfreq", family, (s, dir) =>
@@ -728,12 +731,12 @@ private[graft] object TextQueries {
       TextOps.qualityFitTrajectory(t(s, dir, "documents")),
       // the in-engine classifier fit: every perceptron round replayed
       // via scalar-subquery updates over the fixed-point features
-      qualityFitSql()),
+      qualityFitSql),
     // the fit→score→gate loop closed: docs scored through the q115
     // expression shape with the JUST-TRAINED coefficients
     QueryDef("q182_trained_gate", family, (s, dir) =>
       TextOps.trainedQualityGate(t(s, dir, "documents")),
       // the composed gate: final-round weights dotted per doc
-      trainedGateSql()),
+      trainedGateSql),
   )
 }

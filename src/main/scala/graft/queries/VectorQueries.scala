@@ -150,7 +150,8 @@ private[graft] object VectorQueries {
     * argmin against the previous round's re-quantized centroids, so
     * the whole trajectory must reproduce, not just the final means.
     */
-  private def kmeansIterSql(iters: Int = 3, k: Int = 8): String = {
+  private def kmeansIterSql: String = {
+    val (iters, k) = (3, 8)
     val rounds = (1 to iters).map { i =>
       s"""d$i AS (
          |  SELECT q.vec_id, s.cid,
@@ -412,7 +413,7 @@ private[graft] object VectorQueries {
     // as next-round seeds — the full trajectory is bit-reproducible
     QueryDef("q117_kmeans", family, (s, dir) =>
       SimilarityOps.kmeans(t(s, dir, "embeddings")),
-      kmeansIterSql()),
+      kmeansIterSql),
     // embedding-space data cleaning: the 5 vectors farthest from their
     // own label centroid, integer-exact end to end
     QueryDef("q119_centroid_outliers", family, (s, dir) =>

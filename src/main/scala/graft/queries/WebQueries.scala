@@ -19,18 +19,10 @@ private[graft] object WebQueries {
     * block-removal → tag-strip → entity-decode chain (HtmlOps
     * mirrored verbatim; 'g' on every multi-match replace).
     */
-  private lazy val duckHtmlExtractCtes = duckHtmlExtractCtesFrom("documents")
-
-  /** The extraction chain parameterized by its source relation (the
-    * v4 crawl flagship runs it over the PII-planted corpus instead of
-    * the raw table) and a CTE-name prefix (so it can nest inside the
-    * corpus gate chain without colliding with its p/e names); `src`
-    * must expose (doc_id, text).
-    */
-  private def duckHtmlExtractCtesFrom(src: String, pfx: String = "") =
-    s"""${pfx}p AS (SELECT doc_id, $duckFetchHost AS fetch_host,
-       |  $duckHtml AS html FROM $src),
-       |${duckExtractFromHtmlCtes(pfx)}""".stripMargin
+  private lazy val duckHtmlExtractCtes =
+    s"""p AS (SELECT doc_id, $duckFetchHost AS fetch_host,
+       |  $duckHtml AS html FROM documents),
+       |${duckExtractFromHtmlCtes("")}""".stripMargin
 
   /** q175/q176 (batch and stream share the oracle, the q167/q171
     * pattern): the q172 chain + per-page blocked-outlink counts
@@ -271,7 +263,7 @@ private[graft] object WebQueries {
       // host-graph PageRank: the domain edge derivation mirrored from
       // the planted pages, then the q118 round-replaying integer
       // iteration over VARCHAR nodes
-      hostRankSql()),
+      hostRankSql),
     // the canonical-URL key set as a MAINTAINED artifact: seeded from
     // the first fetch wave, later waves ingested via bucket-pruned
     // anti-join append (O(batch), untouched buckets never rewritten),

@@ -353,8 +353,8 @@ object EventsStreaming {
     * the oracle (the equivalent batch join, which DuckDB replays) gets
     * the identical row set on a drained fixture.
     */
-  def viewClickJoinStreaming(spark: SparkSession, dir: String,
-                             queryName: String = "graft_stream_join"): DataFrame = {
+  def viewClickJoinStreaming(spark: SparkSession, dir: String): DataFrame = {
+    val queryName = "graft_stream_join"
     // a stream-stream join maintains FOUR state stores per shuffle
     // partition and commits each of them every micro-batch — that
     // fixed cost, not the data, dominates at moderate rates. Size the
@@ -725,7 +725,7 @@ object EventsStreaming {
                 bs.read.parquet(s"$refetchDir/wave=$batchId"), state)
             }
           }
-          graft.ops.HtmlOps.saveSchedState(state, stateDir, batchId)
+          graft.ops.HtmlOps.saveWaveState(state, stateDir, batchId)
           ()
         } finally b.unpersist()
       }
@@ -875,12 +875,12 @@ object EventsStreaming {
               scope, attName)
             ()
           }
-          graft.ops.HtmlOps.saveSchedState(
+          graft.ops.HtmlOps.saveWaveState(
             graft.ops.HtmlOps.advanceSchedState(
               bs.read.parquet(s"$outDir/wave=$batchId"), st0),
             stateDir, batchId)
           // maintain the robots artifact from THIS wave's fetches
-          graft.ops.HtmlOps.saveRobotsState(
+          graft.ops.HtmlOps.saveWaveState(
             graft.ops.HtmlOps.advanceRobotsState(
               graft.ops.HtmlOps.robotsFetches(framed), rState),
             robotsDir, batchId)
@@ -944,8 +944,8 @@ object EventsStreaming {
         coalesce(col("n_violations"), lit(0L)).as("n_violations"))
   }
 
-  def hourlyByTypeStreaming(spark: SparkSession, dir: String,
-                            queryName: String = "graft_stream_hourly"): DataFrame = {
+  def hourlyByTypeStreaming(spark: SparkSession, dir: String): DataFrame = {
+    val queryName = "graft_stream_hourly"
     // stateful shuffle sized for the group cardinality (windows ×
     // types), not the batch default — per-partition state commits are
     // the fixed cost of a micro-batch (see viewClickJoinStreaming)
@@ -979,8 +979,8 @@ object EventsStreaming {
     * here exercised end to end through readStream).
     */
   def streamingBpeEncode(spark: SparkSession, dir: String,
-                         scope: graft.core.Scope, name: String,
-                         queryName: String = "graft_stream_bpe"): DataFrame = {
+                         scope: graft.core.Scope, name: String): DataFrame = {
+    val queryName = "graft_stream_bpe"
     val src = graft.io.Tables.documentsStream(spark, dir)
     val enc = graft.ops.BpeOps.encodeWithArtifact(
       graft.ops.BpeOps.plantedCorpus(src), scope, name)
@@ -1001,8 +1001,8 @@ object EventsStreaming {
     * this is the shape ingestion actually runs: documents are scrubbed
     * as they land, not in a later corpus-wide pass.
     */
-  def streamingPiiScrub(spark: SparkSession, dir: String,
-                        queryName: String = "graft_stream_pii"): DataFrame = {
+  def streamingPiiScrub(spark: SparkSession, dir: String): DataFrame = {
+    val queryName = "graft_stream_pii"
     val src = graft.io.Tables.documentsStream(spark, dir)
     val audit = graft.ops.PiiOps.piiRedact(
       graft.ops.PiiOps.plantedPiiCorpus(src))
@@ -1024,8 +1024,8 @@ object EventsStreaming {
     * extracted and gated as they are fetched, and only `page_ok`
     * text ever reaches the corpus-wide stages.
     */
-  def streamingCrawlIngest(spark: SparkSession, dir: String,
-                           queryName: String = "graft_stream_crawl"): DataFrame = {
+  def streamingCrawlIngest(spark: SparkSession, dir: String): DataFrame = {
+    val queryName = "graft_stream_crawl"
     val src = graft.io.Tables.documentsStream(spark, dir)
     val out0 = graft.ops.HtmlOps.crawlIngest(
       graft.ops.HtmlOps.plantedHtmlCorpus(src),

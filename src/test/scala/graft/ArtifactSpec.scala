@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{Scope, Scopes}
 import graft.io.{Artifact, Layout}
-import graft.ops.{DedupOps, HtmlOps, SimilarityOps, TextOps}
+import graft.ops.{BpeOps, ClusterOps, DedupOps, GraphOps, HtmlOps, SimilarityOps, TextOps}
 
 /** The artifact manifest and its versions: the round trip, the cost
   * (no Spark job), the failure on damage, and the publish protocol of
@@ -206,6 +206,76 @@ class ArtifactSpec extends SparkSpec {
       (sc, n) => SimilarityOps.loadIvfIndex(spark, sc, n).assigned)
   }
 
+  test("savePqIndex killed mid-write: the previous index is served") {
+    val pq = SimilarityOps.buildPqIndex(graft.io.Tables.parquet(spark, sf, "embeddings"))
+    killedResave(pq.codes, "vec_id", "codes", 7L, None, 1, 2)(
+      (df, sc, n, _) => SimilarityOps.savePqIndex(pq.copy(codes = df), sc, n))(
+      (sc, n) => SimilarityOps.loadPqIndex(spark, sc, n).codes)
+  }
+
+  test("saveIvfPqIndex killed mid-write: the previous index is served") {
+    val idx = SimilarityOps.buildIvfPqIndex(graft.io.Tables.parquet(spark, sf, "embeddings"))
+    killedResave(idx.cellCodes, "vec_id", "codes", 7L, None, 1, 2)(
+      (df, sc, n, _) => SimilarityOps.saveIvfPqIndex(idx.copy(cellCodes = df), sc, n))(
+      (sc, n) => SimilarityOps.loadIvfPqIndex(spark, sc, n).cellCodes)
+  }
+
+  test("saveClusterLabels killed mid-write: no labels served under stale buckets") {
+    val labels = ClusterOps.nearDupClusters(docs).localCheckpoint()
+    killedResave(labels, "doc_id", "canonical_id", 250L, Some("n_buckets"), 32, 16)(
+      (df, sc, n, p) => ClusterOps.saveClusterLabels(df, sc, n, nBuckets = p))(
+      (sc, n) => ClusterOps.loadClusterLabels(spark, sc, n, docs.select("doc_id")))
+  }
+
+  test("saveCorpusShards killed mid-write: the previous shards are served") {
+    killedResave(docs, "doc_id", "text", 250L, None, 1, 2)(
+      (df, sc, n, _) => ClusterOps.saveCorpusShards(df, sc, n))(
+      (sc, n) => Artifact.load(spark, sc, n))
+  }
+
+  test("saveDomainRank killed mid-write: the previous ranks are served") {
+    import spark.implicits._
+    val edges = HtmlOps.domainEdges(HtmlOps.plantedHtmlCorpus(docs)).collect()
+      .zipWithIndex.map { case (r, i) => (i.toLong, r.getString(0), r.getString(1)) }
+      .toSeq.toDF("k", "src", "dst")
+    killedResave(edges, "k", "dst", 3L, None, 1, 2)(
+      (df, sc, n, _) => GraphOps.saveDomainRank(df, sc, n))(
+      (sc, n) => GraphOps.loadDomainRank(spark, sc, n))
+  }
+
+  test("saveBpe killed mid-write: no merges served under the stale merge count") {
+    killedResave(docs, "doc_id", "text", 250L, Some("n_merges"), 12, 8)(
+      (df, sc, n, p) => BpeOps.saveBpe(df, sc, n, nMerges = p))(
+      (sc, n) => BpeOps.loadBpeMerges(spark, sc, n))
+  }
+
+  test("compactFetchLog killed mid-write: the uncompacted log is served") {
+    // the `killwrite` scheme is registered for the whole test run
+    // (META-INF/services), so the session catalog resolves it too
+    val base = Files.createTempDirectory("graft-artifact-kill-")
+    try {
+      val sc = Scopes.create(spark, s"killwrite://$base")
+      HtmlOps.saveFetchLog(HtmlOps.plantedFetchLog(docs).select("url", "fetched_at_s"),
+        sc, "fl", nBuckets = 4)
+      def rows() = HtmlOps.loadFetchLog(spark, sc, "fl")
+        .collect().map(_.toString).sorted.toSeq
+      val before = rows()
+      assert(before.nonEmpty)
+      // every file the compaction creates in its new version fails
+      ArtifactSpec.killUnder = Some("/fl/v2/")
+      val killed = try intercept[Exception](HtmlOps.compactFetchLog(spark, sc, "fl"))
+        finally ArtifactSpec.killUnder = None
+      assert(Iterator.iterate[Throwable](killed)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("injected fault")))
+      assert(rows() === before)
+      assert(Artifact.read(spark, sc, "fl").int("n_buckets") === 4)
+      HtmlOps.compactFetchLog(spark, sc, "fl")
+      assert(rows() === before)
+      val root = new java.io.File(sc.path("fl").stripPrefix("killwrite:"))
+      assert(root.list().count(_.matches("v\\d+")) === 1)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
+  }
+
   test("band compaction killed before its publish: the uncompacted bands are served") {
     withScope { sc =>
       DedupOps.saveBands(docs.filter(col("doc_id") % 2 === 0), sc, "bands")
@@ -237,6 +307,33 @@ class ArtifactSpec extends SparkSpec {
       assert(files() < filesBefore)
       assert(rows() === before)
       assert(versions(sc, "bands").size === 1)
+    }
+  }
+}
+
+object ArtifactSpec {
+  /** While set, creating a file whose path contains this fragment on
+    * the `killwrite` file system fails, the way a save killed
+    * mid-write does.
+    */
+  @volatile var killUnder: Option[String] = None
+
+  /** The local file system under the `killwrite` scheme, whose file
+    * creation fails under [[killUnder]].
+    */
+  final class KillWriteFileSystem extends org.apache.hadoop.fs.LocalFileSystem(
+      new org.apache.hadoop.fs.RawLocalFileSystem {
+        override def getUri: java.net.URI = java.net.URI.create("killwrite:///")
+      }) {
+    override def getScheme: String = "killwrite"
+    override def create(f: org.apache.hadoop.fs.Path,
+                        permission: org.apache.hadoop.fs.permission.FsPermission,
+                        overwrite: Boolean, bufferSize: Int, replication: Short,
+                        blockSize: Long, progress: org.apache.hadoop.util.Progressable)
+        : org.apache.hadoop.fs.FSDataOutputStream = {
+      if (killUnder.exists(f.toString.contains))
+        throw new java.io.IOException(s"injected fault creating $f")
+      super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
     }
   }
 }

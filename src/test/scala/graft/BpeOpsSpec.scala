@@ -189,9 +189,15 @@ class BpeOpsSpec extends SparkSpec {
   test("pretokenized fit on the punctuated corpus equals the q148 closed form") {
     val docs = graft.io.Tables.parquet(spark, sf, "documents")
     val punct = BpeOps.plantedPunctCorpus(docs)
-    val withPre = BpeOps.fitBpe(punct, nMerges = 12, pretok = true)
-      .collect().map(r =>
-        (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    // the pretokenized fit is the artifact's (saveBpe records the flag)
+    val base = java.nio.file.Files.createTempDirectory("graft-bpe-punct-")
+    val withPre = try {
+      val scope = graft.core.Scopes.create(spark, base.toString)
+      BpeOps.saveBpe(punct, scope, "tok", nMerges = 12, pretok = true)
+      BpeOps.loadBpeMerges(spark, scope, "tok")
+        .collect().map(r =>
+          (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     val plain = BpeOps.plantedFit(docs)
       .collect().map(r =>
         (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
@@ -240,8 +246,7 @@ class BpeOpsSpec extends SparkSpec {
       val planted = BpeOps.plantedCorpus(docs)
       BpeOps.saveBpe(planted, scope, "tok", nMerges = 12)
       val streamed = graft.streaming.EventsStreaming
-        .streamingBpeEncode(spark, sf, scope, "tok",
-          queryName = "bpe_stream_spec")
+        .streamingBpeEncode(spark, sf, scope, "tok")
         .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .sortBy(_._1)
@@ -364,7 +369,7 @@ class BpeOpsSpec extends SparkSpec {
       val scope = graft.core.Scopes.create(spark, base.toString)
       BpeOps.saveBpe(corpus, scope, "tok", nMerges = 3)
       assert(BpeOps.refreshBpe(batch, scope, "tok"))
-      def counts() = Artifact.load(spark, scope, "tok", "counts")
+      def counts() = spark.read.parquet(Artifact.read(spark, scope, "tok").table("counts"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       def merges() = BpeOps.loadBpeMerges(spark, scope, "tok").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
@@ -442,7 +447,7 @@ class BpeOpsSpec extends SparkSpec {
       val scope = graft.core.Scopes.create(spark, base.toString)
       BpeOps.saveBpe(corpus, scope, "tok", nMerges = 3)
       val v1 = Artifact.read(spark, scope, "tok")
-      def counts() = Artifact.load(spark, scope, "tok", "counts")
+      def counts() = spark.read.parquet(Artifact.read(spark, scope, "tok").table("counts"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       def merges() = BpeOps.loadBpeMerges(spark, scope, "tok").collect().toSeq
       val (c1, m1) = (counts(), merges())

@@ -99,8 +99,13 @@ class ClusterOpsSpec extends SparkSpec {
       assert(Set("en", "de", "fr", "es").contains(r.getAs[String]("lang")))
     }
     // the sample is a strict, deterministic subset of the filtered set
-    val full = ClusterOps.trainingCorpus(d, sampleRate = 1.0).count()
-    assert(corpus.length < full)
+    val quality = graft.ops.TextOps.qualityScore(d).select("doc_id", "quality")
+    val full = ClusterOps.dedupedCorpus(d).join(quality, "doc_id")
+      .join(graft.ops.TextOps.topBigramFrac(d), "doc_id")
+      .filter(col("quality") >= 0.5 && col("top_bigram_frac") <= 0.5 &&
+        col("lang").isin("en", "de", "fr", "es") && col("doc_id") % 10 =!= 7)
+      .select("doc_id").collect().map(_.getLong(0)).filterNot(contaminated)
+    assert(corpus.length < full.length)
     assert(ClusterOps.trainingCorpus(d).count() === corpus.length)
   }
 
@@ -151,13 +156,7 @@ class ClusterOpsSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(out === Map(("s1", "s2") -> 1L, ("s1", "s3") -> 1L,
       ("s2", "s3") -> 1L))
-    // the whole report family accepts a precomputed labels artifact —
-    // one CC resolution can feed q104/q108/q109 without recomputing
-    val labels = ClusterOps.nearDupClusters(d)
-    val reused = ClusterOps.sourceOverlap(d, Some(labels)).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(reused === out)
-    assert(ClusterOps.clusterSizeHistogram(d, Some(labels)).collect()
+    assert(ClusterOps.clusterSizeHistogram(d).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap ===
       Map(3L -> 1L, 2L -> 1L, 1L -> 1L))
   }
@@ -189,9 +188,7 @@ class ClusterOpsSpec extends SparkSpec {
   test("leakageFreeSplit is cluster-atomic, total, and deterministic") {
     import org.apache.spark.sql.functions._
     val docs = graft.io.Tables.parquet(spark, sf, "documents")
-    val labels = ClusterOps.nearDupClusters(docs)
-    val split = ClusterOps.leakageFreeSplit(docs, valFrac = 0.2,
-      testFrac = 0.2, labelsOpt = Some(labels))
+    val split = ClusterOps.leakageFreeSplit(docs)
     // total: every document is assigned exactly once
     assert(split.count() === docs.count())
     assert(split.select("doc_id").distinct().count() === docs.count())
@@ -201,21 +198,16 @@ class ClusterOpsSpec extends SparkSpec {
       .agg(countDistinct("split").as("n"))
       .filter(col("n") > 1).count()
     assert(straddlers === 0)
-    // all three splits materialize at these fractions on the fixture,
+    // all three splits materialize at 10% val / 10% test on the fixture,
     // near-dup members riding their cluster's assignment
     val byName = split.groupBy("split").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byName.keySet === Set("train", "val", "test"), byName)
     assert(byName("train") > byName("val") && byName("train") > byName("test"))
     // deterministic: recomputation reproduces the exact assignment
-    val again = ClusterOps.leakageFreeSplit(docs, valFrac = 0.2,
-      testFrac = 0.2, labelsOpt = Some(labels))
+    val again = ClusterOps.leakageFreeSplit(docs)
     assert(split.exceptAll(again).count() === 0)
     assert(again.exceptAll(split).count() === 0)
-    // a different salt reshuffles clusters (decorrelated assignment)
-    val other = ClusterOps.leakageFreeSplit(docs, valFrac = 0.2,
-      testFrac = 0.2, salt = "other", labelsOpt = Some(labels))
-    assert(split.exceptAll(other).count() > 0)
   }
 
   test("corpusShards deals the flagship corpus into training-ready shards") {
@@ -227,6 +219,8 @@ class ClusterOpsSpec extends SparkSpec {
     // documents, nothing added or dropped
     assert(out.count() === corpus.count())
     assert(out.select("doc_id").exceptAll(corpus.select("doc_id")).count() === 0)
+    // the held-out benchmark slice never trains
+    assert(corpus.filter(col("doc_id") % 10 === 7).count() === 0)
     // train rows carry a real (shard, pos) address; val/test ship
     // whole with the -1 sentinel on both
     val train = out.filter(col("split") === "train")
@@ -256,7 +250,7 @@ class ClusterOpsSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft-shard-art").toString
     val scope = graft.core.Scopes.create(spark, base)
     try {
-      ClusterOps.saveCorpusShards(docs, scope, "shards", nShards = 4)
+      ClusterOps.saveCorpusShards(docs, scope, "shards")
       // reload carries exactly the recomputed addresses
       assert(ClusterOps.corpusShardArtifactGate(spark, scope, "shards", docs)
         .count() === 0)
@@ -267,7 +261,7 @@ class ClusterOpsSpec extends SparkSpec {
         .filter(_.isDirectory).map(_.getName).toSet
       assert(dirs.contains("split=train"), dirs)
       // a single-shard read is satisfied at file-listing time
-      val one = Artifact.load(spark, scope, "shards", "rows")
+      val one = Artifact.load(spark, scope, "shards")
         .filter(col("split") === "train" && col("shard") === 0)
       val scan = one.queryExecution.executedPlan.toString
       assert(scan.contains("PartitionFilters"), scan)
@@ -281,14 +275,14 @@ class ClusterOpsSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("graft-shard-dig").toString
     val scope = graft.core.Scopes.create(spark, base)
     try {
-      ClusterOps.saveCorpusShards(docs, scope, "shards", nShards = 4)
+      ClusterOps.saveCorpusShards(docs, scope, "shards")
       // faithful artifact → empty audit, same verdict as the exceptAll
       // gate but from O(partitions) digest rows
       assert(ClusterOps.corpusShardDigestAudit(spark, scope, "shards", docs)
         .count() === 0)
       // tamper with exactly one shard's rows: swap two documents' pos.
       // The audit must flag ONLY that (split, shard)
-      val rows = Artifact.load(spark, scope, "shards", "rows")
+      val rows = Artifact.load(spark, scope, "shards")
       val t0 = rows.filter(col("split") === "train" && col("shard") === 0)
       val two = t0.orderBy("pos").limit(2).collect()
       assert(two.length === 2)
@@ -311,33 +305,6 @@ class ClusterOpsSpec extends SparkSpec {
       assert(bad.head.getAs[Long]("n_rows_artifact")
         === bad.head.getAs[Long]("n_rows_expected"))
     } finally graft.core.Scopes.delete(spark, scope)
-  }
-
-  test("flagships decontaminate against a caller-supplied benchmark") {
-    import org.apache.spark.sql.functions._
-    val docs = graft.io.Tables.parquet(spark, sf, "documents")
-    // bring-your-own eval set: a slice DIFFERENT from the mod-10 fixture
-    val bench = docs.filter(col("doc_id") % 7 === 3).select("doc_id", "text")
-    val benchIds = bench.select("doc_id").collect().map(_.getLong(0)).toSet
-    val v2 = ClusterOps.trainingCorpusV2(docs, benchmarkOpt = Some(bench))
-      .collect()
-    assert(v2.nonEmpty)
-    // no benchmark member trains, and nothing that leaks its n-grams
-    val leaked = graft.ops.TextOps.benchmarkContamination(
-        docs.join(bench.select("doc_id"), Seq("doc_id"), "left_anti"), bench)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    v2.foreach { r =>
-      val id = r.getAs[Long]("doc_id")
-      assert(!benchIds.contains(id), s"benchmark doc $id trained")
-      assert(!leaked.contains(id), s"contaminated doc $id trained")
-    }
-    // the default path is unchanged (oracle-pinned): same rows as ever
-    val defaultV2 = ClusterOps.trainingCorpusV2(docs)
-    assert(defaultV2.filter(col("doc_id") % 10 === 7).count() === 0)
-    // v1 honors the parameter too
-    val v1 = ClusterOps.trainingCorpus(docs, benchmarkOpt = Some(bench)).collect()
-    assert(v1.nonEmpty)
-    v1.foreach(r => assert(!benchIds.contains(r.getAs[Long]("doc_id"))))
   }
 
   test("flagship v3 applies the LM floor on top of the v2 gates") {

@@ -61,8 +61,8 @@ class DedupOpsSpec extends SparkSpec {
       def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1))
       val stored = DedupOps.lshPairsFromBands(
         DedupOps.loadBands(spark, scope, "bands")).collect().map(key).toSet
-      val rebuilt = DedupOps.minhashLshPairs(d, numHashes = 8)
-        .collect().map(key).toSet
+      val rebuilt = DedupOps.lshPairsFromBands(
+        DedupOps.minhashBands(d, numHashes = 8)).collect().map(key).toSet
       assert(stored === rebuilt)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
@@ -82,7 +82,7 @@ class DedupOpsSpec extends SparkSpec {
   test("jaccardPairs computes exact n-gram jaccard") {
     // doc1: tokens a b c d -> 3-grams {abc, bcd}; doc2 shares {bcd} of {bcd, cde}
     val d = docs(1L -> "a b c d", 2L -> "b c d e")
-    val out = DedupOps.jaccardPairs(d, threshold = 0.0).collect()
+    val out = DedupOps.jaccardPairs(d).collect()
     assert(out.length === 1)
     assert(out.head.getAs[Double]("jaccard") === 0.333333) // round(1/3, 6)
   }
@@ -161,18 +161,20 @@ class DedupOpsSpec extends SparkSpec {
     assert(out === Map(11L -> 2L, 13L -> 1L))
   }
 
-  test("bloom-accelerated incremental dedup equals the exact operator, even with heavy false positives") {
+  test("bloom-accelerated incremental dedup equals the exact operator, re-checked rows included") {
     val existing = docs(1L -> "alpha text", 2L -> "beta text")
     val batch = docs(10L -> "  ALPHA text ", 11L -> "gamma text",
       12L -> "gamma text", 13L -> "delta text")
+      .union(Seq((14L, null: String)).toDF("doc_id", "text"))
     val exact = DedupOps.incrementalExactDedup(batch, existing)
       .collect().map(_.toSeq).toSet
-    // a deliberately tiny, high-fpp filter: most fresh rows will be
-    // flagged maybe-dup, and the exact re-check must still save them
-    val bloom = DedupOps.incrementalExactDedupBloom(batch, existing,
-      expectedItems = 2, fpp = 0.5).collect().map(_.toSeq).toSet
+    // the filter flags the true duplicate and the null-text row (a null
+    // fingerprint is always "maybe dup"); the exact re-check drops the
+    // first and must save the second, which history does not hold
+    val bloom = DedupOps.incrementalExactDedupBloom(batch, existing)
+      .collect().map(_.toSeq).toSet
     assert(bloom === exact)
-    assert(exact.nonEmpty)
+    assert(exact.exists(_.head == 14L))
   }
 
   test("bloom-accelerated dedup releases its internal cache (only the result checkpoint remains)") {
@@ -203,21 +205,23 @@ class DedupOpsSpec extends SparkSpec {
     def md5(s: String): String = java.security.MessageDigest
       .getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
+    // one 20-token span per letter: "a1 a2 … a20"
+    def s(p: String): String = (1 to 20).map(i => s"$p$i").mkString(" ")
     val d = docs(
-      1L -> "a b c d",      // spans [a b][c d] — both fresh
-      2L -> "a b x y",      // [a b] repeats doc 1 → dropped; [x y] kept
-      3L -> "c d c d",      // both spans repeat doc 1 → nothing kept
-      4L -> "e f g",        // short final span [g] still counts
-      5L -> "q r q r q")    // intra-doc repeat: only span 0 (+tail) kept
-    val out = DedupOps.spanDedup(d, span = 2).collect()
+      1L -> s"${s("a")} ${s("c")}",          // spans [a][c] — both fresh
+      2L -> s"${s("a")} ${s("x")}",          // [a] repeats doc 1 → dropped; [x] kept
+      3L -> s"${s("c")} ${s("c")}",          // both spans repeat doc 1 → nothing kept
+      4L -> s"${s("e")} g1",                 // short final span [g1] still counts
+      5L -> s"${s("q")} ${s("q")} q1")       // intra-doc repeat: only span 0 (+tail) kept
+    val out = DedupOps.spanDedup(d).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("n_spans"), r.getAs[Long]("n_kept"),
           r.getAs[Long]("n_kept_tok"), r.getAs[String]("kept_md5")))).toMap
-    assert(out(1L) === ((2L, 2L, 4L, md5(md5("a b") + " " + md5("c d")))))
-    assert(out(2L) === ((2L, 1L, 2L, md5(md5("x y")))))
+    assert(out(1L) === ((2L, 2L, 40L, md5(md5(s("a")) + " " + md5(s("c"))))))
+    assert(out(2L) === ((2L, 1L, 20L, md5(md5(s("x"))))))
     assert(out(3L) === ((2L, 0L, 0L, md5(""))))
-    assert(out(4L) === ((2L, 2L, 3L, md5(md5("e f") + " " + md5("g")))))
-    assert(out(5L) === ((3L, 2L, 3L, md5(md5("q r") + " " + md5("q")))))
+    assert(out(4L) === ((2L, 2L, 21L, md5(md5(s("e")) + " " + md5("g1")))))
+    assert(out(5L) === ((3L, 2L, 21L, md5(md5(s("q")) + " " + md5("q1")))))
   }
 
   test("spanDedup conservation: survivors across the corpus = distinct spans") {
@@ -225,7 +229,7 @@ class DedupOpsSpec extends SparkSpec {
     val toksExpr =
       "filter(split(trim(text), '[ \\\\t\\\\n\\\\x0B\\\\f\\\\r]+'), x -> x <> '')"
     val d = spark.read.parquet(s"$sf/documents.parquet")
-    val out = DedupOps.spanDedup(d, span = 20)
+    val out = DedupOps.spanDedup(d)
     val totals = out.agg(sum("n_spans"), sum("n_kept")).head()
     val distinctSpans = d
       .withColumn("w", expr(toksExpr))

@@ -15,25 +15,31 @@ class GraphOpsSpec extends SparkSpec {
     val customer = Seq((100L, 1), (101L, 2)).toDF("c_custkey", "c_nationkey")
     val supplier = Seq((10L, 0), (11L, 1)).toDF("s_suppkey", "s_nationkey")
     val nation = Seq(0, 1, 2).toDF("n_nationkey")
-    // scale 1000, 1 iteration: r0 = 333 each, base = (150)/3 = 50
-    //   node1 inflow: 333 div 2 = 166      → 50 + (85·166) div 100 = 191
-    //   node2 inflow: 166 + 333 = 499      → 50 + (85·499) div 100 = 474
-    //   node0 inflow: none                 → 50
+    // scale S = 10^12, 3 iterations: r0 = S div 3 each, base =
+    // (15·S div 100) div 3 = 5·10^10; node0 has no inflow, so it stays
+    // at base from round 1 on, and node1 from round 2 on
+    //   round 1: node1 ← r0 div 2, node2 ← r0 div 2 + r0
+    //            → node1 191666666666, node2 474999999999
+    //   round 2: node1 ← base div 2 = 25·10^9 → 71250000000
+    //            node2 ← 25·10^9 + 191666666666 → 234166666666
+    //   round 3: node2 ← 25·10^9 + 71250000000 = 96250000000
+    //            → 5·10^10 + (85·96250000000) div 100 = 131812500000
     val out = GraphOps.nationTradeRank(lineitem, orders, customer, supplier,
-        nation, iters = 1, scale = 1000L)
+        nation)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(out === Map(0L -> 50L, 1L -> 191L, 2L -> 474L))
+    assert(out === Map(0L -> 50000000000L, 1L -> 71250000000L,
+      2L -> 131812500000L))
   }
 
   test("domainRank reproduces hand-computed integer PageRank on a 3-domain graph") {
     // same closed form as the nation test, over VARCHAR nodes:
-    // a→b, a→c, b→c; scale 1000, 1 iteration
+    // a→b, a→c, b→c
     val edges = Seq(("a.example", "b.example"), ("a.example", "c.example"),
       ("b.example", "c.example")).toDF("src", "dst")
-    val out = GraphOps.domainRank(edges, iters = 1, scale = 1000L)
+    val out = GraphOps.domainRank(edges)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(out === Map("a.example" -> 50L, "b.example" -> 191L,
-      "c.example" -> 474L))
+    assert(out === Map("a.example" -> 50000000000L,
+      "b.example" -> 71250000000L, "c.example" -> 131812500000L))
   }
 
   test("domainRank over planted pages: dangling targets rank, mass bounded") {
@@ -72,22 +78,24 @@ class GraphOpsSpec extends SparkSpec {
       val loaded = GraphOps.loadDomainRank(spark, scope, "rank").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(loaded === direct)
-      // the meta gate: a reader expecting a different trajectory
-      // (iters or scale) must fail loudly, not read wrong-scale ranks
-      val e1 = intercept[IllegalArgumentException] {
-        GraphOps.loadDomainRank(spark, scope, "rank", expectIters = 5)
+      assert(graft.io.Artifact.read(spark, scope, "rank").fields ===
+        Map("iters" -> "3", "scale_pow10" -> "12"))
+      // the meta gate: an artifact of a different trajectory (iters or
+      // scale) must fail loudly, not serve wrong-scale ranks
+      def recorded(iters: Int, pow10: Int) = {
+        graft.io.Artifact.save(spark, scope, "other",
+            "iters" -> iters, "scale_pow10" -> pow10) { at =>
+          spark.read.parquet(graft.io.Artifact.read(spark, scope, "rank")
+            .table("rows")).write.parquet(at("rows"))
+        }
+        intercept[IllegalArgumentException] {
+          GraphOps.loadDomainRank(spark, scope, "other")
+        }.getMessage
       }
-      assert(e1.getMessage.contains("iters=5"))
-      val e2 = intercept[IllegalArgumentException] {
-        GraphOps.loadDomainRank(spark, scope, "rank",
-          expectScale = 1000000L)
-      }
-      assert(e2.getMessage.contains("scale_pow10=6"))
-      // a non-power-of-ten scale is not meta-recordable — refused at
-      // save time, before anything is written
-      intercept[IllegalArgumentException] {
-        GraphOps.saveDomainRank(edges, scope, "bad", scale = 999L)
-      }
+      val e1 = recorded(5, 12)
+      assert(e1.contains("iters -> 5") && e1.contains("iters=3"), e1)
+      val e2 = recorded(3, 6)
+      assert(e2.contains("scale_pow10 -> 6") && e2.contains("scale_pow10=12"), e2)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }

@@ -325,11 +325,16 @@ class HtmlOpsSpec extends SparkSpec {
     assert(parsed(1).getLong(0) === t0)
     assert(parsed(2).isNullAt(0) && parsed(3).isNullAt(0))
     val ranks = Seq(("s0.example", 7L)).toDF("domain", "pr")
-    val wave = graft.ops.HtmlOps.heuristicRefetchWave(
-      graft.ops.HtmlOps.plantedValidatorLog(spark, t0),
-      nowS = t0 + 3L * day, defaultTtlS = 7L * day,
-      minTtlS = day, maxTtlS = 30L * day, ranks, kPerDomain = 1000)
-      .collect()
+    // the 200 planted keys spread over five domains, 40 each: four
+    // key slices of 10 per domain fit the 10-slot politeness cap, so
+    // the union of their waves is the whole due set
+    val log = graft.ops.HtmlOps.plantedValidatorLog(spark, t0)
+    val key = regexp_extract(col("url"), "/p/([0-9]+)$", 1).cast("int")
+    val wave = (0 until 4).map { j =>
+      graft.ops.HtmlOps.heuristicRefetchWave(log.filter(key % 4 === j),
+        nowS = t0 + 3L * day, defaultTtlS = 7L * day,
+        minTtlS = day, maxTtlS = 30L * day, ranks)
+    }.reduce(_ unionByName _).collect()
     assert(wave.nonEmpty)
     def k(r: org.apache.spark.sql.Row) =
       r.getAs[String]("canon").replaceAll(".*/p/", "").toLong
@@ -420,9 +425,8 @@ class HtmlOpsSpec extends SparkSpec {
         .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
         .toSet
       val viaArtifact = rows(HtmlOps.loadFetchLog(spark, sc, "fl"))
-      val oneShot = rows(HtmlOps.refetchWave(log, nowS = Long.MaxValue / 2,
-        ttlS = 1L, ranks = emptyRanks, kPerDomain = Int.MaxValue)
-        .select("canon", "url", "last_fetch_s"))
+      HtmlOps.saveFetchLog(log.select("url", "fetched_at_s"), sc, "oneshot")
+      val oneShot = rows(HtmlOps.loadFetchLog(spark, sc, "oneshot"))
       assert(viaArtifact === oneShot)
       // replaying the same batch is a no-op by ALGEBRA (max-merge):
       // same rows after, nothing double-applied
@@ -800,19 +804,23 @@ class HtmlOpsSpec extends SparkSpec {
     val log = HtmlOps.plantedFetchLog(docs)
     val base = 1767225600L
     val now = base + 9L * 86400L
-    // uncapped wave for the due-set arithmetic (the politeness cap
-    // can bump an individual due key out of the default-10 slots)
-    val due = HtmlOps.refetchWave(log, now, 7L * 86400L, ranks,
-      kPerDomain = 1000000).collect()
     val out = HtmlOps.refetchWave(log, now, 7L * 86400L, ranks).collect()
     assert(out.nonEmpty)
-    val byCanon = due.map(r => r.getString(0) -> r).toMap
     // singleton canonical groups (115 <= d < 385: the period-385 dup
     // pairs need both members under 500) make the planted arithmetic
     // exact per doc
     val canonOf = (d: Long) => HtmlOps.plantedDirtyUrlCorpus(docs)
       .filter(col("doc_id") === d)
       .select(HtmlOps.canonicalUrl(col("url"))).head().getString(0)
+    // the due-set arithmetic on the three keys it is about: the
+    // latest-fetch reduction is per key, so their log rows alone
+    // decide it, and three keys never fill a domain's 10 slots (the
+    // politeness cap can bump an individual due key of the full log)
+    val keys = Seq(115L, 116L, 194L).map(canonOf)
+    val due = HtmlOps.refetchWave(
+        log.filter(HtmlOps.canonicalUrl(col("url")).isin(keys: _*)),
+        now, 7L * 86400L, ranks).collect()
+    val byCanon = due.map(r => r.getString(0) -> r).toMap
     // doc 115 first-fetched at +18h — stale by THAT fetch alone — but
     // RE-fetched at +66h: the latest fetch wins, so it is NOT due
     assert(!byCanon.contains(canonOf(115L)))
@@ -971,14 +979,30 @@ class HtmlOpsSpec extends SparkSpec {
       assert(deepSeeds.filterNot(_._2 == "s10.example") ===
         baseline.filterNot(_._2 == "s10.example"))
 
-      // (d) the DEPTH KNOB governs: s8's a-half rides behind the
-      // fixture's mid-tree index, so a depth-1 walk resolves idx1 but
-      // never expands it — s8's admissible locs (/p/1, /p/10, both in
-      // the a-half) vanish; depth>=2 restores the full baseline
-      val shallow = HtmlOps.sitemapSeedsTree(tree, scope, "keys", ranks,
-          rules, maxDepth = 1)
-        .select("canon", "domain").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
+      // (d) the DEPTH CAP governs: s8's a-half rides behind the
+      // fixture's mid-tree index (depth 2); deepen the chain and a walk
+      // that stops after 3 waves never reaches it — s8's admissible
+      // locs (/p/1, /p/10, both in the a-half) vanish
+      val idx1 = "https://s8.example/sitemap-idx1.xml.gz"
+      def idx(i: Int) = s"https://s8.example/sitemap-idx$i.xml"
+      def index(loc: String) = "<?xml version=\"1.0\"?><sitemapindex>" +
+        s"<sitemap><loc>$loc</loc></sitemap></sitemapindex>"
+      // `levels` more plain index levels between idx1 and the a-half:
+      // idx1 → idx2 → … → idx(levels + 1) → sitemap-a
+      def chained(levels: Int) = tree
+        .withColumn("xml", when(col("url") === idx1, lit(index(idx(2))))
+          .otherwise(col("xml")))
+        .withColumn("xml_gz", when(col("url") === idx1, lit(null))
+          .otherwise(col("xml_gz")))
+        .unionByName((2 to levels + 1).map { i =>
+          (idx(i), index(if (i == levels + 1)
+            "https://s8.example/sitemap-a.xml.gz" else idx(i + 1)))
+        }.toDF("url", "xml").withColumn("xml_gz", lit(null).cast("binary")))
+      // one extra level puts the a-half at depth 3, the walk's last
+      // wave: s8 still admits
+      assert(seeds(chained(1)) === baseline)
+      // two put it at depth 4, past the walk
+      val shallow = seeds(chained(2))
       assert(baseline.exists(_._2 == "s8.example"))
       assert(!shallow.exists(_._2 == "s8.example"))
       assert(shallow === baseline.filterNot(_._2 == "s8.example"))
@@ -992,13 +1016,12 @@ class HtmlOpsSpec extends SparkSpec {
     val ranks = Seq(("big.example", 80L), ("mid.example", 15L),
       ("small.example", 1L), ("zero.example", 0L))
       .toDF("domain", "pr")
-    val b = HtmlOps.rankBudgets(ranks, totalBudget = 96,
-        minPerDomain = 2, maxPerDomain = 50)
+    val b = HtmlOps.rankBudgets(ranks, totalBudget = 96, maxPerDomain = 50)
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     // tot = 96: big 80 → 80 slots → capped 50; mid 15 → 15;
-    // small 1 → 1 → floored 2; zero → floored 2
+    // small 1 → 1; zero → 0 → floored 1
     assert(b === Map("big.example" -> 50, "mid.example" -> 15,
-      "small.example" -> 2, "zero.example" -> 2))
+      "small.example" -> 1, "zero.example" -> 1))
     // an all-zero rank table must not divide by zero — every domain
     // takes the floor
     val z = HtmlOps.rankBudgets(
@@ -1313,12 +1336,6 @@ class HtmlOpsSpec extends SparkSpec {
     // the refetched URL: its latest fetch is a 200, so no chain row
     assert(!out.contains("R"))
     assert(out.size === 13) // A,B,C + L1,L2 + T1..T7 + D — every 3xx an origin
-    // a custom cap: with maxHops=2 the A-chain is too_deep at C
-    val capped = HtmlOps.resolveRedirectChains(rows, maxHops = 2)
-      .collect().map(r => r.getString(0) ->
-        (r.getString(1), r.getInt(2), r.getString(3))).toMap
-    assert(capped("A") === (("C", 2, "too_deep")))
-    assert(capped("B") === (("FINAL", 2, "resolved")))
   }
 
   test("sitemap discovery (q220): Sitemap: decls are file-wide, absolute-only, and select the tree roots") {
@@ -1420,14 +1437,23 @@ class HtmlOpsSpec extends SparkSpec {
       assert(flips.nonEmpty, "anchor signal changed no slot")
       // ... and admission is untouched: boosting never smuggles in a
       // candidate the polite pipeline would not admit (same per-domain
-      // candidate pool, compared uncapped)
-      val uncappedB = HtmlOps.anchorBoostedFrontier(pages, scope, "keys",
-        ranks, rules, kPerDomain = Int.MaxValue)
-        .select("canon").collect().map(_.getString(0)).toSet
-      val uncappedP = HtmlOps.politeFrontier(pages, scope, "keys",
-        ranks, rules, kPerDomain = Int.MaxValue)
-        .select("canon").collect().map(_.getString(0)).toSet
-      assert(uncappedB === uncappedP)
+      // candidate pool). A domain whose polite wave holds fewer than
+      // the 10 slots holds its whole pool, so both waves must hold the
+      // same candidates there; a capped domain fills 10 slots in both.
+      // Compared on a page subset, so that uncapped domains exist
+      val few = pages.filter(col("doc_id") % 8 === 0)
+      def pools(wave: org.apache.spark.sql.DataFrame) =
+        wave.select("domain", "canon").collect()
+          .groupBy(_.getString(0)).map { case (d, rs) => d -> rs.map(_.getString(1)).toSet }
+      val poolsB = pools(HtmlOps.anchorBoostedFrontier(few, scope, "keys",
+        ranks, rules))
+      val poolsP = pools(HtmlOps.politeFrontier(few, scope, "keys", ranks, rules))
+      assert(poolsB.keySet === poolsP.keySet)
+      assert(poolsP.values.exists(_.size < 10))
+      poolsP.foreach { case (d, p) =>
+        if (p.size < 10) assert(poolsB(d) === p, d)
+        else assert(poolsB(d).size === 10, d)
+      }
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
@@ -1917,7 +1943,7 @@ class HtmlOpsSpec extends SparkSpec {
       assert(upserted.count() > 0)
       assert(HtmlOps.refetchWaveFromLog(spark, sc, "fl",
         nowS = 1767225600L + 9L * 86400L, ttlS = 86400L,
-        ranks = emptyRanks, kPerDomain = Int.MaxValue).count() > 0)
+        ranks = emptyRanks).count() > 0)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
     }
@@ -2127,7 +2153,7 @@ class HtmlOpsSpec extends SparkSpec {
     try {
       val dir = base.resolve("schedstate").toString
       (0L to 3L).foreach { w =>
-        HtmlOps.saveSchedState(
+        HtmlOps.saveWaveState(
           Seq(("s0.example", 10L * (w + 1)), ("s1.example", 7L))
             .toDF("domain", "next_allowed_s"), dir, w)
       }
@@ -2326,16 +2352,13 @@ class HtmlOpsSpec extends SparkSpec {
         c.matches("""w[0-9]+\.s[0-9]+\.example/r/[0-9]+""")
       assert(wave.exists(r => isRedirCanon(r.getAs[String]("canon"))))
       // ...and only the redirect channel can surface anything at all
-      // here: the outlink-only frontier over the same pages is EMPTY
-      // (every linked URL is already in the key set) — without
-      // redirect discovery this crawl has stalled
-      val pages = validPages
-        .select(col("doc_id"),
-          HtmlOps.hostOf(col("target_uri")).as("fetch_host"),
-          HtmlOps.urlPath(col("target_uri")).as("base_path"),
-          col("body").as("html"))
-      val outlinkOnly = HtmlOps.politeFrontier(pages, sc, "keys", ranks,
-        rules, basePathCol = Some("base_path")).collect()
+      // here: the same frontier over the valid pages alone, which
+      // carry no Location, is EMPTY (every linked URL is already in
+      // the key set) — without redirect discovery this crawl has
+      // stalled
+      val outlinkOnly = HtmlOps.redirectFrontierFramed(
+        validPages.filter(col("redirect_to") === ""), sc, "keys", ranks,
+        rules).collect()
       assert(outlinkOnly.isEmpty)
       // every wave row IS a redirect target
       assert(wave.nonEmpty &&

@@ -34,8 +34,8 @@ class LayoutSpec extends SparkSpec {
     cleanup("graft_bucket_a"); cleanup("graft_bucket_b")
     val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
     val b = (1 to 1000).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
-    Layout.writeBucketed(a, "graft_bucket_a", "k", 8)
-    Layout.writeBucketed(b, "graft_bucket_b", "k", 8)
+    Layout.writeBucketed(a, "graft_bucket_a", "k")
+    Layout.writeBucketed(b, "graft_bucket_b", "k")
 
     // force the non-broadcast path: tiny test tables would otherwise
     // broadcast, which disables bucketing entirely
@@ -91,10 +91,12 @@ class LayoutSpec extends SparkSpec {
   test("zValue is a bijection on the grid and monotonic per axis") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val n = 64 // 6-bit grid, exhaustive
+    // the 64 × 64 corner of the 16-bit grid, exhaustive: the upper
+    // bits are zero, so the corner maps onto [0, 64²) exactly
+    val n = 64
     val grid = spark.range(n.toLong * n)
       .select((col("id") / n).cast("long").as("a"), (col("id") % n).as("b"))
-      .withColumn("z", Layout.zValue(col("a"), col("b"), bits = 6))
+      .withColumn("z", Layout.zValue(col("a"), col("b")))
     // bijection: every (a, b) pair gets a distinct z in [0, n*n)
     val stats = grid.agg(
       countDistinct("z").as("nd"), min("z").as("lo"), max("z").as("hi"))

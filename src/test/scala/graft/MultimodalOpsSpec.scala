@@ -124,13 +124,13 @@ class MultimodalOpsSpec extends SparkSpec {
       override def decodeBatch(b: Seq[MediaRecord]): Seq[MediaMeta] =
         b.map(r => MediaMeta(r.doc_id, r.media.length, b.size, -1, "raw"))
     }
-    val media = Seq.tabulate(10)(i => MediaRecord(i.toLong, Array.fill(i + 1)(0x41.toByte)))
+    val media = Seq.tabulate(130)(i => MediaRecord(i.toLong, Array.fill(i + 1)(0x41.toByte)))
       .toDS().repartition(1)
-    val out = MultimodalOps.decode(media, byteCounting, batchSize = 4).collect()
-    assert(out.length === 10)
-    assert(out.map(_.n_bytes).sorted.toSeq === (1 to 10))
-    // batch shape: 10 rows in one partition at batchSize 4 → 4+4+2
-    assert(out.map(_.width).sorted.toSeq === Seq(2, 2, 4, 4, 4, 4, 4, 4, 4, 4))
+    val out = MultimodalOps.decode(media, byteCounting).collect()
+    assert(out.length === 130)
+    assert(out.map(_.n_bytes).sorted.toSeq === (1 to 130))
+    // batch shape: 130 rows in one partition at 64 per batch → 64+64+2
+    assert(out.map(_.width).sorted.toSeq === Seq(2, 2) ++ Seq.fill(128)(64))
   }
 
   private def encoded(fmt: String, w: Int, h: Int): Array[Byte] = {
@@ -189,7 +189,15 @@ class MultimodalOpsSpec extends SparkSpec {
     val wav = MultimodalOps.syntheticWavTable(Seq(5L).toDF("doc_id"))
       .collect().head.media
     assert(MultimodalOps.readWavStats(wav).isDefined)
-    // ...but the declared-length bomb guard refuses it under a budget
-    assert(MultimodalOps.readWavStats(wav, maxSamples = 10L) === None)
+    // ...but the declared-length bomb guard refuses a header declaring
+    // more than 2^24 frames (2^26 data bytes of 16-bit mono), before
+    // reading a sample
+    val bomb = wav.clone()
+    java.nio.ByteBuffer.wrap(bomb, 40, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(1 << 26)
+    // the header still parses: the guard, not the parser, refuses it
+    assert(javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(bomb)).getFrameLength === (1L << 25))
+    assert(MultimodalOps.readWavStats(bomb) === None)
   }
 }

@@ -52,8 +52,12 @@ class NullSafetySpec extends SparkSpec {
         r.getAs[Int]("n_lines")).toMap
     assert(stripped(3L) === 0 && stripped(4L) === 1)
 
-    // fingerprints/collocations simply see no grams from blank docs
-    assert(TextOps.collocations(dirty, minCount = 2, topK = 5).count() > 0)
+    // fingerprints/collocations simply see no grams from blank docs;
+    // three more copies of the real sentence lift its bigrams to the
+    // 5-occurrence floor
+    val copies = (6L to 8L).map(i => (i, "the quick brown fox jumps over " +
+      "the lazy dog again and again")).toDF("doc_id", "text")
+    assert(TextOps.collocations(dirty.union(copies)).count() > 0)
   }
 
   test("PII detect/redact zero out null/blank docs, never null the audit") {
@@ -103,14 +107,13 @@ class NullSafetySpec extends SparkSpec {
     // the stratum never matches null) — the documented contract
     val vals = Seq(("a", 1L), ("a", 2L), ("a", 100L),
       (null.asInstanceOf[String], 5L)).toDF("g", "v")
-    val w = graft.ops.SampleOps.winsorize(vals, "v", "g",
-        pLowPct = 1, pHighPct = 99)
+    val w = graft.ops.SampleOps.winsorize(vals, "v", "g")
       .collect().map(r => Option(r.getString(0)))
     assert(w === Array(Some("a"))) // the null stratum surfaces nowhere
 
     // null/blank docs contribute no tokens: they vanish from the
     // encoding (no token rows), real docs encode unaffected
-    val enc = TextOps.encodeWithVocabulary(dirty, vocabSize = 5)
+    val enc = TextOps.encodeWithVocabulary(dirty)
       .collect().map(r => r.getLong(0)).toSet
     assert(enc === Set(1L, 5L))
   }

@@ -54,18 +54,6 @@ class PiiOpsSpec extends SparkSpec {
     assert(out(3L) === 2L)
   }
 
-  test("piiRedact honors a caller-supplied pattern inventory") {
-    val d = docs(1L -> "ssn 123-45-6789 and mail x@y.zz")
-    val ssnOnly = Seq(("ssn",
-      "\\b[0-9]{3}-[0-9]{2}-[0-9]{4}\\b", "<SSN>"))
-    val out = PiiOps.piiRedact(d, ssnOnly).head()
-    assert(out.getAs[Long]("n_redactions") === 1L)
-    assert(out.getAs[Long]("n_residual") === 0L)
-    // the email survives an SSN-only inventory — detect sees it
-    val det = PiiOps.piiDetect(d).head()
-    assert(det.getAs[Long]("n_email") === 1L)
-  }
-
   test("planted corpus matches the closed form per doc_id") {
     val fixture = graft.io.Tables.parquet(spark, sf, "documents")
     val out = PiiOps.piiDetect(PiiOps.plantedPiiCorpus(fixture))

@@ -146,9 +146,9 @@ class PlanSpec extends SparkSpec {
       val scope = graft.core.Scopes.create(spark, base.toString)
       SimilarityOps.saveIvfIndex(SimilarityOps.buildIvfIndex(emb), scope, "ivf")
       val loaded = SimilarityOps.loadIvfIndex(spark, scope, "ivf")
-      // 2 queries × 2 probes → at most 4 of the 16 cell directories read
-      val df = SimilarityOps.probeIvfPruned(loaded, emb, nQueries = 2, k = 5,
-        nprobe = 2)
+      // one query × 8 probes → at most 8 of the 16 cell directories read
+      val df = SimilarityOps.probeIvfPruned(loaded,
+        emb.filter(org.apache.spark.sql.functions.col("vec_id") === 0L))
       df.collect()
       val plan = planOf(df)
       // static pruning: the literal cell IN (...) reaches the scan's
@@ -172,7 +172,7 @@ class PlanSpec extends SparkSpec {
       val assignedScan = scans(df.queryExecution.executedPlan)
         .find(_.output.exists(_.name == "cell"))
       assert(assignedScan.isDefined, plan)
-      assert(assignedScan.get.metrics("numPartitions").value <= 4,
+      assert(assignedScan.get.metrics("numPartitions").value <= 8,
         assignedScan.get.metrics("numPartitions").value.toString)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
@@ -187,7 +187,7 @@ class PlanSpec extends SparkSpec {
       graft.ops.TextOps.savePostings(docs, scope, "postings")
       val loaded = graft.ops.TextOps.loadPostings(spark, scope, "postings")
       val queries = Map("qa" -> Seq("table", "scan"), "qb" -> Seq("window"))
-      val df = graft.ops.TextOps.searchPostings(loaded, queries, k = 5)
+      val df = graft.ops.TextOps.searchPostings(loaded, queries)
       df.collect()
       val plan = planOf(df)
       // the literal bucket IN (...) reaches the scan's PARTITION
@@ -224,9 +224,9 @@ class PlanSpec extends SparkSpec {
       SimilarityOps.saveIvfPqIndex(SimilarityOps.buildIvfPqIndex(emb),
         scope, "ivfpq")
       val loaded = SimilarityOps.loadIvfPqIndex(spark, scope, "ivfpq")
-      // 2 queries × 2 probes → at most 4 of the 16 cell directories read
-      val df = SimilarityOps.probeIvfPq(loaded, emb, nQueries = 2, k = 5,
-        nprobe = 2)
+      // one query × 8 probes → at most 8 of the 16 cell directories read
+      val df = SimilarityOps.probeIvfPq(loaded,
+        emb.filter(org.apache.spark.sql.functions.col("vec_id") === 0L))
       df.collect()
       val plan = planOf(df)
       // the literal cell IN (...) reaches the artifact scan's PARTITION
@@ -247,7 +247,7 @@ class PlanSpec extends SparkSpec {
       val cellsScan = scans(df.queryExecution.executedPlan)
         .find(_.output.exists(_.name == "codes"))
       assert(cellsScan.isDefined, plan)
-      assert(cellsScan.get.metrics("numPartitions").value <= 4,
+      assert(cellsScan.get.metrics("numPartitions").value <= 8,
         cellsScan.get.metrics("numPartitions").value.toString)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
@@ -462,8 +462,7 @@ class PlanSpec extends SparkSpec {
       // the oldest days due must scan only those partitions
       val now = 1767225600L + 6L * 86400L
       val wave = graft.ops.HtmlOps.refetchWaveFromLog(spark, scope, "fl",
-        nowS = now, ttlS = 4L * 86400L, ranks = emptyRanks,
-        kPerDomain = Int.MaxValue)
+        nowS = now, ttlS = 4L * 86400L, ranks = emptyRanks)
       wave.collect()
       val plan = planOf(wave)
       // the staleness predicate reaches the scan as a PARTITION
@@ -473,9 +472,10 @@ class PlanSpec extends SparkSpec {
         .filter(_.contains("PartitionFilters")).mkString("\n")
       assert(pf.contains("fetch_day"), plan)
       // and the exact row filter agrees with the raw-log semantics
+      // (both waves under the same per-domain cap and slot order)
       val fromRaw = graft.ops.HtmlOps.refetchWave(
         graft.ops.HtmlOps.plantedFetchLog(docs), now, 4L * 86400L,
-        emptyRanks, Int.MaxValue)
+        emptyRanks)
       assert(wave.exceptAll(fromRaw).isEmpty && fromRaw.exceptAll(wave).isEmpty)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)

@@ -133,7 +133,7 @@ class PropertySpec extends SparkSpec {
     samples(Gen.listOfN(4, Gen.listOfN(8, Gen.oneOf("x", "y", "z", "w", "v")))).foreach { docs =>
       val df = docs.zipWithIndex.map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
         .toDF("doc_id", "text")
-      val pairs = DedupOps.jaccardPairs(df, threshold = 0.0).collect()
+      val pairs = DedupOps.jaccardPairs(df).collect()
       pairs.foreach { r =>
         assert(r.getLong(0) < r.getLong(1))
         val j = r.getDouble(2)
@@ -143,14 +143,12 @@ class PropertySpec extends SparkSpec {
   }
 
   test("chunking covers every token exactly once per window family and reconstructs the doc") {
-    val gen = Gen.zip(Gen.chooseNum(0, 40), Gen.chooseNum(1, 8), Gen.chooseNum(1, 8))
-    samples(gen, 8).foreach { case (n, stride0, extra) =>
-      val stride = stride0
-      val chunk = stride + extra - 1 // stride <= chunk always
+    val (chunk, stride) = (64, 48)
+    samples(Gen.chooseNum(0, 200), 8).foreach { n =>
       val words = (0 until n).map(i => s"w$i")
       val df = Seq((1L, words.mkString(" "))).toDF("doc_id", "text")
         .withColumn("lang", org.apache.spark.sql.functions.lit("xx"))
-      val out = graft.ops.TextOps.chunkDocuments(df, chunk, stride).collect()
+      val out = graft.ops.TextOps.chunkDocuments(df).collect()
         .sortBy(_.getAs[Int]("chunk_idx"))
       if (n == 0) assert(out.isEmpty)
       else {
@@ -175,14 +173,15 @@ class PropertySpec extends SparkSpec {
   }
 
   test("sequence packing conserves tokens and never over/underfills a pack boundary") {
-    val gen = Gen.listOfN(12, Gen.chooseNum(0, 6))
+    // 24 docs over the 8 shards, up to 300 tokens each: a shard's
+    // stream crosses the 512-token pack boundary
+    val gen = Gen.listOfN(24, Gen.chooseNum(0, 300))
     samples(gen, 5).foreach { sizes =>
       val df = sizes.zipWithIndex.map { case (k, i) =>
         (i.toLong, (0 until k).map(j => s"t$j").mkString(" ")) }
         .toDF("doc_id", "text")
         .withColumn("lang", org.apache.spark.sql.functions.lit("xx"))
-      val out = graft.ops.TextOps.packSequences(df, budget = 5, shards = 2)
-        .collect()
+      val out = graft.ops.TextOps.packSequences(df).collect()
       // token totals survive the packing untouched
       assert(out.map(_.getAs[Long]("n_tok")).sum ===
         sizes.map(_.toLong).sum)
@@ -192,28 +191,10 @@ class PropertySpec extends SparkSpec {
         val sorted = rows.sortBy(_.getAs[Long]("doc_id"))
         var offset = 0L
         sorted.foreach { r =>
-          assert(r.getAs[Long]("pack_id") === offset / 5)
+          assert(r.getAs[Long]("pack_id") === offset / 512)
           offset += r.getAs[Long]("n_tok")
         }
       }
-    }
-  }
-
-  test("temperature sampling nests across alpha (lower alpha keeps a subset)") {
-    val gen = Gen.listOfN(300, Gen.oneOf("a", "a", "a", "b", "c"))
-    samples(gen, 3).foreach { srcs =>
-      val df = srcs.zipWithIndex.map { case (s, i) => (i.toLong, s) }
-        .toDF("doc_id", "source")
-      def ids(alpha: Double) =
-        graft.ops.SampleOps.temperatureSample(df, "doc_id", "source", alpha)
-          .select("doc_id").as[Long].collect().toSet
-      val natural = ids(1.0)
-      val mild = ids(0.7)
-      val flat = ids(0.3)
-      assert(natural.size === srcs.size) // alpha = 1 keeps everything
-      // rates shrink monotonically with alpha and the hash filter is
-      // threshold-nested, so stronger tempering keeps strict subsets
-      assert(flat.subsetOf(mild) && mild.subsetOf(natural))
     }
   }
 

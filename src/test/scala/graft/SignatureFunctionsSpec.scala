@@ -117,8 +117,9 @@ class SignatureFunctionsSpec extends SparkSpec {
   }
 
   test("fused winnow_fps matches legacy under a non-default geometry") {
-    assertSameRows(DedupOps.winnowedFingerprints(corpus, k = 3, w = 2),
-      legacyWinnow(corpus, k = 3, w = 2))
+    val fused = corpus.select(col("doc_id"), explode(graft.functions.SignatureFunctions
+      .winnowFps(graft.functions.TokenFunctions.wsTokens(col("text")), 3, 2)).as("fp"))
+    assertSameRows(fused, legacyWinnow(corpus, k = 3, w = 2))
   }
 
   test("rowwise band form still equals the batch form (streaming contract)") {

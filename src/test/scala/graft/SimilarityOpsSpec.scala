@@ -13,7 +13,7 @@ class SimilarityOpsSpec extends SparkSpec {
     val v = Seq(1.0f, 2.0f, 3.0f, 4.0f)
     val d = vecs(0L -> v, 10L -> v, 11L -> Seq(4.0f, 3.0f, 2.0f, 1.0f),
       12L -> Seq(-1.0f, -2.0f, -3.0f, -4.0f))
-    val out = SimilarityOps.bruteForceKnn(d, nQueries = 1, k = 3).collect()
+    val out = SimilarityOps.bruteForceKnn(d, k = 3).collect()
       .sortBy(_.getAs[Int]("rnk"))
     assert(out.head.getAs[Long]("vec_id") === 10L)
     assert(out.head.getAs[Double]("sim") === 1.0)
@@ -54,7 +54,7 @@ class SimilarityOpsSpec extends SparkSpec {
     // component {0,1,3} (via 0-1, 0-3 edges), singletons 2 and 4
     val d = vecs(0L -> base, 1L -> near, 2L -> far, 3L -> base,
       4L -> far.map(x => -x))
-    val out = SimilarityOps.semanticDedupApply(d, threshold = 0.9).collect()
+    val out = SimilarityOps.semanticDedupApply(d).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("n_dropped")).toMap
     assert(out === Map(0L -> 2L, 2L -> 0L, 4L -> 0L))
   }
@@ -62,19 +62,20 @@ class SimilarityOpsSpec extends SparkSpec {
   test("lshKnn finds the identical vector in the same bucket") {
     val v = (0 until 64).map(_.toFloat + 1f)
     val d = vecs(0L -> v, 10L -> v, 11L -> v.map(x => -x))
-    val out = SimilarityOps.lshKnn(d, nQueries = 1, k = 5).collect()
+    val out = SimilarityOps.lshKnn(d).collect()
     assert(out.exists(r => r.getAs[Long]("vec_id") == 10L && r.getAs[Double]("sim") == 1.0))
     assert(!out.exists(r => r.getAs[Long]("vec_id") == 11L))
   }
 
   test("ivfKnn probes the query's own cell and finds its duplicate") {
-    // 3 well-separated groups of near-identical 64-dim vectors
-    def grp(center: Float, n: Int, from: Long) =
-      (0 until n).map(i => (from + i,
-        (0 until 64).map(d => center + (if (d == (i % 64)) 0.001f else 0f))))
-    val d = vecs((grp(1f, 20, 0L) ++ grp(-1f, 20, 100L) ++ grp(5f, 20, 200L)): _*)
-    val dup = vecs((0L, (0 until 64).map(d => 1f + (if (d == 0) 0.001f else 0f)))).collect()
-    val out = SimilarityOps.ivfKnn(d, nQueries = 1, k = 5, nlist = 3, nprobe = 1)
+    // 3 well-separated groups of near-identical 64-dim vectors, each
+    // on its own third of the dimensions (mutually orthogonal)
+    def grp(g: Int, n: Int, from: Long) =
+      (0 until n).map(i => (from + i, (0 until 64).map(d =>
+        (if (d / 22 == g) 1f else 0f) + (if (d == (i % 64)) 0.001f else 0f))))
+    val d = vecs((grp(0, 20, 0L) ++ grp(1, 20, 100L) ++ grp(2, 20, 200L)): _*)
+    val out = SimilarityOps.ivfKnn(d)
+      .filter(org.apache.spark.sql.functions.col("query_id") === 0L)
       .collect().sortBy(_.getAs[Int]("rnk"))
     assert(out.nonEmpty)
     // all neighbors come from the query's own (first) group
@@ -85,16 +86,19 @@ class SimilarityOpsSpec extends SparkSpec {
   test("closestPairs returns the most similar pair first") {
     val d = vecs(0L -> Seq(1f, 0f, 0f, 0f), 1L -> Seq(0.99f, 0.1f, 0f, 0f),
       2L -> Seq(0f, 1f, 0f, 0f))
-    val out = SimilarityOps.closestPairs(d, topN = 3).collect()
+    val out = SimilarityOps.closestPairs(d).collect()
     assert((out.head.getLong(0), out.head.getLong(1)) === (0L, 1L))
   }
 
   test("closestPairs block join covers every pair exactly once") {
-    // 7 vectors, blocks=3 (ids not multiples of blocks): C(7,2)=21 pairs
-    val d = vecs((0L until 7L).map(i => i -> (0 until 8).map(_ => i + 1f)): _*)
-    val out = SimilarityOps.closestPairs(d, topN = 100, blocks = 3).collect()
-    assert(out.length === 21)
-    assert(out.map(r => (r.getLong(0), r.getLong(1))).distinct.length === 21)
+    // 6 vectors over the 32 blocks (vec_id pmod 32: blocks 31, 0, 31,
+    // 0, 1, 0 — shared, distinct, and a negative id): C(6,2) = 15
+    // pairs, all inside the top 20
+    val ids = Seq(-1L, 0L, 31L, 32L, 33L, 64L)
+    val d = vecs(ids.map(i => i -> (0 until 8).map(_ => (i & 7) + 1f)): _*)
+    val out = SimilarityOps.closestPairs(d).collect()
+    assert(out.length === 15)
+    assert(out.map(r => (r.getLong(0), r.getLong(1))).distinct.length === 15)
   }
 
   test("knnRecallGate emits violations only for low-recall queries") {
@@ -112,14 +116,12 @@ class SimilarityOpsSpec extends SparkSpec {
     val emb = graft.io.Tables.parquet(spark, sf, "embeddings")
     val idx = SimilarityOps.buildIvfIndex(emb)
     idx.assigned.cache(); idx.assigned.count() // train once, reuse
-    val a = SimilarityOps.probeIvf(idx, nQueries = 2, k = 5).collect()
-    val b = SimilarityOps.probeIvf(idx, nQueries = 5, k = 3)
-      .filter(_.getAs[Long]("query_id") < 2).collect()
-    // same index → probe results agree on the shared prefix
-    val aTop3 = a.filter(_.getAs[Int]("rnk") <= 3)
+    def probe() = SimilarityOps.probeIvf(idx).collect()
       .map(r => (r.getLong(0), r.getAs[Int]("rnk"), r.getAs[Long]("vec_id"))).toSet
-    val bTop3 = b.map(r => (r.getLong(0), r.getAs[Int]("rnk"), r.getAs[Long]("vec_id"))).toSet
-    assert(aTop3 === bTop3)
+    // same index → every probe call gives the same neighbors
+    val a = probe()
+    assert(a.nonEmpty)
+    assert(probe() === a)
     idx.assigned.unpersist()
   }
 
@@ -137,32 +139,37 @@ class SimilarityOpsSpec extends SparkSpec {
   test("IVF-PQ: joint recall gate empty; candidates confined to the probed cells (q125 contract)") {
     val emb = graft.io.Tables.parquet(spark, sf, "embeddings")
     assert(SimilarityOps.ivfPqKnnRecallGate(emb).isEmpty)
-    // the probe must never surface a vector outside nprobe cells:
-    // with nprobe=1 every result's cell is its query's single nearest
+    // the probe must never surface a vector outside its query's 8
+    // nearest cells (of 16) by ||q - c||²
     val index = SimilarityOps.buildIvfPqIndex(emb)
-    val out = SimilarityOps.probeIvfPq(index, emb, nQueries = 2, k = 5,
-      nprobe = 1).collect()
+    val out = SimilarityOps.probeIvfPq(index, emb).collect()
     assert(out.nonEmpty)
     val cellOf = index.cellCodes.select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val resultCells = out.groupBy(_.getAs[Long]("query_id"))
-      .map { case (_, rows) =>
-        rows.map(r => cellOf(r.getAs[Long]("vec_id"))).distinct.length
-      }
-    assert(resultCells.forall(_ === 1)) // one probed cell → one cell in results
+    val centroids = index.centroids.collect()
+      .map(r => r.getInt(0) -> r.getSeq[Float](1).map(_.toDouble))
+    val vecOf = emb.collect()
+      .map(r => r.getAs[Long]("vec_id") ->
+        r.getSeq[Float](r.fieldIndex("embedding")).map(_.toDouble)).toMap
+    out.groupBy(_.getAs[Long]("query_id")).foreach { case (q, rows) =>
+      val probed = centroids.sortBy { case (cell, c) =>
+        (vecOf(q).zip(c).map { case (a, b) => (a - b) * (a - b) }.sum, cell)
+      }.take(8).map(_._1).toSet
+      assert(rows.forall(r => probed(cellOf(r.getAs[Long]("vec_id")))), q)
+    }
   }
 
   test("PQ codes are deterministic, partition-independent, m-wide, and in codebook range") {
     val emb = graft.io.Tables.parquet(spark, sf, "embeddings")
     def codesOf(df: org.apache.spark.sql.DataFrame) = {
-      val idx = SimilarityOps.buildPqIndex(df, m = 8)
+      val idx = SimilarityOps.buildPqIndex(df)
       idx.codes.collect()
         .map(r => r.getAs[Long]("vec_id") -> r.getSeq[Int](1).toVector).toMap
     }
     val a = codesOf(emb)
     val b = codesOf(emb.repartition(7)) // layout must not change the codes
     assert(a === b)
-    assert(a.nonEmpty && a.values.forall(_.length === 8))
+    assert(a.nonEmpty && a.values.forall(_.length === 32))
     assert(a.values.forall(_.forall(c => c >= 0 && c < 256)))
   }
 
@@ -174,7 +181,7 @@ class SimilarityOpsSpec extends SparkSpec {
     // vec 0 is the query; vec 5 is its exact duplicate — they share
     // codes, so the reconstruction keeps them nearest
     val d = vecs(((0L -> q) +: (5L -> q) +: base): _*)
-    val out = SimilarityOps.pqKnn(d, nQueries = 1, k = 3)
+    val out = SimilarityOps.pqKnn(d)
       .collect().sortBy(_.getAs[Int]("rnk"))
     assert(out.head.getAs[Long]("vec_id") === 5L)
   }
@@ -196,10 +203,8 @@ class SimilarityOpsSpec extends SparkSpec {
       def key(r: org.apache.spark.sql.Row) =
         (r.getAs[Long]("query_id"), r.getAs[Int]("rnk"),
           r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))
-      val mem = SimilarityOps.probeIvf(idx, nQueries = 3, k = 5, nprobe = 4)
-        .collect().map(key).toSet
-      val art = SimilarityOps.probeIvfPruned(loaded, emb, nQueries = 3, k = 5,
-        nprobe = 4).collect().map(key).toSet
+      val mem = SimilarityOps.probeIvf(idx).collect().map(key).toSet
+      val art = SimilarityOps.probeIvfPruned(loaded, emb).collect().map(key).toSet
       assert(art === mem)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
@@ -215,7 +220,7 @@ class SimilarityOpsSpec extends SparkSpec {
       val even = emb.filter(col("vec_id") % 2 === 0)
       val odd = emb.filter(col("vec_id") % 2 === 1)
       SimilarityOps.saveIvfIndex(SimilarityOps.buildIvfIndex(even), scope, "ivf")
-      def assignments() = Artifact.load(spark, scope, "ivf", "assigned")
+      def assignments() = spark.read.parquet(Artifact.read(spark, scope, "ivf").table("assigned"))
         .select("vec_id", "cell").collect()
         .map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("cell")).toMap
       val before = assignments()
@@ -233,7 +238,7 @@ class SimilarityOpsSpec extends SparkSpec {
         while (i < a.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
         s
       }
-      val centroids = Artifact.load(spark, scope, "ivf", "centroids").collect()
+      val centroids = spark.read.parquet(Artifact.read(spark, scope, "ivf").table("centroids")).collect()
         .map(r => r.getAs[Int]("cell") ->
           r.getSeq[Float](r.fieldIndex("centroid")).toArray).sortBy(_._1)
       odd.collect().foreach { r =>
@@ -267,9 +272,9 @@ class SimilarityOpsSpec extends SparkSpec {
       def key(r: org.apache.spark.sql.Row) =
         (r.getAs[Long]("query_id"), r.getAs[Int]("rnk"),
           r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))
-      val mem = SimilarityOps.probePq(idx, emb, nQueries = 3, k = 5)
+      val mem = SimilarityOps.probePq(idx, emb)
         .collect().map(key).toSet
-      val art = SimilarityOps.probePq(loaded, emb, nQueries = 3, k = 5)
+      val art = SimilarityOps.probePq(loaded, emb)
         .collect().map(key).toSet
       assert(art === mem)
     } finally {
@@ -286,7 +291,7 @@ class SimilarityOpsSpec extends SparkSpec {
       val even = emb.filter(col("vec_id") % 2 === 0)
       val odd = emb.filter(col("vec_id") % 2 === 1)
       SimilarityOps.savePqIndex(SimilarityOps.buildPqIndex(even), scope, "pq")
-      def codes() = Artifact.load(spark, scope, "pq", "codes")
+      def codes() = spark.read.parquet(Artifact.read(spark, scope, "pq").table("codes"))
         .collect().map(r => r.getAs[Long]("vec_id") ->
           r.getSeq[Int](r.fieldIndex("codes"))).toMap
       val before = codes()
@@ -332,11 +337,10 @@ class SimilarityOpsSpec extends SparkSpec {
           r.getAs[Long]("vec_id"), r.getAs[Double]("sim"))
       // the reloaded probe is the in-memory probe — storage is layout,
       // not semantics
-      val mem = SimilarityOps.probeIvfPq(idx, emb, nQueries = 3, k = 5)
-        .collect().map(key).toSet
-      assert(SimilarityOps.probeIvfPq(reloaded, emb, nQueries = 3, k = 5)
+      val mem = SimilarityOps.probeIvfPq(idx, emb).collect().map(key).toSet
+      assert(SimilarityOps.probeIvfPq(reloaded, emb)
         .collect().map(key).toSet === mem)
-      def stored() = Artifact.load(spark, scope, "ivfpq", "cells")
+      def stored() = spark.read.parquet(Artifact.read(spark, scope, "ivfpq").table("cells"))
         .select("vec_id", "cell", "codes").collect()
         .map(r => r.getAs[Long]("vec_id") ->
           (r.getAs[Int]("cell"), r.getSeq[Int](r.fieldIndex("codes"))))
@@ -393,7 +397,7 @@ class SimilarityOpsSpec extends SparkSpec {
       """transform(q, x -> cast(cast(x as double) * maxabs / 127.0D as float))
         |  as embedding""".stripMargin)
     def top(df: org.apache.spark.sql.DataFrame) =
-      SimilarityOps.bruteForceKnn(df, nQueries = 5, k = 10).collect()
+      SimilarityOps.bruteForceKnn(df).collect()
         .groupBy(_.getAs[Long]("query_id"))
         .view.mapValues(_.map(_.getAs[Long]("vec_id")).toSet).toMap
     val exact = top(e)
@@ -448,22 +452,25 @@ class SimilarityOpsSpec extends SparkSpec {
   }
 
   test("centroidOutliers ranks the planted far vector first in its label") {
-    // label 1: three vectors near (1, 1) plus one planted at (9, 9) —
+    // label 1: six vectors near (1, 1) plus one planted at (9, 9) —
     // the plant must rank 1; label 2 has a single member whose
     // distance to its own centroid is exactly 0
     val d = Seq(
       (0L, Seq(1.0f, 1.0f), 1),
       (1L, Seq(1.1f, 0.9f), 1),
       (2L, Seq(0.9f, 1.1f), 1),
+      (5L, Seq(1.2f, 0.8f), 1),
+      (6L, Seq(0.8f, 1.2f), 1),
+      (7L, Seq(1.0f, 1.1f), 1),
       (3L, Seq(9.0f, 9.0f), 1),
       (4L, Seq(5.0f, 5.0f), 2)
     ).toDF("vec_id", "embedding", "label")
-    val out = SimilarityOps.centroidOutliers(d, topK = 2).collect()
+    val out = SimilarityOps.centroidOutliers(d).collect()
       .map(r => (r.getAs[Int]("label"), r.getAs[Int]("rnk")) ->
         (r.getAs[Long]("vec_id"), r.getAs[Long]("d2"))).toMap
     assert(out((1, 1))._1 === 3L)
     assert(out((2, 1)) === ((4L, 0L)))
-    assert(out.size === 3) // label 1 yields 2 rows, label 2 only its 1
+    assert(out.size === 6) // label 1 yields 5 of its 7 rows, label 2 only its 1
   }
 
   test("centroidOutliers is partitioning-invariant (integer distances, ties by vec_id)") {
@@ -479,11 +486,11 @@ class SimilarityOpsSpec extends SparkSpec {
   test("kmeansStep partitions the corpus into k clusters that cover every vector") {
     val e = graft.io.Tables.parquet(spark, sf, "embeddings")
     val total = e.count()
-    val out = SimilarityOps.kmeansStep(e, k = 4).collect()
+    val out = SimilarityOps.kmeansStep(e).collect()
     val dims = e.selectExpr("size(embedding) d").distinct().collect()
       .map(_.getInt(0)).max
     val byCluster = out.groupBy(_.getAs[Int]("cluster"))
-    assert(byCluster.keySet.subsetOf((1 to 4).toSet))
+    assert(byCluster.keySet.subsetOf((1 to 8).toSet))
     // each cluster contributes exactly `dims` centroid rows with one
     // shared member count; counts over clusters partition the corpus
     val counts = byCluster.map { case (c, rows) =>
@@ -521,9 +528,22 @@ class SimilarityOpsSpec extends SparkSpec {
     def key(rows: Array[org.apache.spark.sql.Row]) = rows
       .map(r => (r.getInt(0), r.getInt(1)) -> ((r.getDouble(2), r.getLong(3))))
       .toMap
-    assert(key(SimilarityOps.kmeans(e, k = 4, iters = 1).collect()) ===
-      key(SimilarityOps.kmeansStep(e, k = 4).collect()))
-    val out3 = SimilarityOps.kmeans(e, k = 4, iters = 3).collect()
+    // replay kmeans' three rounds from the public stages: round one IS
+    // kmeansStep, and each later round assigns against the previous
+    // round's centroids re-quantized half-away-from-zero
+    val s = 1L << 20
+    def reseed(rows: Array[org.apache.spark.sql.Row]) = rows
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (cid, rs) =>
+        (cid, rs.sortBy(_.getInt(1)).map(r => BigDecimal(r.getDouble(2) * s)
+          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong).toSeq)
+      }.toDF("cid", "sq")
+    val replay = (2 to 3).foldLeft(SimilarityOps.kmeansStep(e).collect()) {
+      (prev, _) => SimilarityOps.labelCentroids(
+          SimilarityOps.kmeansAssign(e, reseed(prev))
+            .select("cluster", "embedding"), labelCol = "cluster").collect()
+    }
+    val out3 = SimilarityOps.kmeans(e).collect()
+    assert(key(out3) === key(replay))
     val counts = out3.groupBy(_.getInt(0))
       .map { case (_, rows) => rows.map(_.getLong(3)).head }
     assert(counts.sum === e.count()) // every vector assigned each round
@@ -541,17 +561,25 @@ class SimilarityOpsSpec extends SparkSpec {
       13L -> "mm nn oo pp").toDF("doc_id", "text")
       .withColumn("lang", lit("xx"))
     val v0 = Seq(1.0f, 0.0f, 0.0f)
-    val emb = Seq(
+    // 18 vector-only fillers rank 3..20 on the dense side, between 11
+    // and 12, so 12 and 13 fall outside its top 20
+    val fillers = (100L until 118L).map(i => (i, s"f$i g$i h$i"))
+    val emb = (Seq(
       0L -> v0,
       10L -> Seq(0.9f, 0.1f, 0.0f),
       11L -> Seq(0.8f, 0.2f, 0.0f),
       12L -> Seq(-1.0f, 0.0f, 0.1f),
-      13L -> Seq(-0.9f, -0.1f, 0.2f)).toDF("vec_id", "embedding")
-    val out = SimilarityOps.hybridSearch(docs, emb, nQueries = 1,
-      perList = 2, k = 4).collect().sortBy(_.getAs[Int]("rnk"))
-    // doc 13 is in NEITHER top-2 list → absent; 11 vs 12 tie on rrf
-    // (one rank-2 entry each) and break by doc_id
-    assert(out.map(_.getAs[Long]("doc_id")).toSeq === Seq(10L, 11L, 12L))
+      13L -> Seq(-0.9f, -0.1f, 0.2f)) ++
+      fillers.map { case (i, _) => i -> Seq(0.5f, 0.5f, (i - 100L) / 100f) })
+      .toDF("vec_id", "embedding")
+    val out = SimilarityOps.hybridSearch(
+        docs.unionByName(fillers.toDF("doc_id", "text").withColumn("lang", lit("xx"))),
+        emb).collect().sortBy(_.getAs[Int]("rnk"))
+    // doc 13 is in NEITHER top-20 list → absent; 11 vs 12 tie on rrf
+    // (one rank-2 entry each) and break by doc_id; the fillers follow
+    assert(out.map(_.getAs[Long]("doc_id")).toSeq.take(3) === Seq(10L, 11L, 12L))
+    assert(out.length === 10)
+    assert(!out.exists(_.getAs[Long]("doc_id") == 13L))
     val r10 = out.head
     // doc 10 is rank 1 in both lists: rrf = 2/61
     assert(r10.getAs[Double]("rrf") ===

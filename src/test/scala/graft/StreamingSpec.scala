@@ -81,7 +81,7 @@ class StreamingSpec extends SparkSpec {
     val batch = EventsStreaming.hourlyByType(Tables.events(spark, sf))
       .collect().map(_.toSeq).toSet
     val streamed = EventsStreaming
-      .hourlyByTypeStreaming(spark, sf, queryName = "spec_stream")
+      .hourlyByTypeStreaming(spark, sf)
       .collect().map(_.toSeq).toSet
     assert(streamed === batch)
     assert(batch.nonEmpty)
@@ -130,7 +130,7 @@ class StreamingSpec extends SparkSpec {
         (col("c_us") - col("v_us")).as("delay_us"))
       .collect().map(_.toSeq).toSet
     val streamed = EventsStreaming
-      .viewClickJoinStreaming(spark, sf, queryName = "spec_ss_join")
+      .viewClickJoinStreaming(spark, sf)
       .collect().map(_.toSeq).toSet
     assert(streamed === batch)
     assert(batch.nonEmpty)
@@ -169,7 +169,7 @@ class StreamingSpec extends SparkSpec {
 
   test("scrub-on-ingest equals the batch PII audit exactly (q171 contract)") {
     val streamed = graft.streaming.EventsStreaming
-      .streamingPiiScrub(spark, sf, queryName = "spec_stream_pii")
+      .streamingPiiScrub(spark, sf)
     val batch = graft.ops.PiiOps.piiRedact(
       graft.ops.PiiOps.plantedPiiCorpus(
         graft.io.Tables.parquet(spark, sf, "documents")))
@@ -179,7 +179,7 @@ class StreamingSpec extends SparkSpec {
 
   test("extract-on-ingest equals the batch crawl flagship exactly (q176 contract)") {
     val streamed = graft.streaming.EventsStreaming
-      .streamingCrawlIngest(spark, sf, queryName = "spec_stream_crawl")
+      .streamingCrawlIngest(spark, sf)
     val batch = graft.ops.HtmlOps.crawlIngest(
       graft.ops.HtmlOps.plantedHtmlCorpus(
         graft.io.Tables.parquet(spark, sf, "documents")),
@@ -492,9 +492,9 @@ class StreamingSpec extends SparkSpec {
       val fromLoop = graft.ops.HtmlOps.loadFetchLog(spark, scope, "flog")
         .select("canon", "url", "last_fetch_s").collect()
         .map(_.toString).sorted.toSeq
-      val oneShot = graft.ops.HtmlOps.refetchWave(
-        src.select("url", "fetched_at_s"), nowS = Long.MaxValue / 2,
-        ttlS = 1L, ranks = ranks, kPerDomain = Int.MaxValue)
+      graft.ops.HtmlOps.saveFetchLog(src.select("url", "fetched_at_s"),
+        scope, "oneshot")
+      val oneShot = graft.ops.HtmlOps.loadFetchLog(spark, scope, "oneshot")
         .select("canon", "url", "last_fetch_s").collect()
         .map(_.toString).sorted.toSeq
       assert(fromLoop === oneShot)

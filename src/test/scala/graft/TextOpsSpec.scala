@@ -27,13 +27,13 @@ class TextOpsSpec extends SparkSpec {
   test("topTokensGate is empty on the fixture and under genuine sketch eviction") {
     val fixture = graft.io.Tables.parquet(spark, sf, "documents")
     assert(TextOps.topTokensGate(fixture).collect().isEmpty)
-    // a skewed planted corpus with far more distinct tokens than map
-    // slots: the sketch must evict, and the heavy hitters' estimates
-    // must still land inside the eps·n band (violations stay empty)
-    val skewed = docs(1L -> (("hot " * 500) +
-      (1 to 400).map(i => s"cold$i").mkString(" ")))
-    assert(TextOps.topTokensGate(skewed, k = 3, maxTracked = 64)
-      .collect().isEmpty)
+    // a skewed planted corpus with far more distinct tokens than the
+    // 8192 map slots: the sketch must evict, and the heavy hitters'
+    // estimates must still land inside the eps·n band (violations
+    // stay empty)
+    val skewed = docs(1L -> (("hot " * 20000) +
+      (1 to 12000).map(i => s"cold$i").mkString(" ")))
+    assert(TextOps.topTokensGate(skewed).collect().isEmpty)
   }
 
   test("redactPii counts and replaces emails/phones, leaves clean text alone") {
@@ -145,38 +145,41 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("chunking emits overlapping windows with a short tail and skips empty docs") {
-    // 10 tokens, chunk 4, stride 3 → starts 0,3,6,9; the last two
-    // windows are short (4,4,4,1 tokens); content md5 pins the slice
-    val d = docs(1L -> "t0 t1 t2 t3 t4 t5 t6 t7 t8 t9", 2L -> "   ")
-    val out = TextOps.chunkDocuments(d, chunk = 4, stride = 3).collect()
+    // 150 tokens, chunk 64, stride 48 → starts 0,48,96,144; the last
+    // two windows are short (64,64,54,6 tokens); content md5 pins the
+    // slice
+    val d = docs(1L -> (0 until 150).map(i => s"t$i").mkString(" "), 2L -> "   ")
+    val out = TextOps.chunkDocuments(d).collect()
       .filter(_.getLong(0) == 1L)
       .sortBy(_.getAs[Int]("chunk_idx"))
-    assert(out.map(_.getAs[Int]("start_tok")).toSeq === Seq(0, 3, 6, 9))
-    assert(out.map(_.getAs[Int]("n_chunk_tok")).toSeq === Seq(4, 4, 4, 1))
+    assert(out.map(_.getAs[Int]("start_tok")).toSeq === Seq(0, 48, 96, 144))
+    assert(out.map(_.getAs[Int]("n_chunk_tok")).toSeq === Seq(64, 64, 54, 6))
     val md5First = java.security.MessageDigest.getInstance("MD5")
-      .digest("t0 t1 t2 t3".getBytes("UTF-8"))
+      .digest((0 until 64).map(i => s"t$i").mkString(" ").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     assert(out.head.getAs[String]("chunk_md5") === md5First)
     // whitespace-only doc → zero tokens → no chunks
-    assert(TextOps.chunkDocuments(d, 4, 3).filter("doc_id = 2").count() === 0)
+    assert(TextOps.chunkDocuments(d).filter("doc_id = 2").count() === 0)
     // a doc shorter than one chunk still yields exactly one window
-    val one = TextOps.chunkDocuments(docs(3L -> "a b"), chunk = 4, stride = 3)
+    val one = TextOps.chunkDocuments(docs(3L -> "a b"))
     assert(one.count() === 1)
   }
 
   test("sequence packing windows the running token offset per (lang, shard)") {
-    // shards = 1 → one ordered stream: n_tok 3, 2, 4; starts 0, 3, 5;
-    // budget 4 → packs 0, 0, 1 (a doc belongs to the window its START
-    // falls in, so doc 2 straddles the boundary but stays in pack 0)
-    val d = docs(0L -> "a b c", 2L -> "d e", 4L -> "f g h i")
-    val out = TextOps.packSequences(d, budget = 4, shards = 1).collect()
+    def words(n: Int) = (0 until n).map(i => s"w$i").mkString(" ")
+    // doc_ids 0, 8, 16 share shard 0 (doc_id % 8) → one ordered
+    // stream: n_tok 300, 250, 10; starts 0, 300, 550; 512-token budget
+    // → packs 0, 0, 1 (a doc belongs to the window its START falls
+    // in, so doc 8 straddles the boundary but stays in pack 0)
+    val d = docs(0L -> words(300), 8L -> words(250), 16L -> words(10))
+    val out = TextOps.packSequences(d).collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_tok"), r.getAs[Long]("pack_id"))).toMap
-    assert(out === Map(0L -> (3L, 0L), 2L -> (2L, 0L), 4L -> (4L, 1L)))
-    // shard separation: with 2 shards the odd/even streams pack
-    // independently (each restarts its offset at zero)
-    val d2 = docs(0L -> "a b c d e", 1L -> "f g h i j")
-    val out2 = TextOps.packSequences(d2, budget = 4, shards = 2).collect()
+    assert(out === Map(0L -> (300L, 0L), 8L -> (250L, 0L), 16L -> (10L, 1L)))
+    // shard separation: docs 0 and 1 sit in different shards, whose
+    // streams pack independently (each restarts its offset at zero)
+    val d2 = docs(0L -> words(600), 1L -> words(600))
+    val out2 = TextOps.packSequences(d2).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("pack_id")).toMap
     assert(out2 === Map(0L -> 0L, 1L -> 0L))
   }
@@ -203,8 +206,7 @@ class TextOpsSpec extends SparkSpec {
     // "pa pb" always adjacent (5×); "xa"/"xb" frequent but never a pair
     val glue = (1 to 5).map(_ => "pa pb").mkString(" x ")
     val noise = (1 to 10).map(i => s"xa f$i xb").mkString(" ")
-    val out = TextOps.collocations(docs(1L -> s"$glue $noise"), minCount = 5,
-        topK = 5)
+    val out = TextOps.collocations(docs(1L -> s"$glue $noise"))
       .collect().map(r => r.getString(0) -> r.getDouble(2)).toMap
     assert(out.contains("pa pb"), out)
     assert(!out.contains("xa xb")) // never adjacent → no bigram at all
@@ -235,19 +237,19 @@ class TextOpsSpec extends SparkSpec {
       Seq((1L, "b", 4L), (2L, "a", 3L), (3L, "c", 1L), (4L, "d", 1L)))
     val fracs = out.map(_._4).toSeq
     assert(fracs === Seq(4 / 9.0, 7 / 9.0, 8 / 9.0, 1.0))
-    // minCount trims a rank-prefix-preserving tail; coverage stays
-    // corpus-global, so the cutoff exposes the OOV rate (1 - 7/9)
-    val trimmed = TextOps.vocabulary(corpus, minCount = 2).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(3))).sortBy(_._1).toSeq
-    assert(trimmed === Seq((1L, "b", 4 / 9.0), (2L, "a", 7 / 9.0)))
   }
 
   test("encodeWithVocabulary counts OOV against the trimmed vocab and digests ids") {
+    // 998 filler tokens seen twice each rank between a and c/d
+    def fillers(p: String, n: Int, times: Int) =
+      Seq.fill(times)((0 until n).map(i => f"$p$i%04d")).flatten.mkString(" ")
     val corpus = docs(
       1L -> "b b b a a c",
-      2L -> "a b d")
-    // vocab ranks b:1, a:2, c:3, d:4; trim at 2 → c and d are OOV
-    val out = TextOps.encodeWithVocabulary(corpus, vocabSize = 2).collect()
+      2L -> "a b d",
+      3L -> fillers("t", 998, 2))
+    // vocab ranks b:1, a:2, fillers 3..1000, c:1001, d:1002; trim at
+    // 1000 → c and d are OOV
+    val out = TextOps.encodeWithVocabulary(corpus).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
     // doc 1: 6 tokens, c OOV; ids 1+1+1+2+2 = 7
@@ -255,11 +257,11 @@ class TextOpsSpec extends SparkSpec {
     // doc 2: 3 tokens, d OOV; ids 2+1 = 3
     assert(out(2L) === ((3L, 1L, 3L)))
     // all-OOV doc: digest coalesces to 0, not null
-    val oov = TextOps.encodeWithVocabulary(docs(1L -> "x y", 2L -> "z z z"),
-        vocabSize = 1)
+    val oov = TextOps.encodeWithVocabulary(docs(1L -> "x y", 2L -> "z z z",
+        3L -> fillers("u", 1000, 4)))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
       .toMap
-    assert(oov(1L) === ((2L, 2L, 0L))) // x, y rank below z (cnt 1 vs 3)
+    assert(oov(1L) === ((2L, 2L, 0L))) // x, y rank below z and the fillers
   }
 
   test("ngramNovelty scores unseen-gram fractions exactly; short docs drop out") {
@@ -285,14 +287,15 @@ class TextOpsSpec extends SparkSpec {
       3L -> "alpha beta alpha",                // both terms, higher tf
       4L -> "gamma gamma",                     // no query term
       5L -> "alpha beta")                      // ties doc 2 exactly → id order
-    val out = TextOps.keywordSearch(corpus, Map("q" -> Seq("alpha", "beta")), k = 4)
+    val out = TextOps.keywordSearch(corpus, Map("q" -> Seq("alpha", "beta")))
       .collect().map(r => r.getInt(1) -> r.getLong(2)).toMap
     // coordination first: docs with BOTH terms beat the tf-5 single-term doc
     assert(out === Map(1 -> 3L, 2 -> 2L, 3 -> 5L, 4 -> 1L))
     // duplicate terms in the query don't double-count matches
-    val dup = TextOps.keywordSearch(corpus, Map("q" -> Seq("alpha", "alpha")), k = 1)
-      .collect().head
-    assert(dup.getLong(3) === 1L) // n_terms counts DISTINCT matched terms
+    val dup = TextOps.keywordSearch(corpus, Map("q" -> Seq("alpha", "alpha")))
+      .collect()
+    assert(dup.nonEmpty)
+    assert(dup.forall(_.getLong(3) === 1L)) // n_terms counts DISTINCT matched terms
   }
 
   test("searchPostings over the persisted artifact matches keywordSearch exactly") {
@@ -309,10 +312,10 @@ class TextOpsSpec extends SparkSpec {
       TextOps.savePostings(corpus, scope, "p")
       def key(r: org.apache.spark.sql.Row) =
         (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4))
-      val direct = TextOps.keywordSearch(corpus, queries, k = 4)
+      val direct = TextOps.keywordSearch(corpus, queries)
         .collect().map(key).sorted
       val probed = TextOps.searchPostings(
-          TextOps.loadPostings(spark, scope, "p"), queries, k = 4)
+          TextOps.loadPostings(spark, scope, "p"), queries)
         .collect().map(key).sorted
       assert(probed === direct)
       assert(direct.nonEmpty)
@@ -321,7 +324,7 @@ class TextOpsSpec extends SparkSpec {
       TextOps.savePostings(corpus.filter($"doc_id" % 2 === 0), scope, "p2")
       TextOps.appendPostings(corpus.filter($"doc_id" % 2 === 1), scope, "p2")
       val appended = TextOps.searchPostings(
-          TextOps.loadPostings(spark, scope, "p2"), queries, k = 4)
+          TextOps.loadPostings(spark, scope, "p2"), queries)
         .collect().map(key).sorted
       assert(appended === direct)
     } finally {
@@ -372,16 +375,20 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("bigramLmScore: model truncation marks dropped transitions OOV") {
-    val d = docs(1L -> "a b a b a c")
-    // bigrams in doc order: (a,b)x2, (b,a)x2, (a,c) — maxBigrams=1
-    // keeps only the (count desc, gram asc) winner (a,b); the other
+    // bigrams of doc 1 in order: (a,b)x2, (b,a)x2, (a,c). Two copies
+    // of a filler doc add 2^18 - 1 bigrams (ab, y<i>) seen twice each,
+    // which the (count desc, gram asc) order puts right after (a,b):
+    // the 2^18-entry table keeps (a,b) and the fillers, so the other
     // three transition instances score with cb=0 and count as OOV
-    val out = TextOps.bigramLmScore(d, maxBigrams = 1).head()
+    val filler = (0 until (1 << 18) - 1).map(i => f"ab y$i%06d").mkString(" ")
+    val d = docs(1L -> "a b a b a c", 2L -> filler, 3L -> filler)
+    val out = TextOps.bigramLmScore(d).filter("doc_id = 1").head()
     assert(out.getAs[Long]("n_bigrams") === 5L)
     assert(out.getAs[Long]("n_oov") === 3L)
     val fp = (cb: Long, cu: Long) =>
       math.round(1e6 * ((cb + 1).toDouble / (cu + 65536).toDouble))
-    // cu: a=3, b=2, c=1 (unigram table is untruncated here)
+    // cu: a=3, b=2 (the 2^16-entry unigram table ranks "ab", a, then
+    // b before the twice-seen y<i>)
     assert(out.getAs[Long]("score_fp") ===
       2 * fp(2, 3) + 2 * fp(0, 2) + fp(0, 3))
   }
@@ -413,23 +420,32 @@ class TextOpsSpec extends SparkSpec {
   test("stupidBackoffScore: exact ratios and backoff ladder") {
     val d = Seq((1L, "a b c"), (2L, "a b d"), (3L, "z z"), (4L, "q r s"))
       .toDF("doc_id", "text")
-    def run(maxTri: Int, maxBi: Int) =
-      TextOps.stupidBackoffScore(d, maxBigrams = maxBi, maxTrigrams = maxTri)
+    def run(d: org.apache.spark.sql.DataFrame) =
+      TextOps.stupidBackoffScore(d)
         .collect().map(r => r.getLong(0) ->
           ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     // untruncated: both trigrams hit the model, S = ct/cb(a,b) = 1/2
-    val full = run(1 << 19, 1 << 18)
+    val full = run(d)
     assert(full(1L) === ((1L, 0L, 0L, 500000L)))
     assert(full(2L) === ((1L, 0L, 0L, 500000L)))
     assert(!full.contains(3L)) // a 2-token doc has no trigram
-    // truncate the trigram table to 1 ((a,b,c) wins the total order)
-    // and the bigram table to 2 ({ab, bc}): doc2's (b,d) context and
-    // doc4's (r,s) both vanish → full unigram backoff
-    // 0.4·0.4·cu(w3)/N with cu(d)=cu(s)=1, N=11 → round(1e6·0.16/11)
-    val trunc = run(1, 2)
-    assert(trunc(1L) === ((1L, 0L, 0L, 500000L)))
-    assert(trunc(2L) === ((1L, 0L, 1L, 14545L)))
-    assert(trunc(4L) === ((1L, 0L, 1L, 14545L)))
+    // truncation: a second "a b c" (doc 6) and "d s" (doc 5) lift
+    // (a,b,c), (a,b), (b,c), d and s above count 1, and a filler doc
+    // of 2^19 + 10 distinct tokens that sort before every letter fills
+    // the rest of the 2^19-trigram, 2^18-bigram and 2^16-unigram
+    // tables: (a,b,c) survives, doc2's (a,b,d) and (b,d) and doc4's
+    // (q,r,s) and (r,s) vanish → full unigram backoff
+    // 0.4·0.4·cu(w3)/N with cu(d) = cu(s) = 2
+    val nFill = (1 << 19) + 10
+    val filler = (0 until nFill).map(i => f"0$i%07d").mkString(" ")
+    val trunc = run(d.unionByName(Seq((5L, "d s"), (6L, "a b c"),
+      (100L, filler)).toDF("doc_id", "text")))
+    val n = 16.0 + nFill // tokens of docs 1-6 plus the filler
+    val uni = math.round(1e6 * (0.4 * (0.4 * (2.0 / n))))
+    // S = ct/cb(a,b) = 2/3
+    assert(trunc(1L) === ((1L, 0L, 0L, 666667L)))
+    assert(trunc(2L) === ((1L, 0L, 1L, uni)))
+    assert(trunc(4L) === ((1L, 0L, 1L, uni)))
   }
 
   test("dsirWeights: target-vocabulary documents rank above foreign ones") {

@@ -4,10 +4,13 @@
    perfbench refers to. Comments are skipped; strings are kept, so a name
    spelled inside SQL text counts as a use. Overrides are skipped.
 2. Defaulted parameters of the graft.ops and graft.streaming operators (the
-   mapreduce-wsi surface Jobs, PipeOps and MapReduceOps aside) that no call
-   in src/main, perfbench/src or src/test sets, by name or by position. A
-   call that passes the parameter's own default expression verbatim does not
-   set it.
+   mapreduce-wsi surface Jobs, PipeOps and MapReduceOps aside), of
+   graft.io.Artifact and Layout, and of the graft.queries oracle SQL builders
+   that no call in src/main or perfbench/src sets, by name or by position.
+   Tests are not callers: a parameter only a test sets is a constant unless
+   ALLOW_PARAMS keeps it, and an ALLOW_PARAMS entry that no test sets any
+   more (or that main source now sets) fails too. A call that passes the
+   parameter's own default expression verbatim does not set it.
 Usage: python3 tools/unused_defs.py"""
 import pathlib, re, sys
 
@@ -28,9 +31,17 @@ ALLOW = {
     "plantedCrawlDelays",      # planted fixture, moves with the other planted generators
 }
 
-# Defaulted parameters kept although no call sets them ("def.param").
-ALLOW_PARAMS = set()
-PARAM_SCOPE = re.compile(r"^src/main/scala/graft/(ops|streaming)/(?!(Jobs|PipeOps|MapReduceOps)\.scala)")
+# Defaulted parameters kept although only tests set them ("def.param": why).
+ALLOW_PARAMS = {
+    "connectedComponents.localMaxEdges": "the only way a fixture-sized graph reaches the distributed star loop",
+    "refreshBpe.batchId": "the replay token that fixes the digest token's same-content defect",
+    "saveBands.numHashes": "ArtifactSpec's killed re-save varies the recorded geometry",
+    "savePostings.nBuckets": "ArtifactSpec's killed re-save varies the recorded bucket count",
+    "saveUrlKeys.nBuckets": "ArtifactSpec's killed re-save varies the recorded bucket count",
+    "saveClusterLabels.nBuckets": "ArtifactSpec's killed re-save varies the recorded bucket count",
+}
+PARAM_SCOPE = re.compile(r"^src/main/scala/graft/((ops|streaming)/(?!(Jobs|PipeOps|MapReduceOps)\.scala)"
+                         r"|io/(Artifact|Layout)\.scala|queries/)")
 STRING = re.compile(r'"""(?:.|\n)*?"""|"(?:\\.|[^"\\\n])*"')
 TOKEN = re.compile(STRING.pattern + r'|//[^\n]*|/\*(?:.|\n)*?\*/')
 DEF = re.compile(r"(?<![\w.])(override\s+)?(?:(?:private|protected)(?:\[\w+\])?\s+)?"
@@ -70,7 +81,9 @@ def arg_lists(src, i):
 
 
 def unset_params(files):
-    params, passed = [], set()  # params: (path, line, def, list, position, name)
+    """The in-scope defaulted parameters no main or perfbench call sets and
+    ALLOW_PARAMS does not keep, then the ALLOW_PARAMS entries gone stale."""
+    params = []  # (path, line, def, list, position, name)
     defaults = {}  # (def, name) and (def, list, position) -> default expressions
     norm = lambda e: " ".join(e.split())
     for path, src in files.items():
@@ -83,17 +96,24 @@ def unset_params(files):
                         for key in ((m.group(1), d.group(1)), (m.group(1), g, k)):
                             defaults.setdefault(key, set()).add(norm(d.group(2)))
     names = "|".join(sorted({p[2] for p in params}))
-    for src in files.values():
+    passed = {True: set(), False: set()}  # by test source?
+    for path, src in files.items():
         for m in re.finditer(rf"(?<!def )(?<![\w$])({names})\b", src):
             for g, alist in enumerate(arg_lists(src, m.end())):
                 named = [re.match(r"\s*(\w+)\s*=(?![=>])(.*)", a, re.S) for a in alist]
                 keys = [((m.group(1), n.group(1)), n.group(2)) if n else ((m.group(1), g, i), a)
                         for i, (n, a) in enumerate(zip(named, alist))]
-                passed |= {key for key, arg in keys if norm(arg) not in defaults.get(key, ())}
-    unset = [f"{p.relative_to(ROOT)}:{l}: {d}.{n}" for p, l, d, g, k, n in params
-             if not {(d, n), (d, g, k)} & passed and f"{d}.{n}" not in ALLOW_PARAMS]
-    print(f"{len(params)} defaulted operator parameters, {len(unset)} set by no call")
-    return unset
+                passed[path.is_relative_to(ROOT / "src/test")] |= {
+                    key for key, arg in keys if norm(arg) not in defaults.get(key, ())}
+    set_by = lambda side, d, g, k, n: bool({(d, n), (d, g, k)} & passed[side])
+    unset = [f"{p.relative_to(ROOT)}:{l}: {d}.{n}" + (" (only tests set it)" if set_by(True, d, g, k, n) else "")
+             for p, l, d, g, k, n in params if not set_by(False, d, g, k, n) and f"{d}.{n}" not in ALLOW_PARAMS]
+    test_only = {f"{d}.{n}" for p, l, d, g, k, n in params
+                 if set_by(True, d, g, k, n) and not set_by(False, d, g, k, n)}
+    stale = [f"ALLOW_PARAMS {a}: no longer a parameter only tests set" for a in sorted(set(ALLOW_PARAMS) - test_only)]
+    print(f"{len(params)} defaulted parameters in scope, {len(unset)} set by no main or perfbench call "
+          f"outside ALLOW_PARAMS ({len(ALLOW_PARAMS)} kept)")
+    return unset + stale
 
 
 def main():
